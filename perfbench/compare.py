@@ -6,14 +6,18 @@ Usage:
 
 Each directory holds the per-run result files run.py writes
 (`<workload>-seed<n>-trace<t>.json`, by default under
-.bench_build/results/). For every workload and end-to-end metric in
-BENCHMARK.json it reports the two medians and quartile spreads and one
-verdict:
+.bench_build/results/). Make the two sets with ab.py, which interleaves
+base and new runs and alternates which side runs first, so that the host's
+drift falls on both sides alike. Runs are paired in the order they started:
+the i-th base run with the i-th new run. For every workload and end-to-end
+metric in BENCHMARK.json it reports the two medians and quartile spreads,
+the pairs the new side wins, and one verdict:
 
   worse       the new median is worse than the base median by more than
               the metric's bound
   improved    the new median is better by more than the base's own
-              quartile spread and the new side wins at least 9 of 10 pairs
+              quartile spread, and the new side wins at least nine tenths
+              of at least ten pairs (ties count for neither side)
   unchanged   neither, with both spreads inside the bound
   unresolved  a spread is wider than the bound, unless every new run reads
               better (improved) or worse (worse) than every base run
@@ -36,6 +40,8 @@ def load(d):
         with open(p) as fh:
             r = json.load(fh)
         runs.setdefault((r["workload"], r["trace"]), []).append(r)
+    for rs in runs.values():
+        rs.sort(key=lambda r: r["started"])
     return runs
 
 
@@ -44,6 +50,13 @@ def spread(vals):
         return float("inf")
     q1, _, q3 = statistics.quantiles(vals, n=4)
     return (q3 - q1) / statistics.median(vals)
+
+
+def wins(base, new, lower_better):
+    """Pairs, in start order, that the new side wins; and the pair count."""
+    sign = 1 if lower_better else -1
+    pairs = list(zip(base, new))
+    return sum(1 for b, n in pairs if sign * n < sign * b), len(pairs)
 
 
 def verdict(base, new, bound, lower_better):
@@ -57,9 +70,8 @@ def verdict(base, new, bound, lower_better):
         return "improved" if all_better else "worse" if all_worse else "unresolved"
     if delta > bound:
         return "worse"
-    pairs = list(zip(base, new))
-    wins = sum(1 for b, n in pairs if sign * n < sign * b)
-    if -delta > sb and wins >= 0.9 * len(pairs):
+    won, n_pairs = wins(base, new, lower_better)
+    if -delta > sb and n_pairs >= 10 and won >= 0.9 * n_pairs:
         return "improved"
     return "unchanged"
 
@@ -78,12 +90,15 @@ def main(base_dir, new_dir):
             if not bv or not nv:
                 print(f"  {m['name']:<14} missing")
                 continue
-            v = verdict(bv, nv, m["bound"], m["better"] == "lower")
+            lower = m["better"] == "lower"
+            v = verdict(bv, nv, m["bound"], lower)
             worse += v == "worse"
             bm, nm = statistics.median(bv), statistics.median(nv)
+            won, n_pairs = wins(bv, nv, lower)
             print(f"  {m['name']:<14} base {bm:11.4f} (spread {spread(bv):6.3f})  "
                   f"new {nm:11.4f} (spread {spread(nv):6.3f})  "
-                  f"{(nm - bm) / bm:+7.2%} {m['unit']:<4} bound {m['bound']:.2f}  {v}")
+                  f"{(nm - bm) / bm:+7.2%} {m['unit']:<4} bound {m['bound']:.2f}  "
+                  f"new wins {won}/{n_pairs}  {v}")
         b_tr, n_tr = base.get((wl, 1), []), new.get((wl, 1), [])
         if b_tr and n_tr:
             print(f"  per-layer ({len(b_tr)} base / {len(n_tr)} new traced runs):")

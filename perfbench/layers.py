@@ -105,24 +105,6 @@ def build_spans(record):
     return spans
 
 
-LAYER_METRICS = [
-    "sources.load_s", "etl.build_s",
-    "spark.jobs", "spark.stages", "spark.tasks", "spark.sql_executions",
-    "queries.build_jobs", "catalog.load_jobs", "spark.outside_jobs_s",
-    "catalyst.analysis_s", "catalyst.optimization_s", "catalyst.planning_s",
-    "queries.build_s", "queries.exec_s",
-    "spark.task_run_s", "spark.task_cpu_s", "spark.gc_s", "spark.sched_delay_s",
-    "spark.core_busy", "spark.empty_task_share", "spark.failed_tasks",
-    "sources.input_bytes", "shuffle.write_bytes", "shuffle.read_bytes",
-    "shuffle.fetch_wait_s", "shuffle.spill_bytes",
-    "catalog.load_s", "catalog.export_s", "catalog.export_bytes",
-    "catalog.import_s", "catalog.introspect_s", "io.output_bytes",
-    "streaming.batches", "streaming.trigger_s", "streaming.add_batch_s",
-    "streaming.query_planning_s", "streaming.wal_commit_s", "streaming.state_rows",
-    "self.op_s", "self.sql_s", "self.job_s", "self.stage_s",
-    "trace.overhead_share",
-]
-
 _STAGE_SUMS = {"spark.tasks": "tasks", "spark.failed_tasks": "failed_tasks",
                "spark.task_run_s": "run_s", "spark.task_cpu_s": "cpu_s",
                "spark.gc_s": "gc_s", "spark.sched_delay_s": "sched_delay_s",
@@ -136,8 +118,8 @@ _STREAM = {"streaming.trigger_s": "triggerExecution", "streaming.add_batch_s": "
            "streaming.wal_commit_s": "walCommit"}
 
 
-def pass_layers(record, spans, pass_idx):
-    """Per-layer sums of one traced pass."""
+def pass_layers(record, spans, pass_idx, names):
+    """Per-layer sums of one traced pass, for the metric `names`."""
     cores = record["cores"]
     ops = [o for o in record["ops"] if o["pass"] == pass_idx]
     sp = [s for s in spans if s["pass"] == pass_idx]
@@ -152,7 +134,7 @@ def pass_layers(record, spans, pass_idx):
         return span["id"]
 
     job_layer = {j["id"]: op_of[op_id(j)]["layer"] for j in jobs}
-    m = {k: 0.0 for k in LAYER_METRICS}
+    m = {k: 0.0 for k in names}
     m["spark.jobs"] = len(jobs)
     m["spark.stages"] = len(stages)
     m["spark.sql_executions"] = sum(1 for s in sp if s["kind"] == "sql")
@@ -200,14 +182,14 @@ def pass_layers(record, spans, pass_idx):
     return m
 
 
-def summarize(record, spans):
+def summarize(record, spans, names):
     """Median over the traced warm passes of each per-pass layer sum, plus
     the set-up and overhead figures, and the cold pass on its own."""
     traced = [p for p in record["passes"] if p["traced"] and p["pass"] > 0]
     untraced = [p for p in record["passes"] if not p["traced"] and p["pass"] > 0]
-    per_pass = [pass_layers(record, spans, p["pass"]) for p in traced]
-    warm = {k: statistics.median(pp[k] for pp in per_pass) for k in LAYER_METRICS}
-    cold = pass_layers(record, spans, 0) if record["passes"][0]["traced"] else {}
+    per_pass = [pass_layers(record, spans, p["pass"], names) for p in traced]
+    warm = {k: statistics.median(pp[k] for pp in per_pass) for k in names}
+    cold = pass_layers(record, spans, 0, names) if record["passes"][0]["traced"] else {}
     load = statistics.median(s["sources_s"] for s in record["setups"])
     warm["sources.load_s"] = cold["sources.load_s"] = load
     warm["trace.overhead_share"] = (
@@ -216,12 +198,3 @@ def summarize(record, spans):
     cold.pop("trace.overhead_share", None)
     return warm, cold
 
-
-def unit(metric):
-    if metric.endswith("_s"):
-        return "s"
-    if metric.endswith("_bytes"):
-        return "B"
-    if metric.endswith(("_share", "core_busy")):
-        return "ratio"
-    return "count"

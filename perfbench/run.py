@@ -36,24 +36,27 @@ BUILD = os.path.join(ROOT, ".bench_build")
 ENGINE_SRC = os.path.join(ROOT, "src", "main", "scala")
 FIXTURES = os.path.join(ROOT, "src", "test", "resources", "worldcup")
 
-# Inputs per workload. star_sql and corpus_pipeline read the generated
-# star/corpus tables at this scale (1.0 = 6M lineitems); worldcup_elt
-# reads this many tagged copies of the World Cup fixture CSVs.
-STAR_SF = {"star_sql": 0.05, "corpus_pipeline": 0.01}
+# Inputs per workload: corpus_pipeline reads the generated corpus tables
+# at this scale (1.0 = 6M lineitems); worldcup_elt reads this many tagged
+# copies of the World Cup fixture CSVs.
+CORPUS_SCALE = 0.01
 WORLDCUP_COPIES = 100
-# The heap is fixed and touched at start, so peak_rss_mb (VmHWM) is the
-# heap plus the native footprint instead of wherever G1's adaptive sizing
-# happened to stop.
+# The heap is fixed and touched at start, so VmHWM minus the heap is the
+# native peak, whatever G1's sizing; the heap's share of peak_mem_mb is the
+# live heap measured after a full collection at the end of each pass.
 HEAP = "2g"
-# Set-ups per run; setup_s is their median.
-SETUPS = 5
+# Cold set-ups per run, each in a fresh JVM timed from process start: the
+# benchmark's own JVM and SETUPS - 1 that only set up. setup_s is their
+# median. A cold set-up of corpus_pipeline takes ~10 s, so a third one
+# would leave too little of the benchmark's time budget.
+SETUPS = 2
 # Warm passes every run makes at least, on top of --seconds. A traced run
 # traces the even warm passes, so three give one traced pass between two
 # untraced ones and the overhead figure is not biased by warm-up order.
 MIN_WARM = 3
-WORKLOADS = ("corpus_pipeline", "star_sql", "worldcup_elt")
-JVM_TIMEOUT_S = 160
-# Few malloc arenas keep the JVM's native footprint, and so peak_rss_mb,
+# Every JVM of a run must end by then, counted from the run's start.
+RUN_TIMEOUT_S = 170
+# Few malloc arenas keep the JVM's native footprint, and so peak_mem_mb,
 # from varying with how many threads happened to allocate.
 JVM_ENV = dict(os.environ, MALLOC_ARENA_MAX="2")
 
@@ -63,12 +66,11 @@ ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
     "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
     "sun.security.action", "sun.util.calendar")]
 
-END_TO_END = [("setup_s", "s"), ("cold_pass_s", "s"), ("warm_pass_s", "s"),
-              ("op_p50_s", "s"), ("peak_rss_mb", "MiB")]
-# The end-to-end metrics in the last line, as BENCHMARK.json lists them.
-# op_p50_s is only reported: its run-to-run spread, the median of 4 to 32
-# op samples of unlike ops, is too wide on a shared host to carry a bound.
-GATED = ("setup_s", "cold_pass_s", "warm_pass_s", "peak_rss_mb")
+
+def spec():
+    """BENCHMARK.json: the workloads and the metric names and units."""
+    with open(os.path.join(HERE, "..", "BENCHMARK.json")) as fh:
+        return json.load(fh)
 
 
 def die(msg):
@@ -127,13 +129,16 @@ def tail(op_secs):
 
 
 def end_to_end(rec):
+    """The metrics BENCHMARK.json gates, plus op_p50_s, which is only
+    reported: the median of a few unlike ops, its run-to-run spread on a
+    shared host is too wide to carry a bound."""
     warm = [p["secs"] for p in rec["passes"] if p["pass"] > 0]
     op_secs = sorted(o["secs"] for o in rec["ops"] if o["pass"] > 0)
     m = {"setup_s": statistics.median(s["setup_s"] for s in rec["setups"]),
          "cold_pass_s": rec["passes"][0]["secs"],
          "warm_pass_s": statistics.median(warm),
          "op_p50_s": statistics.median(op_secs),
-         "peak_rss_mb": rec["peak_rss_mb"]}
+         "peak_mem_mb": rec["native_peak_mb"] + max(p["live_heap_mb"] for p in rec["passes"])}
     by_name = {}
     for o in rec["ops"]:
         if o["pass"] > 0:
@@ -143,13 +148,28 @@ def end_to_end(rec):
             "cold_op_s": {o["name"]: o["secs"] for o in rec["ops"] if o["pass"] == 0},
             "op_tail_percentile": pct, "op_tail_s": tail_s,
             "op_samples": len(op_secs), "warm_passes": len(warm),
-            "setup_samples_s": [s["setup_s"] for s in rec["setups"]]}
+            "setup_samples_s": [s["setup_s"] for s in rec["setups"]],
+            "native_peak_mb": rec["native_peak_mb"],
+            "live_heap_mb": [p["live_heap_mb"] for p in rec["passes"]]}
     return m, note
 
 
+def run_jvm(cmd, cwd, log, deadline):
+    with open(log, "w") as fh:
+        try:
+            return subprocess.run(cmd, cwd=cwd, stdout=fh, env=JVM_ENV,
+                                  stderr=subprocess.STDOUT, stdin=subprocess.DEVNULL,
+                                  timeout=max(1.0, deadline - time.time())).returncode
+        except subprocess.TimeoutExpired:
+            die(f"harness timed out {RUN_TIMEOUT_S} s after the run started; see {log}")
+
+
 def main():
+    started = time.time()
+    bench = spec()
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True,
+                    choices=[w["name"] for w in bench["workloads"]])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -172,7 +192,7 @@ def main():
     if a.workload == "worldcup_elt":
         inputs = gen.worldcup(a.seed, FIXTURES, WORLDCUP_COPIES, data)
     else:
-        inputs = gen.star(a.seed, STAR_SF[a.workload], data)
+        inputs = gen.star(a.seed, CORPUS_SCALE, data)
 
     cores = len(os.sched_getaffinity(0))
     raw = os.path.join(work, "record.json")
@@ -185,20 +205,25 @@ def main():
            f"-Dgraft.worldcup.fixtures={data}",
            "-cp", cp, "perfbench.Main",
            "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-           "--trace", str(a.trace), "--data", data, "--work", work, "--out", raw,
-           "--cores", str(cores), "--setups", str(SETUPS), "--min-warm", str(MIN_WARM)]
+           "--trace", str(a.trace), "--data", data, "--work", work,
+           "--cores", str(cores), "--min-warm", str(MIN_WARM)]
     t0 = time.time()
-    with open(os.path.join(work, "jvm.log"), "w") as log:
-        try:
-            rc = subprocess.run(cmd, cwd=os.path.join(work, "cwd"), stdout=log, env=JVM_ENV,
-                                stderr=subprocess.STDOUT, stdin=subprocess.DEVNULL,
-                                timeout=JVM_TIMEOUT_S).returncode
-        except subprocess.TimeoutExpired:
-            die(f"harness timed out after {JVM_TIMEOUT_S} s; see {work}/jvm.log")
+    deadline = started + RUN_TIMEOUT_S
+    cwd = os.path.join(work, "cwd")
+    log = os.path.join(work, "jvm.log")
+    rc = run_jvm(cmd + ["--out", raw], cwd, log, deadline)
     if rc != 0 or not os.path.exists(raw):
-        die(f"harness failed (rc={rc}); see {work}/jvm.log")
+        die(f"harness failed (rc={rc}); see {log}")
     with open(raw) as fh:
         rec = json.load(fh)
+    rec["setups"] = [rec.pop("setup")]
+    for i in range(1, SETUPS):
+        out, log = os.path.join(work, f"setup{i}.json"), os.path.join(work, f"setup{i}.log")
+        rc = run_jvm(cmd + ["--out", out, "--setup-only", "1"], cwd, log, deadline)
+        if rc != 0 or not os.path.exists(out):
+            die(f"set-up {i} failed (rc={rc}); see {log}")
+        with open(out) as fh:
+            rec["setups"].append(json.load(fh))
 
     checks = oracle.run_checks(rec["checks"], data, a.workload != "worldcup_elt")
     failed_ops = [o for o in rec["ops"] if o["error"]]
@@ -207,7 +232,7 @@ def main():
     failed = len(failed_ops) + len(failed_checks)
 
     e2e, note = end_to_end(rec)
-    result = {"workload": a.workload, "seed": a.seed, "trace": a.trace,
+    result = {"workload": a.workload, "seed": a.seed, "trace": a.trace, "started": started,
               "nproc": cores, "heap_mb": rec["heap_mb"], "inputs": inputs,
               "end_to_end": e2e, "notes": note,
               "failed_share": failed / attempted,
@@ -215,7 +240,7 @@ def main():
               "checks": checks, "wall_s": time.time() - t0}
     if a.trace:
         spans = layers.build_spans(rec)
-        warm, cold = layers.summarize(rec, spans)
+        warm, cold = layers.summarize(rec, spans, [m["name"] for m in bench["per_layer"]])
         result.update(per_layer=warm, per_layer_cold=cold)
         os.makedirs(a.results, exist_ok=True)
         span_file = os.path.join(a.results, f"{tag}.spans.jsonl")
@@ -228,23 +253,22 @@ def main():
         json.dump(result, fh, indent=1)
     shutil.rmtree(work, ignore_errors=True)
 
-    report(result)
-    units = dict(END_TO_END)
-    if a.trace:
-        metrics = {k: {"value": v, "unit": layers.unit(k)} for k, v in result["per_layer"].items()}
-    else:
-        metrics = {k: {"value": e2e[k], "unit": units[k]} for k in GATED}
+    metric_set = bench["per_layer"] if a.trace else bench["end_to_end"]
+    values = result["per_layer"] if a.trace else e2e
+    metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]} for m in metric_set}
+    report(result, bench)
     print(json.dumps({"correct": failed == 0, "attempted": attempted,
                       "failed": failed, "metrics": metrics}))
 
 
-def report(r):
+def report(r, bench):
     print(f"workload {r['workload']}  seed {r['seed']}  nproc {r['nproc']}  "
           f"heap {r['heap_mb']} MiB  trace {r['trace']}")
     print("inputs: " + ", ".join(f"{t} {v['rows']} rows/{v['bytes']} B"
                                  for t, v in r["inputs"].items()))
+    units = {m["name"]: m["unit"] for m in bench["end_to_end"]}
     for k, v in r["end_to_end"].items():
-        print(f"  {k:<14} {v:12.4f} {dict(END_TO_END)[k]}")
+        print(f"  {k:<14} {v:12.4f} {units.get(k, 's, reported only')}")
     n = r["notes"]
     if n["op_tail_s"] is None:
         print(f"  op_tail_s      n/a: {n['op_samples']} op samples over "
@@ -262,8 +286,8 @@ def report(r):
     for op_id, name, err in r["failed_ops"]:
         print(f"  FAILED op {op_id} {name}: {err}")
     if "per_layer" in r:
-        for k, v in r["per_layer"].items():
-            print(f"  {k:<28} {v:16.4f} {layers.unit(k)}")
+        for m in bench["per_layer"]:
+            print(f"  {m['name']:<28} {r['per_layer'][m['name']]:16.4f} {m['unit']}")
         print(f"spans: {r['spans']}")
 
 

@@ -49,14 +49,9 @@ object Workload {
   def apply(name: String, data: String, work: String, seed: Long): Workload =
     name match {
       case "worldcup_elt" => new WorldCupElt(data, work)
-      case "star_sql" => new CatalogQueries(data, seed, StarEntries)
       case "corpus_pipeline" => new CatalogQueries(data, seed, CorpusEntries)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
-
-  val StarEntries: Seq[String] = Seq("s1_scan_project", "p6_filter_predicates",
-    "j1_join_inner_agg", "w1_window_rank", "q4_adhoc_sql",
-    "q1b_information_schema_sql", "c2_fk_check")
 
   val CorpusEntries: Seq[String] = Seq("x2b_dedup_levenshtein",
     "x48_streaming_interval_join")
@@ -81,7 +76,7 @@ object Workload {
     }
 }
 
-/** Catalog entries over the generated star/corpus tables: each op plans
+/** Catalog entries over the generated corpus tables: each op plans
   * the entry (`build`) and drains it into the noop sink (`exec`). The
   * seed shuffles the entry order of every pass. */
 final class CatalogQueries(data: String, seed: Long, names: Seq[String])
