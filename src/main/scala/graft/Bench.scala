@@ -3,26 +3,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // This host shows ±50% run-to-run noise (BENCH_r02 totals ranged
     // 82-125 s same-day), so each query runs `runs` times and the
     // reported figure is the MEDIAN; `spread` (max-min) is emitted
     // per query so a noisy run is visible instead of alarming.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
-    // UTC must be pinned here like every other entry point: the
-    // events ts normalization casts TIMESTAMP_NTZ via the session TZ,
-    // so an unpinned bench on a non-UTC host would time queries over
-    // shifted ts values (different predicate selectivity than the
-    // runs the oracle verified).
-    val spark = graft.sources.Tables.withSessionConfs(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.Tables.localSession(cpus)
     // Warm the JVM/codegen/parquet-reader infrastructure once so the
     // first timed query doesn't absorb one-time setup cost.
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -30,16 +18,6 @@ object Bench {
     // surface as per-query errors in the JSON line, not a crash
     try spark.read.parquet(s"$sfDir/region.parquet").count()
     catch { case _: Throwable => () }
-    // Optionally pin base tables in the in-memory columnar cache
-    // (SPARK_GRAFT_CACHE=1). Measured SLOWER here than parquet re-scan
-    // — the cache replaces pruned/pushed-down parquet scans with full
-    // InMemoryRelation reads — so it stays off by default.
-    if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "0") == "1") {
-      graft.sources.Tables.all.foreach { t =>
-        val df = graft.sources.Tables.load(spark, sfDir, t)
-        df.cache(); df.count()
-      }
-    }
     // Time a noop-sink write, not count(): under count() Catalyst prunes
     // every projection/sort, silently flattering expression-heavy queries.
     // The noop v2 sink consumes all output columns with zero IO cost.

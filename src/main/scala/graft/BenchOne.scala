@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time selected catalog queries (3 noop-sink runs each) to
   * separate real regressions from the bench machine's ±50% noise. */
 object BenchOne {
@@ -9,13 +7,8 @@ object BenchOne {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // core count override so the scaling-evidence protocol (same
     // entries at 8 vs 32 cores, sf1) can use this tool directly
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.Tables.withSessionConfs(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.sources.Tables.localSession(cpus)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$dir/region.parquet").count()
     // deep-scale rehearsals (sf10, minutes per run) dial this down

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for selected catalog queries (dev
   * tool for the plan-review loop: check PushedFilters / ReadSchema /
   * broadcast choices / shuffle counts before trusting a query). */
@@ -11,13 +9,9 @@ object Explain {
     // plan shape can depend on parallelism (e.g. whether ReusedExchange
     // kicks in is independent, but AQE coalescing/broadcast estimates
     // aren't) — allow dumping at the bench's exact config
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val names = if (args.nonEmpty) args.toSeq else graft.queries.Catalog.specs.map(_.name)
-    val spark = graft.sources.Tables.withSessionConfs(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.sources.Tables.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

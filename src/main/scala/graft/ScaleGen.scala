@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -33,14 +33,8 @@ object ScaleGen {
       val unknown = ts -- Tables.all.toSet
       require(unknown.isEmpty, s"unknown tables: ${unknown.mkString(",")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.sources.Tables.withSessionConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = Tables.localSession(cpus)
 
     val shiftCols: Map[String, Seq[String]] = Map(
       "region" -> Nil,

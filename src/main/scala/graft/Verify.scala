@@ -87,14 +87,8 @@ object Verify {
         val ps = pfx.split(","); name => ps.exists(name.startsWith)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.Tables.withSessionConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.sources.Tables.localSession(cpus)
     val nViolations = dump(spark, sfDir, outDir, keep,
       SparkEntry.queries, SparkEntry.oracleSqlFiltered)
     spark.stop()

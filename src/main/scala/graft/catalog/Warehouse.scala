@@ -315,8 +315,7 @@ object Warehouse {
     * would. The exact quantiles exist only to power the assertion;
     * the product operator at 100 TB is the approx one. */
   def profileQuantiles(df: DataFrame, cols: Seq[String], ps: Seq[Double],
-      accuracy: Int = 10000, rankTol: Double = 0.005,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      accuracy: Int = 10000, rankTol: Double = 0.005): DataFrame = {
     require(cols.nonEmpty && ps.nonEmpty, "need columns and quantiles")
     // The exact envelope comes from the histogram-rank decomposition
     // (the Stats.globalExactQuantiles machinery), NOT from Spark's
@@ -340,17 +339,9 @@ object Warehouse {
     // the histogram is the fork point (cum pass + totals pass), and
     // the totals branch sits under the join's deliberate broadcast —
     // a broadcast build cannot reuse the stream side's exchanges, so
-    // under the identity default the scan+unpivot+histogram chain is
-    // planned and computed once per branch (r18 plan dump: the chain
-    // appears twice, one copy under BroadcastExchange). `materialize`
-    // on the range-bucketed histogram cuts it to one compute for
-    // corpus-scale callers; the g7 gate entry measured BOTH remedies
-    // worse at sf0.1 and keeps identity (interleaved medians:
-    // identity 3.07 s, checkpointed 3.90 — the near-all-distinct
-    // price columns make the bucketed histogram ~row-count-sized, so
-    // materializing it costs more than the saved lineitem pass — and
-    // a broadcast→merge join swap 3.23). Recompute-from-lineage also
-    // stays the fault-tolerant house default for library callers.
+    // the scan+unpivot+histogram chain is planned and computed once
+    // per branch (one copy under BroadcastExchange); recompute keeps
+    // full lineage.
     val h = unpiv.groupBy(col("__c"), col("__v"))
       .agg(count(lit(1)).as("__cnt"))
     // two-level prefix sum, grouped by column: range buckets on
@@ -359,9 +350,8 @@ object Warehouse {
     // frame has at most 2x buckets rows per column
     val buckets = math.min(1024, math.max(1,
       df.sparkSession.sparkContext.defaultParallelism * 4))
-    val bucketed = materialize(
-      h.repartitionByRange(buckets, col("__c"), col("__v"))
-        .withColumn("__b", spark_partition_id().cast("long")))
+    val bucketed = h.repartitionByRange(buckets, col("__c"), col("__v"))
+      .withColumn("__b", spark_partition_id().cast("long"))
     val inBucket = Window.partitionBy(col("__b"), col("__c"))
       .orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

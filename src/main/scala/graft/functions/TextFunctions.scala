@@ -84,11 +84,6 @@ object TextFunctions {
     size(filter(wsTokens(c), t => array_contains(arr, t))).cast("long")
   }
 
-  /** Sum of token lengths (for avg-word-length metrics). */
-  def tokenLenSum(c: Column): Column =
-    aggregate(transform(wsTokens(c), t => length(t)), lit(0), (a, x) => a + x)
-      .cast("long")
-
   /** Content fingerprint: md5 of whitespace-normalized lowercase text.
     * Identical in DuckDB: md5(regexp_replace(lower(trim(t)),'\s+',' ','g')). */
   def md5Fingerprint(c: Column): Column =
@@ -102,15 +97,6 @@ object TextFunctions {
     array_distinct(transform(
       sequence(lit(1), greatest(length(c) - (n - 1), lit(1))),
       i => c.substr(i, lit(n))))
-
-  /** Word n-gram shingles (distinct) over whitespace tokens — the
-    * standard unit for text near-dup MinHash (~5x fewer rows than char
-    * shingles after explode). Documents shorter than n tokens shingle
-    * to the whole trimmed text. DuckDB twin:
-    * `CASE WHEN len(tk) >= n THEN list_transform(range(1, len(tk)-n+2),
-    *  i -> tk[i] || ' ' || ... ) ELSE [trim(t)] END`. */
-  def wordShingles(c: Column, n: Int): Column =
-    wordShinglesFromTokens(wsTokens(c), trim(c), n)
 
   /** Sennrich-style BPE encode of a single word against an ordered
     * merges table: start from characters, then apply each merge rank
@@ -153,7 +139,13 @@ object TextFunctions {
     s"string_split(trim($chain, '|'), '||')"
   }
 
-  /** Word shingles over an ALREADY-MATERIALIZED token-array column.
+  /** Word n-gram shingles (distinct) over an ALREADY-MATERIALIZED
+    * whitespace-token array column — the standard unit for text
+    * near-dup MinHash (~5x fewer rows than char shingles after
+    * explode). Documents shorter than n tokens shingle to `fallback`
+    * (the whole trimmed text). DuckDB twin:
+    * `CASE WHEN len(tk) >= n THEN list_transform(range(1, len(tk)-n+2),
+    *  i -> tk[i] || ' ' || ... ) ELSE [trim(t)] END`.
     * Performance-critical: if `tk` is an inline `split(...)` expression,
     * every `element_at` inside the transform lambda re-evaluates the
     * split per element (quadratic recompute — measured 8.9s vs 0.5s on

@@ -26,8 +26,7 @@ object Corpus {
     * surviving id to its cluster label (singletons label themselves). */
   private def hygieneClusters(docs: DataFrame, idCol: String,
       textCol: String, minQuality: Double, langs: Seq[String],
-      p: Dedup.MinHashParams, minEst: Double,
-      materialize: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+      p: Dedup.MinHashParams, minEst: Double): (DataFrame, DataFrame) = {
     // ONE native predicate, not a composition: Catalyst pushes a
     // deterministic filter through any token-materializing Project
     // (alias substitution), which would re-tokenize each raw document
@@ -37,13 +36,13 @@ object Corpus {
       .filter(TextAnalysis.corpusKeep(col(textCol), minQuality, langs))
       .select(col(idCol), col(textCol))
     // Three consumers (pair generation, clustering, the final semi
-    // join) read this frame: it goes through `materialize` so the
-    // scan+filter+dedup subtree executes once, not three times over
-    // the raw corpus. The default persist keeps lineage — a lost
+    // join) read this frame: it goes through defaultMaterialize so
+    // the scan+filter+dedup subtree executes once, not three times
+    // over the raw corpus. The persist keeps lineage — a lost
     // block recomputes from source — where the eager localCheckpoint
     // it replaced truncated lineage to executor-local blocks and an
     // executor loss killed the job.
-    val exactKept = materialize(Dedup.exactKeepFirst(filtered,
+    val exactKept = Dedup.defaultMaterialize(Dedup.exactKeepFirst(filtered,
       md5Fingerprint(col(textCol)), col(idCol)))
     // fingerprint dedup already collapsed byte-identical texts, so the
     // LSH stage's own prefilter would be a wasted full-text shuffle
@@ -63,10 +62,9 @@ object Corpus {
   def clean(docs: DataFrame, idCol: String, textCol: String,
       minQuality: Double, langs: Seq[String],
       p: Dedup.MinHashParams = Dedup.MinHashParams(),
-      minEst: Double = 0.75,
-      materialize: DataFrame => DataFrame = Dedup.defaultMaterialize): DataFrame = {
+      minEst: Double = 0.75): DataFrame = {
     val (exactKept, clusters) = hygieneClusters(
-      docs, idCol, textCol, minQuality, langs, p, minEst, materialize)
+      docs, idCol, textCol, minQuality, langs, p, minEst)
     exactKept.join(
       clusters.filter(col(idCol) === col("cluster_id")).select(col(idCol)),
       Seq(idCol), "left_semi")
@@ -93,10 +91,9 @@ object Corpus {
   def cleanKeepBest(docs: DataFrame, idCol: String, textCol: String,
       minQuality: Double, langs: Seq[String],
       p: Dedup.MinHashParams = Dedup.MinHashParams(),
-      minEst: Double = 0.75,
-      materialize: DataFrame => DataFrame = Dedup.defaultMaterialize): DataFrame = {
+      minEst: Double = 0.75): DataFrame = {
     val (exactKept, clusters) = hygieneClusters(
-      docs, idCol, textCol, minQuality, langs, p, minEst, materialize)
+      docs, idCol, textCol, minQuality, langs, p, minEst)
     // materialize tokens before the ratio lambdas (HOF recompute trap)
     val scored = exactKept
       .select(col(idCol), col(textCol), wsTokens(col(textCol)).as("__tk"))

@@ -73,19 +73,6 @@ object Dedup {
         (1 until p.k).map(j => min(cwHash(col("a"), col("b"), j)).as(s"s$j")): _*)
   }
 
-  /** LSH band keys: md5 over the '|'-joined signature slice per band;
-    * output long-form (id, band, band_key). */
-  def lshBands(sigs: DataFrame, idCol: String, p: MinHashParams): DataFrame = {
-    val bandCols = (0 until p.bands).map { b =>
-      val slice = (b * p.rows until (b + 1) * p.rows)
-        .map(j => col(s"s$j").cast("string"))
-      md5(concat_ws("|", slice: _*)).as(s"band$b")
-    }
-    sigs.select(col(idCol) +: bandCols: _*)
-      .unpivot(Array(col(idCol)),
-        (0 until p.bands).map(b => col(s"band$b")).toArray, "band", "band_key")
-  }
-
   /** Candidate pairs (id_a < id_b) sharing ≥1 LSH bucket, with the
     * MinHash Jaccard estimate (= fraction of matching signature slots),
     * filtered to `minEst`. The pair join is an equi-join on
@@ -564,60 +551,42 @@ object Dedup {
     * O(component diameter) rounds (near-dup clusters are
     * short-diameter in practice). Each round is one equi-join + one
     * groupBy — both shuffle on node id — and each round's frame goes
-    * through `materialize` so successive rounds read the previous
-    * round's result instead of recomputing the whole chain (which
-    * would be quadratic in rounds). The default hook
-    * ([[defaultMaterialize]]) truncates the plan per round in whatever
-    * way is safe for the environment — localCheckpoint on a local
-    * master, reliable checkpoint when a checkpoint dir is set,
-    * lineage-keeping persist otherwise — because under plain persist
-    * round k's logical plan still nests all k-1 predecessors and
-    * analysis cost grows every round. Convergence is
-    * detected by counting changed labels (zero changes = fixpoint),
-    * one tiny existence probe per round that works for ANY id type —
-    * numeric, string, or otherwise. The fixpoint (min id per
-    * component) is unique, so the result is deterministic regardless
-    * of iteration schedule.
+    * through [[defaultMaterialize]] so successive rounds read the
+    * previous round's result instead of recomputing the whole chain
+    * (which would be quadratic in rounds). It truncates the plan per
+    * round in whatever way is safe for the environment —
+    * localCheckpoint on a local master, reliable checkpoint when a
+    * checkpoint dir is set, lineage-keeping persist otherwise —
+    * because under plain persist round k's logical plan still nests
+    * all k-1 predecessors and analysis cost grows every round.
+    * Convergence is detected by counting changed labels (zero
+    * changes = fixpoint), one tiny existence probe per round that
+    * works for ANY id type — numeric, string, or otherwise. The
+    * fixpoint (min id per component) is unique, so the result is
+    * deterministic regardless of iteration schedule.
     *
     * `maxIters` is a safety valve, not a truncation: if the fixpoint
     * is not reached within it (a component whose min-label distance
     * exceeds it, e.g. a 100+-doc drift chain), the call THROWS rather
     * than silently returning non-minimal labels. Raise `maxIters` (or
     * pre-bridge long chains) in that case; labels always converge in
-    * at most the largest component diameter rounds.
-    *
-    * `shortcut = true` adds one POINTER-HALVING join per round
-    * (label ← label-of-label, the Hash-to-Min / large-star family's
-    * path compression, Rastogi et al. 2012): the min-label distance
-    * then roughly halves per round, so a d-link chain converges in
-    * O(log d) rounds instead of d — the long-drift-chain insurance.
-    * The fixpoint (min id per component) is IDENTICAL, so results
-    * match the plain form bit-for-bit; the cost is a second shuffle
-    * join and a second per-round materialization, which is why it is
-    * opt-in: near-dup clusters are short-diameter in the common case
-    * and the plain form's single join per round wins there
-    * (ChainRehearse has the measured crossover — a 200-link chain
-    * converges in 9 rounds with the shortcut vs 200+ without).
-    * The label self-join's hot key (a near-converged component's
-    * shared label) is an AQE-splittable equi-join, not a window. */
+    * at most the largest component diameter rounds. */
   def connectedComponents(ids: DataFrame, idCol: String, pairs: DataFrame,
-      maxIters: Int = 50,
-      materialize: DataFrame => DataFrame = defaultMaterialize,
-      shortcut: Boolean = false): DataFrame = {
+      maxIters: Int = 50): DataFrame = {
     // The edge list is re-joined every round, always on v: one explicit
     // repartition here means every round's edge side reuses this single
     // exchange (checkpoint/localCheckpoint materialization preserves
     // outputPartitioning, and so does persist's InMemoryRelation)
     // instead of re-shuffling the — at corpus scale, huge — edge list
     // per round.
-    val edges = materialize(
+    val edges = defaultMaterialize(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
         .distinct()
         .repartition(col("v")))
-    // prevRound tracks the frame the hook actually materialized (a
+    // prevRound tracks the frame actually materialized (a
     // derived select would make unpersist a silent no-op)
-    var prevRound = materialize(
+    var prevRound = defaultMaterialize(
       ids.select(col(idCol).as("u"), col(idCol).as("label")))
     var labels = prevRound
     var i = 0
@@ -629,29 +598,7 @@ object Dedup {
       val base = labels.join(nbrMin, Seq("u"), "left")
         .select(col("u"), col("label").as("__prev"),
           least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-      // the intermediate the shortcut path materializes; freed only
-      // AFTER the round's noop-sink action — on a cluster without a
-      // checkpoint dir the materialize hook degrades to a LAZY
-      // persist, so an eager unpersist here would re-introduce the
-      // double evaluation of `base` the intermediate exists to prevent
-      var roundScratch: Option[DataFrame] = None
-      val stepped = if (!shortcut) materialize(base) else {
-        // pointer halving: label ← min(label, label-of-label). Labels
-        // are always ids of same-component nodes, so the lookup side
-        // is total over them (left join + coalesce only defends the
-        // ids/pairs-disjoint edge case). base feeds both sides of the
-        // self-join — materialize first or the round's join+agg
-        // evaluates twice.
-        val b = materialize(base)
-        val halved = materialize(b
-          .join(b.select(col("u").as("label"), col("label").as("__l2")),
-            Seq("label"), "left")
-          .select(col("u"), col("__prev"),
-            least(col("label"), coalesce(col("__l2"), col("label")))
-              .as("label")))
-        roundScratch = Some(b)
-        halved
-      }
+      val stepped = defaultMaterialize(base)
       // The materializing action must touch EVERY partition: a take(1)
       // probe (isEmpty) stops at the first changed label, caching only
       // the partitions it read — every later round then recomputes the
@@ -667,7 +614,6 @@ object Dedup {
       // null metric = zero rows observed = nothing left to change
       done = obs.get.get("changed")
         .forall(v => v == null || v.asInstanceOf[Long] == 0L)
-      roundScratch.foreach(_.unpersist())
       prevRound.unpersist()
       prevRound = stepped
       // Build the next round directly on the persisted frame: the
@@ -962,19 +908,16 @@ object Dedup {
   /** Rebuild each document keeping only its non-boilerplate lines (in
     * original order; documents reduced to nothing keep an empty
     * text). The exploded lines frame feeds BOTH the boilerplate
-    * aggregate and the removal anti-join — two consumers, so by
-    * default the scan + explode runs twice; recomputation keeps full
-    * lineage (the [[exactSubstringDedup]] policy — an eager
-    * localCheckpoint would pin blocks to executor-local storage and
-    * die with the executor). Callers for whom the double scan
-    * dominates pass `materialize = _.persist(...)` or a checkpoint
-    * hook. The anti-join is broadcast-friendly on the line text, and
+    * aggregate and the removal anti-join — two consumers, so the
+    * scan + explode runs twice; recomputation keeps full lineage (the
+    * [[exactSubstringDedup]] policy — an eager localCheckpoint would
+    * pin blocks to executor-local storage and die with the executor).
+    * The anti-join is broadcast-friendly on the line text, and
     * reassembly sorts each doc's surviving (pos, line) pairs locally
     * — state per group is one document's lines. */
   def stripBoilerplate(docs: DataFrame, idCol: String, textCol: String,
-      minDocs: Long = 2L,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
-    val lines = materialize(docLines(docs, idCol, textCol))
+      minDocs: Long = 2L): DataFrame = {
+    val lines = docLines(docs, idCol, textCol)
     val bp = boilerplateFromLines(lines, idCol, minDocs).select(col("line"))
     val rebuilt = lines.join(bp, Seq("line"), "left_anti")
       .groupBy(col(idCol))
@@ -998,15 +941,12 @@ object Dedup {
   /** Exact character-n-gram Jaccard for given candidate pairs.
     * `pairs` must have columns (id_a, id_b). */
   def ngramJaccard(docs: DataFrame, pairs: DataFrame, idCol: String,
-      textCol: String, n: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      textCol: String, n: Int): DataFrame = {
     // the per-doc gram-set frame feeds BOTH join sides (a doc appears
     // as id_a and id_b), and the sides join on different keys, so no
-    // exchange is shareable — under the identity default the
-    // charShingles projection over the corpus text runs twice;
-    // `materialize` cuts it to one pass
-    val g = materialize(
-      docs.select(col(idCol), charShingles(col(textCol), n).as("grams")))
+    // exchange is shareable — the charShingles projection over the
+    // corpus text runs twice
+    val g = docs.select(col(idCol), charShingles(col(textCol), n).as("grams"))
     val ga = g.select(col(idCol).as("id_a"), col("grams").as("grams_a"))
     val gb = g.select(col(idCol).as("id_b"), col("grams").as("grams_b"))
     pairs.join(ga, "id_a").join(gb, "id_b")
@@ -1377,19 +1317,15 @@ object Dedup {
     * two consumers (the global frequency aggregate and the join-back
     * that orders each document's set), and the two subtrees cannot
     * share an exchange (one aggregates before its exchange) — so the
-    * tokenize+shingle pass over the corpus text runs twice under the
-    * identity default. `materialize` cuts it to one pass (persist or
-    * scratch the narrow (id, g) rows); at 100 TB that is a full
-    * corpus-text pass saved. */
+    * tokenize+shingle pass over the corpus text runs twice. */
   def prefixFilterSets(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
-    val sh = materialize(docs
+      shingleN: Int): DataFrame = {
+    val sh = docs
       .select(col(idCol), wsTokens(col(textCol)).as("__tk"),
         trim(col(textCol)).as("__t"))
       .select(col(idCol), explode(
         wordShinglesFromTokens(col("__tk"), col("__t"), shingleN))
-        .as("g")))
+        .as("g"))
     val freq = sh.groupBy(col("g")).agg(count(lit(1)).as("f"))
     sh.join(freq, "g")
       .groupBy(col(idCol))

@@ -62,18 +62,10 @@ object LanguageModel {
     * Three frames fork to multiple consumers: the per-doc tf frame
     * (reference counts + the scoring join), the reference vocab
     * (token join + the (N, V) stats), and the per-doc score frame
-    * (output + the tercile histogram) — `materialize` wraps all
-    * three so the caller can cut the re-computation (pass `df =>
-    * df.persist(StorageLevel.DISK_ONLY)` or a checkpoint at cluster
-    * scale — an in-library eager persist would take that choice away
-    * from the caller). The default identity is correct, just ~2x the
-    * forked computation per fork (unmaterialized, the corpus
-    * tokenize+explode+aggregate subtree is planned up to six times:
-    * verified on the x38 plan dump, where no ReusedExchange fires
-    * because join-side inferred filters make the subtrees unequal). */
+    * (output + the tercile histogram); each fork recomputes its
+    * frame unless Catalyst reuses its exchange. */
   def crossEntropyBuckets(docs: DataFrame, idCol: String, textCol: String,
-      langCol: String, refPredicate: String,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      langCol: String, refPredicate: String): DataFrame = {
     val id = col(idCol)
 
     // blank/whitespace-only text must be excluded EXPLICITLY:
@@ -99,13 +91,12 @@ object LanguageModel {
         wsTokenCount(col(textCol)).as("n_tok"),
         explode(wsTokens(col(textCol))).as("token"))
 
-    val tf = materialize(
-      tok.groupBy(id, col(langCol), col("n_tok"), col("__ref"),
-          col("token"))
-        .agg(count(lit(1)).as("tf")))
+    val tf = tok.groupBy(id, col(langCol), col("n_tok"), col("__ref"),
+        col("token"))
+      .agg(count(lit(1)).as("tf"))
 
-    val refCounts = materialize(tf.filter(col("__ref"))
-      .groupBy(col("token")).agg(sum(col("tf")).as("c")))
+    val refCounts = tf.filter(col("__ref"))
+      .groupBy(col("token")).agg(sum(col("tf")).as("c"))
     val stats = refCounts.agg(sum(col("c")).as("n_ref"),
       count(lit(1)).as("v_ref"))
 
@@ -116,13 +107,13 @@ object LanguageModel {
       .select(id, col(langCol), col("n_tok"), col("token"),
         (col("tf").cast("double") * lnp).as("contrib"))
 
-    val folded = materialize(terms.groupBy(id, col(langCol), col("n_tok"))
+    val folded = terms.groupBy(id, col(langCol), col("n_tok"))
       .agg(round(
         -aggregate(
           transform(array_sort(collect_list(struct(col("token"),
             col("contrib")))), x => x.getField("contrib")),
           lit(0.0), (acc, x) => acc + x) / col("n_tok").cast("double"),
-        6).as("h_r")))
+        6).as("h_r"))
 
     // Tercile assignment, bit-identical to ntile(3) OVER (PARTITION BY
     // lang ORDER BY h_r, id) but WITHOUT a per-language corpus window:
@@ -222,12 +213,10 @@ object LanguageModel {
     * Scale shape: three equi-joins keyed by token(s) against the
     * model tables (broadcast when the vocab is capped, as CCNet
     * does); corpus text never shuffles — only (doc, w1, w2, tf)
-    * rows. The reference-bigram frame feeds both the count join and
-    * the context-marginal aggregation, so it takes the same
-    * `materialize` hook. Output: (doc_id, lang, n_bigrams, h2_r). */
+    * rows. Output: (doc_id, lang, n_bigrams, h2_r). */
   def bigramCrossEntropy(docs: DataFrame, idCol: String, textCol: String,
-      langCol: String, refPredicate: String, lambda: Double = 0.7,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      langCol: String, refPredicate: String,
+      lambda: Double = 0.7): DataFrame = {
     require(lambda > 0 && lambda < 1, s"lambda must be in (0,1): $lambda")
     val id = col(idCol)
     def withPairs(df: DataFrame): DataFrame = df
@@ -240,13 +229,13 @@ object LanguageModel {
       .withColumn("w1", col("__z.0")).withColumn("w2", col("__z.1"))
 
     val refDocs = docs.filter(expr(refPredicate))
-    val refBi = materialize(withPairs(refDocs)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2")))
+    val refBi = withPairs(refDocs)
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
     val refCtx = refBi.groupBy(col("w1"))
       .agg(sum(col("c2")).as("ctx"))
-    val refUni = materialize(refDocs
+    val refUni = refDocs
       .select(explode(wsTokens(col(textCol))).as("w2"))
-      .groupBy(col("w2")).agg(count(lit(1)).as("c1")))
+      .groupBy(col("w2")).agg(count(lit(1)).as("c1"))
     val stats = refUni.agg(sum(col("c1")).as("n_ref"),
       count(lit(1)).as("v_ref"))
 
@@ -296,16 +285,11 @@ object LanguageModel {
     * Scale shape: five equi-joins keyed by token tuples against the
     * model tables — each is broadcastable when the vocab is capped
     * (CCNet prunes its LM); corpus text never shuffles, only
-    * (doc, w1, w2, w3, tf) rows do. The trigram, bigram, and unigram
-    * reference frames each feed two consumers (count join + context
-    * marginal, or stats aggregate + per-trigram join), so all three
-    * take the `materialize` hook — without it each fork re-scans the
-    * reference corpus.
+    * (doc, w1, w2, w3, tf) rows do.
     * Output: (doc_id, lang, n_trigrams, h3_r). */
   def trigramCrossEntropy(docs: DataFrame, idCol: String, textCol: String,
       langCol: String, refPredicate: String, lambda3: Double = 0.6,
-      lambda2: Double = 0.7,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      lambda2: Double = 0.7): DataFrame = {
     require(lambda3 > 0 && lambda3 < 1, s"lambda3 must be in (0,1): $lambda3")
     require(lambda2 > 0 && lambda2 < 1, s"lambda2 must be in (0,1): $lambda2")
     val id = col(idCol)
@@ -328,18 +312,18 @@ object LanguageModel {
       .withColumn("w2", col("__z.0")).withColumn("w3", col("__z.1"))
 
     val refDocs = docs.filter(expr(refPredicate))
-    val refTri = materialize(withTriples(refDocs)
+    val refTri = withTriples(refDocs)
       .groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("c3")))
+      .agg(count(lit(1)).as("c3"))
     val refTriCtx = refTri.groupBy(col("w1"), col("w2"))
       .agg(sum(col("c3")).as("ctx3"))
-    val refBi = materialize(withPairs(refDocs)
-      .groupBy(col("w2"), col("w3")).agg(count(lit(1)).as("c2")))
+    val refBi = withPairs(refDocs)
+      .groupBy(col("w2"), col("w3")).agg(count(lit(1)).as("c2"))
     val refBiCtx = refBi.groupBy(col("w2"))
       .agg(sum(col("c2")).as("ctx2"))
-    val refUni = materialize(refDocs
+    val refUni = refDocs
       .select(explode(wsTokens(col(textCol))).as("w3"))
-      .groupBy(col("w3")).agg(count(lit(1)).as("c1")))
+      .groupBy(col("w3")).agg(count(lit(1)).as("c1"))
     val stats = refUni.agg(sum(col("c1")).as("n_ref"),
       count(lit(1)).as("v_ref"))
 

@@ -73,8 +73,7 @@ object Packing {
     * corpus mixing, and `Corpus.budgetSelect`'s (quality DESC, id)
     * greedy fill. */
   def inclusiveRunningSum(docs: DataFrame, orderCols: Seq[Column],
-      valueCol: String, nBuckets: Int = 0,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      valueCol: String, nBuckets: Int = 0): DataFrame = {
     require(nBuckets >= 0, "nBuckets must be >= 0 (0 = adaptive)")
     require(orderCols.nonEmpty, "orderCols must be non-empty")
     val buckets =
@@ -83,13 +82,11 @@ object Packing {
         docs.sparkSession.sparkContext.defaultParallelism * 4))
     // the bucketed frame feeds TWO arms (in-bucket cumsum and the
     // per-bucket totals), so its subtree — the caller's input plus
-    // the range exchange — computes twice under the identity default
-    // (recompute keeps full lineage; both arms are linear map/agg
-    // work). Callers for whom that input is expensive pass a persist
-    // hook here.
-    val bucketed = materialize(docs
+    // the range exchange — computes twice (recompute keeps full
+    // lineage; both arms are linear map/agg work)
+    val bucketed = docs
       .repartitionByRange(buckets, orderCols: _*)
-      .withColumn("__b", spark_partition_id().cast("long")))
+      .withColumn("__b", spark_partition_id().cast("long"))
     val inBucket = Window.partitionBy(col("__b"))
       .orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -139,8 +136,7 @@ object Packing {
     * the whole input). */
   def groupedInclusiveRunningSum(df: DataFrame, groupCol: String,
       orderCols: Seq[Column], valueCol: String,
-      nBuckets: Int = 0, withGroupTotal: Boolean = false,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      nBuckets: Int = 0, withGroupTotal: Boolean = false): DataFrame = {
     require(nBuckets >= 0, "nBuckets must be >= 0 (0 = adaptive)")
     require(orderCols.nonEmpty, "orderCols must be non-empty")
     val buckets =
@@ -148,9 +144,9 @@ object Packing {
       else math.min(1024, math.max(1,
         df.sparkSession.sparkContext.defaultParallelism * 4))
     // two-consumer bucketed frame — see inclusiveRunningSum's note
-    val bucketed = materialize(df
+    val bucketed = df
       .repartitionByRange(buckets, (col(groupCol) +: orderCols): _*)
-      .withColumn("__b", spark_partition_id().cast("long")))
+      .withColumn("__b", spark_partition_id().cast("long"))
     val inBucket = Window.partitionBy(col(groupCol), col("__b"))
       .orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

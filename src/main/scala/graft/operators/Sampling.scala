@@ -38,26 +38,6 @@ object Sampling {
           .when(col("bucket") < trainPct + valPct, "val")
           .otherwise("test"))
 
-  /** Stratified deterministic sampling: keep rows whose 0..99 id-hash
-    * bucket is below their class's percentage — per-class `fractions`
-    * (e.g. "wiki" -> 100, "commoncrawl" -> 10) with `defaultPct` for
-    * unlisted classes. The standard corpus-mixing knob (up-weight
-    * curated sources, down-sample crawl bulk) as a pure narrow
-    * filter: no shuffle, no rand(), pushdown-friendly, and a row's
-    * keep/drop never changes as the corpus grows or re-runs.
-    *
-    * The class percentage is a literal CASE chain (classes are a
-    * config, not data), so the whole predicate reaches the scan. */
-  def stratifiedSample(df: DataFrame, classCol: String, idCol: String,
-      fractions: Map[String, Int], defaultPct: Int = 0): DataFrame = {
-    require((fractions.values ++ Seq(defaultPct)).forall(p => p >= 0 && p <= 100),
-      "percentages must be in [0, 100]")
-    val pct = fractions.toSeq.sortBy(_._1).foldLeft(lit(defaultPct)) {
-      case (acc, (cls, p)) => when(col(classCol) === cls, lit(p)).otherwise(acc)
-    }
-    df.filter(hashBucket(col(idCol), 100) < pct)
-  }
-
   /** Temperature-based class rebalancing (the multilingual sampling
     * knob of XLM / mC4 — Conneau & Lample 2019 §3.1, Raffel et al.
     * 2020 §2.3): resample so class shares follow `p_c ∝ n_c^alpha`
@@ -71,7 +51,7 @@ object Sampling {
     * Scale shape: one map-side-combined count per class (the only
     * shuffle, cardinality = #classes), a broadcast join of the tiny
     * per-class keep-rate frame, and the same deterministic md5 keep
-    * filter as [[stratifiedSample]] — no rand(), reproducible across
+    * filter as [[hashSample]] — no rand(), reproducible across
     * engines/runs, and a kept row stays kept under re-runs with the
     * same class counts. Keep rates are rounded to 6 dp before the
     * bucket cut so both engines drop the identical rows (pow differs

@@ -238,8 +238,8 @@ object Similarity {
   /** [[ivfTopK]] against FROZEN centroids (a loaded/persisted index or
     * an earlier train): the serving shape of the index lifecycle —
     * train once, assign and search many corpus versions, retrain when
-    * the drift rehearsal says recall decayed (see DriftRehearse /
-    * TUNING.md). */
+    * the drift rehearsal says recall decayed (TUNING.md "ANN
+    * drift"). */
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, centroids: Array[Array[Double]],
       nProbes: Int): DataFrame =
@@ -711,13 +711,10 @@ object Similarity {
     * explicit sum chain), so ranking needs no rounding guard. */
   def adcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, m: Int, ksub: Int, nCells: Int,
-      nProbes: Int, iters: Int = 2,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      nProbes: Int, iters: Int = 2): DataFrame = {
     // one shared (id, vec) projection feeds both trainers (2×(1+iters)
-    // scans) and the encode pass; the hook lets a caller persist it
-    // across all of them (inner trainer hooks stay identity — a
-    // persisted `base` is already cache-matched by their projections)
-    val base = materialize(corpus.select(col(idCol), col(vecCol)))
+    // scans) and the encode pass
+    val base = corpus.select(col(idCol), col(vecCol))
     val books = pqTrain(base, idCol, vecCol, m, ksub, iters)
     val centroids = ivfTrain(base, idCol, vecCol, nCells, iters)
     adcTopKWith(base, queries, idCol, vecCol, k, books, centroids, nProbes)
@@ -862,11 +859,10 @@ object Similarity {
     * ADC) → ~0.9 at shortlistC=50 (TUNING.md). */
   def adcRerankTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, shortlistC: Int, m: Int, ksub: Int,
-      nCells: Int, nProbes: Int, iters: Int = 2,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      nCells: Int, nProbes: Int, iters: Int = 2): DataFrame = {
     require(shortlistC >= k,
       s"shortlistC=$shortlistC must be >= k=$k")
-    val base = materialize(corpus.select(col(idCol), col(vecCol)))
+    val base = corpus.select(col(idCol), col(vecCol))
     val short = adcTopK(base, queries, idCol, vecCol, shortlistC, m,
       ksub, nCells, nProbes, iters)
     exactRerank(base, queries, idCol, vecCol,
@@ -1234,11 +1230,10 @@ object Similarity {
     * bit-exact cross-engine) is as [[adcTopK]]. */
   def adcResidualTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, m: Int, ksub: Int, nCells: Int,
-      nProbes: Int, iters: Int = 2,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      nProbes: Int, iters: Int = 2): DataFrame = {
     // shared projection across coarse trainer, residual trainer, and
     // encode — see adcTopK
-    val base = materialize(corpus.select(col(idCol), col(vecCol)))
+    val base = corpus.select(col(idCol), col(vecCol))
     val centroids = ivfTrain(base, idCol, vecCol, nCells, iters)
     val books = pqTrainResidual(base, idCol, vecCol, centroids, m, ksub,
       iters)
@@ -1358,7 +1353,7 @@ object Similarity {
   // MANIFEST (params + caller metadata such as the trained-on snapshot
   // id) makes the index a first-class artifact: train once on a 100 TB
   // snapshot, serve assignment/search from the saved tables, and
-  // retrain on the DriftRehearse schedule instead of per job. All
+  // retrain on the TUNING.md "ANN drift" schedule instead of per job. All
   // driver traffic here is the same O(K·dim) / O(m·ksub·subDim) bound
   // as the trainers themselves.
 
@@ -1534,7 +1529,8 @@ object Similarity {
     * lists, the skew the capped retrieval cannot bound because its
     * cap is per QUERY) costs a k-element heap merge per task instead
     * of funneling |sources| rows into one window-sort task. Measured
-    * by [[graft.HubSkewRehearse]] at 1M×1M with a universal hub.
+    * at 1M×1M with a universal hub (SCALE.md "Margin-tail hub
+    * skew").
     *
     * `materialize` hook: `scored` feeds three consumers (both
     * topMeans and the margins join) and `margins` two (both
@@ -1615,7 +1611,7 @@ object Similarity {
     * for any real bilingual corpus and for the x80b parity fixture.
     *
     * RECALL vs the retrieval's parameters is MEASURED, not assumed
-    * (graft.BitextRecallRehearse; tables in SCALE.md; one point
+    * (SCALE.md "Composed bitext-miner RECALL vs the cap"; one point
     * hash-gated as x80c): mined-pair recall tracks
     * perCellCap / cell-occupancy — the cap is a hash election, so the
     * true neighbor survives with probability ≈ cap/|cell| regardless

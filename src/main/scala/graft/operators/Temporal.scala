@@ -110,10 +110,8 @@ object Temporal {
     *     coalesce(in-bucket carry, previous-buckets carry).
     *
     * The carried frame feeds TWO arms (summaries and the join-back);
-    * under the identity default the summaries arm recomputes the
-    * union + in-bucket window, column-pruned. Callers with expensive
-    * inputs pass a persist hook — same contract as
-    * `Packing.inclusiveRunningSum`.
+    * the summaries arm recomputes the union + in-bucket window,
+    * column-pruned — same contract as `Packing.inclusiveRunningSum`.
     *
     * Unlike the plain form (which orders by any comparable `tsCol`),
     * this form requires `tsCol` to be a TIMESTAMP — `bucketSeconds`
@@ -121,8 +119,7 @@ object Temporal {
     * microseconds. */
   def asOfJoinLeftSharded(left: DataFrame, right: DataFrame,
       keyCol: String, tsCol: String, rightOrder: String,
-      payload: Seq[String], bucketSeconds: Long = 86400L,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      payload: Seq[String], bucketSeconds: Long = 86400L): DataFrame = {
     val (union, leftCols) =
       asOfUnion(left, right, keyCol, tsCol, rightOrder, payload)
     // equal timestamps share a bucket, so per-bucket (ts, tag, ord)
@@ -132,10 +129,10 @@ object Temporal {
       graft.functions.TimeFunctions.timeBucketUs(col(tsCol), bucketSeconds))
     val wIn = Window.partitionBy(col(keyCol), col("__bkt"))
       .orderBy(col(tsCol), col("__tag"), col("__ord"))
-    val carried = materialize(bucketed
+    val carried = bucketed
       .withColumn("__p_in", last(col("__p"), ignoreNulls = true)
         .over(wIn.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("__rn", row_number().over(wIn)))
+      .withColumn("__rn", row_number().over(wIn))
     // __rn is unique per (key, bucket), so the struct max is the
     // bucket's last row — no null-ordering subtleties from __ord
     val summaries = carried.groupBy(col(keyCol), col("__bkt"))

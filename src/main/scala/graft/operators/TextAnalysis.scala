@@ -47,10 +47,6 @@ object TextAnalysis {
     }
   }
 
-  /** Predicted language code, or 'und' when no marker hits.
-    * Convenience form — prefer langIdFromTokens on hot paths. */
-  def langId(textCol: Column): Column = langIdFromTokens(wsTokens(textCol))
-
   /** The corpus-hygiene keep predicate (graft.plans.CorpusKeep) wired
     * with this object's stopwords and language markers — the ONE
     * assembly point, so every call site (pipeline, profiler,
@@ -125,9 +121,6 @@ object TextAnalysis {
   def stopwordRatioFromTokens(toks: Column): Column =
     tokensInArr(toks, stopwords).cast("double") / size(toks).cast("long")
 
-  def stopwordRatio(textCol: Column): Column =
-    stopwordRatioFromTokens(wsTokens(textCol))
-
   /** Alphabetic-character ratio (needs the raw text, not tokens).
     * Zero-guarded: an empty document scores 0 rather than tripping
     * ANSI mode's DIVIDE_BY_ZERO — a hygiene filter must reject junk
@@ -142,9 +135,6 @@ object TextAnalysis {
   def meanTokenLenFromTokens(toks: Column): Column =
     aggregate(transform(toks, t => length(t)), lit(0), (a, x) => a + x)
       .cast("long").cast("double") / size(toks).cast("long")
-
-  def meanTokenLen(textCol: Column): Column =
-    meanTokenLenFromTokens(wsTokens(textCol))
 
   /** Sentence segmentation (array of sentences): a terminator
     * ([.!?]) followed by whitespace ends a sentence; the trailing
@@ -178,9 +168,6 @@ object TextAnalysis {
       alphaRatio(textCol) * lit(0.4) +
       when(mtl >= 3 && mtl <= 10, lit(0.2)).otherwise(lit(0.0))
   }
-
-  def qualityScore(textCol: Column): Column =
-    qualityScoreFromTokens(textCol, wsTokens(textCol))
 
   /** Linear quality-classifier margin with embedded trained weights —
     * the fasttext-style learned keep/drop stage that follows the

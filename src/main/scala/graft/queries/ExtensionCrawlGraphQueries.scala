@@ -894,7 +894,7 @@ private[queries] object ExtensionCrawlGraphQueries {
         "join anywhere in the plan (the all-pairs shape this form " +
         "exists to avoid), the per-query retrieval contract (≤ kCand " +
         "rows each direction) audited — the pre-rank scored bound is " +
-        "structural and measured by BitextRehearse — and non-empty " +
+        "structural and measured in SCALE.md — and non-empty " +
         "mining output",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
@@ -942,8 +942,9 @@ private[queries] object ExtensionCrawlGraphQueries {
           // nProbes×perCellCap would be vacuous). The pre-rank SCORED
           // bound — candidates/query ≤ nProbes×perCellCap — is
           // structural in ivfTopKWithCapped (cap applied before the
-          // probe join) and is MEASURED against raw cell occupancy by
-          // BitextRehearse at 1M×1M (SCALE.md: ≤64 vs 455k uncapped)
+          // probe join) and is MEASURED against raw cell occupancy
+          // at 1M×1M (SCALE.md "Composed bitext mining at corpus
+          // shape": ≤64 vs 455k uncapped)
           val maxCand = fwd.groupBy(col("qid")).count()
             .unionByName(bwd.groupBy(col("qid")).count())
             .agg(max(col("count"))).collect()(0).getLong(0)
@@ -980,7 +981,7 @@ private[queries] object ExtensionCrawlGraphQueries {
         "which re-derives BOTH miners — the exact cross join and the " +
         "full centroid/probe/cap retrieval composition — so this " +
         "hash-gates one measured point of the recall-vs-cap curve " +
-        "(the sweep lives in BitextRecallRehearse/SCALE.md). " +
+        "(the sweep lives in SCALE.md). " +
         "Centroids are the x80b memoized trains (same tags); builder " +
         "REQUIREs a non-empty hit set and at least one miss recorded " +
         "structurally (hit or comp_tgt=-1 accounting reconciles). " +

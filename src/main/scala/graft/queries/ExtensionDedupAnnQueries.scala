@@ -127,12 +127,6 @@ private[queries] object ExtensionDedupAnnQueries {
         val pairs = ids.select(col("doc_id").as("id_a"))
           .join(ids.select(col("doc_id").as("id_b")),
             col("id_a") + 1 === col("id_b"))
-        // ngramJaccard's materialize hook (one charShingles pass
-        // instead of one per join side) measured a wash-to-worse here
-        // at sf0.1 (interleaved medians 3.09 identity vs 3.25
-        // checkpointed — the gram arrays cost as much to materialize
-        // as to recompute), so the entry keeps the identity default;
-        // the hook stays for corpus-scale callers.
         Dedup.ngramJaccard(docs, pairs, "doc_id", "text", 3)
           .orderBy(col("id_a"))
       },

@@ -368,14 +368,6 @@ private[queries] object ExtensionWebStreamQueries {
         // volume: two audit jobs folded into writes that already run
         // (guide §1.2; the x90 observe-audit pattern)
         val setsObs = new org.apache.spark.sql.Observation()
-        // prefixFilterSets' materialize hook (cut the doubled
-        // tokenize+shingle pass) measured SLOWER here at sf0.1 —
-        // localCheckpoint of the exploded (id, g) frame costs more
-        // than the saved second pass (r18 BenchOne pair: identity
-        // 4.40/4.33 s warm, checkpointed 5.40/4.62, persist-hook
-        // 4.07/4.18 but persist leaks across the suite) — so the
-        // entry keeps the identity default; the hook stays for
-        // corpus-scale callers where the text pass dominates.
         val sets = scratch(
           Dedup.prefixFilterSets(corpus, "doc_id", "text", 3)
             .observe(setsObs, count(lit(1)).as("n")),

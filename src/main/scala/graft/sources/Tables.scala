@@ -23,9 +23,8 @@ object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   /** Session confs the fixture read layer REQUIRES. Apply at session
-    * BUILD time (every entry point in this repo does — Verify, Bench,
-    * Smoke, BenchOne, Profile, Explain, ScaleGen, and the test base
-    * spec): `nanosAsLong` makes a TIMESTAMP(NANOS) fixture
+    * BUILD time (every entry point in this repo does, through
+    * [[localSession]]): `nanosAsLong` makes a TIMESTAMP(NANOS) fixture
     * regeneration readable as a BIGINT instead of a reader error, and
     * [[truncateNanosCols]] then repairs exactly the footer-annotated
     * columns. A library must not mutate its host session's global
@@ -40,6 +39,23 @@ object Tables {
     * entry point (and an embedder) uses at session build time. */
   def withSessionConfs(b: SparkSession.Builder): SparkSession.Builder =
     sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The session every entry point (Verify, Bench, Smoke, BenchOne,
+    * Explain, JobCount, ScaleGen, the test base spec) runs on:
+    * [[sessionConfs]], `local[cpus]` with as many shuffle partitions,
+    * UTC (the events ts normalization casts TIMESTAMP_NTZ via the
+    * session TZ, so an unpinned session on a non-UTC host reads
+    * shifted timestamps), no UI, WARN logging. */
+  def localSession(cpus: Int): SparkSession = {
+    val spark = withSessionConfs(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Parquet read that upgrades Spark's opaque TIMESTAMP(NANOS)
     * schema error into an actionable one naming [[sessionConfs]]. */
@@ -183,33 +199,6 @@ object Tables {
       if (isDir) spark.readStream.schema(schema).parquet(p)
       else spark.readStream.schema(schema)
         .option("pathGlobFilter", s"$name.parquet").parquet(dir)
-    if (name == "events")
-      normalizeEventsTs(
-        stream(readParquet(spark, path(dir, "events")).schema))
-    else truncateNanosCols(spark, dir, name,
-      stream(readParquet(spark, path(dir, name)).schema))
-  }
-
-  /** [[loadStream]] with a bounded ingest rate: at most
-    * `maxFilesPerTrigger` source files per micro-batch — the
-    * backpressure knob a continuous deployment runs with (an
-    * AvailableNow gulp of the whole backlog is the REPROCESSING shape,
-    * not the steady state). Shares every layout/normalization rule
-    * with [[loadStream]]. */
-  def loadStreamRated(spark: SparkSession, dir: String, name: String,
-      maxFilesPerTrigger: Int): DataFrame = {
-    require(maxFilesPerTrigger > 0,
-      s"maxFilesPerTrigger must be positive, got $maxFilesPerTrigger")
-    val p = path(dir, name)
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val isDir = hp.getFileSystem(spark.sessionState.newHadoopConf())
-      .getFileStatus(hp).isDirectory
-    def stream(schema: org.apache.spark.sql.types.StructType) = {
-      val r = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      if (isDir) r.parquet(p)
-      else r.option("pathGlobFilter", s"$name.parquet").parquet(dir)
-    }
     if (name == "events")
       normalizeEventsTs(
         stream(readParquet(spark, path(dir, "events")).schema))

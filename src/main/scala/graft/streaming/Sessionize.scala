@@ -131,14 +131,11 @@ object Sessionize {
     * one day of its events.
     *
     * The flagged frame feeds TWO arms (the join-back and the bucket
-    * summaries); under the identity default the summaries arm
-    * recomputes the scan + in-bucket window — column-pruned to the
-    * lag pass only, and recompute keeps full lineage. Callers with an
-    * expensive upstream pass a persist hook, same contract as
-    * `Packing.inclusiveRunningSum`. */
+    * summaries); the summaries arm recomputes the scan + in-bucket
+    * window — column-pruned to the lag pass only, and recompute keeps
+    * full lineage, same contract as `Packing.inclusiveRunningSum`. */
   def batchSessionsSharded(events: DataFrame, gapSeconds: Long,
-      bucketSeconds: Long = 86400L,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      bucketSeconds: Long = 86400L): DataFrame = {
     val gapUs = gapSeconds * 1000000L
     val bucketUs = Math.multiplyExact(bucketSeconds, 1000000L)
 
@@ -152,11 +149,11 @@ object Sessionize {
     val wIn = Window.partitionBy(col("user_id"), col("__bkt"))
       .orderBy(col("ts"), col("event_id"))
     val prevUs = lag(col("__us"), 1).over(wIn)
-    val flagged = materialize(ev
+    val flagged = ev
       .withColumn("__new_in",
         when(prevUs.isNotNull && col("__us") - prevUs > gapUs, 1).otherwise(0))
       .withColumn("__cum_in", sum(col("__new_in"))
-        .over(wIn.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+        .over(wIn.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
 
     // 2. + 3. bucket summaries, then the per-user seam pass over them
     val summaries = flagged.groupBy(col("user_id"), col("__bkt"))

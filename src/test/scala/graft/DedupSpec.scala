@@ -87,20 +87,16 @@ class DedupSpec extends SparkSpec {
       5L -> 5L, 6L -> 5L, 7L -> 7L))
   }
 
-  test("connectedComponents shortcut=true matches the plain form and " +
-      "converges on a chain longer than its maxIters budget") {
-    // a 20-link chain: plain needs 20 rounds, pointer halving ~6 —
-    // same fixpoint (min id per component) either way
+  test("connectedComponents converges on a 20-link chain and throws " +
+      "when maxIters is below the chain length") {
+    // a 20-link chain needs 20 rounds to carry label 0 to its far end
     val n = 20L
     val ids = (0L to n).toDF("doc_id")
     val pairs = (0L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val plain = Dedup.connectedComponents(ids, "doc_id", pairs,
+    val labels = Dedup.connectedComponents(ids, "doc_id", pairs,
       maxIters = 25).as[(Long, Long)].collect().toMap
-    val halved = Dedup.connectedComponents(ids, "doc_id", pairs,
-      maxIters = 8, shortcut = true).as[(Long, Long)].collect().toMap
-    assert(plain == halved)
-    assert(halved.values.toSet == Set(0L))
-    // and the plain form honestly throws on that budget
+    assert(labels.size == n + 1 && labels.values.toSet == Set(0L))
+    // a short budget throws instead of returning non-minimal labels
     intercept[IllegalStateException] {
       Dedup.connectedComponents(ids, "doc_id", pairs, maxIters = 8)
         .collect()

@@ -27,14 +27,6 @@ object SparkSpec {
         throw new IllegalArgumentException(
           s"GRAFT_TEST_CPUS must be a positive int, got '$v'")))
       .getOrElse(4)
-    val s = graft.sources.Tables.withSessionConfs(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    graft.sources.Tables.localSession(cpus)
   }
 }
