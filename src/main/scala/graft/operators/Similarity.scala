@@ -10,11 +10,19 @@ import graft.functions.VectorFunctions._
 
 /** Similarity search over an `array<float>` embedding column.
   *
-  * Baseline: brute-force cosine top-k — broadcast the (small) query set
-  * against the corpus. Norms are computed ONCE per row before the join
-  * (not per pair), and the dot product is the native codegen'd
-  * ArrayDotProduct expression, so per-pair work is a single tight loop.
-  * The per-query top-k is a window keyed by qid only.
+  * Every exact-cosine path is one skeleton: a CANDIDATE step joins the
+  * corpus side to the broadcast query side on a key — none for brute
+  * force, a sign-LSH bucket, or an IVF cell (the query side carrying
+  * one row per probed cell) — then ONE cosine over norms computed once
+  * per row (not once per pair; the dot product is the native codegen'd
+  * ArrayDotProduct expression, so per-pair work is a single tight
+  * loop), then ONE per-query window top-k keyed by qid only. The
+  * compressed (PQ/ADC) path swaps the cosine for LUT sums over codes
+  * and keeps the candidate step and the tail. The DuckDB twins are
+  * built from the same pieces ([[cosSql]], [[rankedTailSql]], the
+  * probe and cell struct lists), so the two engines cannot drift one
+  * copy at a time. The model is AnalyticDB-V's one plan shape with
+  * interchangeable vector access paths.
   *
   * Scale path: random-hyperplane (sign-LSH) bucketing. Plane weights
   * are md5-derived Rademacher (±1) vectors materialized driver-side as
@@ -26,74 +34,124 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
+  private type Books = Array[Array[Array[Double]]]
+
+  // ---- the shared candidate → score → top-k skeleton ----------------
+
+  /** Corpus side `(did, dvec, dn, extra...)`: the norm once per row. */
+  private def corpusSide(corpus: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    corpus.select(Seq(col(idCol).as("did"), col(vecCol).as("dvec"),
+      l2Norm(col(vecCol)).as("dn")) ++ extra: _*)
+
+  /** Query side `(qid, qvec, qn, extra...)`: the norm once per row. */
+  private def querySide(queries: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    queries.select(Seq(col(idCol).as("qid"), col(vecCol).as("qvec"),
+      l2Norm(col(vecCol)).as("qn")) ++ extra: _*)
+
+  /** Exact cosine from norms already computed; 0.0 when either norm is
+    * zero (guards the ANSI divide rather than returning NULL/Inf).
+    * [[cosSql]] is the DuckDB twin. */
+  private def cosineOf(a: Column, b: Column, na: Column, nb: Column): Column =
+    when(na * nb > 0, dotProduct(a, b) / (na * nb)).otherwise(lit(0.0))
+
+  /** The query-vs-corpus cosine over [[querySide]]/[[corpusSide]]. */
+  private def qdCosine: Column =
+    cosineOf(col("qvec"), col("dvec"), col("qn"), col("dn")).as("cos")
+
+  /** The candidate step: the corpus side joined to the broadcast query
+    * side on `keys` (none: every pair), self-matches dropped. */
+  private def candidates(c: DataFrame, q: DataFrame,
+      keys: Seq[String]): DataFrame =
+    c.join(broadcast(q), keys).filter(col("qid") =!= col("did"))
+
+  /** [[candidates]] scored by exact cosine: `(qid, did, cos)`. */
+  private def cosineScored(c: DataFrame, q: DataFrame,
+      keys: Seq[String]): DataFrame =
+    candidates(c, q, keys).select(col("qid"), col("did"), qdCosine)
+
+  /** The window top-k tail: per query, rank `(score DESC, did)` and keep
+    * `rn <= k`. A window rather than [[graft.plans.TopKPairs]], whose
+    * heap drops NULL scores, ranks -0.0 below 0.0 and needs Long ids —
+    * moving these paths onto it would change what they return. */
+  private def topKTail(scored: DataFrame, score: String, k: Int): DataFrame =
+    scored.withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
+        .orderBy(col(score).desc, col("did"))).cast("long"))
+      .filter(col("rn") <= k)
+
+  /** Each centroid's `(s = dot(vec, centroid), i = index)` struct — the
+    * shared building block of probe selection and [[ivfAssign]]. */
+  private def centroidScores(vecCol: String,
+      centroids: Array[Array[Double]]): Seq[Column] =
+    centroids.toSeq.zipWithIndex.map { case (cent, i) =>
+      struct(dotProduct(col(vecCol), array(cent.map(lit): _*)).as("s"),
+        lit(i).as("i"))
+    }
+
+  /** One row of `q` per probed cell: the `nProbes` centroids with the
+    * largest dot product against `vecCol` (ties to the larger index —
+    * Spark's struct ordering; [[probeSql]] is the twin), appended as
+    * `cell` with that dot product as `qc`. */
+  private def probeCells(q: DataFrame, vecCol: String,
+      centroids: Array[Array[Double]], nProbes: Int): DataFrame =
+    q.select(col("*"), explode(slice(reverse(array_sort(
+        array(centroidScores(vecCol, centroids): _*))), 1, nProbes))
+        .as("probe"))
+      .select(col("*"), col("probe.i").as("cell"), col("probe.s").as("qc"))
+      .drop("probe")
+
   /** Exact top-k cosine neighbors for each query row (excluding self).
     * `queries` must be small enough to broadcast. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-      l2Norm(col(vecCol)).as("qn"))
-    val c = corpus.select(col(idCol).as("did"), col(vecCol).as("dvec"),
-      l2Norm(col(vecCol)).as("dn"))
-    val scored = c.join(broadcast(q), col("qid") =!= col("did"))
-      .select(col("qid"), col("did"),
-        when(col("qn") * col("dn") > 0,
-          dotProduct(col("qvec"), col("dvec")) / (col("qn") * col("dn")))
-          .otherwise(lit(0.0)).as("cos"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("did"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-  }
+      vecCol: String, k: Int): DataFrame =
+    topKTail(bruteForceScored(corpus, queries, idCol, vecCol), "cos", k)
+
+  /** Every (query, corpus) pair but self, scored: `(qid, did, cos)`. */
+  private def bruteForceScored(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String): DataFrame =
+    cosineScored(corpusSide(corpus, idCol, vecCol),
+      querySide(queries, idCol, vecCol), Nil)
 
   /** Brute-force top-k via the native bounded-heap aggregate
-    * (graft.plans.TopKPairs) instead of a window: identical results,
-    * but each map task reduces its candidate slice to k pairs before
-    * the exchange, so the shuffle carries k×queries rows instead of
-    * corpus×queries — the shape that survives a 100 TB corpus. */
+    * (graft.plans.TopKPairs) instead of a window: the same scoring as
+    * [[bruteForceTopK]] and identical results, but each map task
+    * reduces its candidate slice to k pairs before the exchange, so the
+    * shuffle carries k×queries rows instead of corpus×queries — the
+    * shape that survives a 100 TB corpus. */
   def bruteForceTopKAgg(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.GraftBridge
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-      l2Norm(col(vecCol)).as("qn"))
-    val c = corpus.select(col(idCol).as("did"), col(vecCol).as("dvec"),
-      l2Norm(col(vecCol)).as("dn"))
-    val scored = c.join(broadcast(q), col("qid") =!= col("did"))
-      .select(col("qid"), col("did"),
-        when(col("qn") * col("dn") > 0,
-          dotProduct(col("qvec"), col("dvec")) / (col("qn") * col("dn")))
-          .otherwise(lit(0.0)).as("cos"))
     val topk = GraftBridge.column(graft.plans.TopKPairs(
       GraftBridge.expression(col("cos")),
       GraftBridge.expression(col("did")), k).toAggregateExpression())
-    scored.groupBy(col("qid")).agg(topk.as("top"))
+    bruteForceScored(corpus, queries, idCol, vecCol)
+      .groupBy(col("qid")).agg(topk.as("top"))
       .select(col("qid"), posexplode(col("top")).as(Seq("pos", "p")))
       .select(col("qid"), (col("pos") + 1).cast("long").as("rn"),
         col("p.id").as("did"), col("p.score").as("cos"))
   }
 
-  /** Deterministic Rademacher plane weights: ±1 from bit 0 of
-    * md5("plane-<p>-<d>") — same derivation as HashFunctions.md5Hash60,
-    * computed driver-side. */
-  def planeWeights(nPlanes: Int, dim: Int): Array[Array[Double]] =
-    Array.tabulate(nPlanes, dim) { (p, d) =>
+  /** Deterministic Rademacher ±1 matrix: entry (p, d) is +1 when bit 0
+    * of md5("<ns>-<p>-<d>") is set — same derivation as
+    * HashFunctions.md5Hash60, computed driver-side. */
+  private def rademacher(ns: String, rows: Int, dim: Int): Array[Array[Double]] =
+    Array.tabulate(rows, dim) { (p, d) =>
       val md = MessageDigest.getInstance("MD5")
-        .digest(s"plane-$p-$d".getBytes("UTF-8"))
+        .digest(s"$ns-$p-$d".getBytes("UTF-8"))
       val hex = md.map(b => f"$b%02x").mkString
       if ((java.lang.Long.parseLong(hex.substring(0, 15), 16) & 1L) == 1L) 1.0
       else -1.0
     }
 
-  /** Deterministic Rademacher JL weights — same md5-bit derivation as
-    * [[planeWeights]] but namespaced (`jl-…`) so the projection is
+  /** The sign-LSH plane weights (md5 namespace `plane-…`). */
+  def planeWeights(nPlanes: Int, dim: Int): Array[Array[Double]] =
+    rademacher("plane", nPlanes, dim)
+
+  /** The JL weights — namespaced (`jl-…`) so the projection is
     * independent of the sign-LSH planes. */
   def jlWeights(dOut: Int, dim: Int): Array[Array[Double]] =
-    Array.tabulate(dOut, dim) { (p, d) =>
-      val md = MessageDigest.getInstance("MD5")
-        .digest(s"jl-$p-$d".getBytes("UTF-8"))
-      val hex = md.map(b => f"$b%02x").mkString
-      if ((java.lang.Long.parseLong(hex.substring(0, 15), 16) & 1L) == 1L) 1.0
-      else -1.0
-    }
+    rademacher("jl", dOut, dim)
 
   /** Johnson–Lindenstrauss random projection (Johnson & Lindenstrauss
     * 1984; ±1 "database-friendly" form, Achlioptas 2003): out_j =
@@ -126,18 +184,56 @@ object Similarity {
     }.reduce(_ + _)
   }
 
-  /** Per-row LSH bucket assignment. */
-  def lshBuckets(df: DataFrame, idCol: String, vecCol: String,
-      nPlanes: Int, dim: Int): DataFrame =
-    df.select(col(idCol), bucketExpr(col(vecCol), nPlanes, dim).as("bucket"))
-
   // ---- IVF (inverted-file) ANN -------------------------------------
+
+  /** The deterministic Lloyd loop [[ivfTrain]], [[pqTrain]] and
+    * [[pqTrainResidual]] share. No RNG anywhere, so codebooks are
+    * reproducible across runs and cluster layouts: they start from the
+    * `n` lowest-id rows (`seed` turns those vectors into
+    * `books(sub)(codeword)`), then each of the `iters` passes is ONE
+    * groupBy(`__sub`, `__cell`) over the trainer's `assign`ed frame,
+    * aggregating the trainer's `means` (built for the codeword width).
+    * The aggregate combines map-side, so per task the partial state is
+    * the codebook size whatever the data volume, and the driver
+    * collects one row per codeword. A NULL mean (ragged vectors shorter
+    * than the codeword in every row of its group) keeps that
+    * dimension's previous value. The result goes to `stash` for the
+    * late-bound oracles.
+    *
+    * `base` is the trainer's (id, vec) projection every pass re-reads
+    * (1 init scan + `iters` iteration scans) after the trainer's
+    * `materialize` hook: identity recomputes from source (full lineage
+    * — an executor loss rebuilds); a caller for whom the repeated scan
+    * dominates passes `_.persist(...)` and owns the unpersist (same
+    * policy as exactSubstringDedup). */
+  private def lloyd(base: DataFrame, idCol: String, vecCol: String,
+      n: Int, iters: Int, stash: Books => Unit)(
+      seed: Array[Array[Double]] => Books, means: Int => Seq[Column],
+      assign: (DataFrame, Books) => DataFrame): Books = {
+    val init = base.orderBy(col(idCol)).limit(n).select(col(vecCol))
+      .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    var books = seed(init)
+    if (init.nonEmpty && init(0).nonEmpty) {
+      val meanCols = means(books(0)(0).length)
+      (0 until iters).foreach { _ =>
+        assign(base, books).groupBy(col("__sub"), col("__cell"))
+          .agg(meanCols.head, meanCols.tail: _*).collect().foreach { row =>
+            val (s, j) = (row.getInt(0), row.getInt(1))
+            books = books.updated(s, books(s).updated(j,
+              Array.tabulate(meanCols.length)(d =>
+                if (row.isNullAt(d + 2)) books(s)(j)(d)
+                else row.getDouble(d + 2))))
+          }
+      }
+    }
+    stash(books)
+    books
+  }
 
   /** Deterministic IVF training: centroids initialized from the K
     * lowest-id rows, refined with `iters` Lloyd iterations computed as
-    * DataFrame aggregations (assign = argmax dot against broadcast
-    * literal centroids; update = per-cell mean). No RNG anywhere, so
-    * cells are reproducible across runs and cluster layouts.
+    * DataFrame aggregations (assign = argmax dot against the literal
+    * centroids; update = per-cell mean) — see [[lloyd]].
     *
     * Each iteration is ONE narrow-projection + groupBy pass: the
     * per-dimension means are `dim` aggregate expressions over
@@ -147,41 +243,17 @@ object Similarity {
     * K×dim partial sums per task. */
   def ivfTrain(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int, iters: Int = 2, tag: String = "",
-      materialize: DataFrame => DataFrame = identity): Array[Array[Double]] = {
-    // the (id, vec) projection every pass re-reads (1 init scan +
-    // `iters` iteration scans): identity default recomputes from
-    // source (full lineage — an executor loss rebuilds); a caller for
-    // whom the repeated scan dominates passes `_.persist(...)` and
-    // owns the unpersist (same policy as exactSubstringDedup)
-    val base = materialize(corpus.select(col(idCol), col(vecCol)))
-    var centroids: Array[Array[Double]] = base
-      .orderBy(col(idCol)).limit(nCells)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    val dim = if (centroids.nonEmpty) centroids(0).length else 0
-    if (dim > 0) (0 until iters).foreach { _ =>
+      materialize: DataFrame => DataFrame = identity): Array[Array[Double]] =
+    lloyd(materialize(corpus.select(col(idCol), col(vecCol))), idCol,
+      vecCol, nCells, iters,
+      b => centroidStash.updateAndGet(_ + ((nCells, iters, tag) -> b(0))))(
+      init => Array(init),
       // try_element_at: NULL (not an ANSI error) past a ragged vector's
       // end, so short vectors simply don't contribute to that dimension
-      val meanCols = (0 until dim).map(d =>
-        avg(try_element_at(col(vecCol), lit(d + 1)).cast("double")).as(s"m$d"))
-      val means = base
-        .select(cellExpr(col(vecCol), centroids).as("__cell"), col(vecCol))
-        .groupBy(col("__cell"))
-        .agg(meanCols.head, meanCols.tail: _*)
-        .collect()
-      means.foreach { row =>
-        val cell = row.getInt(0)
-        // a NULL mean (ragged vectors shorter than dim in every row of
-        // the cell) keeps that dimension's previous centroid value
-        centroids = centroids.updated(cell,
-          Array.tabulate(dim)(d =>
-            if (row.isNullAt(d + 1)) centroids(cell)(d)
-            else row.getDouble(d + 1)))
-      }
-    }
-    centroidStash.updateAndGet(_ + ((nCells, iters, tag) -> centroids))
-    centroids
-  }
+      dim => (0 until dim).map(d =>
+        avg(try_element_at(col(vecCol), lit(d + 1)).cast("double")).as(s"m$d")),
+      (base, b) => base.select(lit(0).as("__sub"),
+        cellExpr(col(vecCol), b(0)).as("__cell"), col(vecCol)))(0)
 
   /** Centroids from [[ivfTrain]] calls this session, keyed by
     * (nCells, iters, tag) so trainers with different parameters — or
@@ -224,29 +296,21 @@ object Similarity {
       lit(centroids.length - 1))
   }
 
-  /** IVF ANN: corpus rows live in their nearest-centroid cell; each
-    * query probes its `nProbes` nearest cells and ranks exact cosine
-    * inside them. Cell assignment is a narrow projection; the probe
-    * join is an equi-join on cell id — candidate volume shrinks
-    * ~nCells/nProbes-fold vs brute force. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nCells: Int, nProbes: Int,
-      iters: Int = 2): DataFrame =
-    ivfTopKWith(corpus, queries, idCol, vecCol, k,
-      ivfTrain(corpus, idCol, vecCol, nCells, iters), nProbes)
-
-  /** [[ivfTopK]] against FROZEN centroids (a loaded/persisted index or
-    * an earlier train): the serving shape of the index lifecycle —
-    * train once, assign and search many corpus versions, retrain when
-    * the drift rehearsal says recall decayed (TUNING.md "ANN
-    * drift"). */
+  /** IVF ANN against FROZEN centroids (a loaded/persisted index or an
+    * earlier [[ivfTrain]]): corpus rows live in their nearest-centroid
+    * cell; each query probes its `nProbes` nearest cells and ranks
+    * exact cosine inside them. Cell assignment is a narrow projection;
+    * the probe join is an equi-join on cell id — candidate volume
+    * shrinks ~nCells/nProbes-fold vs brute force. The serving shape of
+    * the index lifecycle — train once, assign and search many corpus
+    * versions, retrain when the drift rehearsal says recall decayed
+    * (TUNING.md "ANN drift"). */
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, centroids: Array[Array[Double]],
       nProbes: Int): DataFrame =
-    ivfServe(corpus.select(col(idCol).as("did"), col(vecCol).as("dvec"),
-      l2Norm(col(vecCol)).as("dn"),
+    topKTail(ivfScored(corpusSide(corpus, idCol, vecCol,
       cellExpr(col(vecCol), centroids).as("cell")),
-      queries, idCol, vecCol, k, centroids, nProbes)
+      queries, idCol, vecCol, centroids, nProbes), "cos", k)
 
   /** [[ivfTopKWith]] with a PER-CELL CAP on the corpus side — the
     * serving-path guard the drift rehearsal concluded actually holds
@@ -267,38 +331,21 @@ object Similarity {
       centroids: Array[Array[Double]], nProbes: Int,
       perCellCap: Int): DataFrame = {
     require(perCellCap >= 1, s"perCellCap must be >= 1, got $perCellCap")
-    val c = corpus.select(col(idCol).as("did"), col(vecCol).as("dvec"),
-      l2Norm(col(vecCol)).as("dn"),
+    val c = corpusSide(corpus, idCol, vecCol,
       cellExpr(col(vecCol), centroids).as("cell"))
     val capped = perCellHashKeep(c, "did", "cell", perCellCap).drop("rk")
-    ivfServe(capped, queries, idCol, vecCol, k, centroids, nProbes)
+    topKTail(ivfScored(capped, queries, idCol, vecCol, centroids, nProbes),
+      "cos", k)
   }
 
-  /** Shared probe-join + exact-rank tail over an assigned (and
-    * possibly capped) corpus frame `c(did, dvec, dn, cell)`. */
-  private def ivfServe(c: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, centroids: Array[Array[Double]],
-      nProbes: Int): DataFrame = {
-    val probeStructs = centroids.zipWithIndex.map { case (cent, i) =>
-      struct(dotProduct(col(vecCol), array(cent.map(lit): _*)).as("s"),
-        lit(i).as("i"))
-    }
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        l2Norm(col(vecCol)).as("qn"),
-        explode(slice(reverse(array_sort(array(probeStructs: _*))),
-          1, nProbes)).as("probe"))
-      .select(col("qid"), col("qvec"), col("qn"),
-        col("probe.i").as("cell"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("qid") =!= col("did"))
-      .select(col("qid"), col("did"),
-        when(col("qn") * col("dn") > 0,
-          dotProduct(col("qvec"), col("dvec")) / (col("qn") * col("dn")))
-          .otherwise(lit(0.0)).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("did"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-  }
+  /** The IVF candidate step scored over an assigned (and possibly
+    * capped) corpus frame `c(did, dvec, dn, cell)`: each query row
+    * against the corpus rows of its probed cells, `(qid, did, cos)`. */
+  private def ivfScored(c: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, centroids: Array[Array[Double]],
+      nProbes: Int): DataFrame =
+    cosineScored(c, probeCells(querySide(queries, idCol, vecCol), "qvec",
+      centroids, nProbes), Seq("cell"))
 
   // ---- DuckDB oracles ----------------------------------------------
   // Both LSH and IVF are deterministic end-to-end (md5-derived planes,
@@ -312,19 +359,52 @@ object Similarity {
   private def arrLit(a: Array[Double]): String =
     a.map(dlit).mkString("[", ", ", "]")
 
-  /** Shared ranked-top-k tail over a `scored(qid, did, cos)` CTE. */
-  private def rankedTailSql(k: Int): String =
+  /** DuckDB twin of [[l2Norm]] over SQL vector expression `v`. */
+  def normSql(v: String): String = s"sqrt(list_dot_product($v, $v))"
+
+  /** DuckDB twin of the shared cosine ([[cosineOf]]; VectorFunctions
+    * `cosine` when the norms are [[normSql]]): `a`, `b` are SQL vector
+    * expressions, `na`, `nb` their norms. */
+  def cosSql(a: String, b: String, na: String, nb: String): String =
+    s"CASE WHEN $na * $nb > 0 THEN list_dot_product($a, $b) / ($na * $nb) " +
+      "ELSE 0.0 END"
+
+  /** The two inputs every ANN twin starts from: `<p>q0(qid, qvec)` over
+    * the rows `queryPred` selects and `<p>c0(did, dvec)` over the corpus
+    * (`corpusWhere`: "" or " WHERE …"). */
+  private def sidesSql(p: String, table: String, idCol: String,
+      vecCol: String, queryPred: String, corpusWhere: String): String =
+    s"""${p}q0 AS (SELECT $idCol AS qid, $vecCol::DOUBLE[] AS qvec
+       |           FROM $table WHERE $queryPred),
+       |${p}c0 AS (SELECT $idCol AS did, $vecCol::DOUBLE[] AS dvec FROM $table$corpusWhere)"""
+      .stripMargin
+
+  /** Twin of [[topKTail]]'s ranking over relation `from`:
+    * `(qid, did, <score>, rn)`, rn by (score DESC, did) per query. */
+  private def rankSql(from: String, score: String): String =
+    s"""SELECT qid, did, $score, CAST(row_number() OVER
+       |    (PARTITION BY qid ORDER BY $score DESC, did) AS BIGINT) AS rn
+       |  FROM $from""".stripMargin
+
+  /** Shared ranked-top-k tail over a `scored(qid, did, <score>)` CTE:
+    * `(qid, rn, did, round(score, 6) AS <name>)` for rn <= k. */
+  private def rankedTailSql(k: Int, score: String, name: String): String =
     s"""ranked AS (
-       |  SELECT qid, did, cos, CAST(row_number() OVER
-       |    (PARTITION BY qid ORDER BY cos DESC, did) AS BIGINT) AS rn
-       |  FROM scored)
-       |SELECT qid, rn, did, round(cos, 6) AS cos_r
+       |  ${rankSql("scored", score)})
+       |SELECT qid, rn, did, round($score, 6) AS $name
        |FROM ranked WHERE rn <= $k ORDER BY qid, rn""".stripMargin
 
-  /** DuckDB oracle mirroring lshTopK: the md5-derived Rademacher plane
-    * weights are embedded as literal arrays, so the bucket expression
-    * is the same arithmetic both engines run. `queryPred` selects the
-    * query rows (e.g. "vec_id < 8"). */
+  /** DuckDB twin of [[bruteForceTopK]] over the rows `queryPred`
+    * selects from `table`. */
+  def bruteForceOracleSql(table: String, idCol: String, vecCol: String,
+      k: Int, queryPred: String): String =
+    s"""WITH ${sidesSql("", table, idCol, vecCol, queryPred, "")},
+       |scored AS (
+       |  SELECT qid, did,
+       |    ${cosSql("qvec", "dvec", normSql("qvec"), normSql("dvec"))} AS cos
+       |  FROM c0 JOIN q0 ON qid <> did),
+       |${rankedTailSql(k, "cos", "cos_r")}""".stripMargin
+
   /** DuckDB twin of [[bucketExpr]] over SQL vector expression `v`:
     * the md5-derived plane weights embedded as literal arrays. */
   def bucketSqlExpr(v: String, nPlanes: Int, dim: Int): String = {
@@ -335,35 +415,29 @@ object Similarity {
     }.mkString(" + ")
   }
 
+  /** DuckDB oracle mirroring lshTopK: the md5-derived Rademacher plane
+    * weights are embedded as literal arrays, so the bucket expression
+    * is the same arithmetic both engines run. `queryPred` selects the
+    * query rows (e.g. "vec_id < 8"). */
   def lshOracleSql(table: String, idCol: String, vecCol: String, k: Int,
       nPlanes: Int, dim: Int, queryPred: String): String = {
     def bucketSql(v: String): String = bucketSqlExpr(v, nPlanes, dim)
-    s"""WITH q0 AS (SELECT $idCol AS qid, $vecCol::DOUBLE[] AS qvec
-       |           FROM $table WHERE $queryPred),
-       |c0 AS (SELECT $idCol AS did, $vecCol::DOUBLE[] AS dvec FROM $table),
-       |q AS (SELECT qid, qvec, sqrt(list_dot_product(qvec, qvec)) AS qn,
+    s"""WITH ${sidesSql("", table, idCol, vecCol, queryPred, "")},
+       |q AS (SELECT qid, qvec, ${normSql("qvec")} AS qn,
        |             ${bucketSql("qvec")} AS bucket
        |      FROM q0),
-       |c AS (SELECT did, dvec, sqrt(list_dot_product(dvec, dvec)) AS dn,
+       |c AS (SELECT did, dvec, ${normSql("dvec")} AS dn,
        |             ${bucketSql("dvec")} AS bucket
        |      FROM c0),
        |scored AS (
-       |  SELECT qid, did,
-       |    CASE WHEN qn * dn > 0
-       |      THEN list_dot_product(qvec, dvec) / (qn * dn)
-       |      ELSE 0.0 END AS cos
+       |  SELECT qid, did, ${cosSql("qvec", "dvec", "qn", "dn")} AS cos
        |  FROM c JOIN q USING (bucket) WHERE qid <> did),
-       |${rankedTailSql(k)}""".stripMargin
+       |${rankedTailSql(k, "cos", "cos_r")}""".stripMargin
   }
 
-  /** DuckDB oracle mirroring ivfTopK, given the trained centroids.
-    * Cell assignment replicates cellExpr's greatest-over-(score, idx)
-    * structs via list_sort DESC (max score, ties to the larger index —
-    * verified identical semantics), and probe selection replicates the
-    * reverse(array_sort(...)) slice the same way. */
   /** DuckDB list of (score, idx) structs against literal centroids —
-    * the shared building block of [[cellSqlExpr]] and the probe slice
-    * in [[ivfOracleSql]]. */
+    * the shared building block of [[cellSqlExpr]] and [[probeSql]]
+    * (the twin of [[centroidScores]]). */
   def cellStructsSql(v: String, centroids: Array[Array[Double]]): String =
     centroids.zipWithIndex.map { case (c, i) =>
       s"{'s': list_dot_product($v, ${arrLit(c)}), 'i': $i}"
@@ -374,27 +448,31 @@ object Similarity {
   def cellSqlExpr(v: String, centroids: Array[Array[Double]]): String =
     s"list_sort(${cellStructsSql(v, centroids)}, 'DESC')[1].i"
 
+  /** DuckDB twin of [[probeCells]]: the `nProbes` best (score, idx)
+    * structs unnested, one row per probe — list_sort DESC replicates
+    * the reverse(array_sort(...)) slice. */
+  private def probeSql(v: String, centroids: Array[Array[Double]],
+      nProbes: Int): String =
+    s"unnest(list_sort(${cellStructsSql(v, centroids)}, 'DESC')[1:$nProbes])"
+
   /** Shared CTE chain ending in `scored(qid, did, cos)` — the IVF
-    * probe-join candidate generator behind [[ivfOracleSql]] and
-    * [[minePairsOracleSql]]. */
+    * probe-join candidate generator behind [[ivfOracleSql]],
+    * [[minePairsOracleSql]] and the bitext twin. */
   private def ivfScoredCte(table: String, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], nProbes: Int,
       queryPred: String, perCellCap: Option[Int] = None,
       prefix: String = "", corpusPred: Option[String] = None): String = {
-    val structs = (v: String) => cellStructsSql(v, centroids)
     val p = prefix
     val cWhere = corpusPred.map(pr => s" WHERE $pr").getOrElse("")
+    val dnCell = s"${normSql("dvec")} AS dn, " +
+      s"${cellSqlExpr("dvec", centroids)} AS cell"
     // optional per-cell cap, mirroring ivfTopKWithCapped's
     // deterministic md5-order keep (the cellBalancedSample ordering)
     val cCte = perCellCap match {
       case None =>
-        s"""${p}c AS (SELECT did, dvec, sqrt(list_dot_product(dvec, dvec)) AS dn,
-           |             list_sort(${structs("dvec")}, 'DESC')[1].i AS cell
-           |      FROM ${p}c0),""".stripMargin
+        s"${p}c AS (SELECT did, dvec, $dnCell FROM ${p}c0),"
       case Some(cap) =>
-        s"""${p}c1 AS (SELECT did, dvec, sqrt(list_dot_product(dvec, dvec)) AS dn,
-           |              list_sort(${structs("dvec")}, 'DESC')[1].i AS cell
-           |       FROM ${p}c0),
+        s"""${p}c1 AS (SELECT did, dvec, $dnCell FROM ${p}c0),
            |${p}cr AS (SELECT did, dvec, dn, cell, row_number() OVER (
            |         PARTITION BY cell
            |         ORDER BY ${cellCapOrderSql("did")}) AS ccr
@@ -402,20 +480,14 @@ object Similarity {
            |${p}c AS (SELECT did, dvec, dn, cell FROM ${p}cr WHERE ccr <= $cap),"""
           .stripMargin
     }
-    s"""${p}q0 AS (SELECT $idCol AS qid, $vecCol::DOUBLE[] AS qvec
-       |           FROM $table WHERE $queryPred),
-       |${p}c0 AS (SELECT $idCol AS did, $vecCol::DOUBLE[] AS dvec FROM $table$cWhere),
+    s"""${sidesSql(p, table, idCol, vecCol, queryPred, cWhere)},
        |$cCte
-       |${p}q1 AS (SELECT qid, qvec, sqrt(list_dot_product(qvec, qvec)) AS qn,
-       |              unnest(list_sort(${structs("qvec")}, 'DESC')[1:$nProbes])
-       |                AS probe
+       |${p}q1 AS (SELECT qid, qvec, ${normSql("qvec")} AS qn,
+       |              ${probeSql("qvec", centroids, nProbes)} AS probe
        |       FROM ${p}q0),
        |${p}q AS (SELECT qid, qvec, qn, probe.i AS cell FROM ${p}q1),
        |${p}scored AS (
-       |  SELECT qid, did,
-       |    CASE WHEN qn * dn > 0
-       |      THEN list_dot_product(qvec, dvec) / (qn * dn)
-       |      ELSE 0.0 END AS cos
+       |  SELECT qid, did, ${cosSql("qvec", "dvec", "qn", "dn")} AS cos
        |  FROM ${p}c JOIN ${p}q USING (cell) WHERE qid <> did)""".stripMargin
   }
 
@@ -424,7 +496,7 @@ object Similarity {
       queryPred: String): String =
     s"""WITH ${ivfScoredCte(table, idCol, vecCol, centroids, nProbes,
          queryPred)},
-       |${rankedTailSql(k)}""".stripMargin
+       |${rankedTailSql(k, "cos", "cos_r")}""".stripMargin
 
   /** DuckDB twin of [[ivfTopKWithCapped]] (late-bound centroids). */
   def ivfCappedOracleSql(table: String, idCol: String, vecCol: String,
@@ -432,7 +504,7 @@ object Similarity {
       queryPred: String, perCellCap: Int): String =
     s"""WITH ${ivfScoredCte(table, idCol, vecCol, centroids, nProbes,
          queryPred, Some(perCellCap))},
-       |${rankedTailSql(k)}""".stripMargin
+       |${rankedTailSql(k, "cos", "cos_r")}""".stripMargin
 
   /** Recall@k of an approximate ANN result against the exact one:
     * per query, the fraction of true top-k neighbors the approximate
@@ -451,25 +523,27 @@ object Similarity {
       .agg((sum(coalesce(col("__hit"), lit(0))).cast("double") /
         count(lit(1))).as("recall_at_k"))
 
+  /** DuckDB twin of [[recallAtK]] over two top-k queries (each yielding
+    * `(qid, did, ...)`): `(qid, <name>)`, one row per exact query, no
+    * ORDER BY — callers order or join it. */
+  def recallOracleSql(approx: String, exact: String, name: String): String = {
+    def sub(sql: String): String = sql.replace("\n", "\n    ")
+    s"""SELECT e.qid, CAST(count(a.did) AS DOUBLE) / count(*) AS $name
+       |FROM (SELECT qid, did FROM (
+       |    ${sub(exact)})) e
+       |LEFT JOIN (SELECT qid, did FROM (
+       |    ${sub(approx)})) a
+       |  ON e.qid = a.qid AND e.did = a.did
+       |GROUP BY e.qid""".stripMargin
+  }
+
   /** Approximate top-k: exact cosine ranking restricted to the query's
     * own LSH bucket. Recall < 1 by design; deterministic output. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nPlanes: Int, dim: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("did"), col(vecCol).as("dvec"),
-      l2Norm(col(vecCol)).as("dn"),
-      bucketExpr(col(vecCol), nPlanes, dim).as("bucket"))
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-      l2Norm(col(vecCol)).as("qn"),
-      bucketExpr(col(vecCol), nPlanes, dim).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("qid") =!= col("did"))
-      .select(col("qid"), col("did"),
-        when(col("qn") * col("dn") > 0,
-          dotProduct(col("qvec"), col("dvec")) / (col("qn") * col("dn")))
-          .otherwise(lit(0.0)).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("did"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    val bucket = bucketExpr(col(vecCol), nPlanes, dim).as("bucket")
+    topKTail(cosineScored(corpusSide(corpus, idCol, vecCol, bucket),
+      querySide(queries, idCol, vecCol, bucket), Seq("bucket")), "cos", k)
   }
 
   // ---- Semantic dedup (SemDeDup-style) -----------------------------
@@ -536,10 +610,8 @@ object Similarity {
       col("__v").as("vb"), col("__n").as("nb"))
     val pairCos = lo.join(hi, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_b").as("__id"),
-        round(when(col("na") * col("nb") > 0,
-            dotProduct(col("va"), col("vb")) / (col("na") * col("nb")))
-          .otherwise(lit(0.0)), 6).as("cos_r"))
+      .select(col("id_b").as("__id"), round(cosineOf(col("va"), col("vb"),
+        col("na"), col("nb")), 6).as("cos_r"))
     val maxLower = pairCos.groupBy(col("__id"))
       .agg(max(col("cos_r")).as("max_lower_cos_r"))
     c.select(col("__id"), col("cell"))
@@ -571,16 +643,14 @@ object Similarity {
       centroids: Array[Array[Double]], tau: Double,
       maxCell: Int = 1000): String =
     s"""WITH e AS (SELECT $idCol AS id, $vecCol::DOUBLE[] AS v FROM $table),
-       |c AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS n,
+       |c AS (SELECT id, v, ${normSql("v")} AS n,
        |             ${cellSqlExpr("v", centroids)} AS cell
        |      FROM e),
        |k AS (SELECT *, row_number() OVER
        |        (PARTITION BY cell ORDER BY id) AS rn
        |      FROM c),
        |p AS (SELECT y.id AS id,
-       |        round(CASE WHEN x.n * y.n > 0
-       |          THEN list_dot_product(x.v, y.v) / (x.n * y.n)
-       |          ELSE 0.0 END, 6) AS cos_r
+       |        round(${cosSql("x.v", "y.v", "x.n", "y.n")}, 6) AS cos_r
        |      FROM k x JOIN k y ON x.cell = y.cell AND x.id < y.id
        |      WHERE x.rn <= $maxCell AND y.rn <= $maxCell),
        |m AS (SELECT id, max(cos_r) AS mc FROM p GROUP BY id)
@@ -632,186 +702,171 @@ object Similarity {
       lit(codewords.length - 1))
   }
 
+  /** Subspace width, after checking the `ksub` lowest-id rows exist and
+    * their dimension splits into `m` subspaces. */
+  private def subDimOf(init: Array[Array[Double]], m: Int, ksub: Int,
+      trainer: String): Int = {
+    require(init.length == ksub,
+      s"$trainer needs >= ksub=$ksub rows, got ${init.length}")
+    val dim = init(0).length
+    require(dim > 0 && dim % m == 0,
+      s"embedding dim $dim must be a positive multiple of m=$m")
+    dim / m
+  }
+
+  /** A PQ trainer's assignment: `keep` plus one row per subspace with
+    * its id as `__sub` and the subspace's codeword from `code(s)` as
+    * `__cell` — m small rows, not m vector copies, since the
+    * per-dimension means index the ORIGINAL vector column through
+    * `sub * subDim + d`. */
+  private def subspaceRows(df: DataFrame, keep: Seq[Column], m: Int,
+      code: Int => Column): DataFrame =
+    df.select(keep :+ explode(array((0 until m).map(s =>
+        struct(lit(s).as("sub"), code(s).as("cell"))): _*)).as("sc"): _*)
+      .select(keep ++ Seq(col("sc.sub").as("__sub"),
+        col("sc.cell").as("__cell")): _*)
+
   /** Deterministic product-quantization trainer (Jégou, Douze, Schmid,
     * "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
     * the vector is split into `m` contiguous subspaces of dim/m and
     * each subspace gets its own `ksub`-codeword Lloyd-trained codebook.
     * Initialization is the ksub lowest-id rows' sub-vectors (RNG-free,
-    * like [[ivfTrain]]).
+    * like [[ivfTrain]]; see [[lloyd]]).
     *
     * Each iteration is ONE fused shuffle for ALL m subspaces: rows
-    * explode to (subspace, codeword) assignment pairs — m small rows,
-    * not m vector copies, since the per-dimension means index the
-    * ORIGINAL vector column through `sub * subDim + d` — and a single
-    * groupBy(sub, cell) computes every subspace's means with map-side
-    * combine. Per task the partial state is m×ksub×subDim = dim×ksub
-    * doubles regardless of data volume; the driver collects m×ksub
-    * rows per iteration. At 100 TB: iters full scans, each one
-    * map-combined shuffle, no per-subspace re-reads. */
+    * explode to (subspace, codeword) assignment pairs
+    * ([[subspaceRows]]) and a single groupBy(sub, cell) computes every
+    * subspace's means with map-side combine. Per task the partial
+    * state is m×ksub×subDim = dim×ksub doubles regardless of data
+    * volume; the driver collects m×ksub rows per iteration. At 100 TB:
+    * iters full scans, each one map-combined shuffle, no per-subspace
+    * re-reads. */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int, iters: Int = 2,
       tag: String = "",
-      materialize: DataFrame => DataFrame = identity): Array[Array[Array[Double]]] = {
-    // see ivfTrain: caller-owned persistence of the per-iteration scan
-    val base = materialize(corpus.select(col(idCol), col(vecCol)))
-    val init: Array[Array[Double]] = base
-      .orderBy(col(idCol)).limit(ksub)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    require(init.length == ksub,
-      s"pqTrain needs >= ksub=$ksub rows, got ${init.length}")
-    val dim = init(0).length
-    require(dim > 0 && dim % m == 0,
-      s"embedding dim $dim must be a positive multiple of m=$m")
-    val subDim = dim / m
-    var books: Array[Array[Array[Double]]] = Array.tabulate(m)(s =>
-      init.map(v => v.slice(s * subDim, (s + 1) * subDim)))
-    (0 until iters).foreach { _ =>
-      val assigns = (0 until m).map(s =>
-        struct(lit(s).as("sub"),
-          subCellExpr(col(vecCol), s, books(s), subDim).as("cell")))
-      val meanCols = (0 until subDim).map(d =>
+      materialize: DataFrame => DataFrame = identity): Array[Array[Array[Double]]] =
+    lloyd(materialize(corpus.select(col(idCol), col(vecCol))), idCol,
+      vecCol, ksub, iters,
+      b => codebookStash.updateAndGet(_ + ((m, ksub, iters, tag) -> b)))(
+      init => {
+        val subDim = subDimOf(init, m, ksub, "pqTrain")
+        Array.tabulate(m)(s =>
+          init.map(v => v.slice(s * subDim, (s + 1) * subDim)))
+      },
+      subDim => (0 until subDim).map(d =>
         avg(try_element_at(col(vecCol),
-          (col("sub") * subDim + (d + 1)).cast("int")).cast("double"))
-          .as(s"m$d"))
-      val means = base
-        .select(col(vecCol), explode(array(assigns: _*)).as("sc"))
-        .select(col(vecCol), col("sc.sub").as("sub"), col("sc.cell").as("cell"))
-        .groupBy(col("sub"), col("cell"))
-        .agg(meanCols.head, meanCols.tail: _*)
-        .collect()
-      means.foreach { row =>
-        val s = row.getInt(0)
-        val j = row.getInt(1)
-        // NULL mean (ragged short vectors) keeps the previous value,
-        // as in ivfTrain
-        books = books.updated(s, books(s).updated(j,
-          Array.tabulate(subDim)(d =>
-            if (row.isNullAt(d + 2)) books(s)(j)(d)
-            else row.getDouble(d + 2))))
-      }
-    }
-    codebookStash.updateAndGet(_ + ((m, ksub, iters, tag) -> books))
-    books
-  }
+          (col("__sub") * subDim + (d + 1)).cast("int")).cast("double"))
+          .as(s"m$d")),
+      (base, books) => subspaceRows(base, Seq(col(vecCol)), m, s =>
+        subCellExpr(col(vecCol), s, books(s), books(0)(0).length)))
 
-  /** IVFADC-shaped ANN: corpus rows are (a) assigned an IVF cell by
-    * the coarse quantizer and (b) compressed to m PQ codeword ids — a
-    * pure projection, after which ranking never touches the raw
-    * vectors again (at scale the scan reads dim/m/subDim-fold less:
-    * m bytes of codes instead of dim floats). Queries probe their
-    * nProbes nearest cells and carry m look-up tables (LUT_s[j] =
-    * dot(q_sub_s, codebook_s[j]), a per-query projection); the
-    * asymmetric score of a candidate is the left-to-right sum of m
-    * LUT lookups — the ADC inner-product variant (faiss IVFPQ with
-    * METRIC_INNER_PRODUCT; no residual encoding, the documented
-    * refinement for production recall). Candidate volume is bounded
-    * by the cell equi-join exactly as in [[ivfTopK]] — never a
-    * cartesian. Scores are bit-exact across engines (sequential dots,
-    * explicit sum chain), so ranking needs no rounding guard. */
-  def adcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, m: Int, ksub: Int, nCells: Int,
-      nProbes: Int, iters: Int = 2): DataFrame = {
-    // one shared (id, vec) projection feeds both trainers (2×(1+iters)
-    // scans) and the encode pass
-    val base = corpus.select(col(idCol), col(vecCol))
-    val books = pqTrain(base, idCol, vecCol, m, ksub, iters)
-    val centroids = ivfTrain(base, idCol, vecCol, nCells, iters)
-    adcTopKWith(base, queries, idCol, vecCol, k, books, centroids, nProbes)
-  }
-
-  /** [[adcTopK]] against FROZEN trained artifacts (a loaded index or a
-    * training memo shared across governance siblings): encode + probe
-    * + LUT rank with ZERO training scans — the serving shape of the
-    * x57 index lifecycle, and what lets the recall family (x39/x42b/
-    * x42d...) train once per corpus instead of once per entry. */
+  /** IVFADC-shaped ANN against FROZEN trained artifacts (a loaded index
+    * or a training memo shared across governance siblings — encode +
+    * probe + LUT rank with ZERO training scans, the serving shape of
+    * the x57 index lifecycle, and what lets the recall family
+    * (x39/x42b/x42d...) train once per corpus instead of once per
+    * entry): corpus rows are (a) assigned an IVF cell by the coarse
+    * quantizer and (b) compressed to m PQ codeword ids — a pure
+    * projection, after which ranking never touches the raw vectors
+    * again (at scale the scan reads dim/m/subDim-fold less: m bytes of
+    * codes instead of dim floats). Queries probe their nProbes nearest
+    * cells and carry m look-up tables (LUT_s[j] = dot(q_sub_s,
+    * codebook_s[j]), a per-query projection); a candidate's `score` is
+    * the left-to-right sum of its m LUT lookups — the ADC
+    * inner-product variant (faiss IVFPQ with METRIC_INNER_PRODUCT).
+    * Candidate volume is bounded by the cell equi-join exactly as in
+    * [[ivfTopKWith]] — never a cartesian. Scores are bit-exact across
+    * engines (sequential dots, explicit sum chain), so ranking needs
+    * no rounding guard.
+    *
+    * `residual`: the books are [[pqTrainResidual]]'s (full IVF-PQ,
+    * Jégou et al. 2011 §III) — codes are encoded against the row's
+    * coarse cell ([[subCellResidualExpr]]), and the sum starts from the
+    * probe's own dot(q, centroid[cell]) (already computed for probe
+    * selection), so v̂ = centroid + residual-codeword is scored without
+    * ever reconstructing it; the residual-encode bias is re-derived
+    * from the (centroids, books) pair, a driver-side fold over
+    * K×m×ksub doubles. Plain ADC sums the LUT terms alone — no `0.0 +`
+    * start — so its doubles are the plain left-to-right LUT sum. */
   def adcTopKWith(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, books: Array[Array[Array[Double]]],
-      centroids: Array[Array[Double]], nProbes: Int): DataFrame = {
+      centroids: Array[Array[Double]], nProbes: Int,
+      residual: Boolean): DataFrame = {
     val m = books.length
-    val base = corpus.select(col(idCol), col(vecCol))
     val subDim = books(0)(0).length
-    val codeCols = (0 until m).map(s =>
-      subCellExpr(col(vecCol), s, books(s), subDim).as(s"code_$s"))
-    val c = base.select(col(idCol).as("did") +:
-      cellExpr(col(vecCol), centroids).as("cell") +: codeCols: _*)
-    val probeStructs = centroids.zipWithIndex.map { case (cent, i) =>
-      struct(dotProduct(col(vecCol), array(cent.map(lit): _*)).as("s"),
-        lit(i).as("i"))
-    }
+    lazy val bias = residualEncodeBias(centroids, books)
+    val codeCols = (0 until m).map(s => (
+      if (residual) subCellResidualExpr(col(vecCol), col("cell"), s,
+        books(s), bias(s), subDim)
+      else subCellExpr(col(vecCol), s, books(s), subDim)).as(s"code_$s"))
+    val c = corpus
+      .select(col(idCol).as("did"), col(vecCol),
+        cellExpr(col(vecCol), centroids).as("cell"))
+      .select(col("did") +: col("cell") +: codeCols: _*)
     val lutCols = (0 until m).map { s =>
       val sv = slice(col(vecCol), s * subDim + 1, subDim)
       array(books(s).map(cw =>
         dotProduct(sv, array(cw.map(lit): _*))).toSeq: _*).as(s"lut_$s")
     }
-    val q = queries
-      .select(col(idCol).as("qid") +:
-        explode(slice(reverse(array_sort(array(probeStructs.toSeq: _*))),
-          1, nProbes)).as("probe") +: lutCols: _*)
-      .select(col("qid") +: col("probe.i").as("cell") +:
-        (0 until m).map(s => col(s"lut_$s")): _*)
-    val adc = (0 until m)
+    val q = probeCells(queries.select(col(idCol).as("qid") +: col(vecCol) +:
+      lutCols: _*), vecCol, centroids, nProbes)
+    val terms = (0 until m)
       .map(s => element_at(col(s"lut_$s"), col(s"code_$s") + 1))
-      .reduceLeft(_ + _)
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("qid") =!= col("did"))
-      .select(col("qid"), col("did"), adc.as("adc"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("did"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    val score =
+      if (residual) terms.foldLeft(col("qc"))(_ + _) else terms.reduceLeft(_ + _)
+    topKTail(candidates(c, q, Seq("cell"))
+      .select(col("qid"), col("did"), score.as("score")), "score", k)
   }
 
-  /** DuckDB oracle mirroring [[adcTopK]], given the trained codebooks
+  /** DuckDB oracle mirroring [[adcTopKWith]], given the trained codebooks
     * and coarse centroids (late-bound): same encode arithmetic (dot
-    * minus embedded half-norm literal, list_sort DESC tie semantics),
-    * same per-query LUTs, same explicit left-to-right ADC sum. */
+    * minus an embedded bias literal — the half-norm, or with `residual`
+    * the per-cell residual bias indexed by the row's cell — with
+    * list_sort DESC tie semantics), same per-query LUTs, same explicit
+    * left-to-right sum (from the probe score when `residual`). The
+    * ranked score is named as its catalog entries name it: `adc_r`
+    * plain, `score_r` residual. */
   def adcOracleSql(table: String, idCol: String, vecCol: String, k: Int,
       books: Array[Array[Array[Double]]], centroids: Array[Array[Double]],
-      nProbes: Int, queryPred: String): String = {
+      nProbes: Int, queryPred: String, residual: Boolean): String = {
     val m = books.length
     val subDim = books(0)(0).length
+    lazy val bias = residualEncodeBias(centroids, books)
     def sliceSql(v: String, s: Int): String =
       s"list_slice($v, ${s * subDim + 1}, ${(s + 1) * subDim})"
-    def subCellSql(v: String, s: Int): String = {
-      val structs = books(s).zipWithIndex.map { case (cw, j) =>
-        s"{'s': list_dot_product(${sliceSql(v, s)}, ${arrLit(cw)}) - " +
-          s"${dlit(halfNormSq(cw))}, 'i': $j}"
-      }.mkString("[", ", ", "]")
-      s"list_sort($structs, 'DESC')[1].i"
-    }
-    def lutSql(v: String, s: Int): String =
-      books(s).map(cw =>
-        s"list_dot_product(${sliceSql(v, s)}, ${arrLit(cw)})")
-        .mkString("[", ", ", "]")
+    def biasSql(s: Int, j: Int): String =
+      if (residual) bias(s).map(row => dlit(row(j)))
+        .mkString("([", ", ", "])[cell + 1]")
+      else dlit(halfNormSq(books(s)(j)))
+    def codeSql(s: Int): String = books(s).zipWithIndex.map { case (cw, j) =>
+      s"{'s': list_dot_product(${sliceSql("dvec", s)}, ${arrLit(cw)}) - " +
+        s"${biasSql(s, j)}, 'i': $j}"
+    }.mkString("list_sort([", ", ", "], 'DESC')[1].i")
+    def lutSql(s: Int): String = books(s).map(cw =>
+      s"list_dot_product(${sliceSql("qvec", s)}, ${arrLit(cw)})")
+      .mkString("[", ", ", "]")
     val codeSel = (0 until m)
-      .map(s => s"${subCellSql("dvec", s)} AS code_$s").mkString(",\n        ")
+      .map(s => s"${codeSql(s)} AS code_$s").mkString(",\n        ")
     val lutSel = (0 until m)
-      .map(s => s"${lutSql("qvec", s)} AS lut_$s").mkString(",\n        ")
-    val adcExpr = (0 until m).map(s => s"lut_$s[code_$s + 1]").mkString(" + ")
-    s"""WITH q0 AS (SELECT $idCol AS qid, $vecCol::DOUBLE[] AS qvec
-       |           FROM $table WHERE $queryPred),
-       |c0 AS (SELECT $idCol AS did, $vecCol::DOUBLE[] AS dvec FROM $table),
-       |c AS (SELECT did,
-       |        list_sort(${cellStructsSql("dvec", centroids)}, 'DESC')[1].i
-       |          AS cell,
+      .map(s => s"${lutSql(s)} AS lut_$s").mkString(",\n        ")
+    val terms = (0 until m).map(s => s"lut_$s[code_$s + 1]").mkString(" + ")
+    val (score, name) =
+      if (residual) (s"qc + $terms", "score_r") else (terms, "adc_r")
+    s"""WITH ${sidesSql("", table, idCol, vecCol, queryPred, "")},
+       |c1 AS (SELECT did, dvec, ${cellSqlExpr("dvec", centroids)} AS cell
+       |       FROM c0),
+       |c AS (SELECT did, cell,
        |        $codeSel
-       |      FROM c0),
-       |q1 AS (SELECT qid, qvec,
-       |         unnest(list_sort(${cellStructsSql("qvec", centroids)},
-       |           'DESC')[1:$nProbes]) AS probe
+       |      FROM c1),
+       |q1 AS (SELECT qid, qvec, ${probeSql("qvec", centroids, nProbes)} AS probe
        |       FROM q0),
-       |q AS (SELECT qid, probe.i AS cell,
+       |q AS (SELECT qid, probe.i AS cell, probe.s AS qc,
        |        $lutSel
        |      FROM q1),
        |scored AS (
-       |  SELECT qid, did, $adcExpr AS adc
+       |  SELECT qid, did, $score AS score
        |  FROM c JOIN q USING (cell) WHERE qid <> did),
-       |ranked AS (
-       |  SELECT qid, did, adc, CAST(row_number() OVER
-       |    (PARTITION BY qid ORDER BY adc DESC, did) AS BIGINT) AS rn
-       |  FROM scored)
-       |SELECT qid, rn, did, round(adc, 6) AS adc_r
-       |FROM ranked WHERE rn <= $k ORDER BY qid, rn""".stripMargin
+       |${rankedTailSql(k, "score", name)}""".stripMargin
   }
 
   // ---- ADC shortlist re-rank ---------------------------------------
@@ -832,25 +887,15 @@ object Similarity {
     * arithmetic and (cos DESC, did) tie order as [[bruteForceTopK]],
     * so results are bit-exact across engines. */
   def exactRerank(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, candidates: DataFrame, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("did"), col(vecCol).as("dvec"),
-      l2Norm(col(vecCol)).as("dn"))
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-      l2Norm(col(vecCol)).as("qn"))
-    val scored = c
+      vecCol: String, candidates: DataFrame, k: Int): DataFrame =
+    topKTail(corpusSide(corpus, idCol, vecCol)
       .join(broadcast(candidates.select(col("qid"), col("did"))), Seq("did"))
-      .join(broadcast(q), Seq("qid"))
-      .select(col("qid"), col("did"),
-        when(col("qn") * col("dn") > 0,
-          dotProduct(col("qvec"), col("dvec")) / (col("qn") * col("dn")))
-          .otherwise(lit(0.0)).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("did"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-  }
+      .join(broadcast(querySide(queries, idCol, vecCol)), Seq("qid"))
+      .select(col("qid"), col("did"), qdCosine), "cos", k)
 
-  /** IVFADC with the standard re-rank refinement: [[adcTopK]] produces
-    * the top-`shortlistC` compressed candidates per query, then
+  /** IVFADC with the standard re-rank refinement: trains the PQ
+    * codebooks and the coarse centroids, takes the top-`shortlistC`
+    * compressed candidates per query from [[adcTopKWith]], then
     * [[exactRerank]] re-scores exactly those candidates with exact
     * cosine and keeps the top `k`. Recall ceiling is the IVF probe
     * recall (candidates can only come from probed cells); within the
@@ -862,9 +907,13 @@ object Similarity {
       nCells: Int, nProbes: Int, iters: Int = 2): DataFrame = {
     require(shortlistC >= k,
       s"shortlistC=$shortlistC must be >= k=$k")
+    // one shared (id, vec) projection feeds both trainers (2×(1+iters)
+    // scans), the encode pass and the re-rank fetch
     val base = corpus.select(col(idCol), col(vecCol))
-    val short = adcTopK(base, queries, idCol, vecCol, shortlistC, m,
-      ksub, nCells, nProbes, iters)
+    val books = pqTrain(base, idCol, vecCol, m, ksub, iters)
+    val centroids = ivfTrain(base, idCol, vecCol, nCells, iters)
+    val short = adcTopKWith(base, queries, idCol, vecCol, shortlistC,
+      books, centroids, nProbes, residual = false)
     exactRerank(base, queries, idCol, vecCol,
       short.select(col("qid"), col("did")), k)
   }
@@ -877,27 +926,16 @@ object Similarity {
       centroids: Array[Array[Double]], nProbes: Int,
       queryPred: String): String = {
     val short = adcOracleSql(table, idCol, vecCol, shortlistC, books,
-      centroids, nProbes, queryPred).replace("\n", "\n    ")
+      centroids, nProbes, queryPred, residual = false)
+      .replace("\n", "\n    ")
     s"""WITH short AS (SELECT qid, did FROM (
        |    $short)),
-       |q AS (SELECT $idCol AS qid, $vecCol::DOUBLE[] AS qvec
-       |      FROM $table WHERE $queryPred),
-       |c AS (SELECT $idCol AS did, $vecCol::DOUBLE[] AS dvec FROM $table),
+       |${sidesSql("", table, idCol, vecCol, queryPred, "")},
        |scored AS (
        |  SELECT s.qid, s.did,
-       |    CASE WHEN sqrt(list_dot_product(qvec, qvec)) *
-       |              sqrt(list_dot_product(dvec, dvec)) > 0
-       |      THEN list_dot_product(qvec, dvec) /
-       |           (sqrt(list_dot_product(qvec, qvec)) *
-       |            sqrt(list_dot_product(dvec, dvec)))
-       |      ELSE 0.0 END AS cos
-       |  FROM short s JOIN c USING (did) JOIN q USING (qid)),
-       |ranked AS (
-       |  SELECT qid, did, cos, CAST(row_number() OVER
-       |    (PARTITION BY qid ORDER BY cos DESC, did) AS BIGINT) AS rn
-       |  FROM scored)
-       |SELECT qid, rn, did, round(cos, 6) AS cos_r
-       |FROM ranked WHERE rn <= $k ORDER BY qid, rn""".stripMargin
+       |    ${cosSql("qvec", "dvec", normSql("qvec"), normSql("dvec"))} AS cos
+       |  FROM short s JOIN c0 USING (did) JOIN q0 USING (qid)),
+       |${rankedTailSql(k, "cos", "cos_r")}""".stripMargin
   }
 
   // ---- Incremental index maintenance -------------------------------
@@ -919,12 +957,8 @@ object Similarity {
     * rows in exactly the cells a fresh assignment would. */
   def ivfAssign(newRows: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]]): DataFrame = {
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
-      struct(dotProduct(col(vecCol), array(c.map(lit): _*)).as("s"),
-        lit(i).as("i"))
-    }
-    val best =
-      if (scored.length == 1) scored.head else greatest(scored.toSeq: _*)
+    val scored = centroidScores(vecCol, centroids)
+    val best = if (scored.length == 1) scored.head else greatest(scored: _*)
     newRows.select(col(idCol), best.as("__b"))
       .select(col(idCol), col("__b.i").as("cell"),
         round(col("__b.s"), 6).as("score_r"))
@@ -1008,86 +1042,52 @@ object Similarity {
        |SELECT id AS $idCol, cell, rk FROM r WHERE rk <= $perCell
        |ORDER BY $idCol""".stripMargin
 
-  /** Contrastive-pair mining over the IVF candidate structure: for
-    * each anchor, its POSITIVE = the highest-cosine candidate with
-    * rounded cosine ≥ `posBand`, and its HARD NEGATIVE = the
-    * highest-cosine candidate strictly below `negBand` — the
-    * in-between band is excluded on purpose (likely near-dups /
-    * label noise, the standard contrastive-mining hygiene). Hard
-    * negatives — maximally-similar non-matches — are what make
-    * embedding-model training batches informative; random negatives
-    * are trivially separable.
+  /** Contrastive-pair mining over the IVF candidate structure, against
+    * FROZEN centroids (see [[adcTopKWith]]): for each anchor, its
+    * POSITIVE = the highest-cosine candidate with rounded cosine ≥
+    * `posBand`, and its HARD NEGATIVE = the highest-cosine candidate
+    * strictly below `negBand` — the in-between band is excluded on
+    * purpose (likely near-dups / label noise, the standard
+    * contrastive-mining hygiene). Hard negatives — maximally-similar
+    * non-matches — are what make embedding-model training batches
+    * informative; random negatives are trivially separable.
     *
     * Anchors missing either side (no candidate in the band within
     * the probed cells) are dropped — a mined TRAINING PAIR needs
     * both. Candidates come from the same bounded cell equi-join as
-    * [[ivfTopK]] (never a cartesian); both selections rank on the
+    * [[ivfTopKWith]] (never a cartesian); both selections rank on the
     * ROUNDED cosine with id tie-breaks, so the mined set is
     * identical across engines. */
-  def minePairs(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, nCells: Int, nProbes: Int, posBand: Double,
-      negBand: Double, iters: Int = 2): DataFrame = {
-    minePairsWith(corpus, queries, idCol, vecCol,
-      ivfTrain(corpus, idCol, vecCol, nCells, iters), nProbes,
-      posBand, negBand)
-  }
-
-  /** [[minePairs]] against FROZEN centroids — see [[adcTopKWith]]. */
   def minePairsWith(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, centroids: Array[Array[Double]], nProbes: Int,
       posBand: Double, negBand: Double): DataFrame = {
     require(posBand >= negBand,
       s"posBand=$posBand must be >= negBand=$negBand " +
         "(equal bands = no excluded middle)")
-    val c = corpus.select(col(idCol).as("did"), col(vecCol).as("dvec"),
-      l2Norm(col(vecCol)).as("dn"),
-      cellExpr(col(vecCol), centroids).as("cell"))
-    val probeStructs = centroids.zipWithIndex.map { case (cent, i) =>
-      struct(dotProduct(col(vecCol), array(cent.map(lit): _*)).as("s"),
-        lit(i).as("i"))
-    }
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        l2Norm(col(vecCol)).as("qn"),
-        explode(slice(reverse(array_sort(array(probeStructs.toSeq: _*))),
-          1, nProbes)).as("probe"))
-      .select(col("qid"), col("qvec"), col("qn"), col("probe.i").as("cell"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("qid") =!= col("did"))
-      .select(col("qid"), col("did"),
-        round(when(col("qn") * col("dn") > 0,
-            dotProduct(col("qvec"), col("dvec")) / (col("qn") * col("dn")))
-          .otherwise(lit(0.0)), 6).as("cos_r"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_r").desc, col("did"))
+    val scored = ivfScored(corpusSide(corpus, idCol, vecCol,
+        cellExpr(col(vecCol), centroids).as("cell")),
+        queries, idCol, vecCol, centroids, nProbes)
+      .select(col("qid"), col("did"), round(col("cos"), 6).as("cos_r"))
     def top1(df: DataFrame, idName: String, cosName: String): DataFrame =
-      df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("qid"), col("did").as(idName),
-          col("cos_r").as(cosName))
+      topKTail(df, "cos_r", 1).select(col("qid"), col("did").as(idName),
+        col("cos_r").as(cosName))
     top1(scored.filter(col("cos_r") >= posBand), "pos_id", "pos_cos_r")
       .join(top1(scored.filter(col("cos_r") < negBand),
         "hneg_id", "hneg_cos_r"), Seq("qid"))
       .orderBy(col("qid"))
   }
 
-  /** DuckDB twin of [[minePairs]] (late-bound centroids). */
+  /** DuckDB twin of [[minePairsWith]] (late-bound centroids). */
   def minePairsOracleSql(table: String, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], nProbes: Int, posBand: Double,
       negBand: Double, queryPred: String): String =
     s"""WITH ${ivfScoredCte(table, idCol, vecCol, centroids, nProbes,
          queryPred)},
        |sr AS (SELECT qid, did, round(cos, 6) AS cos_r FROM scored),
-       |pos AS (
-       |  SELECT qid, did AS pos_id, cos_r AS pos_cos_r,
-       |    row_number() OVER (PARTITION BY qid
-       |      ORDER BY cos_r DESC, did) AS rn
-       |  FROM sr WHERE cos_r >= ${dlit(posBand)}),
-       |neg AS (
-       |  SELECT qid, did AS hneg_id, cos_r AS hneg_cos_r,
-       |    row_number() OVER (PARTITION BY qid
-       |      ORDER BY cos_r DESC, did) AS rn
-       |  FROM sr WHERE cos_r < ${dlit(negBand)})
-       |SELECT p.qid, p.pos_id, p.pos_cos_r, n.hneg_id, n.hneg_cos_r
+       |pos AS (${rankSql(s"sr WHERE cos_r >= ${dlit(posBand)}", "cos_r")}),
+       |neg AS (${rankSql(s"sr WHERE cos_r < ${dlit(negBand)}", "cos_r")})
+       |SELECT p.qid, p.did AS pos_id, p.cos_r AS pos_cos_r,
+       |  n.did AS hneg_id, n.cos_r AS hneg_cos_r
        |FROM pos p JOIN neg n ON p.qid = n.qid
        |WHERE p.rn = 1 AND n.rn = 1
        |ORDER BY p.qid""".stripMargin
@@ -1156,194 +1156,41 @@ object Similarity {
       centroids: Array[Array[Double]], m: Int, ksub: Int,
       iters: Int = 2, tag: String = "res",
       materialize: DataFrame => DataFrame = identity): Array[Array[Array[Double]]] = {
-    // see ivfTrain: caller-owned persistence of the per-iteration scan
-    val base = materialize(corpus.select(col(idCol), col(vecCol)))
-    val initVecs: Array[Array[Double]] = base
-      .orderBy(col(idCol)).limit(ksub)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    require(initVecs.length == ksub,
-      s"pqTrainResidual needs >= ksub=$ksub rows, got ${initVecs.length}")
-    val dim = initVecs(0).length
-    require(dim > 0 && dim % m == 0,
-      s"embedding dim $dim must be a positive multiple of m=$m")
-    val subDim = dim / m
     // driver-side cell assignment of the init rows: argmax by (score,
     // index) tuple — lexicographic tuple order matches greatest's
     // ties-to-larger-index semantics
     def cellOf(v: Array[Double]): Int =
       centroids.zipWithIndex.map { case (c, i) => (dotSeq(v, c), i) }
         .maxBy(identity)._2
-    var books: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
-      initVecs.map { v =>
-        val c = centroids(cellOf(v))
-        Array.tabulate(subDim)(d =>
-          v(s * subDim + d) - c(s * subDim + d))
-      }
-    }
     // full centroid matrix as a 2-D literal, indexed by (cell, dim)
     // inside the residual-mean aggregate
     val centsLit = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    (0 until iters).foreach { _ =>
-      val bias = residualEncodeBias(centroids, books)
-      val cellC = cellExpr(col(vecCol), centroids).as("__cell")
-      val assigns = (0 until m).map(s =>
-        struct(lit(s).as("sub"),
-          subCellResidualExpr(col(vecCol), col("__cell"), s, books(s),
-            bias(s), subDim).as("code")))
-      val meanCols = (0 until subDim).map { d =>
-        val idx = (col("sub") * subDim + (d + 1)).cast("int")
+    lloyd(materialize(corpus.select(col(idCol), col(vecCol))), idCol,
+      vecCol, ksub, iters,
+      b => codebookStash.updateAndGet(_ + ((m, ksub, iters, tag) -> b)))(
+      init => {
+        val subDim = subDimOf(init, m, ksub, "pqTrainResidual")
+        Array.tabulate(m) { s =>
+          init.map { v =>
+            val c = centroids(cellOf(v))
+            Array.tabulate(subDim)(d => v(s * subDim + d) - c(s * subDim + d))
+          }
+        }
+      },
+      subDim => (0 until subDim).map { d =>
+        val idx = (col("__sub") * subDim + (d + 1)).cast("int")
         avg(try_element_at(col(vecCol), idx).cast("double") -
-          try_element_at(element_at(centsLit, col("__cell") + 1), idx))
+          try_element_at(element_at(centsLit, col("__coarse") + 1), idx))
           .as(s"m$d")
-      }
-      val means = base
-        .select(col(vecCol), cellC)
-        .select(col(vecCol), col("__cell"),
-          explode(array(assigns: _*)).as("sc"))
-        .select(col(vecCol), col("__cell"), col("sc.sub").as("sub"),
-          col("sc.code").as("code"))
-        .groupBy(col("sub"), col("code"))
-        .agg(meanCols.head, meanCols.tail: _*)
-        .collect()
-      means.foreach { row =>
-        val s = row.getInt(0)
-        val j = row.getInt(1)
-        books = books.updated(s, books(s).updated(j,
-          Array.tabulate(subDim)(d =>
-            if (row.isNullAt(d + 2)) books(s)(j)(d)
-            else row.getDouble(d + 2))))
-      }
-    }
-    codebookStash.updateAndGet(_ + ((m, ksub, iters, tag) -> books))
-    books
-  }
-
-  /** Full IVF-PQ ANN with residual encoding: corpus rows carry their
-    * coarse cell and m residual codes; a candidate's score is
-    * dot(q, centroid[cell]) + Σ_m LUT_m[code_m] — the first term is
-    * the probe struct's own score (already computed for probe
-    * selection), the LUTs are per-query projections of q against the
-    * RESIDUAL codebooks, so v̂ = centroid + residual-codeword is
-    * scored without ever reconstructing it. Everything else (cell
-    * equi-join pruning, no raw-vector re-reads, explicit sum chain,
-    * bit-exact cross-engine) is as [[adcTopK]]. */
-  def adcResidualTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, m: Int, ksub: Int, nCells: Int,
-      nProbes: Int, iters: Int = 2): DataFrame = {
-    // shared projection across coarse trainer, residual trainer, and
-    // encode — see adcTopK
-    val base = corpus.select(col(idCol), col(vecCol))
-    val centroids = ivfTrain(base, idCol, vecCol, nCells, iters)
-    val books = pqTrainResidual(base, idCol, vecCol, centroids, m, ksub,
-      iters)
-    adcResidualTopKWith(base, queries, idCol, vecCol, k, books,
-      centroids, nProbes)
-  }
-
-  /** [[adcResidualTopK]] against FROZEN artifacts — see
-    * [[adcTopKWith]]; the residual-encode bias is re-derived from the
-    * (centroids, books) pair, a driver-side fold over K×m×ksub
-    * doubles. */
-  def adcResidualTopKWith(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      books: Array[Array[Array[Double]]],
-      centroids: Array[Array[Double]], nProbes: Int): DataFrame = {
-    val m = books.length
-    val base = corpus.select(col(idCol), col(vecCol))
-    val bias = residualEncodeBias(centroids, books)
-    val subDim = books(0)(0).length
-    val codeCols = (0 until m).map(s =>
-      subCellResidualExpr(col(vecCol), col("cell"), s, books(s), bias(s),
-        subDim).as(s"code_$s"))
-    val c = base
-      .select(col(idCol).as("did"), col(vecCol),
-        cellExpr(col(vecCol), centroids).as("cell"))
-      .select(col("did") +: col("cell") +: codeCols: _*)
-    val probeStructs = centroids.zipWithIndex.map { case (cent, i) =>
-      struct(dotProduct(col(vecCol), array(cent.map(lit): _*)).as("s"),
-        lit(i).as("i"))
-    }
-    val lutCols = (0 until m).map { s =>
-      val sv = slice(col(vecCol), s * subDim + 1, subDim)
-      array(books(s).map(cw =>
-        dotProduct(sv, array(cw.map(lit): _*))).toSeq: _*).as(s"lut_$s")
-    }
-    val q = queries
-      .select(col(idCol).as("qid") +:
-        explode(slice(reverse(array_sort(array(probeStructs.toSeq: _*))),
-          1, nProbes)).as("probe") +: lutCols: _*)
-      .select(col("qid") +: col("probe.i").as("cell") +:
-        col("probe.s").as("qc") +: (0 until m).map(s => col(s"lut_$s")): _*)
-    val score = (0 until m)
-      .map(s => element_at(col(s"lut_$s"), col(s"code_$s") + 1))
-      .foldLeft(col("qc"))(_ + _)
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("qid") =!= col("did"))
-      .select(col("qid"), col("did"), score.as("score"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("did"))
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-  }
-
-  /** DuckDB oracle mirroring [[adcResidualTopK]]: same bias
-    * decomposition for the residual encode, same probe-score +
-    * LUT-sum scoring, all trained values embedded as literals. */
-  def adcResidualOracleSql(table: String, idCol: String, vecCol: String,
-      k: Int, books: Array[Array[Array[Double]]],
-      centroids: Array[Array[Double]], nProbes: Int,
-      queryPred: String): String = {
-    val m = books.length
-    val subDim = books(0)(0).length
-    val bias = residualEncodeBias(centroids, books)
-    def sliceSql(v: String, s: Int): String =
-      s"list_slice($v, ${s * subDim + 1}, ${(s + 1) * subDim})"
-    def codeSql(v: String, s: Int): String = {
-      val structs = books(s).zipWithIndex.map { case (cw, j) =>
-        val biasByCell = bias(s).map(row => dlit(row(j)))
-          .mkString("[", ", ", "]")
-        s"{'s': list_dot_product(${sliceSql(v, s)}, ${arrLit(cw)}) - " +
-          s"($biasByCell)[cell + 1], 'i': $j}"
-      }.mkString("[", ", ", "]")
-      s"list_sort($structs, 'DESC')[1].i"
-    }
-    def lutSql(v: String, s: Int): String =
-      books(s).map(cw =>
-        s"list_dot_product(${sliceSql(v, s)}, ${arrLit(cw)})")
-        .mkString("[", ", ", "]")
-    val codeSel = (0 until m)
-      .map(s => s"${codeSql("dvec", s)} AS code_$s").mkString(",\n        ")
-    val lutSel = (0 until m)
-      .map(s => s"${lutSql("qvec", s)} AS lut_$s").mkString(",\n        ")
-    val scoreExpr = "qc + " +
-      (0 until m).map(s => s"lut_$s[code_$s + 1]").mkString(" + ")
-    s"""WITH q0 AS (SELECT $idCol AS qid, $vecCol::DOUBLE[] AS qvec
-       |           FROM $table WHERE $queryPred),
-       |c0 AS (SELECT $idCol AS did, $vecCol::DOUBLE[] AS dvec FROM $table),
-       |c1 AS (SELECT did, dvec,
-       |         list_sort(${cellStructsSql("dvec", centroids)}, 'DESC')[1].i
-       |           AS cell
-       |       FROM c0),
-       |c AS (SELECT did, cell,
-       |        $codeSel
-       |      FROM c1),
-       |q1 AS (SELECT qid, qvec,
-       |         unnest(list_sort(${cellStructsSql("qvec", centroids)},
-       |           'DESC')[1:$nProbes]) AS probe
-       |       FROM q0),
-       |q AS (SELECT qid, probe.i AS cell, probe.s AS qc,
-       |        $lutSel
-       |      FROM q1),
-       |scored AS (
-       |  SELECT qid, did, $scoreExpr AS score
-       |  FROM c JOIN q USING (cell) WHERE qid <> did),
-       |ranked AS (
-       |  SELECT qid, did, score, CAST(row_number() OVER
-       |    (PARTITION BY qid ORDER BY score DESC, did) AS BIGINT) AS rn
-       |  FROM scored)
-       |SELECT qid, rn, did, round(score, 6) AS score_r
-       |FROM ranked WHERE rn <= $k ORDER BY qid, rn""".stripMargin
+      },
+      (base, books) => {
+        val bias = residualEncodeBias(centroids, books)
+        subspaceRows(base.select(col(vecCol),
+            cellExpr(col(vecCol), centroids).as("__coarse")),
+          Seq(col(vecCol), col("__coarse")), m, s =>
+            subCellResidualExpr(col(vecCol), col("__coarse"), s, books(s),
+              bias(s), books(0)(0).length))
+      })
   }
 
   // ---- index persistence (lifecycle) --------------------------------
@@ -1505,9 +1352,7 @@ object Similarity {
       l2Norm(col(vecCol)).as("tn"))
     val scored = t.join(broadcast(s), lit(true))
       .select(col("sid"), col("tid"),
-        when(col("sn") * col("tn") > 0,
-          dotProduct(col("svec"), col("tvec")) / (col("sn") * col("tn")))
-          .otherwise(lit(0.0)).as("cos"))
+        cosineOf(col("svec"), col("tvec"), col("sn"), col("tn")).as("cos"))
     marginMineTail(scored, k)
   }
 
@@ -1606,28 +1451,16 @@ object Similarity {
     * don't appear — the retrieval's recall contract (x42-family)
     * governs that, not this operator.
     *
-    * NOTE: upstream [[ivfServe]] drops qid = did pairs (ANN
+    * NOTE: upstream [[candidates]] drops qid = did pairs (ANN
     * self-match hygiene), so src and tgt must not share ids — true
     * for any real bilingual corpus and for the x80b parity fixture.
     *
     * RECALL vs the retrieval's parameters is MEASURED, not assumed
-    * (SCALE.md "Composed bitext-miner RECALL vs the cap"; one point
-    * hash-gated as x80c): mined-pair recall tracks
-    * perCellCap / cell-occupancy — the cap is a hash election, so the
-    * true neighbor survives with probability ≈ cap/|cell| regardless
-    * of nProbes (0.03 → 0.81 as that ratio goes 0.03 → 1.6 on the
-    * rehearsal geometry). The nCells axis is ALSO measured (r17):
-    * raising nCells at fixed (nProbes, cap) recovers recall only
-    * until occupancy ≈ cap (64 → 256 cells on the 10k geometry:
-    * 0.39 → 0.73); past that the cap stops binding and recall FALLS
-    * (1024 cells, nProbes=2: 0.51) — and probe-proportional scaling
-    * does NOT win it back: 8/1024 probes the same corpus fraction as
-    * 2/256 yet measures 0.53 vs 0.73, so the loss is quantization/
-    * boundary error from over-partitioning (cells ≈ k points), not
-    * probe coverage. Operating rule, measured form: grow nCells
-    * until cap/occupancy reaches ~1-2 and STOP — past that point
-    * more cells cost recall at any probe budget; the cap exists to
-    * bound pathological cells. */
+    * (the nCells, nProbes and cap sweeps are in SCALE.md "Composed
+    * bitext-miner RECALL vs the cap"; one point is hash-gated as x80c).
+    * Operating rule: grow nCells until cap/occupancy reaches ~1-2 and
+    * STOP — past that point more cells cost recall at any probe
+    * budget; the cap exists to bound pathological cells. */
   def bitextMarginMineWith(fwd: DataFrame, bwd: DataFrame, k: Int,
       materialize: DataFrame => DataFrame = identity): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -1652,12 +1485,7 @@ object Similarity {
        |  FROM $table WHERE $tgtPred),
        |scored AS (
        |  SELECT sid, tid,
-       |    CASE WHEN sqrt(list_dot_product(svec, svec)) *
-       |              sqrt(list_dot_product(tvec, tvec)) > 0
-       |      THEN list_dot_product(svec, tvec) /
-       |           (sqrt(list_dot_product(svec, svec)) *
-       |            sqrt(list_dot_product(tvec, tvec)))
-       |      ELSE 0.0 END AS cos
+       |    ${cosSql("svec", "tvec", normSql("svec"), normSql("tvec"))} AS cos
        |  FROM t CROSS JOIN s),
        |${marginTailSql(k)}""".stripMargin
 
@@ -1725,9 +1553,7 @@ object Similarity {
            queryPred, Some(perCellCap), prefix = prefix,
            corpusPred = Some(corpusPred))},
          |${prefix}ranked AS (
-         |  SELECT qid, did, cos, row_number() OVER
-         |    (PARTITION BY qid ORDER BY cos DESC, did) AS rn
-         |  FROM ${prefix}scored),
+         |  ${rankSql(s"${prefix}scored", "cos")}),
          |${prefix}cand AS (
          |  SELECT qid, did, cos FROM ${prefix}ranked
          |  WHERE rn <= $kCand)""".stripMargin

@@ -51,9 +51,11 @@ case class ArgmaxDot(child: Expression, codewords: Array[Array[Double]],
   // elimination and exchange reuse, the plan-reuse goal this node was
   // built for (r17 ADVICE). Compare and hash the contents instead.
   // canonicalized/semanticEquals go through equals, so this is the
-  // one override point.
+  // one override point. Classes must match exactly: hashCode mixes in
+  // getClass, so a subclass with equal contents hashes apart and must
+  // not compare equal either.
   override def equals(other: Any): Boolean = other match {
-    case o: ArgmaxDot =>
+    case o: ArgmaxDot if o.getClass == getClass =>
       child == o.child && offset == o.offset && len == o.len &&
         java.util.Arrays.equals(halfNorms, o.halfNorms) &&
         codewords.length == o.codewords.length &&

@@ -312,18 +312,10 @@ private[queries] object ExtensionDedupAnnQueries {
       },
       None,
       oracleGen = () => Similarity.trainedCentroids.get((8, 2, "")).map { cents =>
-        val exact = annTopkOracle.replace("\n", "\n    ")
         val approx = Similarity.ivfOracleSql("embeddings", "vec_id",
           "embedding", 5, cents, nProbes = 2, queryPred = "vec_id < 8")
-          .replace("\n", "\n    ")
-        s"""WITH exact AS (SELECT qid, did FROM (
-           |    $exact)),
-           |approx AS (SELECT qid, did FROM (
-           |    $approx))
-           |SELECT e.qid, CAST(count(a.did) AS DOUBLE) / count(*) AS recall_at_k
-           |FROM exact e LEFT JOIN approx a
-           |  ON e.qid = a.qid AND e.did = a.did
-           |GROUP BY e.qid ORDER BY e.qid""".stripMargin
+        s"SELECT * FROM (${Similarity.recallOracleSql(approx, annTopkOracle,
+          "recall_at_k")}) ORDER BY qid"
       }),
 
     QuerySpec("x6d_ivf_capped_serving",
@@ -384,13 +376,8 @@ private[queries] object ExtensionDedupAnnQueries {
           .orderBy(col("id_a"), col("id_b"))
       },
       Some {
-        val cosSql =
-          """CASE WHEN sqrt(list_dot_product(x.v, x.v)) *
-            |                  sqrt(list_dot_product(y.v, y.v)) > 0
-            |    THEN list_dot_product(x.v, y.v) /
-            |         (sqrt(list_dot_product(x.v, x.v)) *
-            |          sqrt(list_dot_product(y.v, y.v)))
-            |    ELSE 0.0 END""".stripMargin
+        val cosSql = Similarity.cosSql("x.v", "y.v",
+          Similarity.normSql("x.v"), Similarity.normSql("y.v"))
         s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
            |b AS (SELECT vec_id, v,
            |        ${Similarity.bucketSqlExpr("v", 6, 64)} AS bucket

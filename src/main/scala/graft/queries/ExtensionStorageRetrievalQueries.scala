@@ -650,9 +650,9 @@ private[queries] object ExtensionStorageRetrievalQueries {
         val emb = t(s, dir, "embeddings")
         Similarity.adcTopKWith(emb, emb.filter(col("vec_id") < 8),
             "vec_id", "embedding", 5, memoBooks(s, dir, hook),
-            memoCentroids(s, dir, hook), nProbes = 2)
+            memoCentroids(s, dir, hook), nProbes = 2, residual = false)
           .select(col("qid"), col("rn"), col("did"),
-            round(col("adc"), 6).as("adc_r"))
+            round(col("score"), 6).as("adc_r"))
           .orderBy(col("qid"), col("rn"))
       },
       None,
@@ -660,7 +660,8 @@ private[queries] object ExtensionStorageRetrievalQueries {
         books <- Similarity.trainedCodebooks.get((8, 8, 2, ""))
         cents <- Similarity.trainedCentroids.get((8, 2, ""))
       } yield Similarity.adcOracleSql("embeddings", "vec_id", "embedding",
-        5, books, cents, nProbes = 2, queryPred = "vec_id < 8")),
+        5, books, cents, nProbes = 2, queryPred = "vec_id < 8",
+        residual = false)),
 
     QuerySpec("s14_zorder_clustered_scan",
       "Z-order (Morton) clustered layout + two-column box query: " +
@@ -820,10 +821,10 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "codebooks + biases",
       (s, dir) => withTrainerCache { hook =>
         val emb = t(s, dir, "embeddings")
-        Similarity.adcResidualTopKWith(emb,
+        Similarity.adcTopKWith(emb,
             emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5,
             memoResBooks(s, dir, hook), memoCentroids(s, dir, hook),
-            nProbes = 2)
+            nProbes = 2, residual = true)
           .select(col("qid"), col("rn"), col("did"),
             round(col("score"), 6).as("score_r"))
           .orderBy(col("qid"), col("rn"))
@@ -832,9 +833,9 @@ private[queries] object ExtensionStorageRetrievalQueries {
       oracleGen = () => for {
         books <- Similarity.trainedCodebooks.get((8, 8, 2, "res"))
         cents <- Similarity.trainedCentroids.get((8, 2, ""))
-      } yield Similarity.adcResidualOracleSql("embeddings", "vec_id",
+      } yield Similarity.adcOracleSql("embeddings", "vec_id",
         "embedding", 5, books, cents, nProbes = 2,
-        queryPred = "vec_id < 8")),
+        queryPred = "vec_id < 8", residual = true)),
 
     QuerySpec("x42b_pq_recall_eval",
       "PQ governance: per-query recall@5 of BOTH compressed paths " +
@@ -850,10 +851,10 @@ private[queries] object ExtensionStorageRetrievalQueries {
           "embedding", 5)
         val plain = Similarity.adcTopKWith(emb, q, "vec_id",
           "embedding", 5, memoBooks(s, dir, hook),
-          memoCentroids(s, dir, hook), nProbes = 2)
-        val res = Similarity.adcResidualTopKWith(emb, q, "vec_id",
+          memoCentroids(s, dir, hook), nProbes = 2, residual = false)
+        val res = Similarity.adcTopKWith(emb, q, "vec_id",
           "embedding", 5, memoResBooks(s, dir, hook),
-          memoCentroids(s, dir, hook), nProbes = 2)
+          memoCentroids(s, dir, hook), nProbes = 2, residual = true)
         Similarity.recallAtK(plain, exact)
           .withColumnRenamed("recall_at_k", "recall_pq")
           .join(Similarity.recallAtK(res, exact)
@@ -866,33 +867,15 @@ private[queries] object ExtensionStorageRetrievalQueries {
         resBooks <- Similarity.trainedCodebooks.get((8, 8, 2, "res"))
         cents <- Similarity.trainedCentroids.get((8, 2, ""))
       } yield {
-        val exact = annTopkOracle.replace("\n", "\n    ")
-        val plain = Similarity.adcOracleSql("embeddings", "vec_id",
-          "embedding", 5, plainBooks, cents, nProbes = 2,
-          queryPred = "vec_id < 8").replace("\n", "\n    ")
-        val res = Similarity.adcResidualOracleSql("embeddings", "vec_id",
-          "embedding", 5, resBooks, cents, nProbes = 2,
-          queryPred = "vec_id < 8").replace("\n", "\n    ")
-        s"""WITH exact AS (SELECT qid, did FROM (
-           |    $exact)),
-           |plain AS (SELECT qid, did FROM (
-           |    $plain)),
-           |res AS (SELECT qid, did FROM (
-           |    $res)),
-           |pr AS (
-           |  SELECT e.qid, CAST(count(a.did) AS DOUBLE) / count(*)
-           |    AS recall_pq
-           |  FROM exact e LEFT JOIN plain a
-           |    ON e.qid = a.qid AND e.did = a.did
-           |  GROUP BY e.qid),
-           |rr AS (
-           |  SELECT e.qid, CAST(count(a.did) AS DOUBLE) / count(*)
-           |    AS recall_respq
-           |  FROM exact e LEFT JOIN res a
-           |    ON e.qid = a.qid AND e.did = a.did
-           |  GROUP BY e.qid)
-           |SELECT pr.qid, pr.recall_pq, rr.recall_respq
-           |FROM pr JOIN rr ON pr.qid = rr.qid ORDER BY pr.qid""".stripMargin
+        def adc(books: Array[Array[Array[Double]]], residual: Boolean) =
+          Similarity.adcOracleSql("embeddings", "vec_id", "embedding", 5,
+            books, cents, nProbes = 2, queryPred = "vec_id < 8", residual)
+        s"""SELECT pr.qid, pr.recall_pq, rr.recall_respq
+           |FROM (${Similarity.recallOracleSql(
+             adc(plainBooks, residual = false), annTopkOracle, "recall_pq")}) pr
+           |JOIN (${Similarity.recallOracleSql(
+             adc(resBooks, residual = true), annTopkOracle, "recall_respq")}) rr
+           |  ON pr.qid = rr.qid ORDER BY pr.qid""".stripMargin
       }),
 
     QuerySpec("x43_token_budget_selection",
@@ -1074,7 +1057,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
         val wide = Similarity.adcTopKWith(emb, q, "vec_id", "embedding",
           5, Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
             ksub = 16, iters = 2, materialize = hook),
-          memoCentroids(s, dir, hook), nProbes = 4)
+          memoCentroids(s, dir, hook), nProbes = 4, residual = false)
         Similarity.recallAtK(wide, exact)
           .withColumnRenamed("recall_at_k", "recall_k16p4")
           .orderBy(col("qid"))
@@ -1084,19 +1067,11 @@ private[queries] object ExtensionStorageRetrievalQueries {
         books <- Similarity.trainedCodebooks.get((8, 16, 2, ""))
         cents <- Similarity.trainedCentroids.get((8, 2, ""))
       } yield {
-        val exact = annTopkOracle.replace("\n", "\n    ")
         val wide = Similarity.adcOracleSql("embeddings", "vec_id",
           "embedding", 5, books, cents, nProbes = 4,
-          queryPred = "vec_id < 8").replace("\n", "\n    ")
-        s"""WITH exact AS (SELECT qid, did FROM (
-           |    $exact)),
-           |wide AS (SELECT qid, did FROM (
-           |    $wide))
-           |SELECT e.qid, CAST(count(a.did) AS DOUBLE) / count(*)
-           |  AS recall_k16p4
-           |FROM exact e LEFT JOIN wide a
-           |  ON e.qid = a.qid AND e.did = a.did
-           |GROUP BY e.qid ORDER BY e.qid""".stripMargin
+          queryPred = "vec_id < 8", residual = false)
+        s"SELECT * FROM (${Similarity.recallOracleSql(wide, annTopkOracle,
+          "recall_k16p4")}) ORDER BY qid"
       }),
 
     QuerySpec("x42d_pq_rerank_recall",
@@ -1118,7 +1093,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
         // rank — one training pass, one candidate join for all points
         val short100 = Similarity.adcTopKWith(emb, q, "vec_id",
           "embedding", 100, memoBooks(s, dir, hook),
-          memoCentroids(s, dir, hook), nProbes = 2)
+          memoCentroids(s, dir, hook), nProbes = 2, residual = false)
         def reAt(c: Int) = Similarity.exactRerank(emb, q, "vec_id",
           "embedding",
           short100.filter(col("rn") <= c)
@@ -1136,41 +1111,15 @@ private[queries] object ExtensionStorageRetrievalQueries {
         books <- Similarity.trainedCodebooks.get((8, 8, 2, ""))
         cents <- Similarity.trainedCentroids.get((8, 2, ""))
       } yield {
-        val exact = annTopkOracle.replace("\n", "\n    ")
-        def re(c: Int): String = Similarity.adcRerankOracleSql(
-          "embeddings", "vec_id", "embedding", 5, c, books, cents,
-          nProbes = 2, queryPred = "vec_id < 8")
-          .replace("\n", "\n    ")
-        s"""WITH exact AS (SELECT qid, did FROM (
-           |    ${exact})),
-           |re10 AS (SELECT qid, did FROM (
-           |    ${re(10)})),
-           |re50 AS (SELECT qid, did FROM (
-           |    ${re(50)})),
-           |re100 AS (SELECT qid, did FROM (
-           |    ${re(100)})),
-           |r10 AS (
-           |  SELECT e.qid, CAST(count(a.did) AS DOUBLE) / count(*)
-           |    AS recall_c10
-           |  FROM exact e LEFT JOIN re10 a
-           |    ON e.qid = a.qid AND e.did = a.did
-           |  GROUP BY e.qid),
-           |r50 AS (
-           |  SELECT e.qid, CAST(count(a.did) AS DOUBLE) / count(*)
-           |    AS recall_c50
-           |  FROM exact e LEFT JOIN re50 a
-           |    ON e.qid = a.qid AND e.did = a.did
-           |  GROUP BY e.qid),
-           |r100 AS (
-           |  SELECT e.qid, CAST(count(a.did) AS DOUBLE) / count(*)
-           |    AS recall_c100
-           |  FROM exact e LEFT JOIN re100 a
-           |    ON e.qid = a.qid AND e.did = a.did
-           |  GROUP BY e.qid)
-           |SELECT r10.qid, r10.recall_c10, r50.recall_c50,
+        def re(c: Int): String = Similarity.recallOracleSql(
+          Similarity.adcRerankOracleSql("embeddings", "vec_id",
+            "embedding", 5, c, books, cents, nProbes = 2,
+            queryPred = "vec_id < 8"), annTopkOracle, s"recall_c$c")
+        s"""SELECT r10.qid, r10.recall_c10, r50.recall_c50,
            |  r100.recall_c100
-           |FROM r10 JOIN r50 ON r10.qid = r50.qid
-           |JOIN r100 ON r10.qid = r100.qid
+           |FROM (${re(10)}) r10
+           |JOIN (${re(50)}) r50 ON r10.qid = r50.qid
+           |JOIN (${re(100)}) r100 ON r10.qid = r100.qid
            |ORDER BY r10.qid""".stripMargin
       }),
 

@@ -513,12 +513,7 @@ private[queries] object ExtensionSupport {
         s"list_dot_product($vecExpr, $p) / CAST('$scale' AS DOUBLE)"
       }.mkString("[", ",\n      ", "]")
     def cos(a: String, b: String): String =
-      s"""CASE WHEN sqrt(list_dot_product($a, $a)) *
-         |          sqrt(list_dot_product($b, $b)) > 0
-         |  THEN list_dot_product($a, $b) /
-         |       (sqrt(list_dot_product($a, $a)) *
-         |        sqrt(list_dot_product($b, $b)))
-         |  ELSE 0.0 END""".stripMargin
+      Similarity.cosSql(a, b, Similarity.normSql(a), Similarity.normSql(b))
     val idxs = (0 until dim).mkString("[", ",", "]")
     s"""WITH e AS (
        |  SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -552,27 +547,11 @@ private[queries] object ExtensionSupport {
        |FROM pairs ORDER BY kind, id_a, id_b""".stripMargin
   }
 
-  /** Shared by x5 (window form) and x5b (heap-aggregate form): both
-    * must match this oracle bit-for-bit. */
-  val annTopkOracle: String =
-    """WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec
-      |          FROM embeddings WHERE vec_id < 8),
-      |c AS (SELECT vec_id AS did, embedding::DOUBLE[] AS dvec
-      |      FROM embeddings),
-      |scored AS (
-      |  SELECT qid, did,
-      |    CASE WHEN sqrt(list_dot_product(qvec, qvec)) *
-      |              sqrt(list_dot_product(dvec, dvec)) > 0
-      |      THEN list_dot_product(qvec, dvec) /
-      |           (sqrt(list_dot_product(qvec, qvec)) *
-      |            sqrt(list_dot_product(dvec, dvec)))
-      |      ELSE 0.0 END AS cos
-      |  FROM c JOIN q ON qid <> did),
-      |ranked AS (
-      |  SELECT qid, did, cos, CAST(row_number() OVER
-      |    (PARTITION BY qid ORDER BY cos DESC, did) AS BIGINT) AS rn
-      |  FROM scored)
-      |SELECT qid, rn, did, round(cos, 6) AS cos_r
-      |FROM ranked WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
+  /** The brute-force top-5 oracle of the fixture's query vectors
+    * (vec_id < 8): x5 (window form) and x5b (heap-aggregate form) must
+    * both match it bit-for-bit, and the recall entries take it as
+    * their exact side. */
+  val annTopkOracle: String = Similarity.bruteForceOracleSql("embeddings",
+    "vec_id", "embedding", 5, "vec_id < 8")
 
 }

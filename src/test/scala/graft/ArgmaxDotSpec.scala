@@ -124,6 +124,12 @@ class ArgmaxDotSpec extends SparkSpec {
     val diffBook = mk().copy(codewords =
       Array(Array(1.0, 2.0), Array(3.0, 9.0)))
     assert(a != diffBook)
+    // a subclass with equal contents hashes apart (hashCode mixes in
+    // getClass), so it must not compare equal either
+    val sub = new graft.plans.ArgmaxDot(
+      BoundReference(0, ArrayType(FloatType), nullable = true),
+      Array(Array(1.0, 2.0), Array(3.0, 4.0)), Array(0.5, 1.5), 0, 2) {}
+    assert(a != sub && sub != a)
   }
 
   test("decimal element types fail at analysis, not at eval") {

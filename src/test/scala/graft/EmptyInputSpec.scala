@@ -52,6 +52,18 @@ class EmptyInputSpec extends SparkSpec {
     // heap top-k aggregate over an empty scored set
     assert(Similarity.bruteForceTopKAgg(emptyVecs,
       emptyVecs, "vec_id", "embedding", 3).count() == 0)
+    // IVF and ADC serving against frozen, non-empty artifacts (cellExpr
+    // needs at least one centroid): empty corpus, then empty queries
+    val vecs = Seq((0L, Seq(1f, 0f, 0f, 1f))).toDF("vec_id", "embedding")
+    val cents = Array(Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 0.0, 1.0, 0.0))
+    val books = Array.tabulate(2, 2, 2)((s, j, d) => (s + j + d).toDouble)
+    for ((corpus, queries) <- Seq((emptyVecs, vecs), (vecs, emptyVecs))) {
+      assert(Similarity.ivfTopKWith(corpus, queries, "vec_id", "embedding",
+        3, cents, nProbes = 2).count() == 0)
+      for (residual <- Seq(false, true))
+        assert(Similarity.adcTopKWith(corpus, queries, "vec_id",
+          "embedding", 3, books, cents, nProbes = 2, residual).count() == 0)
+    }
     // multimodal transform over an empty dataset
     val media = Multimodal.fromBinaryColumn(spark, emptyDocs, "doc_id", "text")
     assert(Multimodal.transformStage(

@@ -124,7 +124,8 @@ class SimilaritySpec extends SparkSpec {
       (1L, Seq.fill(8)(0.5f)),
       (2L, Seq.tabulate(8)(i => if (i % 2 == 0) 1f else -1f))
     ).toDF("vec_id", "embedding")
-    val buckets = Similarity.lshBuckets(vecs, "vec_id", "embedding", 4, 8)
+    val buckets = vecs.select(col("vec_id"),
+        Similarity.bucketExpr(col("embedding"), 4, 8).as("bucket"))
       .as[(Long, Long)].collect().toMap
     assert(buckets(0L) == buckets(1L))
     assert(buckets.values.forall(b => b >= 0 && b < 16))
@@ -135,8 +136,9 @@ class SimilaritySpec extends SparkSpec {
       (i, Seq.tabulate(8)(d => if (d == (i % 4).toInt) 1f else 0.1f))
     }.toDF("vec_id", "embedding")
     // vec 16 is an exact twin of vec 0's pattern (16 % 4 == 0)
-    val top = Similarity.ivfTopK(vecs, vecs.filter($"vec_id" === 0),
-        "vec_id", "embedding", 1, nCells = 4, nProbes = 1)
+    val cents = Similarity.ivfTrain(vecs, "vec_id", "embedding", nCells = 4)
+    val top = Similarity.ivfTopKWith(vecs, vecs.filter($"vec_id" === 0),
+        "vec_id", "embedding", 1, cents, nProbes = 1)
       .select("qid", "did", "cos").as[(Long, Long, Double)].collect()
     assert(top.length == 1)
     assert(top.head._2 % 4 == 0)   // nearest is a same-pattern vector
@@ -171,6 +173,45 @@ class SimilaritySpec extends SparkSpec {
       .select($"qid", $"rn", $"did").as[(Long, Long, Long)]
       .collect().toSet
     assert(bigCap == uncapped, "a non-biting cap must be a no-op")
+  }
+
+  test("the shared candidate → score → top-k skeleton ignores physical " +
+      "layout: 1 and 64 shuffle partitions (AQE off) return identical " +
+      "rows for every serving path") {
+    val emb = graft.sources.Tables.load(spark, sf(), "embeddings")
+    val q = emb.filter($"vec_id" < 8)
+    // frozen artifacts, trained once: only the serving plans re-run
+    val cents = Similarity.ivfTrain(emb, "vec_id", "embedding",
+      nCells = 8, tag = "layout-spec")
+    val books = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
+      ksub = 8, tag = "layout-spec")
+    val resBooks = Similarity.pqTrainResidual(emb, "vec_id", "embedding",
+      cents, m = 8, ksub = 8, tag = "layout-spec-res")
+    def serveAll(): Seq[Seq[String]] = Seq(
+      Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 5),
+      Similarity.lshTopK(emb, q, "vec_id", "embedding", 5, nPlanes = 4,
+        dim = 64),
+      Similarity.ivfTopKWithCapped(emb, q, "vec_id", "embedding", 5, cents,
+        nProbes = 2, perCellCap = 12),
+      Similarity.adcTopKWith(emb, q, "vec_id", "embedding", 5, books, cents,
+        nProbes = 2, residual = false),
+      Similarity.adcTopKWith(emb, q, "vec_id", "embedding", 5, resBooks,
+        cents, nProbes = 2, residual = true),
+      Similarity.minePairsWith(emb, q, "vec_id", "embedding", cents,
+        nProbes = 2, posBand = 0.10, negBand = 0.0)
+    ).map(_.collect().toSeq.map(_.toString).sorted)
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    def at(partitions: Int): Seq[Seq[String]] = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toLong)
+      spark.conf.set("spark.sql.adaptive.enabled", false)
+      serveAll()
+    }
+    try {
+      val (one, many) = (at(1), at(64))
+      assert(one.forall(_.nonEmpty), s"every path must return rows: $one")
+      assert(one == many)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("ivfTrain is deterministic across invocations") {
@@ -274,11 +315,18 @@ class SimilaritySpec extends SparkSpec {
       "bit-reproducible")
   }
 
+  // the trained artifacts of the PQ specs: m = 2 codebooks of
+  // ksub = 2 codewords (plain or residual) over 2 coarse cells
+  private def pqBooks() = Similarity.pqTrain(pqCorpus, "vec_id",
+    "embedding", m = 2, ksub = 2)
+  private def pqCells() = Similarity.ivfTrain(pqCorpus, "vec_id",
+    "embedding", nCells = 2)
+
   test("adcTopK: nearest cluster-mate ranks first, self excluded, " +
       "k respected") {
-    val top = Similarity.adcTopK(pqCorpus,
+    val top = Similarity.adcTopKWith(pqCorpus,
         pqCorpus.filter($"vec_id" === 0), "vec_id", "embedding",
-        k = 2, m = 2, ksub = 2, nCells = 2, nProbes = 2)
+        k = 2, pqBooks(), pqCells(), nProbes = 2, residual = false)
       .select($"qid", $"rn", $"did").as[(Long, Long, Long)]
       .collect().sortBy(_._2).toSeq
     assert(top.length == 2)
@@ -292,10 +340,10 @@ class SimilaritySpec extends SparkSpec {
     // ids 1 and 2 quantize to the same codewords as id 0's cluster;
     // with ksub=2 both land on the SAME code per subspace, so their
     // ADC scores against any query tie exactly and rank by did
-    val top = Similarity.adcTopK(pqCorpus,
+    val top = Similarity.adcTopKWith(pqCorpus,
         pqCorpus.filter($"vec_id" === 3), "vec_id", "embedding",
-        k = 2, m = 2, ksub = 2, nCells = 2, nProbes = 2)
-      .select($"rn", $"did", $"adc").as[(Long, Long, Double)]
+        k = 2, pqBooks(), pqCells(), nProbes = 2, residual = false)
+      .select($"rn", $"did", $"score").as[(Long, Long, Double)]
       .collect().sortBy(_._1).toSeq
     assert(top.map(_._2) == Seq(4L, 5L),
       "equal-code candidates tie on adc and order by did")
@@ -322,9 +370,11 @@ class SimilaritySpec extends SparkSpec {
 
   test("adcResidualTopK: residual codes keep the query in its own " +
       "cluster; training is deterministic") {
-    val top = Similarity.adcResidualTopK(pqCorpus,
-        pqCorpus.filter($"vec_id" === 0), "vec_id", "embedding",
-        k = 2, m = 2, ksub = 2, nCells = 2, nProbes = 2)
+    val cells = pqCells()
+    val top = Similarity.adcTopKWith(pqCorpus,
+        pqCorpus.filter($"vec_id" === 0), "vec_id", "embedding", k = 2,
+        Similarity.pqTrainResidual(pqCorpus, "vec_id", "embedding", cells,
+          m = 2, ksub = 2), cells, nProbes = 2, residual = true)
       .select($"qid", $"rn", $"did").as[(Long, Long, Long)]
       .collect().sortBy(_._2).toSeq
     assert(top.length == 2)
@@ -394,9 +444,9 @@ class SimilaritySpec extends SparkSpec {
       "below the band, anchors lacking either side dropped") {
     // anchor cluster on x-axis; a mild cross-cluster candidate gives
     // the hard negative; probing both cells sees all candidates
-    val got = Similarity.minePairs(pqCorpus,
+    val got = Similarity.minePairsWith(pqCorpus,
         pqCorpus.filter($"vec_id" === 0), "vec_id", "embedding",
-        nCells = 2, nProbes = 2, posBand = 0.5, negBand = 0.5)
+        pqCells(), nProbes = 2, posBand = 0.5, negBand = 0.5)
       .select($"qid", $"pos_id", $"hneg_id", $"pos_cos_r", $"hneg_cos_r")
       .as[(Long, Long, Long, Double, Double)].collect().toSeq
     assert(got.length == 1)
@@ -406,9 +456,9 @@ class SimilaritySpec extends SparkSpec {
       s"hard negative must come from the other cluster: $r")
     assert(r._4 >= 0.5 && r._5 < 0.5)
     // a band nothing satisfies yields no pair rows, not nulls
-    val none = Similarity.minePairs(pqCorpus,
+    val none = Similarity.minePairsWith(pqCorpus,
       pqCorpus.filter($"vec_id" === 0), "vec_id", "embedding",
-      nCells = 2, nProbes = 2, posBand = 1.1, negBand = 1.0)
+      pqCells(), nProbes = 2, posBand = 1.1, negBand = 1.0)
     assert(none.count() == 0)
   }
 
