@@ -4,10 +4,22 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.HashFunctions.md5Hash60b
+
 /** THE two-phase sharded per-key rank cap — the one definition of the
-  * shape every capped bucket/cell in the engine uses (MinHash band
-  * buckets, SimHash band buckets, semantic-dedup IVF cells, the ANN
-  * serving cap). Semantically identical to
+  * shape every capped bucket/cell in the engine uses. Users:
+  *  - [[capBuckets]] (lowest-id cap) — the MinHash band buckets of
+  *    `Dedup.minHashNearDupPairs`, `lshCandidatePairs` and
+  *    `crossCorpusNearDupPairs`, the SimHash band buckets of
+  *    `Dedup.simHashNearDupPairs`, and the IVF cells of
+  *    `Similarity.semanticDedup`;
+  *  - [[twoPhaseRank]] directly (hash-order cap with a kept rank) —
+  *    `Similarity.perCellHashKeep`, behind the ANN serving cap and the
+  *    cell-balanced sample.
+  * [[bucketOverflow]] is the reporter every lowest-id cap pairs with
+  * (`Dedup.minHashBucketOverflow`, `Dedup.simHashBucketOverflow`,
+  * `Similarity.semanticCellOverflow`), and [[cappedSql]] is the DuckDB
+  * twin of [[capBuckets]]. Semantically identical to
   * `row_number over (partition by keys order by ord) <= cap`, but a
   * viral key never funnels through one WindowExec task:
   *
@@ -47,4 +59,31 @@ private[graft] object Caps {
           .filter(col("__rn") <= cap).drop("__k1", "__rn")
     }
   }
+
+  /** Keep each `keys` bucket's `cap` lowest-`idCol` rows: [[twoPhaseRank]]
+    * sharded on the 60-bit md5 of the id (so phase 1 is reproducible
+    * for any id type). No rank column escapes. */
+  def capBuckets(df: DataFrame, keys: Seq[String], idCol: String,
+      cap: Int): DataFrame =
+    twoPhaseRank(df, keys.map(col), Seq(col(idCol)),
+      md5Hash60b(col(idCol).cast("string")), cap)
+
+  /** The overflow report of a [[capBuckets]] cap: (keys..., `countCol`)
+    * for every bucket holding more than `cap` rows, so a cap is never
+    * a silent truncation. */
+  def bucketOverflow(df: DataFrame, keys: Seq[String], cap: Int,
+      countCol: String): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as(countCol))
+      .filter(col(countCol) > cap)
+
+  /** DuckDB twin of [[capBuckets]] over the relation `src`: the
+    * one-phase window gives the same rows as the two-phase Spark
+    * shape, whose split is scaling, not semantics. Keeps `src`'s
+    * columns. */
+  def cappedSql(src: String, keys: Seq[String], id: String,
+      cap: Int): String =
+    s"""SELECT * EXCLUDE (rn) FROM (
+       |  SELECT *, row_number() OVER (
+       |    PARTITION BY ${keys.mkString(", ")} ORDER BY $id) AS rn
+       |  FROM $src) WHERE rn <= $cap""".stripMargin
 }

@@ -55,23 +55,45 @@ object Dedup {
     val rows: Int = k / bands
   }
 
-  /** Per-document MinHash signature columns s0..s(k-1).
-    * One md5 per distinct shingle; the k family members are
-    * Carter–Wegman combinations of its two 60-bit halves. */
-  def minHashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      p: MinHashParams): DataFrame = {
-    // materialize the token array BEFORE the shingle transform so the
-    // lambda reads a bound attribute (see wordShinglesFromTokens note)
-    val toks = docs.select(col(idCol), trim(col(textCol)).as("__t"),
-      wsTokens(col(textCol)).as("__tk"))
-    val grams = toks.select(col(idCol),
-        explode(wordShinglesFromTokens(col("__tk"), col("__t"), p.shingleN))
-          .as("g"))
-      .select(col(idCol), md5Hash60(col("g")).as("a"), md5Hash60b(col("g")).as("b"))
-    grams.groupBy(col(idCol))
-      .agg(min(cwHash(col("a"), col("b"), 0)).as("s0"),
-        (1 until p.k).map(j => min(cwHash(col("a"), col("b"), j)).as(s"s$j")): _*)
+  /** (id, g): the distinct word `n`-gram shingles of each document,
+    * one row per shingle (a document shorter than `n` tokens yields its
+    * trimmed text as its one shingle). The shared front end of the
+    * MinHash signatures, the decontamination gram hashes and the
+    * prefix-filter sets; [[gramsSqlCtes]] is its DuckDB twin. The
+    * token array is materialized BEFORE the shingle transform so the
+    * lambda reads a bound attribute (see wordShinglesFromTokens). The
+    * per-document set is already distinct (array_distinct), so the
+    * explode is map-side only. */
+  def shingles(docs: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
+    docs.select(col(idCol), trim(col(textCol)).as("__t"),
+        wsTokens(col(textCol)).as("__tk"))
+      .select(col(idCol),
+        explode(wordShinglesFromTokens(col("__tk"), col("__t"), n)).as("g"))
+
+  /** DuckDB twin of [[shingles]] over `src(idCol, textCol)`: emits the
+    * CTE `<a>_grams` (idCol, g). */
+  def gramsSqlCtes(src: String, a: String, idCol: String, textCol: String,
+      n: Int): String = {
+    val joined = (0 until n).map(k => s"tk[i + $k]").mkString(" || ' ' || ")
+    s"""${a}_grams AS (
+       |  SELECT DISTINCT $idCol, unnest(
+       |    CASE WHEN len(tk) >= $n THEN
+       |      list_transform(range(1, len(tk) - ${n - 1} + 1), i -> $joined)
+       |    ELSE [trim($textCol)] END) AS g
+       |  FROM (SELECT $idCol, $textCol,
+       |          string_split_regex(trim($textCol), '\\s+') AS tk FROM $src))""".stripMargin
   }
+
+  /** Per-document MinHash signature columns s0..s(k-1) — the
+    * column-per-slot view of the array signatures the pair paths use
+    * (no exact-dedup prefilter: every document gets its row). One md5
+    * per distinct shingle; the k family members are Carter–Wegman
+    * combinations of its two 60-bit halves. */
+  def minHashSignatures(docs: DataFrame, idCol: String, textCol: String,
+      p: MinHashParams): DataFrame =
+    minHashArraySigs(docs, idCol, textCol, p, preDeduped = true)
+      .select(col(idCol) +: (0 until p.k).map(j => col("sig")(j).as(s"s$j")): _*)
 
   /** Candidate pairs (id_a < id_b) sharing ≥1 LSH bucket, with the
     * MinHash Jaccard estimate (= fraction of matching signature slots),
@@ -84,11 +106,11 @@ object Dedup {
     *  - an EXACT-dedup prefilter (one groupBy on the text) collapses
     *    identical documents to their lowest id before any hashing —
     *    exact duplicates are x1's job, not LSH's;
-    *  - each bucket is capped at its `maxBucket` lowest ids via the
-    *    two-phase sharded rank ([[cappedBands]] — a viral bucket
-    *    never funnels through one window task; the final rank keys on
-    *    the same (band, band_key) the join shuffles on). Overflow is
-    *    NOT silent: [[minHashBucketOverflow]] reports capped buckets.
+    *  - each bucket is capped at its `maxBucket` lowest ids by
+    *    `Caps.capBuckets` ([[cappedBands]] — a viral bucket never
+    *    funnels through one window task; the final rank keys on the
+    *    same (band, band_key) the join shuffles on). Overflow is NOT
+    *    silent: [[minHashBucketOverflow]] reports capped buckets.
     *
     * No caching and no re-joins: the signature ARRAY rides along
     * through the band unpivot and the bucket self-join, so joined rows
@@ -96,6 +118,23 @@ object Dedup {
     * projection — the signature subplan exists only as the two sides
     * of one self-join instead of three computations plus two joins,
     * and no full-corpus signature table is pinned in memory.
+    *
+    * The tail ([[estimatedPairs]], shared with
+    * [[crossCorpusNearDupPairs]]) places each step where it is
+    * load-bearing:
+    *  - the estimate sits in the join output's Project: one codegen'd
+    *    evaluation per band collision (≤ bands× per pair). A filter
+    *    placed directly on that projection gets PUSHED INTO THE JOIN
+    *    CONDITION, where the k-term expression runs per hash-probe
+    *    pair ahead of the cheap id ordering cut — measured 6× slower
+    *    on the sf10/sf1 rehearsal corpora than this shape;
+    *  - the band-collision dedup is a groupBy on the two id longs with
+    *    min(est) (est is a pure function of the pair, identical across
+    *    its band duplicates, so min is exact) — the widest hash
+    *    aggregation of the query carries 24-byte rows instead of two
+    *    k-int signature arrays;
+    *  - the threshold filter sits above the aggregation, where no rule
+    *    can sink it into the join.
     *
     * PRECONDITION: `idCol` uniquely identifies a document (one text per
     * id). The pair-dedup aggregation groups on the two ids alone and
@@ -107,15 +146,17 @@ object Dedup {
     * contract); run [[exactKeepFirst]]-style id assignment upstream if
     * a corpus cannot guarantee it.
     *
-    * The self-join carries a MERGE hint: left to the planner, the
-    * (small at gate SF) capped side lands under a BroadcastExchange
-    * and the whole signature pipeline (shingle explode, k hash mins,
-    * banding, two-phase cap) is computed TWICE — broadcast builds
-    * cannot reuse the other side's exchange (verified on the r18 x3
-    * plan dump: zero ReusedExchange, the full subtree planned once
-    * per side). As a sort-merge join, both sides are the IDENTICAL
-    * exchange on (band, band_key) that the cap's phase-2 window
-    * already establishes — ReusedExchange computes the pipeline
+    * The capped frame enters [[bucketSelfJoin]] with a MERGE hint
+    * (so do [[lshCandidatePairs]]' and [[simHashNearDupPairs]]'; the
+    * semantic-dedup cell join follows the same rule): left to the
+    * planner, the (small at gate SF) capped side lands under a
+    * BroadcastExchange and the whole signature pipeline (shingle
+    * explode, k hash mins, banding, two-phase cap) is computed TWICE —
+    * broadcast builds cannot reuse the other side's exchange (verified
+    * on the r18 x3 plan dump: zero ReusedExchange, the full subtree
+    * planned once per side). As a sort-merge join, both sides are the
+    * IDENTICAL exchange on (band, band_key) that the cap's phase-2
+    * window already establishes — ReusedExchange computes the pipeline
     * once, and the window's (keys..., id) sort already satisfies the
     * join's sort order, so the hint adds no exchange and no sort. At
     * corpus scale SMJ is what the planner picks anyway (no side fits
@@ -125,36 +166,10 @@ object Dedup {
     * barriers plus ~3 s/entry extra driver planning.) */
   def minHashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams(), minEst: Double = 0.75,
-      maxBucket: Int = 1000, preDeduped: Boolean = false): DataFrame = {
-    val capped = cappedBands(docs, idCol, textCol, p, maxBucket,
-      carrySig = true, preDeduped = preDeduped).hint("merge")
-    // Adjudicate in the projection ABOVE the join, dedup band
-    // collisions on the slim (id_a, id_b) keys, and threshold ABOVE
-    // the aggregation. Each placement is load-bearing:
-    //  - est in the join output's Project: one codegen'd evaluation
-    //    per band collision (≤ bands× per pair). A filter placed
-    //    directly on that projection gets PUSHED INTO THE JOIN
-    //    CONDITION, where the k-term expression runs per hash-probe
-    //    pair ahead of the cheap id ordering cut — measured 6× slower
-    //    on the sf10/sf1 rehearsal corpora than this shape;
-    //  - the distinct is a groupBy on the two id longs with min(est)
-    //    (est is a pure function of the pair, identical across its
-    //    band duplicates, so min is exact) — the widest hash
-    //    aggregation of the query carries 24-byte rows instead of two
-    //    k-int signature arrays;
-    //  - the threshold filter sits above the aggregation, where no
-    //    rule can sink it into the join.
-    capped.as("x").join(capped.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.band_key") === col("y.band_key") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
-        (sigMatches(col("x.sig"), col("y.sig"), p).cast("double") / p.k)
-          .as("__est"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(min(col("__est")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEst)
-  }
+      maxBucket: Int = 1000, preDeduped: Boolean = false): DataFrame =
+    estimatedPairs(bucketSelfJoin(cappedBands(docs, idCol, textCol, p,
+      maxBucket, carrySig = true, preDeduped).hint("merge"), bandBucket,
+      idCol), idCol, p, minEst)
 
   /** Near-duplicate LINKS between two corpora (train vs freshly
     * crawled, train vs licensed, shard vs shard): candidates share an
@@ -167,11 +182,13 @@ object Dedup {
     *
     * Both sides are exact-deduped and bucket-capped by the shared
     * [[cappedBands]] stage; the join is an equi-join on
-    * (band, band_key) — never all-pairs — and the signature arrays
-    * ride the join so no re-join against raw texts is needed. At
-    * 100 TB each side shuffles once on band keys; candidate volume is
-    * bounded by the bucket cap with the overflow reporter naming any
-    * truncation.
+    * (band, band_key) — never all-pairs, and left unhinted (its two
+    * sides are different corpora, so there is no exchange to reuse) —
+    * and the signature arrays ride the join so no re-join against raw
+    * texts is needed. At 100 TB each side shuffles once on band keys;
+    * candidate volume is bounded by the bucket cap with the overflow
+    * reporter naming any truncation. The tail is
+    * [[minHashNearDupPairs]]' ([[estimatedPairs]]).
     *
     * PRECONDITION: `idCol` is unique within EACH side (one text per id
     * per corpus) — same min(est) groupBy contract as
@@ -179,80 +196,75 @@ object Dedup {
   def crossCorpusNearDupPairs(a: DataFrame, b: DataFrame, idCol: String,
       textCol: String, p: MinHashParams = MinHashParams(),
       minEst: Double = 0.75, maxBucket: Int = 1000): DataFrame = {
-    val ca = cappedBands(a, idCol, textCol, p, maxBucket, carrySig = true)
-    val cb = cappedBands(b, idCol, textCol, p, maxBucket, carrySig = true)
-    // Same project / slim-groupBy / filter-above-agg shape as
-    // minHashNearDupPairs (see the placement rationale there — a
-    // filter on the projection would sink into the join condition).
-    ca.as("x").join(cb.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.band_key") === col("y.band_key"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
-        (sigMatches(col("x.sig"), col("y.sig"), p).cast("double") / p.k)
-          .as("__est"))
+    def side(d: DataFrame) =
+      cappedBands(d, idCol, textCol, p, maxBucket, carrySig = true)
+    estimatedPairs(side(a).as("x").join(side(b).as("y"),
+      sameBucket(bandBucket)), idCol, p, minEst)
+  }
+
+  /** The (band, band_key) bucket key of the MinHash band frames. */
+  private val bandBucket = Seq("band", "band_key")
+
+  /** The bucket-equality condition of every band/bucket join over the
+    * `x`/`y`-aliased sides. */
+  private def sameBucket(keys: Seq[String]): Column =
+    keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
+
+  /** The bucket self-join, lower id on the `x` side. The capped
+    * callers pass a MERGE-hinted frame: as an SMJ both sides reuse the
+    * ONE exchange the cap's phase-2 window establishes, so the
+    * pipeline below computes once (see [[minHashNearDupPairs]]). */
+  private def bucketSelfJoin(df: DataFrame, keys: Seq[String],
+      idCol: String): DataFrame =
+    df.as("x").join(df.as("y"),
+      sameBucket(keys) && col(s"x.$idCol") < col(s"y.$idCol"))
+
+  /** (id_a, id_b, est_jaccard) over a band join carrying both sides'
+    * `sig`: estimate in the projection above the join, slim min(est)
+    * groupBy on the ids, threshold above the aggregate — each
+    * placement is load-bearing (see [[minHashNearDupPairs]]). */
+  private def estimatedPairs(joined: DataFrame, idCol: String,
+      p: MinHashParams, minEst: Double): DataFrame =
+    joined.select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
+        estJaccard(col("x.sig"), col("y.sig"), p).as("__est"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(min(col("__est")).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEst)
-  }
 
   /** Shared cap stage of the pair and candidate paths: long-form band
-    * keys ranked within their (band, band_key) bucket, keeping each
-    * bucket's `maxBucket` lowest ids — ONE definition of the cap/key
-    * shape so [[minHashNearDupPairs]] and [[lshCandidatePairs]] (and
-    * through them the x1d/x2b gates) can never drift apart.
-    *
-    * Two-phase sharded rank (the r17 election rule, same shape as
-    * semanticDedup's cap): the cap binds exactly when one bucket is
-    * viral — a templated-doc family sharing band signatures — and a
-    * plain bucket-keyed window would pull that whole bucket through
-    * one task. Phase 1 ranks within (band, band_key, id-hash shard)
-    * and keeps ≤ maxBucket per shard (lossless: a row with maxBucket
-    * lower-id rows in its OWN shard cannot be in the bucket's overall
-    * lowest maxBucket); phase 2 ranks the ≤ 64×maxBucket survivors
-    * on the same (band, band_key) key the pair join shuffles on. */
+    * keys of exact-deduped docs, each (band, band_key) bucket capped at
+    * its `maxBucket` lowest ids by `Caps.capBuckets` — ONE definition
+    * of the cap/key shape so [[minHashNearDupPairs]],
+    * [[crossCorpusNearDupPairs]] and [[lshCandidatePairs]] (and through
+    * them the x1d/x2b gates) can never drift apart. The cap binds
+    * exactly when one bucket is viral — a templated-doc family sharing
+    * band signatures — and its two-phase rank keeps that bucket off a
+    * single window task. */
   private def cappedBands(docs: DataFrame, idCol: String, textCol: String,
       p: MinHashParams, maxBucket: Int, carrySig: Boolean,
       preDeduped: Boolean = false): DataFrame =
-    Caps.twoPhaseRank(
-      bandKeys(minHashArraySigs(docs, idCol, textCol, p, preDeduped),
-        idCol, p, carrySig),
-      Seq(col("band"), col("band_key")), Seq(col(idCol)),
-      md5Hash60b(col(idCol).cast("string")), maxBucket)
+    Caps.capBuckets(bandKeys(docs, idCol, textCol, p, carrySig, preDeduped),
+      bandBucket, idCol, maxBucket)
 
-  /** Matching-slot count between two k-length signature arrays,
-    * unrolled into k element_at comparisons: stays inside whole-stage
-    * codegen on the candidate hot path (a higher-order
-    * aggregate-over-zip_with is interpreted per pair) — the Spark twin
-    * of [[sigMatchSql]]. */
-  private def sigMatches(a: Column, b: Column, p: MinHashParams): Column =
+  /** The MinHash Jaccard estimate between two k-length signature
+    * arrays: the fraction of matching slots, counted by k unrolled
+    * element_at comparisons — they stay inside whole-stage codegen on
+    * the candidate hot path (a higher-order aggregate-over-zip_with is
+    * interpreted per pair). The Spark twin of [[estSql]]. */
+  private def estJaccard(a: Column, b: Column, p: MinHashParams): Column =
     (0 until p.k)
       .map(j => when(element_at(a, j + 1) === element_at(b, j + 1), 1)
         .otherwise(0))
-      .reduce(_ + _)
+      .reduce(_ + _).cast("double") / p.k
 
   /** Diagnostic for the bucket cap: (band, band_key, n_docs) for every
-    * bucket larger than `maxBucket` — run alongside the pair query so
-    * capping is never a silent truncation. Recomputes signatures from
-    * raw docs; on a shared pass persist [[minHashBandKeys]] once and
-    * use [[minHashBucketOverflowFromBands]]. */
+    * bucket larger than `maxBucket` (`Caps.bucketOverflow` over the
+    * same band keys the pair paths cap) — run alongside the pair query
+    * so capping is never a silent truncation. */
   def minHashBucketOverflow(docs: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams(), maxBucket: Int = 1000): DataFrame =
-    minHashBucketOverflowFromBands(
-      minHashBandKeys(docs, idCol, textCol, p), maxBucket)
-
-  /** Overflow diagnostic over a precomputed [[minHashBandKeys]] frame. */
-  def minHashBucketOverflowFromBands(bands: DataFrame,
-      maxBucket: Int = 1000): DataFrame =
-    bands.groupBy(col("band"), col("band_key"))
-      .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > maxBucket)
-
-  /** Long-form (id[, sig], band, band_key) keys over exact-deduped
-    * docs — the shared input of the pair join and the overflow
-    * diagnostic (set `carrySig` when feeding the pair path). */
-  def minHashBandKeys(docs: DataFrame, idCol: String, textCol: String,
-      p: MinHashParams = MinHashParams(), carrySig: Boolean = false): DataFrame =
-    bandKeys(minHashArraySigs(docs, idCol, textCol, p), idCol, p, carrySig)
+    Caps.bucketOverflow(bandKeys(docs, idCol, textCol, p, carrySig = false),
+      bandBucket, maxBucket, "n_docs")
 
   /** Array-form signatures over exact-deduped docs (lowest id kept per
     * identical text): one `sig` column instead of k, string-identical
@@ -262,28 +274,25 @@ object Dedup {
     * normalization subsumes byte identity) — the prefilter would be a
     * full-text shuffle that re-establishes a held invariant. */
   private def minHashArraySigs(docs: DataFrame, idCol: String,
-      textCol: String, p: MinHashParams,
-      preDeduped: Boolean = false): DataFrame = {
+      textCol: String, p: MinHashParams, preDeduped: Boolean): DataFrame = {
     val deduped =
       if (preDeduped) docs.select(col(textCol), col(idCol))
       else docs.groupBy(col(textCol)).agg(min(col(idCol)).as(idCol))
-    val toks = deduped.select(col(idCol), trim(col(textCol)).as("__t"),
-      wsTokens(col(textCol)).as("__tk"))
-    val grams = toks.select(col(idCol),
-        explode(wordShinglesFromTokens(col("__tk"), col("__t"), p.shingleN))
-          .as("g"))
+    shingles(deduped, idCol, textCol, p.shingleN)
       .select(col(idCol), md5Hash60(col("g")).as("a"),
         md5Hash60b(col("g")).as("b"))
-    grams.groupBy(col(idCol))
+      .groupBy(col(idCol))
       .agg(array((0 until p.k).map(j => min(cwHash(col("a"), col("b"), j))): _*)
         .as("sig"))
   }
 
-  /** Long-form (id[, sig], band, band_key) keys from array signatures;
-    * `carrySig` keeps the signature column alongside so downstream
-    * consumers need no re-join. */
-  private def bandKeys(sigs: DataFrame, idCol: String, p: MinHashParams,
-      carrySig: Boolean = false): DataFrame = {
+  /** Long-form (id[, sig], band, band_key) keys of the
+    * [[minHashArraySigs]] of `docs`; `carrySig` keeps the signature
+    * column alongside so downstream consumers need no re-join. */
+  private def bandKeys(docs: DataFrame, idCol: String, textCol: String,
+      p: MinHashParams, carrySig: Boolean,
+      preDeduped: Boolean = false): DataFrame = {
+    val sigs = minHashArraySigs(docs, idCol, textCol, p, preDeduped)
     val bandCols = (0 until p.bands).map { b =>
       md5(concat_ws("|", transform(
         slice(col("sig"), b * p.rows + 1, p.rows), x => x.cast("string"))))
@@ -296,13 +305,12 @@ object Dedup {
   }
 
   /** DuckDB CTE chain computing (id, band, band_key) for an arbitrary
-    * `(id, text)` source CTE — the building block for oracles over the
-    * incremental band screen. Emits CTEs named `<a>_toks`, `<a>_grams`,
-    * `<a>_hashed`, `<a>_sigs`, `<a>_bands`; reference the last. */
+    * `(id, text)` source CTE — the twin of [[bandKeys]] over
+    * [[minHashArraySigs]] (without the prefilter). Emits CTEs named
+    * `<a>_grams` ([[gramsSqlCtes]]), `<a>_hashed`, `<a>_sigs`
+    * (id, s0..s(k-1)) and `<a>_bands`; reference the last. */
   def bandsSqlCtes(sourceCte: String, a: String,
       p: MinHashParams = MinHashParams()): String = {
-    val n = p.shingleN
-    val joined = (0 until n).map(k => s"tk[i + $k]").mkString(" || ' ' || ")
     val sigExprs = (0 until p.k).map(j =>
       s"CAST(min((a + $j * (b % ${1L << 40})) % ${1L << 60}) AS BIGINT) AS s$j")
       .mkString(", ")
@@ -311,15 +319,7 @@ object Dedup {
         .map(j => s"CAST(s$j AS VARCHAR)").mkString(" || '|' || ")
       s"SELECT id, $b AS band, md5($slice) AS band_key FROM ${a}_sigs"
     }.mkString(" UNION ALL ")
-    s"""${a}_toks AS (
-       |  SELECT id, text, string_split_regex(trim(text), '\\s+') AS tk
-       |  FROM $sourceCte),
-       |${a}_grams AS (
-       |  SELECT DISTINCT id, unnest(
-       |    CASE WHEN len(tk) >= $n THEN
-       |      list_transform(range(1, len(tk) - ${n - 1} + 1), i -> $joined)
-       |    ELSE [trim(text)] END) AS g
-       |  FROM ${a}_toks),
+    s"""${gramsSqlCtes(sourceCte, a, "id", "text", p.shingleN)},
        |${a}_hashed AS (
        |  SELECT id, ('0x' || substr(md5(g), 1, 15))::BIGINT AS a,
        |         ('0x' || substr(md5(g), 17, 15))::BIGINT AS b
@@ -328,90 +328,51 @@ object Dedup {
        |${a}_bands AS ($bandExprs)""".stripMargin
   }
 
-  /** DuckDB CTE chain `docs → toks → grams → hashed → sigs → bands →
-    * capped → cand(id_a, id_b)` mirroring [[lshCandidatePairs]] over
-    * `table` (exact-dedup prefilter and bucket cap included) — shared
-    * by [[minHashOracleSql]] and the x2b adjudication oracle so the
+  /** DuckDB CTE chain mirroring [[lshCandidatePairs]] over `table`: the
+    * exact-dedup prefilter `docs(id, text)`, its [[bandsSqlCtes]] under
+    * the prefix `lsh` (signatures in `lsh_sigs`), the bucket cap
+    * `capped` ([[Caps.cappedSql]]) and `cand(id_a, id_b)` — shared by
+    * [[minHashOracleSql]] and the x2b adjudication oracle so the
     * candidate-generation SQL cannot drift from the Spark path. */
   def lshCandSqlCtes(table: String, idCol: String, textCol: String,
-      p: MinHashParams = MinHashParams(), maxBucket: Int = 1000): String = {
-    val n = p.shingleN
-    val sigExprs = (0 until p.k).map(j =>
-      s"CAST(min((a + $j * (b % ${1L << 40})) % ${1L << 60}) AS BIGINT) AS s$j").mkString(", ")
-    val bandExprs = (0 until p.bands).map { b =>
-      val slice = (b * p.rows until (b + 1) * p.rows)
-        .map(j => s"CAST(s$j AS VARCHAR)").mkString(" || '|' || ")
-      s"SELECT $idCol AS id, $b AS band, md5($slice) AS band_key FROM sigs"
-    }.mkString(" UNION ALL ")
-    val joined = (0 until n).map(k => s"tk[i + $k]").mkString(" || ' ' || ")
+      p: MinHashParams = MinHashParams(), maxBucket: Int = 1000): String =
     s"""docs AS (
-       |  SELECT min($idCol) AS $idCol, $textCol
+       |  SELECT min($idCol) AS id, $textCol AS text
        |  FROM $table GROUP BY $textCol),
-       |toks AS (
-       |  SELECT $idCol, $textCol,
-       |         string_split_regex(trim($textCol), '\\s+') AS tk
-       |  FROM docs),
-       |grams AS (
-       |  SELECT DISTINCT $idCol, unnest(
-       |    CASE WHEN len(tk) >= $n THEN
-       |      list_transform(range(1, len(tk) - ${n - 1} + 1), i -> $joined)
-       |    ELSE [trim($textCol)] END) AS g
-       |  FROM toks),
-       |hashed AS (
-       |  SELECT $idCol, ('0x' || substr(md5(g), 1, 15))::BIGINT AS a,
-       |         ('0x' || substr(md5(g), 17, 15))::BIGINT AS b
-       |  FROM grams),
-       |sigs AS (SELECT $idCol, $sigExprs FROM hashed GROUP BY $idCol),
-       |bands AS ($bandExprs),
+       |${bandsSqlCtes("docs", "lsh", p)},
        |capped AS (
-       |  SELECT id, band, band_key FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY band, band_key
-       |                                 ORDER BY id) AS rn
-       |    FROM bands) ranked
-       |  WHERE rn <= $maxBucket),
+       |  ${Caps.cappedSql("lsh_bands", bandBucket, "id", maxBucket)}),
        |cand AS (
        |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
        |  FROM capped x JOIN capped y
        |    ON x.band = y.band AND x.band_key = y.band_key AND x.id < y.id)""".stripMargin
-  }
 
   /** DuckDB oracle SQL mirroring minHashNearDupPairs exactly,
     * including the exact-dedup prefilter and the bucket cap. */
   def minHashOracleSql(table: String, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams(), minEst: Double = 0.75,
-      maxBucket: Int = 1000): String = {
-    val matchSum = (0 until p.k)
-      .map(j => s"(CASE WHEN sa.s$j = sb.s$j THEN 1 ELSE 0 END)").mkString(" + ")
+      maxBucket: Int = 1000): String =
     s"""WITH ${lshCandSqlCtes(table, idCol, textCol, p, maxBucket)}
-       |SELECT c.id_a, c.id_b,
-       |       CAST($matchSum AS DOUBLE) / ${p.k} AS est_jaccard
+       |SELECT c.id_a, c.id_b, ${estSql("sa", "sb", p)} AS est_jaccard
        |FROM cand c
-       |JOIN sigs sa ON sa.$idCol = c.id_a
-       |JOIN sigs sb ON sb.$idCol = c.id_b
-       |WHERE CAST($matchSum AS DOUBLE) / ${p.k} >= $minEst
+       |JOIN lsh_sigs sa ON sa.id = c.id_a
+       |JOIN lsh_sigs sb ON sb.id = c.id_b
+       |WHERE ${estSql("sa", "sb", p)} >= $minEst
        |ORDER BY id_a, id_b""".stripMargin
-  }
 
   /** The candidate-GENERATION stage of [[minHashNearDupPairs]] alone:
     * distinct (id_a, id_b) sharing ≥1 capped LSH bucket over
     * exact-deduped docs, no estimate filter — the pair source to feed
     * any pairwise adjudicator (Levenshtein, exact Jaccard, embedding
-    * cosine). Same scale shape: equi-join on (band, band_key), capped
+    * cosine). Same scale shape and the same MERGE-hinted self-join
+    * ([[bucketSelfJoin]]): equi-join on (band, band_key), capped
     * buckets, never all-pairs. */
   def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
-      p: MinHashParams = MinHashParams(), maxBucket: Int = 1000): DataFrame = {
-    // MERGE-hinted for the same reason as minHashNearDupPairs' self-
-    // join (see its scaladoc): as an SMJ both sides reuse ONE
-    // exchange and the signature pipeline computes once
-    val capped = cappedBands(docs, idCol, textCol, p, maxBucket,
-      carrySig = false).hint("merge")
-    capped.as("x").join(capped.as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.band_key") === col("y.band_key") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
+      p: MinHashParams = MinHashParams(), maxBucket: Int = 1000): DataFrame =
+    bucketSelfJoin(cappedBands(docs, idCol, textCol, p, maxBucket,
+        carrySig = false).hint("merge"), bandBucket, idCol)
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
       .distinct()
-  }
 
   // ---- incremental (delta-vs-history) dedup ------------------------
 
@@ -447,15 +408,8 @@ object Dedup {
   def incrementalNearNew(batch: DataFrame, idCol: String, textCol: String,
       seen: DataFrame, p: MinHashParams = MinHashParams()): DataFrame = {
     val seenBands = guardParams(seen, p).select(col("band"), col("band_key"))
-    val keyedTexts = batch.select(md5(col(textCol)).as("__tid"),
-      col(textCol)).distinct()
-    val hitTexts = bandKeys(
-        minHashArraySigs(keyedTexts, "__tid", textCol, p), "__tid", p)
-      .join(seenBands.distinct(), Seq("band", "band_key"), "left_semi")
-      .select(col("__tid")).distinct()
-    batch.withColumn("__tid", md5(col(textCol)))
-      .join(hitTexts, Seq("__tid"), "left_anti")
-      .drop("__tid")
+    dropHitTexts(batch, textCol, batchBands(batch, textCol, p, carrySig = false)
+      .join(seenBands.distinct(), bandBucket, "left_semi"))
   }
 
   /** Two-stage incremental near-dup ingest — the precision path the
@@ -475,22 +429,31 @@ object Dedup {
       minEst: Double = 0.75): DataFrame = {
     val seenSigs = guardParams(seen, p)
       .select(col("band"), col("band_key"), col("sig").as("__hsig"))
-    val keyedTexts = batch.select(md5(col(textCol)).as("__tid"),
-      col(textCol)).distinct()
-    val qBands = bandKeys(
-      minHashArraySigs(keyedTexts, "__tid", textCol, p), "__tid", p,
-      carrySig = true)
-    val cand = qBands.join(seenSigs, Seq("band", "band_key"))
+    val cand = batchBands(batch, textCol, p, carrySig = true)
+      .join(seenSigs, bandBucket)
       .select(col("__tid"), col("sig"), col("__hsig"))
       .distinct()
-    val hitTexts = cand
-      .filter(sigMatches(col("sig"), col("__hsig"), p).cast("double") / p.k
-        >= minEst)
-      .select(col("__tid")).distinct()
-    batch.withColumn("__tid", md5(col(textCol)))
-      .join(hitTexts, Seq("__tid"), "left_anti")
-      .drop("__tid")
+    dropHitTexts(batch, textCol,
+      cand.filter(estJaccard(col("sig"), col("__hsig"), p) >= minEst))
   }
+
+  /** Band keys (`__tid`[, sig], band, band_key) of a batch's distinct
+    * texts, keyed by text digest `__tid` — the screen side of both
+    * incremental near-dup paths. */
+  private def batchBands(batch: DataFrame, textCol: String,
+      p: MinHashParams, carrySig: Boolean): DataFrame = {
+    val keyedTexts = batch.select(md5(col(textCol)).as("__tid"),
+      col(textCol)).distinct()
+    bandKeys(keyedTexts, "__tid", textCol, p, carrySig)
+  }
+
+  /** `batch` without every row whose text digest is among `hits`'
+    * `__tid`s — every copy of a hit text drops. */
+  private def dropHitTexts(batch: DataFrame, textCol: String,
+      hits: DataFrame): DataFrame =
+    batch.withColumn("__tid", md5(col(textCol)))
+      .join(hits.select(col("__tid")).distinct(), Seq("__tid"), "left_anti")
+      .drop("__tid")
 
   /** The (id, sig, band, band_key) inventory of a corpus with its
     * MinHash parameter tag — the richer sibling of [[bandInventory]]:
@@ -499,8 +462,7 @@ object Dedup {
     * ([[incrementalNearAdjudicated]]) without touching history text. */
   def signatureInventory(docs: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams()): DataFrame =
-    bandKeys(minHashArraySigs(docs, idCol, textCol, p), idCol, p,
-      carrySig = true)
+    bandKeys(docs, idCol, textCol, p, carrySig = true)
       .withColumn("minhash_params", lit(paramsTag(p)))
 
   /** Shared params-drift guard: an inventory tagged with different
@@ -521,13 +483,12 @@ object Dedup {
   private def paramsTag(p: MinHashParams): String =
     s"k${p.k}b${p.bands}n${p.shingleN}"
 
-  /** DuckDB expression: count of matching signature slots between sig
-    * CTE aliases `a` and `b` (the pairwise MinHash match sum). */
-  def sigMatchSql(a: String, b: String,
-      p: MinHashParams = MinHashParams()): String =
-    (0 until p.k)
-      .map(j => s"(CASE WHEN $a.s$j = $b.s$j THEN 1 ELSE 0 END)")
-      .mkString(" + ")
+  /** DuckDB expression: the MinHash Jaccard estimate (fraction of
+    * matching slots) between the s0..s(k-1) signature rows aliased `a`
+    * and `b` — the twin of [[estJaccard]]. */
+  def estSql(a: String, b: String, p: MinHashParams = MinHashParams()): String =
+    (0 until p.k).map(j => s"(CASE WHEN $a.s$j = $b.s$j THEN 1 ELSE 0 END)")
+      .mkString("CAST(", " + ", s" AS DOUBLE) / ${p.k}")
 
   /** The (band, band_key) inventory of a corpus, tagged with the
     * MinHash parameters it was built under — persist this at each
@@ -535,7 +496,7 @@ object Dedup {
     * screen with drifted parameters). */
   def bandInventory(docs: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams()): DataFrame =
-    bandKeys(minHashArraySigs(docs, idCol, textCol, p), idCol, p)
+    bandKeys(docs, idCol, textCol, p, carrySig = false)
       .select(col("band"), col("band_key")).distinct()
       .withColumn("minhash_params", lit(paramsTag(p)))
 
@@ -632,6 +593,22 @@ object Dedup {
     edges.unpersist()
     labels.select(col("u").as(idCol), col("label").as("cluster_id"))
   }
+
+  /** DuckDB twin of [[connectedComponents]] over a pair relation
+    * `pairs(id_a, id_b)`: CTEs `edges(u, v)` (both directions), the
+    * recursive closure `reach(u, v)` and `labels(u, mv)`, the minimum
+    * id reachable from each node that has an edge (an id without edges
+    * labels itself, so callers left-join and coalesce). Needs a
+    * `WITH RECURSIVE` head. */
+  def componentsSqlCtes(pairs: String): String =
+    s"""edges AS (
+       |  SELECT id_a AS u, id_b AS v FROM $pairs
+       |  UNION SELECT id_b, id_a FROM $pairs),
+       |reach(u, v) AS (
+       |  SELECT u, v FROM edges
+       |  UNION
+       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+       |labels AS (SELECT u, min(v) AS mv FROM reach GROUP BY u)""".stripMargin
 
   /** Default `materialize` hook for FORKED (multi-consumer) lineages:
     * persist MEMORY_AND_DISK — computed once, spills instead of
@@ -744,8 +721,9 @@ object Dedup {
         explode(array_distinct(wsTokens(col(textCol)))).as("t"))
       .select(col(idCol), md5Hash60(col("t")).as("ha"),
         md5Hash60b(col("t")).as("hb"))
-    val aggCols = (0 until 32).map(j => bitSum("ha", j).as(s"c$j")) ++
-      (0 until 32).map(j => bitSum("hb", j).as(s"c${32 + j}"))
+    val aggCols = (0 until 64).map { j =>
+      val bit = shiftright(col(if (j < 32) "ha" else "hb"), j % 32).bitwiseAND(lit(1L))
+      sum(when(bit === 1L, 1).otherwise(-1)).as(s"c$j") }
     val sums = toks.groupBy(col(idCol)).agg(aggCols.head, aggCols.tail: _*)
     val sig = (0 until 64)
       .map(j => when(col(s"c$j") >= 0, lit(1L << j)).otherwise(lit(0L)))
@@ -753,70 +731,50 @@ object Dedup {
     sums.select(col(idCol), sig.as("simhash"))
   }
 
-  private def bitSum(h: String, j: Int): Column =
-    sum(when(shiftright(col(h), j).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-
   /** SimHash near-dup pairs: band-bucketed candidate generation over
     * the 64-bit signature + exact Hamming filter. The pair join is an
     * equi-join on (band, band key) — never all-pairs — and recall for
     * Hamming ≤ p.maxHamming is exact by pigeonhole (SimHashParams).
     * Signatures ride the join (no re-join), and each bucket is capped
-    * at its `p.maxBucket` lowest ids by the two-phase sharded rank
-    * (see [[cappedBands]] — a viral bucket never funnels through one
-    * window task; phase 2 ranks on the SAME (band, bkey) key the
-    * join shuffles on) — mirroring minHashNearDupPairs. Overflow is
+    * at its `p.maxBucket` lowest ids by `Caps.capBuckets` (a viral
+    * bucket never funnels through one window task; phase 2 ranks on
+    * the SAME (band, bkey) key the join shuffles on), and the capped
+    * frame enters the MERGE-hinted [[bucketSelfJoin]] of
+    * [[minHashNearDupPairs]], so the signature pipeline computes once.
+    * The tail is its own: distinct pairs, then Hamming. Overflow is
     * not silent: run [[simHashBucketOverflow]] alongside. */
   def simHashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      p: SimHashParams = SimHashParams()): DataFrame =
-    simHashNearDupPairsFromBands(simHashBandKeys(docs, idCol, textCol, p),
-      idCol, p)
-
-  /** Pair generation over a precomputed [[simHashBandKeys]] frame —
-    * persist the banded frame once and feed BOTH this and
-    * [[simHashBucketOverflowFromBands]], so the signature pipeline
-    * (the dominant cost) runs once per dedup pass, not twice. */
-  def simHashNearDupPairsFromBands(bands: DataFrame, idCol: String,
       p: SimHashParams = SimHashParams()): DataFrame = {
-    // MERGE-hinted for the same reason as minHashNearDupPairs' self-
-    // join (see its scaladoc): as an SMJ both sides reuse ONE
-    // exchange and the signature pipeline computes once
-    val capped = Caps.twoPhaseRank(bands,
-      Seq(col("band"), col("bkey")), Seq(col(idCol)),
-      md5Hash60b(col(idCol).cast("string")), p.maxBucket).hint("merge")
-    val cand = capped.as("x").join(capped.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col(s"x.$idCol") < col(s"y.$idCol"))
+    val capped = Caps.capBuckets(simHashBands(docs, idCol, textCol, p),
+      simBucket, idCol, p.maxBucket).hint("merge")
+    bucketSelfJoin(capped, simBucket, idCol)
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"),
         col("x.simhash").as("sh_a"), col("y.simhash").as("sh_b"))
       .distinct()
-    cand.select(col("id_a"), col("id_b"),
+      .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long")
           .as("hamming"))
       .filter(col("hamming") <= p.maxHamming)
   }
 
   /** Diagnostic for the SimHash bucket cap: (band, bkey, n_docs) for
-    * every band bucket larger than `p.maxBucket` — run alongside the
-    * pair query so capping is never a silent truncation. Recomputes
-    * signatures from raw docs; on a shared pass use
-    * [[simHashBucketOverflowFromBands]] with the same banded frame. */
+    * every band bucket larger than `p.maxBucket` (`Caps.bucketOverflow`
+    * over the same band keys the pair path caps) — run alongside the
+    * pair query so capping is never a silent truncation. */
   def simHashBucketOverflow(docs: DataFrame, idCol: String, textCol: String,
       p: SimHashParams = SimHashParams()): DataFrame =
-    simHashBucketOverflowFromBands(simHashBandKeys(docs, idCol, textCol, p), p)
+    Caps.bucketOverflow(simHashBands(docs, idCol, textCol, p), simBucket,
+      p.maxBucket, "n_docs")
 
-  /** Overflow diagnostic over a precomputed [[simHashBandKeys]] frame. */
-  def simHashBucketOverflowFromBands(bands: DataFrame,
-      p: SimHashParams = SimHashParams()): DataFrame =
-    bands.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > p.maxBucket)
+  /** The (band, bkey) bucket key of the SimHash band frame. */
+  private val simBucket = Seq("band", "bkey")
 
   /** Long-form (id, simhash, band, bkey) band keys: band b's key is
     * signature bits [b*width, (b+1)*width) — arithmetic shift then
     * mask, so the sign bit never leaks into a key. The shared input
     * of the pair join and the overflow diagnostic. */
-  def simHashBandKeys(docs: DataFrame, idCol: String, textCol: String,
-      p: SimHashParams = SimHashParams()): DataFrame = {
+  private def simHashBands(docs: DataFrame, idCol: String, textCol: String,
+      p: SimHashParams): DataFrame = {
     val bandCols = (0 until p.bands).map(b =>
       shiftright(col("simhash"), p.width * b).bitwiseAND(lit(p.mask))
         .as(s"b$b"))
@@ -834,11 +792,9 @@ object Dedup {
 
   /** DuckDB oracle SQL mirroring simHash64. */
   def simHashOracleSql(table: String, idCol: String, textCol: String): String = {
-    val sums = ((0 until 32).map(j =>
-      s"CAST(sum(CASE WHEN (ha >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS c$j") ++
-      (0 until 32).map(j =>
-        s"CAST(sum(CASE WHEN (hb >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS BIGINT) AS c${32 + j}"))
-      .mkString(", ")
+    val sums = (0 until 64).map(j =>
+      s"CAST(sum(CASE WHEN (${if (j < 32) "ha" else "hb"} >> ${j % 32}) & 1 = 1 " +
+        s"THEN 1 ELSE -1 END) AS BIGINT) AS c$j").mkString(", ")
     val sig = (0 until 64)
       .map(j => s"(CASE WHEN c$j >= 0 THEN ${duckBitLit(j)} ELSE 0 END)")
       .mkString(" | ")
@@ -858,23 +814,15 @@ object Dedup {
     * including the band parameterization and the bucket cap. */
   def simHashPairsOracleSql(table: String, idCol: String, textCol: String,
       p: SimHashParams = SimHashParams()): String = {
-    val sig = simHashOracleSql(table, idCol, textCol)
-      .replace("\n", "\n    ")
     val bandExprs = (0 until p.bands).map(b =>
       s"SELECT $idCol AS id, simhash, $b AS band, " +
         s"(simhash >> ${p.width * b}) & ${p.mask} AS bkey FROM sig")
       .mkString("\n  UNION ALL\n  ")
-    s"""WITH sig AS (
-       |  SELECT * FROM (
-       |    $sig)),
+    s"""WITH sig AS (${simHashOracleSql(table, idCol, textCol)}),
        |bands AS (
        |  $bandExprs),
        |capped AS (
-       |  SELECT id, simhash, band, bkey FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY band, bkey
-       |                                 ORDER BY id) AS rn
-       |    FROM bands) ranked
-       |  WHERE rn <= ${p.maxBucket}),
+       |  ${Caps.cappedSql("bands", simBucket, "id", p.maxBucket)}),
        |cand AS (
        |  SELECT DISTINCT x.id AS id_a, y.id AS id_b,
        |         x.simhash AS sa, y.simhash AS sb
@@ -960,18 +908,13 @@ object Dedup {
 
   // ---- benchmark decontamination -----------------------------------
 
-  /** Distinct (id, 60-bit word-n-gram hash) pairs of a corpus. The
-    * per-document gram set is already distinct from the shingle
-    * transform (array_distinct), so no extra shuffle-distinct is
-    * needed — explode is map-side only. */
+  /** Distinct (id, 60-bit word-n-gram hash) pairs of a corpus: the
+    * hashed [[shingles]], whose per-document set is already distinct,
+    * so no extra shuffle-distinct is needed. */
   private def gramHashes(docs: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame = {
-    val toks = docs.select(col(idCol), trim(col(textCol)).as("__t"),
-      wsTokens(col(textCol)).as("__tk"))
-    toks.select(col(idCol),
-        explode(wordShinglesFromTokens(col("__tk"), col("__t"), n)).as("g"))
+      n: Int): DataFrame =
+    shingles(docs, idCol, textCol, n)
       .select(col(idCol), md5Hash60(col("g")).as("gram_h"))
-  }
 
   /** Benchmark-decontamination scores: for each training document, the
     * fraction of its distinct word `n`-grams that appear ANYWHERE in
@@ -1080,40 +1023,13 @@ object Dedup {
     require(l >= 2, s"window length must be >= 2, got $l")
 
     // (id, tokens, n) — feeds window extraction AND reassembly.
-    val base = materialize(docs
-      .select(col(idCol), wsTokens(col(textCol)).as("__tk"))
-      .withColumn("__n", size(col("__tk")).cast("int")))
-
-    // All L-token window hashes, in-row. sequence(1, 0) would count
-    // DOWNWARD, so short docs get an explicit empty array.
-    val winArr = when(col("__n") >= l,
-        transform(sequence(lit(1), col("__n") - (l - 1)),
-          i => md5Hash60(array_join(slice(col("__tk"), i, lit(l)), " "))))
-      .otherwise(array().cast("array<bigint>"))
-    // wins feeds TWO consumers since the r17 de-windowing (the
-    // per-hash stats aggregate and the join-back), so it goes through
-    // `materialize` like base — identity by default (recompute keeps
-    // full lineage; the work is embarrassingly parallel map-side
-    // tokenize+hash), persist via the hook where the double compute
-    // dominates.
-    val wins = materialize(base
-      .select(col(idCol), posexplode(winArr).as(Seq("__p0", "win_h")))
-      .select(col(idCol), (col("__p0") + 1).cast("int").as("pos"),
-        col("win_h")))
-
-    // Occurrences beyond the globally first of a >1-occurrence window
-    // are removals. The per-hash count and first-occurrence election
-    // are ONE map-side-partial aggregate joined back on win_h — NOT a
-    // pair of hash-keyed window functions: a viral L-token window
-    // (license boilerplate in hundreds of millions of docs) would pull
-    // every occurrence through a single WindowExec task, while the
-    // aggregate reduces it map-side and the join-back is
-    // AQE-skew-splittable (the class doc's "AQE handles the skew"
-    // holds for joins; it never held for windows).
-    val stats = wins.groupBy(col("win_h"))
-      .agg(count(lit(1)).as("__cnt"),
-        min(struct(col(idCol), col("pos"))).as("__first"))
-    val removals = wins.join(stats, Seq("win_h"))
+    val base = materialize(tokenized(docs, idCol, textCol))
+    // wins feeds TWO consumers (the per-hash stats aggregate and the
+    // join-back), so it goes through `materialize` like base —
+    // identity by default (recompute keeps full lineage; the work is
+    // embarrassingly parallel map-side tokenize+hash), persist via the
+    // hook where the double compute dominates.
+    val removals = withWindowStats(materialize(windows(base, idCol, l)), idCol)
       .filter(col("__cnt") > 1 &&
         struct(col(idCol), col("pos")) =!= col("__first"))
       .select(col(idCol), col("pos"))
@@ -1165,32 +1081,15 @@ object Dedup {
     require(l >= 2, s"window length must be >= 2, got $l")
     import org.apache.spark.sql.expressions.Window
 
-    val base = docs
-      .select(col(idCol), wsTokens(col(textCol)).as("__tk"))
-      .withColumn("__n", size(col("__tk")).cast("int"))
-    val winArr = when(col("__n") >= l,
-        transform(sequence(lit(1), col("__n") - (l - 1)),
-          i => md5Hash60(array_join(slice(col("__tk"), i, lit(l)), " "))))
-      .otherwise(array().cast("array<bigint>"))
-    // two consumers since the r17 de-windowing (stats + join-back) —
-    // see exactSubstringDedup's wins note
-    val wins = materialize(base
-      .select(col(idCol), posexplode(winArr).as(Seq("__p0", "win_h")))
-      .select(col(idCol), (col("__p0") + 1).cast("int").as("pos"),
-        col("win_h")))
-
     // pass 1: duplicated seed windows. firstOnly=true reproduces the
     // removal policy's view (globally-first occurrence not a dup);
     // false is the audit view (EVERY occurrence of a duplicated
     // window is part of a duplicated span, including the original).
-    // Same skew-safe shape as [[exactSubstringDedup]]'s removal
-    // election: one map-side-partial aggregate per hash, joined back
-    // (AQE-splittable) instead of hash-keyed window functions that
-    // would funnel a viral window's occurrences through one task.
-    val stats = wins.groupBy(col("win_h"))
-      .agg(count(lit(1)).as("__cnt"),
-        min(struct(col(idCol), col("pos"))).as("__first"))
-    val joined = wins.join(stats, Seq("win_h"))
+    // wins forks to the stats and the join-back, as in
+    // exactSubstringDedup; base has one consumer, so it is not
+    // materialized.
+    val joined = withWindowStats(
+      materialize(windows(tokenized(docs, idCol, textCol), idCol, l)), idCol)
     val seeds = (if (firstOnly)
         joined.filter(col("__cnt") > 1 &&
           struct(col(idCol), col("pos")) =!= col("__first"))
@@ -1220,12 +1119,50 @@ object Dedup {
         col("n_windows"))
   }
 
-  /** DuckDB twin of [[duplicateSpans]] over `table` — the same
-    * seed-then-islands derivation in windowed SQL. */
-  def duplicateSpansOracleSql(table: String, idCol: String,
-      textCol: String, l: Int = 8, firstOnly: Boolean = false): String = {
-    val seedPred = if (firstOnly) "cnt > 1 AND rn > 1" else "cnt > 1"
-    s"""WITH base AS (
+  /** (id, __tk, __n): each document's whitespace tokens and their
+    * count — the base of the ExactSubstr window pipeline. */
+  private def tokenized(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol), wsTokens(col(textCol)).as("__tk"))
+      .withColumn("__n", size(col("__tk")).cast("int"))
+
+  /** (id, pos, win_h): the 60-bit hash of every `l`-token window of a
+    * [[tokenized]] base at its 1-based start, hashed in-row.
+    * sequence(1, 0) would count DOWNWARD, so short docs get an
+    * explicit empty array. */
+  private def windows(base: DataFrame, idCol: String, l: Int): DataFrame = {
+    val winArr = when(col("__n") >= l,
+        transform(sequence(lit(1), col("__n") - (l - 1)),
+          i => md5Hash60(array_join(slice(col("__tk"), i, lit(l)), " "))))
+      .otherwise(array().cast("array<bigint>"))
+    base.select(col(idCol), posexplode(winArr).as(Seq("__p0", "win_h")))
+      .select(col(idCol), (col("__p0") + 1).cast("int").as("pos"),
+        col("win_h"))
+  }
+
+  /** [[windows]] joined with its per-hash occurrence count `__cnt` and
+    * globally first occurrence `__first` = min (id, pos). ONE
+    * map-side-partial aggregate joined back on win_h — NOT a pair of
+    * hash-keyed window functions: a viral L-token window (license
+    * boilerplate in hundreds of millions of docs) would pull every
+    * occurrence through a single WindowExec task, while the aggregate
+    * reduces it map-side and the join-back is AQE-skew-splittable (the
+    * class doc's "AQE handles the skew" holds for joins; it never held
+    * for windows). */
+  private def withWindowStats(wins: DataFrame, idCol: String): DataFrame = {
+    val stats = wins.groupBy(col("win_h"))
+      .agg(count(lit(1)).as("__cnt"),
+        min(struct(col(idCol), col("pos"))).as("__first"))
+    wins.join(stats, Seq("win_h"))
+  }
+
+  /** DuckDB twin of [[tokenized]] → [[windows]] → [[withWindowStats]]
+    * over `table`: CTEs `base(id, tk, n)`, `wins(id, pos, win_h)` and
+    * `marked(id, pos, cnt, rn)`, where rn > 1 marks an occurrence past
+    * the globally first. */
+  private def windowSqlCtes(table: String, idCol: String, textCol: String,
+      l: Int): String =
+    s"""base AS (
        |  SELECT $idCol, string_split_regex(trim($textCol), '\\s+') AS tk,
        |    len(string_split_regex(trim($textCol), '\\s+')) AS n
        |  FROM $table),
@@ -1240,18 +1177,23 @@ object Dedup {
        |    count(*) OVER (PARTITION BY win_h) AS cnt,
        |    row_number() OVER (PARTITION BY win_h
        |                       ORDER BY $idCol, pos) AS rn
-       |  FROM wins),
+       |  FROM wins)""".stripMargin
+
+  /** DuckDB twin of [[duplicateSpans]] over `table` — the same
+    * seed-then-islands derivation in windowed SQL. */
+  def duplicateSpansOracleSql(table: String, idCol: String,
+      textCol: String, l: Int = 8, firstOnly: Boolean = false): String = {
+    val seedPred = if (firstOnly) "cnt > 1 AND rn > 1" else "cnt > 1"
+    s"""WITH ${windowSqlCtes(table, idCol, textCol, l)},
        |seeds AS (SELECT $idCol, pos FROM marked WHERE $seedPred),
        |flagged AS (
        |  SELECT $idCol, pos,
-       |    CASE WHEN max(pos + ${l - 1}) OVER (PARTITION BY $idCol
-       |        ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND
-       |        1 PRECEDING) IS NULL
-       |      OR pos > max(pos + ${l - 1}) OVER (PARTITION BY $idCol
-       |        ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND
-       |        1 PRECEDING) + 1
+       |    CASE WHEN prev_end IS NULL OR pos > prev_end + 1
        |      THEN 1 ELSE 0 END AS is_new
-       |  FROM seeds),
+       |  FROM (SELECT $idCol, pos, max(pos + ${l - 1}) OVER (
+       |    PARTITION BY $idCol ORDER BY pos
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+       |    FROM seeds)),
        |islands AS (
        |  SELECT $idCol, pos,
        |    sum(is_new) OVER (PARTITION BY $idCol ORDER BY pos
@@ -1271,22 +1213,7 @@ object Dedup {
   /** DuckDB twin of [[exactSubstringDedup]] over `table`. */
   def exactSubstringOracleSql(table: String, idCol: String,
       textCol: String, l: Int = 8): String =
-    s"""WITH base AS (
-       |  SELECT $idCol, string_split_regex(trim($textCol), '\\s+') AS tk,
-       |    len(string_split_regex(trim($textCol), '\\s+')) AS n
-       |  FROM $table),
-       |wins AS (
-       |  SELECT $idCol, s AS pos,
-       |    ('0x' || substr(md5(array_to_string(
-       |       list_slice(tk, s, s + ${l - 1}), ' ')), 1, 15))::BIGINT AS win_h
-       |  FROM (SELECT $idCol, tk, unnest(range(1, n - ${l - 1} + 1)) AS s
-       |        FROM base WHERE n >= $l)),
-       |marked AS (
-       |  SELECT $idCol, pos,
-       |    count(*) OVER (PARTITION BY win_h) AS cnt,
-       |    row_number() OVER (PARTITION BY win_h
-       |                       ORDER BY $idCol, pos) AS rn
-       |  FROM wins),
+    s"""WITH ${windowSqlCtes(table, idCol, textCol, l)},
        |cov AS (
        |  SELECT $idCol,
        |    list_distinct(flatten(list(range(pos, pos + $l)))) AS covered
@@ -1320,12 +1247,7 @@ object Dedup {
     * tokenize+shingle pass over the corpus text runs twice. */
   def prefixFilterSets(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int): DataFrame = {
-    val sh = docs
-      .select(col(idCol), wsTokens(col(textCol)).as("__tk"),
-        trim(col(textCol)).as("__t"))
-      .select(col(idCol), explode(
-        wordShinglesFromTokens(col("__tk"), col("__t"), shingleN))
-        .as("g"))
+    val sh = shingles(docs, idCol, textCol, shingleN)
     val freq = sh.groupBy(col("g")).agg(count(lit(1)).as("f"))
     sh.join(freq, "g")
       .groupBy(col(idCol))
@@ -1359,10 +1281,8 @@ object Dedup {
       (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast("int")
     val pref = sets.select(col(idCol),
       explode(slice(col("toks"), lit(1), prefLen)).as("p"))
-    pref.as("a").join(pref.as("b"),
-        col("a.p") === col("b.p") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+    bucketSelfJoin(pref, Seq("p"), idCol)
+      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
       .distinct()
   }
 

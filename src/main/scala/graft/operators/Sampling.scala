@@ -204,10 +204,14 @@ object Sampling {
     import graft.functions.TextFunctions.{adjacentBigrams, wsTokens}
     val id = col(idCol)
 
+    // the predicate is evaluated in the same projection that adds the
+    // token array, so it reads the SOURCE columns — a source column
+    // named __tk is not replaced before the predicate sees it
     def bucketed(df: DataFrame): DataFrame = df
-      .withColumn("__tk", wsTokens(col(textCol)))
-      .filter(size(col("__tk")) >= 1)
       .select(id, expr(targetPredicate).as("__tgt"),
+        wsTokens(col(textCol)).as("__tk"))
+      .filter(size(col("__tk")) >= 1)
+      .select(id, col("__tgt"),
         explode(concat(col("__tk"), adjacentBigrams(col("__tk"))))
           .as("feat"))
       .select(id, col("__tgt"),

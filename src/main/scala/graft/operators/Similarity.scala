@@ -586,24 +586,19 @@ object Similarity {
     val c = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"),
       l2Norm(col(vecCol)).as("__n"),
       cellExpr(col(vecCol), centroids).as("cell"))
-    // Two-phase sharded cap (the perCellHashKeep shape, same id
-    // ordering as the one-phase window it replaces): the cap binds
-    // exactly when ONE cell holds most of the corpus, and a plain
-    // cell-keyed window would pull that whole cell through a single
-    // task. Phase 1 ranks within (cell, id-hash shard) and keeps
-    // ≤ maxCell per shard — lossless: a row with maxCell lower-id
-    // rows in its OWN shard cannot be in the cell's overall lowest
-    // maxCell — phase 2 ranks the ≤ shards×maxCell survivors.
-    // MERGE-hinted for the same reason as minHashNearDupPairs' band
-    // self-join (see its scaladoc): left to the planner, the capped
-    // side broadcasts at gate SF and the whole cell pipeline (scan,
-    // ArgmaxDot cell assignment, two-phase cap) is planned once per
-    // side with no exchange reuse; as an SMJ both sides are the
-    // identical (cell) exchange phase 2 establishes and it computes
-    // once. At corpus scale SMJ is the planner's own pick.
-    val capped = Caps.twoPhaseRank(c, Seq(col("cell")), Seq(col("__id")),
-      graft.functions.HashFunctions.md5Hash60b(col("__id").cast("string")),
-      maxCell).hint("merge")
+    // Each cell capped at its maxCell lowest ids by Caps.capBuckets —
+    // the shared two-phase cap of the MinHash/SimHash band buckets: the
+    // cap binds exactly when ONE cell holds most of the corpus, and a
+    // plain cell-keyed window would pull that whole cell through a
+    // single task. MERGE-hinted by the rule Dedup's bucket self-joins
+    // follow (the MERGE-hint paragraph of Dedup.minHashNearDupPairs'
+    // scaladoc): left to the planner, the capped side broadcasts at
+    // gate SF and the whole cell pipeline (scan, ArgmaxDot cell
+    // assignment, two-phase cap) is planned once per side with no
+    // exchange reuse; as an SMJ both sides are the identical (cell)
+    // exchange phase 2 establishes and it computes once. At corpus
+    // scale SMJ is the planner's own pick.
+    val capped = Caps.capBuckets(c, Seq("cell"), "__id", maxCell).hint("merge")
     val lo = capped.select(col("cell"), col("__id").as("id_a"),
       col("__v").as("va"), col("__n").as("na"))
     val hi = capped.select(col("cell"), col("__id").as("id_b"),
@@ -622,17 +617,18 @@ object Similarity {
   }
 
   /** Per-cell membership counts for every cell that [[semanticDedup]]
-    * would cap at `maxCell` — the overflow reporter that keeps the cap
-    * from being a silent truncation. Output: (cell, n_rows), only
+    * would cap at `maxCell` — the overflow reporter
+    * (`Caps.bucketOverflow`) that keeps the cap from being a silent
+    * truncation. Output: (cell, n_rows), only
     * cells with n_rows > maxCell. Same centroid training as the dedup
     * itself, so the reported cells are exactly the capped ones. */
   def semanticCellOverflow(corpus: DataFrame, idCol: String,
       vecCol: String, nCells: Int, maxCell: Int = 1000,
       iters: Int = 2): DataFrame = {
     val centroids = ivfTrain(corpus, idCol, vecCol, nCells, iters)
-    corpus.select(cellExpr(col(vecCol), centroids).as("cell"))
-      .groupBy(col("cell")).agg(count(lit(1)).as("n_rows"))
-      .filter(col("n_rows") > maxCell)
+    Caps.bucketOverflow(
+      corpus.select(cellExpr(col(vecCol), centroids).as("cell")),
+      Seq("cell"), maxCell, "n_rows")
   }
 
   /** DuckDB oracle mirroring [[semanticDedup]], given the trained
@@ -646,13 +642,10 @@ object Similarity {
        |c AS (SELECT id, v, ${normSql("v")} AS n,
        |             ${cellSqlExpr("v", centroids)} AS cell
        |      FROM e),
-       |k AS (SELECT *, row_number() OVER
-       |        (PARTITION BY cell ORDER BY id) AS rn
-       |      FROM c),
+       |k AS (${Caps.cappedSql("c", Seq("cell"), "id", maxCell)}),
        |p AS (SELECT y.id AS id,
        |        round(${cosSql("x.v", "y.v", "x.n", "y.n")}, 6) AS cos_r
-       |      FROM k x JOIN k y ON x.cell = y.cell AND x.id < y.id
-       |      WHERE x.rn <= $maxCell AND y.rn <= $maxCell),
+       |      FROM k x JOIN k y ON x.cell = y.cell AND x.id < y.id),
        |m AS (SELECT id, max(cos_r) AS mc FROM p GROUP BY id)
        |SELECT c.id AS $idCol, c.cell,
        |  coalesce(m.mc, -1.0) AS max_lower_cos_r,

@@ -11,7 +11,7 @@ import graft.catalog.Warehouse
 import graft.functions.SketchFunctions
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
-import graft.operators.{Corpus, Dedup, LanguageModel, Layout, Relational, Retrieval, Sampling, Similarity, TextAnalysis}
+import graft.operators.{Caps, Corpus, Dedup, LanguageModel, Layout, Relational, Retrieval, Sampling, Similarity, TextAnalysis}
 import graft.sources.Tables
 
 /** exact/near-dup dedup, ANN serving, text analysis, temporal joins, corpus hygiene, packing/mixing (x1-x34 era) — a CONTIGUOUS, ORDER-PRESERVING slice of the
@@ -113,8 +113,7 @@ private[queries] object ExtensionDedupAnnQueries {
               |  FROM cand c
               |  JOIN q_sigs sq ON sq.id = c.qid
               |  JOIN h_sigs sh ON sh.id = c.hid
-              |  WHERE CAST(${Dedup.sigMatchSql("sq", "sh", x1dParams)}
-              |          AS DOUBLE) / ${x1dParams.k} >= $x1dMinEst)
+              |  WHERE ${Dedup.estSql("sq", "sh", x1dParams)} >= $x1dMinEst)
               |SELECT d.doc_id FROM batch d
               |WHERE NOT EXISTS (SELECT 1 FROM hits WHERE hits.id = md5(d.text))
               |ORDER BY doc_id""".stripMargin)),
@@ -167,10 +166,8 @@ private[queries] object ExtensionDedupAnnQueries {
         val p = Dedup.MinHashParams()
         def capped(side: String): String =
           s"""${side}_capped AS (
-             |  SELECT id, band, band_key FROM (
-             |    SELECT id, band, band_key, row_number() OVER
-             |      (PARTITION BY band, band_key ORDER BY id) AS rn
-             |    FROM ${side}_bands) WHERE rn <= 1000)""".stripMargin
+             |  ${Caps.cappedSql(s"${side}_bands", Seq("band", "band_key"),
+                    "id", 1000)})""".stripMargin
         s"""WITH a_src AS (
            |  SELECT min(doc_id) AS id, text FROM documents
            |  WHERE source = 'src0' GROUP BY text),
@@ -186,8 +183,7 @@ private[queries] object ExtensionDedupAnnQueries {
            |  FROM a_capped x JOIN b_capped y USING (band, band_key)),
            |est AS (
            |  SELECT c.id_a, c.id_b,
-           |    CAST(${Dedup.sigMatchSql("sa", "sb", p)} AS DOUBLE)
-           |      / ${p.k} AS est_jaccard
+           |    ${Dedup.estSql("sa", "sb", p)} AS est_jaccard
            |  FROM cand c
            |  JOIN a_sigs sa ON sa.id = c.id_a
            |  JOIN b_sigs sb ON sb.id = c.id_b)

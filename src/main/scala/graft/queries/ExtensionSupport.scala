@@ -399,14 +399,7 @@ private[queries] object ExtensionSupport {
        |mh AS (SELECT id_a, id_b FROM (
        |  ${Dedup.minHashOracleSql("kept", "doc_id", "text")
               .replace("\n", "\n  ")})),
-       |edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM mh
-       |  UNION SELECT id_b, id_a FROM mh),
-       |reach(u, v) AS (
-       |  SELECT u, v FROM edges
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-       |labels AS (SELECT u, min(v) AS mv FROM reach GROUP BY u)""".stripMargin
+       |${Dedup.componentsSqlCtes("mh")}""".stripMargin
 
   /** x2b's candidate-generation MinHash: 6 bands of 2 rows — collision
     * probability j², deliberately permissive so the adjudicator (not
@@ -430,24 +423,14 @@ private[queries] object ExtensionSupport {
     ("a", "n"), ("s", "c"), ("sc", "an"), ("e", "r"), ("o", "r"))
 
   /** x27 twins: CTE chain hashing the distinct word-trigram shingles of
-    * `src(doc_id, text)` — the DuckDB mirror of Dedup.gramHashes.
-    * Emits `<a>_toks`, `<a>_grams`, `<a>_hashes`; reference the last
-    * (doc_id, gram_h). */
-  def decontamGramCtes(src: String, a: String, n: Int = 3): String = {
-    val joined = (0 until n).map(k => s"tk[i + $k]").mkString(" || ' ' || ")
-    s"""${a}_toks AS (
-       |  SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS tk
-       |  FROM $src),
-       |${a}_grams AS (
-       |  SELECT DISTINCT doc_id, unnest(
-       |    CASE WHEN len(tk) >= $n THEN
-       |      list_transform(range(1, len(tk) - ${n - 1} + 1), i -> $joined)
-       |    ELSE [trim(text)] END) AS g
-       |  FROM ${a}_toks),
+    * `src(doc_id, text)` — the DuckDB mirror of Dedup.gramHashes
+    * ([[Dedup.gramsSqlCtes]] plus the hash). Emits `<a>_grams` and
+    * `<a>_hashes`; reference the last (doc_id, gram_h). */
+  def decontamGramCtes(src: String, a: String, n: Int = 3): String =
+    s"""${Dedup.gramsSqlCtes(src, a, "doc_id", "text", n)},
        |${a}_hashes AS (
        |  SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::BIGINT AS gram_h
        |  FROM ${a}_grams)""".stripMargin
-  }
 
   /** Near-dup cluster labels (exact-dup + MinHash-LSH pair edges ->
     * connected components, min-id canonical label per doc) — shared by
@@ -481,14 +464,7 @@ private[queries] object ExtensionSupport {
        |alledges AS (
        |  SELECT id_a, id_b FROM exact_e
        |  UNION ALL SELECT id_a, id_b FROM mh),
-       |edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM alledges
-       |  UNION SELECT id_b, id_a FROM alledges),
-       |reach(u, v) AS (
-       |  SELECT u, v FROM edges
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-       |labels AS (SELECT u, min(v) AS mv FROM reach GROUP BY u)""".stripMargin
+       |${Dedup.componentsSqlCtes("alledges")}""".stripMargin
 
   val clusterSelect: String =
     """SELECT d.doc_id,

@@ -469,4 +469,46 @@ class DedupSpec extends SparkSpec {
       assert(cands.size < 60 * 59 / 2, s"t=$t: candidate set degenerate")
     }
   }
+
+  test("the shared capped-bucket skeleton ignores physical layout: 1 and " +
+      "64 shuffle partitions (AQE off) return identical rows for every " +
+      "dedup path, with the bucket cap binding") {
+    // ids 1-8 tokenize identically (whitespace variants survive the
+    // exact-dedup prefilter) -> one hot bucket per band; 20-23 share
+    // token spans for the ExactSubstr window paths
+    val hot = (1L to 8L).map(i => (i, "same tokens here" + (" " * i.toInt)))
+    val spans = Seq(
+      (20L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (21L, "one two alpha beta gamma delta epsilon three four five"),
+      (22L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+      (23L, "six seven eight nine ten one two alpha beta gamma"))
+    val fixture = (hot ++ spans).toDF("doc_id", "text")
+    val (a, b) = (fixture.filter($"doc_id" % 2 === 0),
+      fixture.filter($"doc_id" % 2 === 1))
+    val sp = Dedup.SimHashParams(maxBucket = 3)
+    assert(Dedup.minHashBucketOverflow(fixture, "doc_id", "text",
+      maxBucket = 3).count() > 0)
+    assert(Dedup.simHashBucketOverflow(fixture, "doc_id", "text", sp)
+      .count() > 0)
+    def runAll(): Seq[Seq[String]] = Seq(
+      Dedup.minHashNearDupPairs(fixture, "doc_id", "text", maxBucket = 3),
+      Dedup.lshCandidatePairs(fixture, "doc_id", "text", maxBucket = 3),
+      Dedup.crossCorpusNearDupPairs(a, b, "doc_id", "text", maxBucket = 3),
+      Dedup.simHashNearDupPairs(fixture, "doc_id", "text", sp),
+      Dedup.exactSubstringDedup(fixture, "doc_id", "text", l = 4),
+      Dedup.duplicateSpans(fixture, "doc_id", "text", l = 4)
+    ).map(_.collect().toSeq.map(_.toString).sorted)
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    def at(partitions: Int): Seq[Seq[String]] = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toLong)
+      spark.conf.set("spark.sql.adaptive.enabled", false)
+      runAll()
+    }
+    try {
+      val (one, many) = (at(1), at(64))
+      assert(one.forall(_.nonEmpty), s"every path must return rows: $one")
+      assert(one == many)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }

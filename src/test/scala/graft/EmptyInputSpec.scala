@@ -24,10 +24,21 @@ class EmptyInputSpec extends SparkSpec {
 
   test("minhash near-dup pairs on empty input is empty, not an error") {
     assert(Dedup.minHashNearDupPairs(emptyDocs, "doc_id", "text").count() == 0)
+    // the shared capped-bucket stage behind the candidate, cross-corpus
+    // and overflow paths
+    assert(Dedup.lshCandidatePairs(emptyDocs, "doc_id", "text").count() == 0)
+    assert(Dedup.minHashBucketOverflow(emptyDocs, "doc_id", "text",
+      maxBucket = 0).count() == 0)
+    val docs = Seq((1L, "one two three four")).toDF("doc_id", "text")
+    for ((a, b) <- Seq((emptyDocs, docs), (docs, emptyDocs)))
+      assert(Dedup.crossCorpusNearDupPairs(a, b, "doc_id", "text")
+        .count() == 0)
   }
 
   test("simhash on empty input is empty") {
     assert(Dedup.simHash64(emptyDocs, "doc_id", "text").count() == 0)
+    assert(Dedup.simHashBucketOverflow(emptyDocs, "doc_id", "text",
+      Dedup.SimHashParams(maxBucket = 0)).count() == 0)
   }
 
   test("brute-force ANN with empty queries or corpus is empty") {
@@ -80,6 +91,10 @@ class EmptyInputSpec extends SparkSpec {
     val inv = Dedup.signatureInventory(emptyDocs, "doc_id", "text")
     assert(Dedup.incrementalNearAdjudicated(emptyDocs, "doc_id", "text", inv)
       .count() == 0)
+    // ExactSubstr window pipeline: removal and span report
+    assert(Dedup.exactSubstringDedup(emptyDocs, "doc_id", "text")
+      .count() == 0)
+    assert(Dedup.duplicateSpans(emptyDocs, "doc_id", "text").count() == 0)
     // recall over empty frames
     val noPairs = Seq.empty[(Long, Long)].toDF("qid", "did")
     assert(Similarity.recallAtK(noPairs, noPairs).count() == 0)

@@ -256,4 +256,19 @@ class SamplingSpec extends SparkSpec {
     val keys = all.select($"gkey_r").as[Double].collect()
     assert(keys.zip(keys.tail).forall { case (x, y) => x >= y })
   }
+
+  test("dsirSelect reads the target predicate from the source columns: " +
+      "a column named __tk selects as it does under another name") {
+    val rows = (1L to 40L).map { i =>
+      val tgt = i % 4 == 0
+      (i, if (tgt) "tgt" else "raw",
+        s"word$i common text ${if (tgt) "alpha beta" else "gamma delta"}")
+    }
+    def pick(cls: String): Seq[org.apache.spark.sql.Row] =
+      Sampling.dsirSelect(rows.toDF("doc_id", cls, "text"), "doc_id", "text",
+        s"$cls = 'tgt'", buckets = 64, k = 10).collect().toSeq
+    val named = pick("lab")
+    assert(named.size == 10)
+    assert(pick("__tk") == named)
+  }
 }

@@ -198,7 +198,11 @@ class SimilaritySpec extends SparkSpec {
       Similarity.adcTopKWith(emb, q, "vec_id", "embedding", 5, resBooks,
         cents, nProbes = 2, residual = true),
       Similarity.minePairsWith(emb, q, "vec_id", "embedding", cents,
-        nProbes = 2, posBand = 0.10, negBand = 0.0)
+        nProbes = 2, posBand = 0.10, negBand = 0.0),
+      // the capped cell self-join shared with the dedup family; a cap
+      // of 40 binds on this corpus's 4 cells
+      Similarity.semanticDedup(emb, "vec_id", "embedding", nCells = 4,
+        tau = 0.9, maxCell = 40)
     ).map(_.collect().toSeq.map(_.toString).sorted)
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     val saved = keys.map(k => k -> spark.conf.get(k))
