@@ -2,10 +2,15 @@ package graft.catalog
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Relational
 
@@ -23,8 +28,12 @@ import graft.operators.Relational
   *  - schema-doc export with PK/FK classification
   *    (build_db.md:1444-1461 → docs/schema.csv).
   *
+  * A validated load stores the table once (persisted `MEMORY_AND_DISK`),
+  * so its checks, its children's FK checks, export and user SQL all read
+  * that one copy instead of re-running the CSV → transform lineage.
   * Catalog calls (`spark.catalog.*`) never launch jobs; preview runs
-  * one CollectLimitExec job; export runs one write job per table.
+  * one CollectLimitExec job; export runs one write job per table over
+  * the stored copy; import infers no schema, so it launches no job.
   */
 object Warehouse {
 
@@ -39,33 +48,84 @@ object Warehouse {
   private val registry =
     scala.collection.concurrent.TrieMap.empty[String, TableMeta]
 
+  /** The frames [[load]] persisted itself, by table name. A frame the
+    * caller had already persisted is not here and is never unpersisted. */
+  private val stored =
+    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+
+  private def unstore(name: String): Unit =
+    stored.remove(name).foreach(_.unpersist(blocking = true))
+
+  /** The session [[load]] persists through, kept with the session and
+    * confs it was made from. The cache manager would otherwise clone the
+    * session on every persist, and each pool thread started while a
+    * stored plan runs keeps its clone alive (≈0.75 MiB each). */
+  private var caching: Option[(SparkSession, Map[String, String], SparkSession)] =
+    None
+
+  private def cachingSession(spark: SparkSession): SparkSession = synchronized {
+    val confs = spark.conf.getAll
+    caching match {
+      case Some((base, c, s)) if (base eq spark) && c == confs => s
+      case _ =>
+        val s = GraftBridge.cachingSession(spark)
+        caching = Some((spark, confs, s))
+        s
+    }
+  }
+
   def meta(name: String): Option[TableMeta] = registry.get(name)
 
   /** Register a frame as a named table with constraint metadata and
     * validate the constraints — the Spark form of DuckDB's constrained
     * `INSERT INTO t SELECT * FROM ldf`. Returns violations (empty =
-    * the load would have succeeded in the reference engine). */
+    * the load would have succeeded in the reference engine).
+    *
+    * With `validate`, the table is stored: the frame is persisted
+    * (`MEMORY_AND_DISK`) unless the caller already persisted it, and the
+    * view reads that copy — as do the checks, the FK checks of tables
+    * loaded later (the cache manager also substitutes it inside their
+    * build lineages), [[exportDatabase]] and user SQL. Warehouse owns
+    * what it persisted: re-registering the name (a later `load`, or
+    * [[importDatabase]], whose unvalidated views stay lazy) drops the
+    * previous copy before any job runs, and [[clear]] drops them all.
+    * The PK-duplicate count and every FK-orphan count run as one SQL
+    * execution; a table with no PK and no FK launches no job. */
   def load(spark: SparkSession, df: DataFrame, m: TableMeta,
       validate: Boolean = true): Seq[ConstraintViolation] = {
+    unstore(m.name)
+    if (validate && df.storageLevel == StorageLevel.NONE)
+      stored.put(m.name, GraftBridge.ofRows(cachingSession(spark),
+        df.queryExecution.analyzed).persist(StorageLevel.MEMORY_AND_DISK))
     df.createOrReplaceTempView(m.name)
     registry.put(m.name, m)
     refreshInformationSchema(spark)
-    if (!validate) Nil
+    if (validate) violations(spark, df, m) else Nil
+  }
+
+  /** The PK-duplicate count (PK first) and the FK-orphan counts (as
+    * declared) of `table`, unioned into one row per check and collected
+    * once, so AQE submits the independent stages together. */
+  private def violations(spark: SparkSession, table: DataFrame,
+      m: TableMeta): Seq[ConstraintViolation] = {
+    val pk =
+      if (m.pk.isEmpty) Nil
+      else Seq(("PRIMARY KEY", m.pk.mkString(","),
+        Relational.pkViolations(table, m.pk)))
+    val fks = m.fks.map(fk => ("FOREIGN KEY",
+      s"${fk.cols.mkString(",")} -> ${fk.refTable}",
+      Relational.fkOrphans(table, spark.table(fk.refTable),
+        fk.cols.zip(fk.refCols))))
+    val checks = pk ++ fks
+    if (checks.isEmpty) Nil
     else {
-      val pkViol =
-        if (m.pk.isEmpty) Nil
-        else {
-          val n = Relational.pkViolations(df, m.pk).count()
-          if (n > 0) Seq(ConstraintViolation(m.name, "PRIMARY KEY",
-            m.pk.mkString(","), n)) else Nil
-        }
-      val fkViol = m.fks.flatMap { fk =>
-        val parent = spark.table(fk.refTable)
-        val n = Relational.fkOrphans(df, parent, fk.cols.zip(fk.refCols)).count()
-        if (n > 0) Seq(ConstraintViolation(m.name, "FOREIGN KEY",
-          s"${fk.cols.mkString(",")} -> ${fk.refTable}", n)) else Nil
+      val counts = checks.zipWithIndex.map { case ((_, _, rows), i) =>
+        rows.agg(lit(i).as("i"), count(lit(1)).as("n"))
+      }.reduce(_ union _).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      checks.zipWithIndex.collect {
+        case ((kind, detail, _), i) if counts(i) > 0 =>
+          ConstraintViolation(m.name, kind, detail, counts(i))
       }
-      pkViol ++ fkViol
     }
   }
 
@@ -157,7 +217,10 @@ object Warehouse {
   /** Round-trip of [[exportDatabase]]: read `<dir>/<name>.parquet` for
     * every table declared in `<dir>/schema.sql`, re-register it with
     * the PK/FK metadata parsed back out of the generated DDL, and
-    * refresh the information_schema view. The reloadable-export loop
+    * refresh the information_schema view. Each file is read with the
+    * column list of its DDL block (checked against the file footers,
+    * no inference job), so a missing or retyped column fails the
+    * import. The reloadable-export loop
     * the reference gets from DuckDB's `EXPORT DATABASE` / `IMPORT
     * DATABASE`. Returns the imported table names. */
   def importDatabase(spark: SparkSession, dir: String,
@@ -172,10 +235,47 @@ object Warehouse {
       val fks = lines.collect { case fkRe(cols, ref, refCols) =>
         FkEdge(cols.split(", ").toSeq, ref, refCols.split(", ").toSeq)
       }.toSeq
-      load(spark, spark.read.parquet(s"$dir/$name.parquet"),
+      val schema = StructType.fromDDL(lines
+        .filterNot(l => l.startsWith("PRIMARY KEY (") || l.startsWith("FOREIGN KEY ("))
+        .map { l =>
+          val (name, tpe) = l.stripSuffix(" PRIMARY KEY").splitAt(l.indexOf(' '))
+          s"`$name`$tpe"
+        }.mkString(", "))
+      val path = s"$dir/$name.parquet"
+      requireFileSchema(spark, path, schema)
+      load(spark, spark.read.schema(schema).parquet(path),
         TableMeta(name, pk, fks), validate)
       name
     }.toSeq
+  }
+
+  /** Fail unless every parquet file under `path` holds each `schema`
+    * column with the same type: a reader given a schema would read a
+    * missing column as NULLs. Reads the footers on the driver, so it
+    * launches no job. */
+  private def requireFileSchema(spark: SparkSession, path: String,
+      schema: StructType): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    val dir = new HPath(path)
+    val files = dir.getFileSystem(conf).listStatus(dir).filter { st =>
+      val n = st.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+    }
+    require(files.nonEmpty, s"no parquet file under $path")
+    files.foreach { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val found =
+        try ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, reader.getFooter), converter)
+        finally reader.close()
+      val types = found.fields.map(f => f.name -> f.dataType.sql).toMap
+      schema.fields.foreach { f =>
+        require(types.get(f.name).contains(f.dataType.sql),
+          s"${st.getPath}: schema.sql declares ${f.name} ${f.dataType.sql}, " +
+            s"the file has ${types.get(f.name).fold("no such column")(f.name + " " + _)}")
+      }
+    }
   }
 
   /** Bucketed persistent table: pre-shuffles ONCE at write time so
@@ -406,6 +506,10 @@ object Warehouse {
     env.crossJoin(broadcast(approxRow)).select(outCols: _*)
   }
 
-  /** Reset registry (test isolation). */
-  def clear(): Unit = registry.clear()
+  /** Reset the registry and drop every frame [[load]] stored (test and
+    * pass isolation). */
+  def clear(): Unit = {
+    registry.clear()
+    stored.keys.toSeq.foreach(unstore)
+  }
 }

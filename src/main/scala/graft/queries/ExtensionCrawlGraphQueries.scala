@@ -1734,9 +1734,9 @@ private[queries] object ExtensionCrawlGraphQueries {
         val wet = scratch(Warc.readWet(s, path)
           .select(col("uri"), col("text"), col("frame_ok"))
           .observe(wetObs, count(lit(1)).as("n"),
-            sum(when(col("frame_ok"), 1L).otherwise(0L)).as("ok"),
-            sum(regexp_count(col("text"), lit("[\u200B\u00AD\uFEFF]")))
-              .cast("long").as("inv")), "x90_wet")
+            sum0(when(col("frame_ok"), 1L).otherwise(0L)).as("ok"),
+            sum0(regexp_count(col("text"), lit("[\u200B\u00AD\uFEFF]")))
+              .as("inv")), "x90_wet")
         val Seq(wetN, wetOk, wetInv) =
           observedLongs(wetObs, "n", "ok", "inv")
         require(wetN == nDocs && wetOk == nDocs,
@@ -1750,8 +1750,8 @@ private[queries] object ExtensionCrawlGraphQueries {
             .cast("long").as("doc_id"),
           Corpus.scrubInvisible(col("text")).as("text"))
           .observe(scrubObs,
-            sum(regexp_count(col("text"), lit("[\u200B\u00AD\uFEFF]")))
-              .cast("long").as("inv")), "x90_scrub")
+            sum0(regexp_count(col("text"), lit("[\u200B\u00AD\uFEFF]")))
+              .as("inv")), "x90_scrub")
         val Seq(remInv) = observedLongs(scrubObs, "inv")
         require(remInv == 0L, s"scrub must remove every invisible: $remInv")
         // stage 3: corpus-wide paragraph dedup
@@ -1759,10 +1759,10 @@ private[queries] object ExtensionCrawlGraphQueries {
         val dedup = scratch(
           Corpus.paragraphDedup(scrubbed, "doc_id", "text")
             .observe(dObs, count(lit(1)).as("n"),
-              sum(when(col("text_dedup")
+              sum0(when(col("text_dedup")
                 .startsWith("Cookie Notice"), 1L).otherwise(0L)).as("ban"),
-              sum(col("n_kept")).as("kept"),
-              sum(col("n_paras")).as("paras")), "x90_dedup")
+              sum0(col("n_kept")).as("kept"),
+              sum0(col("n_paras")).as("paras")), "x90_dedup")
         val Seq(dN, dBan, dKept, dParas) =
           observedLongs(dObs, "n", "ban", "kept", "paras")
         require(dN == nDocs,
@@ -1788,17 +1788,20 @@ private[queries] object ExtensionCrawlGraphQueries {
             round(TextAnalysis.classifierMargin(col("text"), col("__tk")),
               6).as("margin_r"),
             size(col("__tk")).cast("long").as("n_tok"))
-          .observe(scoredObs,
-            sum(col("n_tok")).cast("long").as("tot")), "x90_scored")
+          .observe(scoredObs, sum0(col("n_tok")).as("tot")), "x90_scored")
         val Seq(totTok) = observedLongs(scoredObs, "tot")
         val budget = totTok / 2
         val selObs = new org.apache.spark.sql.Observation()
         val sel = scratch(Corpus.budgetSelect(scored, "doc_id",
           "margin_r", "n_tok", budget)
           .observe(selObs, count(lit(1)).as("n"),
-            sum(when(col("keep"), 1L).otherwise(0L)).as("kept"),
-            max(when(col("keep"), col("cum_tok"))).as("keptMax"),
-            min(when(!col("keep"), col("cum_tok"))).as("loserMin")),
+            sum0(when(col("keep"), 1L).otherwise(0L)).as("kept"),
+            // an empty side reads as its identity: no kept row sits
+            // past the budget, no loser sits inside it
+            coalesce(max(when(col("keep"), col("cum_tok"))),
+              lit(Long.MinValue)).as("keptMax"),
+            coalesce(min(when(!col("keep"), col("cum_tok"))),
+              lit(Long.MaxValue)).as("loserMin")),
           "x90_sel")
         val Seq(sN, sKept, sKeptMax, sLoserMin) =
           observedLongs(selObs, "n", "kept", "keptMax", "loserMin")

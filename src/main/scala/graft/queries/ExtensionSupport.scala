@@ -61,28 +61,26 @@ private[queries] object ExtensionSupport {
     * scalars ride the materialization job instead of each paying a
     * separate collect job over the scratch table (the x19/x73
     * observe pattern applied to entry audits; guide §1.2: fewer
-    * passes). A null metric (zero observed rows) reads as 0, matching
-    * `agg(...).collect()` semantics under the entries' REQUIREs.
-    *
-    * CAVEAT (r17 ADVICE): null→0 is only faithful for sum/count-style
-    * metrics, where an empty group genuinely IS 0. For max/min-style
-    * metrics (x90's keptMax/loserMin) null means "no matching rows"
-    * and 0 is a FABRICATED value — callers must guarantee a non-empty
-    * group before trusting such a metric (x90's sKept-range REQUIRE
-    * runs first and does exactly that; keep that ordering when
-    * reusing this helper). */
+    * passes). A NULL metric fails with its key: an aggregate that saw
+    * no rows has no value to read. Sums that can see no rows observe
+    * through [[sum0]]; a max/min states what its empty side means
+    * where it is observed (x90's keptMax/loserMin). */
   def observedLongs(obs: org.apache.spark.sql.Observation,
       keys: String*): Seq[Long] = {
     val m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
     require(m.nonEmpty,
       "observed audit metrics did not materialize with the scratch write")
-    keys.map(k => m(k) match {
-      case null => 0L
-      case v: java.lang.Long => v.longValue()
+    keys.map(k => m.get(k) match {
+      case Some(v: java.lang.Long) => v.longValue()
+      case Some(null) => throw new IllegalStateException(
+        s"audit metric $k is NULL: its aggregate saw no rows")
       case other => throw new IllegalStateException(
         s"audit metric $k is not a long: $other")
     })
   }
+
+  /** A LONG sum that reads 0 over no rows, for [[observedLongs]]. */
+  def sum0(c: Column): Column = coalesce(sum(c).cast("long"), lit(0L))
 
   /** One shutdown hook per app-scratch dir: deletes the dir at JVM
     * exit and logs its final size. Registered lazily on first use so

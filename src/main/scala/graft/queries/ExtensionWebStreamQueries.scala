@@ -80,7 +80,7 @@ private[queries] object ExtensionWebStreamQueries {
           .select(col("doc_id"),
             Web.htmlToText(col("html")).as("text_clean"),
             Web.extractLinks(col("html")).as("links"))
-          .observe(parsedObs, sum(when(
+          .observe(parsedObs, sum0(when(
             !col("text_clean").contains(sentinel) ||
               col("text_clean").contains("var x") ||
               col("text_clean").contains("color") ||
@@ -270,7 +270,7 @@ private[queries] object ExtensionWebStreamQueries {
           .select(col("doc_id"),
             Web.canonicalUrl(col("a.href")).as("target"),
             col("a.anchor").as("anchor"))
-          .observe(pairsObs, sum(when(col("anchor").contains("ghost") ||
+          .observe(pairsObs, sum0(when(col("anchor").contains("ghost") ||
             col("anchor").contains("js"), 1L).otherwise(0L)).as("leaked")),
           "x69_pairs")
         val Seq(leaked) = observedLongs(pairsObs, "leaked")

@@ -59,4 +59,19 @@ object GraftBridge {
       : DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `spark` if the cache manager would plan a persisted frame in it
+    * as is, else a clone with the configurations off that the cache
+    * manager turns off for every plan it stores (the rule of
+    * `CacheManager.getOrCloneSessionWithConfigsOff`). Persisting through
+    * one such session spares the cache manager its own clone per
+    * persist. */
+  def cachingSession(spark: SparkSession): SparkSession = {
+    import org.apache.spark.sql.internal.SQLConf
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val off = SQLConf.AUTO_BUCKETED_SCAN_ENABLED +:
+      (if (s.sessionState.conf.getConf(SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING)) Nil
+       else Seq(SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS))
+    org.apache.spark.sql.classic.SparkSession.getOrCloneSessionWithConfigsOff(s, off)
+  }
 }
