@@ -219,24 +219,18 @@ object Streams {
     * VALIDATED (a malformed export fails with an actionable message,
     * not a NumberFormatException mid-harness) and its activation is
     * LOGGED, because it silently changes every gate run's state sizing
-    * otherwise. `SPARK_GRAFT_STATE_PARTITIONS` is canonical (the
-    * SPARK_GRAFT_ prefix every other rehearsal knob uses);
-    * `GRAFT_STATE_PARTITIONS` stays accepted for the r9/r10 rehearsal
-    * scripts that exported it. */
-  private[graft] def statePartitionsOverride(): Option[Int] = {
-    val raw = sys.env.get("SPARK_GRAFT_STATE_PARTITIONS")
-      .map(("SPARK_GRAFT_STATE_PARTITIONS", _))
-      .orElse(sys.env.get("GRAFT_STATE_PARTITIONS")
-        .map(("GRAFT_STATE_PARTITIONS", _)))
-    raw.map { case (name, v) =>
+    * otherwise. The variable is `SPARK_GRAFT_STATE_PARTITIONS` (the
+    * SPARK_GRAFT_ prefix every other rehearsal knob uses). */
+  private[graft] def statePartitionsOverride(): Option[Int] =
+    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map { v =>
       val parsed = v.trim.toIntOption.filter(_ > 0).getOrElse(
         throw new IllegalArgumentException(
-          s"$name must be a positive integer, got '$v'"))
-      Console.err.println(
-        s"[graft] $name=$parsed overrides statePartitions for this run")
+          s"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, " +
+            s"got '$v'"))
+      Console.err.println(s"[graft] SPARK_GRAFT_STATE_PARTITIONS=$parsed " +
+        "overrides statePartitions for this run")
       parsed
     }
-  }
 
   /** Spark's bundled RocksDB state store provider — the scale-safe
     * alternative to the default heap-backed provider: state lives in

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.{
+  CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -295,5 +298,96 @@ class StreamsSpec extends SparkSpec {
     assert(finalRows >= 0L && finalRows <= 2L,
       s"terminal state must hold at most batch-2's lone row per side, " +
         s"got $finalRows")
+  }
+
+  test("streaming checkpoints rename files without forking readlink " +
+      "(the session's FileSystem-based checkpoint manager)") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val base = 1700000000L
+    val rows = Seq((1L, 101L, 0L), (1L, 102L, 300L), (1L, 103L, 1000L),
+        (2L, 201L, 50L), (2L, 202L, 60L))
+      .map { case (u, id, off) =>
+        (u, id, new java.sql.Timestamp((base + off) * 1000L)) }
+      .toDF("user_id", "event_id", "ts")
+    val expected = graft.operators.Temporal
+      .rangeJoinWithin(rows, "user_id", "event_id", "ts", 600)
+      .orderBy("id_a", "id_b").collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-spawn")
+    val src = dir.resolve("events").toString
+    rows.write.parquet(src)
+    val stream = spark.readStream.schema(rows.schema).parquet(src)
+
+    // jdk.ProcessStart is JVM-wide; the suites run one at a time, and
+    // the `true` launched inside the recording shows that it records
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val got = try {
+      val out = Streams.runAvailableNowToDir(spark,
+        Streams.streamingIntervalSelfJoin(stream, "user_id", "event_id",
+          "ts", delay = "1 hour", withinSec = 600),
+        "ckpt_spawn_test", statePartitions = Some(2))
+      new ProcessBuilder("true").start().waitFor()
+      out.orderBy("id_a", "id_b").collect().toSeq
+    } finally rec.stop()
+    val dump = dir.resolve("spawns.jfr")
+    rec.dump(dump)
+    rec.close()
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+      .asScala.filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command")).toSeq
+    assert(got.nonEmpty && got == expected)
+    assert(commands.contains("true"),
+      s"the recording missed the probe process: $commands")
+    val readlinks = commands.filter(_.startsWith("readlink"))
+    assert(readlinks.size == 0, "readlink processes forked by one " +
+      s"streaming run, e.g. ${readlinks.take(1).mkString}")
+    assert(CheckpointFileManager.create(new Path(dir.toString),
+        spark.sessionState.newHadoopConf())
+      .isInstanceOf[FileSystemBasedCheckpointFileManager])
+  }
+
+  test("the session's checkpoint manager writes atomically: no " +
+      "overwrite unless asked, and cancel leaves no file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-atomic")
+    val fm = CheckpointFileManager.create(new Path(dir.toString),
+      spark.sessionState.newHadoopConf())
+    val target = new Path(dir.toString, "0")
+    def write(text: String, overwrite: Boolean): Unit = {
+      val out = fm.createAtomic(target, overwriteIfPossible = overwrite)
+      out.write(text.getBytes("UTF-8"))
+      out.close()
+    }
+    def read(): String = new String(java.nio.file.Files.readAllBytes(
+      dir.resolve("0")), "UTF-8")
+    def names(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.list(dir).iterator().asScala
+        .map(_.getFileName.toString).toSet
+    }
+
+    // the offset and commit logs write each batch file this way: a
+    // second writer of the same batch must fail, not replace it
+    write("old", overwrite = false)
+    assert(read() == "old")
+    intercept[java.io.IOException](write("new", overwrite = false))
+    assert(read() == "old", "a refused rename must keep the old bytes")
+    // state stores write deltas and snapshots with overwriteIfPossible,
+    // which Spark defines as best effort and never an error. With
+    // Spark's Hive jars on the classpath `file:` resolves to Hive's
+    // ProxyLocalFileSystem, whose rename refuses an existing target,
+    // so the old version stays; either way the file is whole
+    write("newer", overwrite = true)
+    assert(Set("old", "newer").contains(read()),
+      s"the target must hold one whole version, got '${read()}'")
+
+    val cancelled = new Path(dir.toString, "1")
+    val out = fm.createAtomic(cancelled, overwriteIfPossible = false)
+    out.write("partial".getBytes("UTF-8"))
+    out.cancel()
+    assert(!fm.exists(cancelled))
+    assert(!names().exists(n => n == "1" || n.startsWith(".1")),
+      s"cancel left a file behind: ${names()}")
   }
 }
