@@ -50,7 +50,7 @@ object Corpus {
       .minHashNearDupPairs(exactKept, idCol, textCol, p, minEst,
         preDeduped = true)
       .select(col("id_a"), col("id_b"))
-    val clusters = Dedup.connectedComponents(
+    val clusters = Graph.connectedComponents(
       exactKept.select(col(idCol)), idCol, pairs)
     (exactKept, clusters)
   }

@@ -500,116 +500,6 @@ object Dedup {
       .select(col("band"), col("band_key")).distinct()
       .withColumn("minhash_params", lit(paramsTag(p)))
 
-  // ---- near-dup clustering -----------------------------------------
-
-  /** Connected components over dedup pair edges: every id gets the
-    * smallest id reachable through the pair graph — the canonical
-    * cluster label that turns pairwise near-dup evidence into
-    * per-document keep/drop decisions (keep = id == cluster_id).
-    *
-    * Iterative min-label propagation: each round takes, per node, the
-    * minimum of its own label and its neighbors' labels; converges in
-    * O(component diameter) rounds (near-dup clusters are
-    * short-diameter in practice). Each round is one equi-join + one
-    * groupBy — both shuffle on node id — and each round's frame goes
-    * through [[defaultMaterialize]] so successive rounds read the
-    * previous round's result instead of recomputing the whole chain
-    * (which would be quadratic in rounds). It truncates the plan per
-    * round in whatever way is safe for the environment —
-    * localCheckpoint on a local master, reliable checkpoint when a
-    * checkpoint dir is set, lineage-keeping persist otherwise —
-    * because under plain persist round k's logical plan still nests
-    * all k-1 predecessors and analysis cost grows every round.
-    * Convergence is detected by counting changed labels (zero
-    * changes = fixpoint), one tiny existence probe per round that
-    * works for ANY id type — numeric, string, or otherwise. The
-    * fixpoint (min id per component) is unique, so the result is
-    * deterministic regardless of iteration schedule.
-    *
-    * `maxIters` is a safety valve, not a truncation: if the fixpoint
-    * is not reached within it (a component whose min-label distance
-    * exceeds it, e.g. a 100+-doc drift chain), the call THROWS rather
-    * than silently returning non-minimal labels. Raise `maxIters` (or
-    * pre-bridge long chains) in that case; labels always converge in
-    * at most the largest component diameter rounds. */
-  def connectedComponents(ids: DataFrame, idCol: String, pairs: DataFrame,
-      maxIters: Int = 50): DataFrame = {
-    // The edge list is re-joined every round, always on v: one explicit
-    // repartition here means every round's edge side reuses this single
-    // exchange (checkpoint/localCheckpoint materialization preserves
-    // outputPartitioning, and so does persist's InMemoryRelation)
-    // instead of re-shuffling the — at corpus scale, huge — edge list
-    // per round.
-    val edges = defaultMaterialize(
-      pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-        .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-        .distinct()
-        .repartition(col("v")))
-    // prevRound tracks the frame actually materialized (a
-    // derived select would make unpersist a silent no-op)
-    var prevRound = defaultMaterialize(
-      ids.select(col(idCol).as("u"), col(idCol).as("label")))
-    var labels = prevRound
-    var i = 0
-    var done = edges.isEmpty
-    while (!done && i < maxIters) {
-      val nbrMin = edges
-        .join(labels.select(col("u").as("v"), col("label").as("nl")), "v")
-        .groupBy(col("u")).agg(min(col("nl")).as("nbr"))
-      val base = labels.join(nbrMin, Seq("u"), "left")
-        .select(col("u"), col("label").as("__prev"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-      val stepped = defaultMaterialize(base)
-      // The materializing action must touch EVERY partition: a take(1)
-      // probe (isEmpty) stops at the first changed label, caching only
-      // the partitions it read — every later round then recomputes the
-      // uncached rest from full lineage (quadratic; measured 2x on x19
-      // at sf0.1 when persist replaced the old eager localCheckpoint).
-      // One noop-sink write populates the whole cache, and an observe()
-      // metric rides that same job to decide convergence — no second
-      // pass, no extra count Exchange.
-      val obs = new org.apache.spark.sql.Observation()
-      stepped.observe(obs, sum(when(col("label") =!= col("__prev"), 1L)
-          .otherwise(0L)).as("changed"))
-        .write.format("noop").mode("overwrite").save()
-      // null metric = zero rows observed = nothing left to change
-      done = obs.get.get("changed")
-        .forall(v => v == null || v.asInstanceOf[Long] == 0L)
-      prevRound.unpersist()
-      prevRound = stepped
-      // Build the next round directly on the persisted frame: the
-      // InMemoryRelation substituted for it PRESERVES the join's hash
-      // partitioning on u, so later rounds reuse it instead of
-      // re-exchanging. (A createDataFrame(df.rdd, schema) plan
-      // truncation was tried here and rejected: it discards
-      // outputPartitioning, adding an Exchange per round.)
-      labels = stepped.select(col("u"), col("label"))
-      i += 1
-    }
-    if (!done)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIters rounds; " +
-          "raise maxIters (labels converge in <= component diameter rounds)")
-    edges.unpersist()
-    labels.select(col("u").as(idCol), col("label").as("cluster_id"))
-  }
-
-  /** DuckDB twin of [[connectedComponents]] over a pair relation
-    * `pairs(id_a, id_b)`: CTEs `edges(u, v)` (both directions), the
-    * recursive closure `reach(u, v)` and `labels(u, mv)`, the minimum
-    * id reachable from each node that has an edge (an id without edges
-    * labels itself, so callers left-join and coalesce). Needs a
-    * `WITH RECURSIVE` head. */
-  def componentsSqlCtes(pairs: String): String =
-    s"""edges AS (
-       |  SELECT id_a AS u, id_b AS v FROM $pairs
-       |  UNION SELECT id_b, id_a FROM $pairs),
-       |reach(u, v) AS (
-       |  SELECT u, v FROM edges
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-       |labels AS (SELECT u, min(v) AS mv FROM reach GROUP BY u)""".stripMargin
-
   /** Default `materialize` hook for FORKED (multi-consumer) lineages:
     * persist MEMORY_AND_DISK — computed once, spills instead of
     * OOMing, and (unlike eager localCheckpoint) keeps full lineage so
@@ -652,31 +542,6 @@ object Dedup {
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     else if (sc.getCheckpointDir.isDefined) df.checkpoint(true)
     else defaultPersist(df)
-  }
-
-  /** [[defaultMaterialize]] whose result is guaranteed to have been
-    * MATERIALIZED BY AN ACTION before this returns — required by
-    * every site that rides an `observe()` metric on the
-    * materialization job (the Graph.scala convergence probes and
-    * max-normalizer): an Observation only completes when a query
-    * execution actually RUNS over the observed plan. The local and
-    * checkpoint-dir paths already run one (eager localCheckpoint /
-    * reliable checkpoint); the cluster-without-checkpoint-dir
-    * fallback was a LAZY persist, which runs no job — the observed
-    * metric would never materialize and the caller's loud
-    * empty-metric guard would throw on every call in that
-    * environment. Here that fallback persists and then drains the
-    * plan through one noop-sink write (touches every partition, so
-    * the cache is fully populated AND the observation completes),
-    * keeping lineage exactly as [[defaultPersist]] does. */
-  val defaultMaterializeActioned: DataFrame => DataFrame = df => {
-    val sc = df.sparkSession.sparkContext
-    if (sc.isLocal || sc.getCheckpointDir.isDefined) defaultMaterialize(df)
-    else {
-      val p = defaultPersist(df)
-      p.write.format("noop").mode("overwrite").save()
-      p
-    }
   }
 
   // ---- SimHash ------------------------------------------------------

@@ -109,10 +109,8 @@ object LanguageModel {
 
     val folded = terms.groupBy(id, col(langCol), col("n_tok"))
       .agg(round(
-        -aggregate(
-          transform(array_sort(collect_list(struct(col("token"),
-            col("contrib")))), x => x.getField("contrib")),
-          lit(0.0), (acc, x) => acc + x) / col("n_tok").cast("double"),
+        -Folds.orderedSum(Seq(col("token")), col("contrib")) /
+          col("n_tok").cast("double"),
         6).as("h_r"))
 
     // Tercile assignment, bit-identical to ntile(3) OVER (PARTITION BY
@@ -257,10 +255,8 @@ object LanguageModel {
           log(lit(lambda) * pBi + lit(1.0 - lambda) * pUni)).as("contrib"))
     terms.groupBy(id, col(langCol), col("__nbi"))
       .agg(round(
-        -aggregate(
-          transform(array_sort(collect_list(struct(col("w1"), col("w2"),
-            col("contrib")))), x => x.getField("contrib")),
-          lit(0.0), (acc, x) => acc + x) / col("__nbi").cast("double"),
+        -Folds.orderedSum(Seq(col("w1"), col("w2")), col("contrib")) /
+          col("__nbi").cast("double"),
         6).as("h2_r"))
       .select(id, col(langCol), col("__nbi").as("n_bigrams"), col("h2_r"))
       .orderBy(id)
@@ -353,10 +349,8 @@ object LanguageModel {
         (col("tf").cast("double") * log(p)).as("contrib"))
     terms.groupBy(id, col(langCol), col("__ntr"))
       .agg(round(
-        -aggregate(
-          transform(array_sort(collect_list(struct(col("w1"), col("w2"),
-            col("w3"), col("contrib")))), x => x.getField("contrib")),
-          lit(0.0), (acc, x) => acc + x) / col("__ntr").cast("double"),
+        -Folds.orderedSum(Seq(col("w1"), col("w2"), col("w3")),
+          col("contrib")) / col("__ntr").cast("double"),
         6).as("h3_r"))
       .select(id, col(langCol), col("__ntr").as("n_trigrams"), col("h3_r"))
       .orderBy(id)
@@ -423,10 +417,8 @@ object LanguageModel {
        |    LEFT JOIN refuni USING (w3)
        |    CROSS JOIN stats)
        |SELECT $idCol, $langCol, ntr AS n_trigrams,
-       |  round(-list_reduce(
-       |    list_prepend(CAST(0.0 AS DOUBLE),
-       |      list(contrib ORDER BY w1, w2, w3)),
-       |    (acc, x) -> acc + x) / CAST(ntr AS DOUBLE), 6) AS h3_r
+       |  round(-${Folds.orderedSumSql("contrib", "w1, w2, w3")} /
+       |    CAST(ntr AS DOUBLE), 6) AS h3_r
        |FROM term GROUP BY $idCol, $langCol, ntr
        |ORDER BY $idCol""".stripMargin
   }
@@ -475,9 +467,8 @@ object LanguageModel {
        |    LEFT JOIN refuni USING (w2)
        |    CROSS JOIN stats)
        |SELECT $idCol, $langCol, nbi AS n_bigrams,
-       |  round(-list_reduce(
-       |    list_prepend(CAST(0.0 AS DOUBLE), list(contrib ORDER BY w1, w2)),
-       |    (acc, x) -> acc + x) / CAST(nbi AS DOUBLE), 6) AS h2_r
+       |  round(-${Folds.orderedSumSql("contrib", "w1, w2")} /
+       |    CAST(nbi AS DOUBLE), 6) AS h2_r
        |FROM term GROUP BY $idCol, $langCol, nbi
        |ORDER BY $idCol""".stripMargin
   }
@@ -574,9 +565,8 @@ object LanguageModel {
        |  FROM tf LEFT JOIN refc USING (token) CROSS JOIN stats),
        |folded AS (
        |  SELECT $idCol, $langCol, n_tok,
-       |    round(-list_reduce(
-       |      list_prepend(CAST(0.0 AS DOUBLE), list(contrib ORDER BY token)),
-       |      (acc, x) -> acc + x) / CAST(n_tok AS DOUBLE), 6) AS h_r
+       |    round(-${Folds.orderedSumSql("contrib", "token")} /
+       |      CAST(n_tok AS DOUBLE), 6) AS h_r
        |  FROM term GROUP BY $idCol, $langCol, n_tok),
        |bucketed AS (
        |  SELECT $idCol, $langCol, n_tok, h_r,

@@ -81,10 +81,7 @@ object Retrieval {
     // left-to-right from 0.0; round once at the end.
     termScores.groupBy(id)
       .agg(count(lit(1)).as("n_terms_hit"),
-        round(aggregate(
-          transform(array_sort(collect_list(struct(col("token"), col("s")))),
-            x => x.getField("s")),
-          lit(0.0), (acc, x) => acc + x), 6).as("score_r"))
+        round(Folds.orderedSum(Seq(col("token")), col("s")), 6).as("score_r"))
       .orderBy(col("score_r").desc, id)
       .limit(k)
       .select(id, col("score_r"), col("n_terms_hit"))
@@ -129,9 +126,7 @@ object Retrieval {
        |  FROM tf t JOIN df d USING (token) CROSS JOIN stats s),
        |folded AS (
        |  SELECT $idCol, CAST(count(*) AS BIGINT) AS n_terms_hit,
-       |    round(list_reduce(
-       |      list_prepend(CAST(0.0 AS DOUBLE), list(s ORDER BY token)),
-       |      (acc, x) -> acc + x), 6) AS score_r
+       |    round(${Folds.orderedSumSql("s", "token")}, 6) AS score_r
        |  FROM ts GROUP BY $idCol)
        |SELECT $idCol, score_r, n_terms_hit FROM folded
        |ORDER BY score_r DESC, $idCol LIMIT $k""".stripMargin
@@ -237,10 +232,7 @@ object Retrieval {
       (expr(s"shiftleft(1, CAST($relCol AS INT))").cast("double") - 1.0) /
         log(rankC.cast("double") + 1.0)
     def fold(rankC: String): Column =
-      aggregate(
-        transform(array_sort(collect_list(struct(col(rankC).as("r"),
-          col("__g")))), x => x.getField("__g")),
-        lit(0.0), (a, x) => a + x)
+      Folds.orderedSum(Seq(col(rankC).as("r")), col("__g"))
     val hits = ranked.filter(col(rankCol) <= k)
       .join(rels, Seq(qidCol, didCol), "left")
       .withColumn(relCol, coalesce(col(relCol), lit(0)).cast("int"))
@@ -270,7 +262,9 @@ object Retrieval {
     * names with the same columns; emits a final SELECT (same gains,
     * ln discounts, rank-ordered folds, divisions and rounding). */
   def rankingEvalSql(ranked: String, rels: String, qidCol: String,
-      didCol: String, rankCol: String, relCol: String, k: Int): String =
+      didCol: String, rankCol: String, relCol: String, k: Int): String = {
+    val idealGain = s"(CAST((1 << CAST($relCol AS INT)) AS DOUBLE) - 1.0)" +
+      " / ln(CAST(ir AS DOUBLE) + 1.0)"
     s"""hits AS (
        |  SELECT r.$qidCol, r.$didCol, r.$rankCol,
        |    CAST(coalesce(l.$relCol, 0) AS INT) AS rel,
@@ -284,8 +278,7 @@ object Retrieval {
        |    CAST(sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT)
        |      AS n_rel_hit,
        |    min(CASE WHEN rel > 0 THEN $rankCol END) AS fr,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list(g ORDER BY $rankCol)), (a, x) -> a + x) AS dcg
+       |    ${Folds.orderedSumSql("g", rankCol)} AS dcg
        |  FROM hits GROUP BY $qidCol),
        |irk AS (
        |  SELECT $qidCol, $relCol,
@@ -294,10 +287,7 @@ object Retrieval {
        |  FROM $rels WHERE $relCol > 0),
        |ideal AS (
        |  SELECT $qidCol,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list((CAST((1 << CAST($relCol AS INT)) AS DOUBLE) - 1.0)
-       |        / ln(CAST(ir AS DOUBLE) + 1.0) ORDER BY ir)),
-       |      (a, x) -> a + x) AS idcg
+       |    ${Folds.orderedSumSql(idealGain, "ir")} AS idcg
        |  FROM irk WHERE ir <= $k GROUP BY $qidCol),
        |fin AS (
        |  SELECT p.$qidCol AS $qidCol, p.n_ranked, p.n_rel_hit,
@@ -310,4 +300,5 @@ object Retrieval {
        |SELECT $qidCol, n_ranked, n_rel_hit, first_rel_rank, mrr_r,
        |  ndcg_r
        |FROM fin""".stripMargin
+  }
 }

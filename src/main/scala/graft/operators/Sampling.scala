@@ -251,11 +251,7 @@ object Sampling {
         (col("n").cast("double") * col("lr")).as("contrib"))
       .groupBy(id)
       .agg(sum(col("n")).cast("long").as("n_feats"),
-        aggregate(
-          transform(
-            array_sort(collect_list(struct(col("bucket"), col("contrib")))),
-            x => x.getField("contrib")),
-          lit(0.0), (acc, x) => acc + x).as("__logw"))
+        Folds.orderedSum(Seq(col("bucket")), col("contrib")).as("__logw"))
     // Gumbel(0,1) from the id-hash uniform: u in (0,1) exactly as
     // (h + 0.5) / 2^60, g = -ln(-ln(u)); "dsir:" namespaces the draw
     // away from every other id-hash consumer (split buckets, E-S
@@ -314,10 +310,7 @@ object Sampling {
        |  FROM raw LEFT JOIN tgt USING (bucket) CROSS JOIN tot),
        |sc AS (
        |  SELECT $idCol, CAST(sum(n) AS BIGINT) AS n_feats,
-       |    list_reduce(
-       |      list_prepend(CAST(0.0 AS DOUBLE),
-       |        list(CAST(n AS DOUBLE) * lr ORDER BY bucket)),
-       |      (acc, x) -> acc + x) AS logw
+       |    ${Folds.orderedSumSql("CAST(n AS DOUBLE) * lr", "bucket")} AS logw
        |  FROM db JOIN r USING (bucket)
        |  GROUP BY $idCol),
        |g AS (

@@ -1498,14 +1498,12 @@ object Similarity {
        |  FROM scored),
        |af AS (
        |  SELECT sid,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list(cos ORDER BY fr)), (a, x) -> a + x) /
+       |    ${Folds.orderedSumSql("cos", "fr")} /
        |      CAST(count(*) AS DOUBLE) AS avg_sid
        |  FROM ranked WHERE fr <= $k GROUP BY sid),
        |ab AS (
        |  SELECT tid,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list(cos ORDER BY br)), (a, x) -> a + x) /
+       |    ${Folds.orderedSumSql("cos", "br")} /
        |      CAST(count(*) AS DOUBLE) AS avg_tid
        |  FROM ranked WHERE br <= $k GROUP BY tid),
        |margins AS (

@@ -43,8 +43,7 @@ private[queries] object ExtensionCrawlGraphQueries {
           .distinct()
         val edges = sp.select(col("s").as("src"), col("p").as("dst"))
           .unionByName(sp.select(col("p").as("src"), col("s").as("dst")))
-        graft.operators.Graph.pageRank(edges, iters = 3,
-            materialize = graft.operators.Dedup.defaultMaterialize)
+        graft.operators.Graph.pageRank(edges, iters = 3)
           .orderBy(col("id"))
       },
       Some(graft.operators.Graph.pageRankOracleSql(
@@ -60,8 +59,8 @@ private[queries] object ExtensionCrawlGraphQueries {
       "PageRank with the PRODUCTION stopping rule — iterate until the " +
         "L1 delta sum |r_i - r_(i-1)| drops under tol, not a fixed " +
         "round count (x55): the delta metric rides each round's " +
-        "materialization job via observe() + one noop write (no " +
-        "second pass), each round's rank vector is lineage-truncated " +
+        "lineage-truncation job via observe() (no second pass), " +
+        "each round's rank vector is lineage-truncated " +
         "(ranks feeds the next round twice — an un-truncated plan " +
         "doubles per round), and steady state holds exactly two rank " +
         "vectors. The oracle re-derives the stop round independently: " +
@@ -84,15 +83,8 @@ private[queries] object ExtensionCrawlGraphQueries {
         // within a small budget; measured deltas on the fixture:
         // round 9 ~ 2.8-3.5e-3, round 10 ~ 1.4-1.8e-3 → tol 2e-3
         // stops at round 10 at both gate SFs with >= 2e-4 margin
-        // static inputs (edges/degrees/nodes) are consumed by EVERY
-        // round's truncation job; with the identity default each round
-        // re-derived them from the lineitem scan (+ distinct + union +
-        // repartition) — measured 10 redundant static-prep chains on
-        // this 10-round fixture. One eager truncation up front serves
-        // all rounds (guide §2.4: share the exchange, §5: reuse).
         val run = graft.operators.Graph.pageRankConverged(edges,
-          maxIters = 12, tol = 2e-3, damping = 0.5,
-          materialize = graft.operators.Dedup.defaultMaterialize)
+          maxIters = 12, tol = 2e-3, damping = 0.5)
         require(run.iters >= 1 && run.iters < 12,
           s"the L1 stopping rule must fire BEFORE the iteration budget " +
             s"(converged=${run.iters}, budget=12) — hitting the cap " +
@@ -755,13 +747,7 @@ private[queries] object ExtensionCrawlGraphQueries {
         val edges = sp.select(col("s").as("src"), col("p").as("dst"))
           .unionByName(sp.filter(col("s") % 3 === 0)
             .select(col("p").as("src"), col("s").as("dst")))
-        // hits() runs one truncation job per half-step (6 here), and
-        // with the identity default every one of them re-derived the
-        // static edge/node frames from the lineitem scan; materialize
-        // them once up front (guide §2.4/§5 — the x73 fix)
-        val out = scratch(
-          graft.operators.Graph.hits(edges, iters = 3,
-            materialize = graft.operators.Dedup.defaultMaterialize),
+        val out = scratch(graft.operators.Graph.hits(edges, iters = 3),
           "x79_out")
         val audit = out.agg(
           sum(when(col("id") < 1000000L && col("id") % 3 =!= 0 &&
@@ -794,8 +780,8 @@ private[queries] object ExtensionCrawlGraphQueries {
         "half-step) iterate until the combined L1 delta " +
         "sum|a_i-a_(i-1)| + sum|h_i-h_(i-1)| drops under tol, not a " +
         "fixed count (x79). The delta rides each round's " +
-        "materialization via observe() + one noop write (no second " +
-        "pass); both score vectors are lineage-truncated per round " +
+        "lineage-truncation job via observe() (no second pass); " +
+        "both score vectors are lineage-truncated per round " +
         "(each feeds the next round twice). The oracle re-derives " +
         "the stop round independently: it unrolls maxIters rounds in " +
         "DuckDB (round CTEs MATERIALIZED — plain CTE inlining is " +
@@ -817,11 +803,8 @@ private[queries] object ExtensionCrawlGraphQueries {
         val edges = sp.select(col("s").as("src"), col("p").as("dst"))
           .unionByName(sp.filter(col("s") % 3 === 0)
             .select(col("p").as("src"), col("s").as("dst")))
-        // statics materialized once instead of re-derived by every
-        // round's truncation job (the x73 fix; guide §2.4/§5)
         val run = graft.operators.Graph.hitsConverged(edges,
-          maxIters = 7, tol = 30.0,
-          materialize = graft.operators.Dedup.defaultMaterialize)
+          maxIters = 7, tol = 30.0)
         require(run.iters >= 1 && run.iters < 7,
           s"the L1 stopping rule must fire BEFORE the iteration budget " +
             s"(converged=${run.iters}, budget=7) — hitting the cap " +

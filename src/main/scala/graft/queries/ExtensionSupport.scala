@@ -11,7 +11,7 @@ import graft.catalog.Warehouse
 import graft.functions.SketchFunctions
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
-import graft.operators.{Corpus, Dedup, LanguageModel, Layout, Relational, Retrieval, Sampling, Similarity, TextAnalysis}
+import graft.operators.{Corpus, Dedup, Graph, LanguageModel, Layout, Relational, Retrieval, Sampling, Similarity, TextAnalysis}
 import graft.sources.Tables
 
 /** Shared helpers and fixtures of the extension-catalog slice files —
@@ -397,7 +397,7 @@ private[queries] object ExtensionSupport {
        |mh AS (SELECT id_a, id_b FROM (
        |  ${Dedup.minHashOracleSql("kept", "doc_id", "text")
               .replace("\n", "\n  ")})),
-       |${Dedup.componentsSqlCtes("mh")}""".stripMargin
+       |${Graph.componentsSqlCtes("mh")}""".stripMargin
 
   /** x2b's candidate-generation MinHash: 6 bands of 2 rows — collision
     * probability j², deliberately permissive so the adjudicator (not
@@ -442,7 +442,7 @@ private[queries] object ExtensionSupport {
       .select(col("id_a"), col("doc_id").as("id_b"))
     val nearEdges = Dedup.minHashNearDupPairs(docs, "doc_id", "text")
       .select(col("id_a"), col("id_b"))
-    Dedup.connectedComponents(docs.select(col("doc_id")), "doc_id",
+    Graph.connectedComponents(docs.select(col("doc_id")), "doc_id",
       exactEdges.union(nearEdges))
   }
 
@@ -462,7 +462,7 @@ private[queries] object ExtensionSupport {
        |alledges AS (
        |  SELECT id_a, id_b FROM exact_e
        |  UNION ALL SELECT id_a, id_b FROM mh),
-       |${Dedup.componentsSqlCtes("alledges")}""".stripMargin
+       |${Graph.componentsSqlCtes("alledges")}""".stripMargin
 
   val clusterSelect: String =
     """SELECT d.doc_id,

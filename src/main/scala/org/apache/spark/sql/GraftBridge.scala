@@ -2,11 +2,12 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Minimal bridge into `private[sql]` Spark internals, kept to the two
-  * capabilities a library of custom Catalyst expressions needs:
-  * registering an expression builder in the session's function registry
-  * (so it is usable from SQL text and `expr(...)`), and wrapping a raw
-  * `Expression` as a user-facing `Column`.
+/** Minimal bridge into `private[sql]` Spark internals: registering an
+  * expression builder in the session's function registry (so it is
+  * usable from SQL text and `expr(...)`), wrapping a raw `Expression`
+  * as a user-facing `Column` and back, a bounded wait on an
+  * Observation, wrapping an analyzed plan as a DataFrame, capping a
+  * checkpoint's carried size estimate, and the cache manager's session.
   */
 object GraftBridge {
 
@@ -59,6 +60,31 @@ object GraftBridge {
       : DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `df` unchanged unless it is a checkpointed frame (one
+    * `LogicalRDD`) whose carried size estimate exceeds
+    * `spark.sql.defaultSizeInBytes`; then the same frame with the
+    * estimate capped there. A checkpoint carries the size estimate of
+    * the plan it cut, but not that plan's distinct keys, and Spark
+    * sizes a join without a distinct side as the product of its sides:
+    * a loop whose round joins its checkpointed state twice squares the
+    * estimate every round, a BigInt whose digits double per round and
+    * whose arithmetic stalls planning by round ~20. Above the cap no
+    * planning decision reads the exact value (nothing that large is
+    * broadcast or hashed locally), so capping changes no plan. */
+  def capSizeEstimate(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val cap = BigInt(session.sessionState.conf.defaultSizeInBytes)
+    ds.logicalPlan match {
+      case l: org.apache.spark.sql.execution.LogicalRDD
+          if l.stats.sizeInBytes > cap =>
+        org.apache.spark.sql.classic.Dataset.ofRows(session, l.copy()(session,
+          Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(cap)),
+          Some(l.constraints)))
+      case _ => df
+    }
+  }
 
   /** `spark` if the cache manager would plan a persisted frame in it
     * as is, else a clone with the configurations off that the cache

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -81,7 +81,7 @@ class DedupSpec extends SparkSpec {
     val ids = (1L to 7L).toDF("doc_id")
     // chain 1-2-3 (via transitive edges), pair 5-6, singletons 4 and 7
     val pairs = Seq((2L, 3L), (1L, 2L), (5L, 6L)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(ids, "doc_id", pairs)
+    val got = Graph.connectedComponents(ids, "doc_id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
       5L -> 5L, 6L -> 5L, 7L -> 7L))
@@ -93,12 +93,12 @@ class DedupSpec extends SparkSpec {
     val n = 20L
     val ids = (0L to n).toDF("doc_id")
     val pairs = (0L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val labels = Dedup.connectedComponents(ids, "doc_id", pairs,
+    val labels = Graph.connectedComponents(ids, "doc_id", pairs,
       maxIters = 25).as[(Long, Long)].collect().toMap
     assert(labels.size == n + 1 && labels.values.toSet == Set(0L))
     // a short budget throws instead of returning non-minimal labels
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(ids, "doc_id", pairs, maxIters = 8)
+      Graph.connectedComponents(ids, "doc_id", pairs, maxIters = 8)
         .collect()
     }
   }
@@ -108,7 +108,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id")
     val pairs = Seq(("banana", "cherry"), ("apple", "banana"))
       .toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(ids, "doc_id", pairs)
+    val got = Graph.connectedComponents(ids, "doc_id", pairs)
       .as[(String, String)].collect().toMap
     assert(got == Map("apple" -> "apple", "banana" -> "apple",
       "cherry" -> "apple", "date" -> "date", "elder" -> "elder"))
@@ -117,7 +117,7 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents with no edges labels every id itself") {
     val ids = Seq(10L, 20L).toDF("doc_id")
     val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(ids, "doc_id", none)
+    val got = Graph.connectedComponents(ids, "doc_id", none)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(10L -> 10L, 20L -> 20L))
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Graph, Similarity}
 
 /** Degenerate-input robustness: at 100 TB every operator regularly
   * sees empty partitions and empty filtered subsets — none of the
@@ -55,7 +55,7 @@ class EmptyInputSpec extends SparkSpec {
     assert(Dedup.simHashNearDupPairs(emptyDocs, "doc_id", "text").count() == 0)
     // connected components over empty ids and empty edges
     val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.connectedComponents(
+    assert(Graph.connectedComponents(
       emptyDocs.select(col("doc_id")), "doc_id", noPairs).count() == 0)
     // sampling / splits
     assert(Sampling.hashSample(emptyDocs, "doc_id", 50).count() == 0)
@@ -197,10 +197,11 @@ class EmptyInputSpec extends SparkSpec {
     assert(Mixing.unimaxApply(
       emptyDocs.withColumnRenamed("text", "domain"), "doc_id", "domain",
       alloc).count() == 0)
-    // HITS on an empty edge list: no nodes, no rows
+    // HITS and PageRank on an empty edge list: no nodes, no rows
     val emptyEdges = emptyDocs.select(col("doc_id").as("src"),
       col("doc_id").as("dst"))
     assert(Graph.hits(emptyEdges, iters = 2).count() == 0)
+    assert(Graph.pageRank(emptyEdges, iters = 2).count() == 0)
     // bitext mining with an empty side
     assert(Similarity.bitextMarginMine(emptyVecs, emptyVecs,
       "vec_id", "embedding", k = 2).count() == 0)
@@ -225,6 +226,9 @@ class EmptyInputSpec extends SparkSpec {
       col("doc_id").as("dst"))
     val run = Graph.hitsConverged(emptyEdges, maxIters = 3, tol = 1e-6)
     assert(run.scores.count() == 0 && run.l1Delta == 0.0)
+    // converged PageRank likewise: one round, null delta read as 0.0
+    val pr = Graph.pageRankConverged(emptyEdges, maxIters = 3, tol = 1e-6)
+    assert(pr.ranks.count() == 0 && pr.iters == 1 && pr.l1Delta == 0.0)
     // composed bitext mining with empty candidate frames (the shape
     // an empty retrieval produces: qid/did/cos columns, no rows)
     val emptyCand = emptyDocs.select(col("doc_id").as("qid"),

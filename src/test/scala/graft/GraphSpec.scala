@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.TestJobs
 import org.apache.spark.sql.functions._
 
 import graft.operators.Graph
@@ -26,6 +27,10 @@ class GraphSpec extends SparkSpec {
     }
     r
   }
+
+  /** Bits of the size estimate Spark plans `df` with. */
+  private def estimateBits(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
 
   test("two-node cycle holds rank 0.5/0.5 at any iteration count") {
     val e = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
@@ -79,6 +84,9 @@ class GraphSpec extends SparkSpec {
     assert(run.iters < 50,
       s"expected convergence well before the cap, ran ${run.iters}")
     assert(run.l1Delta <= 1e-6, s"returned delta ${run.l1Delta} > tol")
+    // each round joins its truncated state twice; uncapped, the size
+    // estimate it carries would square per round (2^iters digits)
+    assert(estimateBits(run.ranks) < 128)
     val got = run.ranks.as[(Long, Double)].collect().toMap
     val fixed = Graph.pageRank(e, run.iters).as[(Long, Double)]
       .collect().toMap
@@ -130,6 +138,7 @@ class GraphSpec extends SparkSpec {
     assert(run.iters < 30,
       s"expected convergence well before the cap, ran ${run.iters}")
     assert(run.l1Delta <= 1e-3, s"returned delta ${run.l1Delta} > tol")
+    assert(estimateBits(run.scores) < 128)
     val got = run.scores.as[(Long, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     val fixed = Graph.hits(e, iters = run.iters)
@@ -161,5 +170,65 @@ class GraphSpec extends SparkSpec {
     val b = Graph.hits(e, iters = 3)
       .as[(Long, Double, Double)].collect().sortBy(_._1)
     assert(a.toSeq == b.toSeq)
+  }
+
+  test("connectedComponents runs one Spark job per label-propagation " +
+      "round: the changed-label count rides the round's truncation") {
+    // the same 9-node path labelled two ways: min id at an end takes 8
+    // propagating rounds + 1 quiet round; min id in the middle 4 + 1.
+    // Both share every setup job (same edge endpoints, same ids), so
+    // the job difference is the per-round cost times 9 - 5 rounds.
+    // AQE and broadcast joins off: a query is then exactly one job
+    // (AQE runs each shuffle stage as a job of its own, a broadcast
+    // collects its side in one more).
+    def pathJobs(order: Seq[Long]): Int = {
+      val ids = order.sorted.toDF("doc_id")
+      val pairs = order.zip(order.tail).toDF("id_a", "id_b")
+      val (labels, jobs) = TestJobs.during(spark.sparkContext)(
+        Graph.connectedComponents(ids, "doc_id", pairs))
+      assert(labels.as[(Long, Long)].collect().forall(_._2 == 1L))
+      jobs
+    }
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    spark.conf.set("spark.sql.adaptive.enabled", false)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1L)
+    try {
+      val end = pathJobs(1L to 9L)
+      val middle = pathJobs(Seq(2L, 3L, 4L, 5L, 1L, 6L, 7L, 8L, 9L))
+      assert(end - middle == 9 - 5,
+        s"min-at-end path ran $end jobs, min-in-middle path $middle")
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("the shared round loop ignores physical layout: 1 and 64 shuffle " +
+      "partitions (AQE off) give identical rows, rounds and deltas for " +
+      "every graph operator") {
+    val e = Seq((2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L), (1L, 2L),
+      (2L, 3L), (3L, 4L), (4L, 5L), (5L, 2L), (6L, 1L), (1L, 6L))
+      .toDF("src", "dst")
+    val ids = (1L to 8L).toDF("doc_id")
+    val pairs = Seq((3L, 2L), (4L, 3L), (8L, 7L)).toDF("id_a", "id_b")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().toSeq.map(_.toString).sorted
+    def runAll(): Seq[Any] = {
+      val pr = Graph.pageRankConverged(e, maxIters = 50, tol = 1e-6)
+      val hc = Graph.hitsConverged(e, maxIters = 30, tol = 1e-3)
+      Seq(rows(Graph.pageRank(e, 3)), rows(pr.ranks), pr.iters, pr.l1Delta,
+        rows(Graph.hits(e, iters = 3)), rows(hc.scores), hc.iters,
+        hc.l1Delta, rows(Graph.connectedComponents(ids, "doc_id", pairs)))
+    }
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    def at(partitions: Int): Seq[Any] = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toLong)
+      spark.conf.set("spark.sql.adaptive.enabled", false)
+      runAll()
+    }
+    try {
+      val (one, many) = (at(1), at(64))
+      assert(one == many)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

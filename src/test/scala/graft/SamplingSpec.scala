@@ -92,7 +92,7 @@ class SamplingSpec extends SparkSpec {
     val docs = (0L until 200L).toDF("doc_id")
     val edges = (0L until 200L).filter(_ % 5 != 0)
       .map(i => (i - i % 5, i)).toDF("id_a", "id_b")
-    val labels = graft.operators.Dedup.connectedComponents(
+    val labels = graft.operators.Graph.connectedComponents(
       docs, "doc_id", edges)
     val safe = Sampling.assignSplit(labels, "cluster_id", 80, 10)
       .select("doc_id", "cluster_id", "split")

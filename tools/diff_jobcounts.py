@@ -1,0 +1,57 @@
+#!/usr/bin/env python3
+"""Compare the Spark job counts of two `graft.JobCount` runs entry by entry.
+
+Usage: python3 tools/diff_jobcounts.py <log_a> <log_b>
+
+Each log is the stdout of `sbt "runMain graft.JobCount <names>"`; only its
+`[jobcount] <name>: jobs=N ...` lines are read. Prints one line per entry
+with both counts and the delta (b - a), then a summary. Exits 1 if any
+entry runs more jobs in <log_b> than in <log_a>, or if an entry appears
+in only one of the logs; exits 0 otherwise.
+"""
+import re
+import sys
+
+LINE = re.compile(r"^\[jobcount\] (\S+): jobs=(\d+)")
+
+
+def counts(path):
+    out = {}
+    with open(path, errors="replace") as f:
+        for line in f:
+            m = LINE.match(line.strip())
+            if m:
+                out[m.group(1)] = int(m.group(2))
+    return out
+
+
+def main(argv):
+    if len(argv) != 3:
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
+    a, b = counts(argv[1]), counts(argv[2])
+    if not a or not b:
+        print("no [jobcount] lines in %s" % (argv[1] if not a else argv[2]),
+              file=sys.stderr)
+        return 2
+    names = list(a) + [n for n in b if n not in a]
+    rose, missing = [], []
+    for n in names:
+        if n not in a or n not in b:
+            missing.append(n)
+            print("%-40s %6s %6s  only in %s" % (
+                n, a.get(n, "-"), b.get(n, "-"), "a" if n in a else "b"))
+            continue
+        d = b[n] - a[n]
+        if d > 0:
+            rose.append(n)
+        print("%-40s %6d %6d  %+d" % (n, a[n], b[n], d))
+    print("%d entries: %d fewer jobs, %d same, %d more, %d unmatched" % (
+        len(names), sum(1 for n in names if n in a and n in b and b[n] < a[n]),
+        sum(1 for n in names if n in a and n in b and b[n] == a[n]),
+        len(rose), len(missing)))
+    return 1 if rose or missing else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
