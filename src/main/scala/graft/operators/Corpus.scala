@@ -36,13 +36,10 @@ object Corpus {
       .filter(TextAnalysis.corpusKeep(col(textCol), minQuality, langs))
       .select(col(idCol), col(textCol))
     // Three consumers (pair generation, clustering, the final semi
-    // join) read this frame: it goes through defaultMaterialize so
-    // the scan+filter+dedup subtree executes once, not three times
-    // over the raw corpus. The persist keeps lineage — a lost
-    // block recomputes from source — where the eager localCheckpoint
-    // it replaced truncated lineage to executor-local blocks and an
-    // executor loss killed the job.
-    val exactKept = Dedup.defaultMaterialize(Dedup.exactKeepFirst(filtered,
+    // join) read this frame: materialized once (Materialize.once), the
+    // scan+filter+dedup subtree executes once, not three times over
+    // the raw corpus.
+    val exactKept = Materialize.once(Dedup.exactKeepFirst(filtered,
       md5Fingerprint(col(textCol)), col(idCol)))
     // fingerprint dedup already collapsed byte-identical texts, so the
     // LSH stage's own prefilter would be a wasted full-text shuffle

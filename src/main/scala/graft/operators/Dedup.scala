@@ -500,50 +500,6 @@ object Dedup {
       .select(col("band"), col("band_key")).distinct()
       .withColumn("minhash_params", lit(paramsTag(p)))
 
-  /** Default `materialize` hook for FORKED (multi-consumer) lineages:
-    * persist MEMORY_AND_DISK — computed once, spills instead of
-    * OOMing, and (unlike eager localCheckpoint) keeps full lineage so
-    * a lost executor's blocks recompute from source instead of
-    * killing the job. The InMemoryRelation also keeps column pruning,
-    * which iterative truncation would lose. */
-  val defaultPersist: DataFrame => DataFrame =
-    df => df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** Default `materialize` hook for ITERATIVE lineages (each round
-    * builds on the last): the loop needs PLAN TRUNCATION, not just
-    * caching — under plain persist, round k's logical plan still nests
-    * all k-1 predecessors (cache substitution is physical), so
-    * analysis/optimizer cost grows every round: measured 2x on x19 at
-    * sf0.1. The safe way to truncate depends on where we run, so this
-    * hook picks per environment:
-    *
-    *  - local master: eager `localCheckpoint` — flat lineage per
-    *    round, and its one weakness (blocks pinned to executors, an
-    *    executor loss kills the job) cannot occur in a single-JVM
-    *    master, where any "executor" loss is already job loss;
-    *  - cluster WITH a checkpoint dir: eager reliable `checkpoint` —
-    *    same flat lineage, blocks in fault-tolerant storage (the
-    *    GraphX/graphframes recipe for iterative passes);
-    *  - cluster WITHOUT a checkpoint dir: persist MEMORY_AND_DISK —
-    *    keeps full lineage (safe), accepts the growing-plan analysis
-    *    cost. Set a checkpoint dir for long iterative runs.
-    */
-  val defaultMaterialize: DataFrame => DataFrame = df => {
-    val sc = df.sparkSession.sparkContext
-    // MEMORY_AND_DISK_SER, not the default deserialized level: the
-    // local checkpoint's unroll buffer is then serialized bytes (the
-    // ~5x smaller Tungsten row form) and evicts to disk under
-    // pressure, so label propagation DEGRADES TO SPILL instead of
-    // dying — at sf10 the deserialized form OOMed a 32 GiB single JVM
-    // (32 concurrent tasks unrolling ~550 MiB blocks, SCALE.md); the
-    // serialized form completes there with headroom. The extra
-    // deser cost per round is noise next to the round's join+agg.
-    if (sc.isLocal) df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else if (sc.getCheckpointDir.isDefined) df.checkpoint(true)
-    else defaultPersist(df)
-  }
-
   // ---- SimHash ------------------------------------------------------
 
   /** SimHash banding parameters: a 64-bit signature split into `bands`
@@ -873,28 +829,18 @@ object Dedup {
     * in that row only — switch to a sorted-interval merge fold if a
     * corpus ever exhibits that shape.
     *
-    * The tokenized base frame feeds BOTH the window-extraction arm and
-    * the final reassembly join, so by default the scan + split runs
-    * twice — deliberate: recomputation keeps full lineage (any lost
-    * partition is rebuilt from source), whereas an eager
-    * localCheckpoint would pin blocks to executor-local storage and
-    * die with the executor. Callers for whom the double scan is the
-    * dominant cost can pass `materialize = _.persist(StorageLevel.
-    * DISK_ONLY)` (and unpersist afterwards) — persist caches WITHOUT
-    * truncating lineage. */
+    * Two fork points are materialized once ([[Materialize.once]]): the
+    * tokenized base feeds the window extraction AND the final
+    * reassembly join, and the window frame feeds the per-hash stats
+    * aggregate AND the join-back — so the corpus scan + split and the
+    * window-hash pass each run once. */
   def exactSubstringDedup(docs: DataFrame, idCol: String, textCol: String,
-      l: Int = 8, materialize: DataFrame => DataFrame = identity)
-      : DataFrame = {
+      l: Int = 8): DataFrame = {
     require(l >= 2, s"window length must be >= 2, got $l")
 
-    // (id, tokens, n) — feeds window extraction AND reassembly.
-    val base = materialize(tokenized(docs, idCol, textCol))
-    // wins feeds TWO consumers (the per-hash stats aggregate and the
-    // join-back), so it goes through `materialize` like base —
-    // identity by default (recompute keeps full lineage; the work is
-    // embarrassingly parallel map-side tokenize+hash), persist via the
-    // hook where the double compute dominates.
-    val removals = withWindowStats(materialize(windows(base, idCol, l)), idCol)
+    val base = Materialize.once(tokenized(docs, idCol, textCol))
+    val removals = withWindowStats(
+        Materialize.once(windows(base, idCol, l)), idCol)
       .filter(col("__cnt") > 1 &&
         struct(col(idCol), col("pos")) =!= col("__first"))
       .select(col(idCol), col("pos"))
@@ -937,12 +883,15 @@ object Dedup {
     * windows merge because consecutive seed starts p, p' with
     * p' ≤ p + l cover a contiguous token range.
     *
+    * The window frame forks to the per-hash stats and the join-back,
+    * as in [[exactSubstringDedup]], and is materialized once
+    * ([[Materialize.once]]); the tokenized base has one consumer here.
+    *
     * Output: (id, span_start, span_end, span_tokens, n_windows) —
     * positions 1-based inclusive, n_windows = seed windows merged
     * into the span. */
   def duplicateSpans(docs: DataFrame, idCol: String, textCol: String,
-      l: Int = 8, firstOnly: Boolean = false,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      l: Int = 8, firstOnly: Boolean = false): DataFrame = {
     require(l >= 2, s"window length must be >= 2, got $l")
     import org.apache.spark.sql.expressions.Window
 
@@ -950,11 +899,8 @@ object Dedup {
     // removal policy's view (globally-first occurrence not a dup);
     // false is the audit view (EVERY occurrence of a duplicated
     // window is part of a duplicated span, including the original).
-    // wins forks to the stats and the join-back, as in
-    // exactSubstringDedup; base has one consumer, so it is not
-    // materialized.
-    val joined = withWindowStats(
-      materialize(windows(tokenized(docs, idCol, textCol), idCol, l)), idCol)
+    val joined = withWindowStats(Materialize.once(
+      windows(tokenized(docs, idCol, textCol), idCol, l)), idCol)
     val seeds = (if (firstOnly)
         joined.filter(col("__cnt") > 1 &&
           struct(col(idCol), col("pos")) =!= col("__first"))
@@ -1100,10 +1046,10 @@ object Dedup {
     * GLOBAL shingle frequency (rarest first, shingle tie-break) —
     * the input both [[prefixFilterCandidates]] and
     * [[prefixFilterVerify]] consume. Columns: (idCol, `toks`
-    * frequency-ordered array, `sz`). Callers running both stages
-    * should persist this frame (one corpus scan; the x64 materialize
-    * pattern) — the functions take it as input precisely so
-    * materialization stays in the caller's hands.
+    * frequency-ordered array, `sz`). The sets outlive this call — both
+    * stages and the caller's own gates read them — so storing them is
+    * the caller's lifecycle, not an operator fork point: x70 writes
+    * them to a scratch table and every stage reads that one copy.
     *
     * The exploded (id, shingle) frame INSIDE this builder forks to
     * two consumers (the global frequency aggregate and the join-back

@@ -45,36 +45,9 @@ object Graph {
   /** (final state, rounds run, last probed metric). */
   private type Run = (DataFrame, Int, Double)
 
-  /** Where truncation is possible without a caveat: a local master
-    * (localCheckpoint) or a cluster with a checkpoint dir. */
-  private def truncatable(df: DataFrame): Boolean = {
-    val sc = df.sparkSession.sparkContext
-    sc.isLocal || sc.getCheckpointDir.isDefined
-  }
-
-  /** `Dedup.defaultMaterialize` whose result is guaranteed to have been
-    * MATERIALIZED BY AN ACTION before this returns — required by every
-    * site that rides an `observe()` metric on the truncation job: an
-    * Observation only completes when a query execution actually RUNS
-    * over the observed plan. The local and checkpoint-dir paths already
-    * run one (eager localCheckpoint / reliable checkpoint); on the
-    * cluster-without-checkpoint-dir fallback the frame is persisted and
-    * then drained through one noop-sink write (touches every partition,
-    * so the cache is fully populated AND the observation completes),
-    * keeping lineage exactly as `Dedup.defaultPersist` does. The
-    * checkpoint's size estimate is capped (`GraftBridge.capSizeEstimate`):
-    * a round that joins its state twice would otherwise square it. */
-  private def truncate(df: DataFrame): DataFrame =
-    if (truncatable(df))
-      org.apache.spark.sql.GraftBridge.capSizeEstimate(Dedup.defaultMaterialize(df))
-    else {
-      val p = Dedup.defaultPersist(df)
-      p.write.format("noop").mode("overwrite").save()
-      p
-    }
-
-  /** `df` projected to `keep` and [[truncate]]d by ONE action that
-    * also observes `metric` over its rows (observed under the
+  /** `df` projected to `keep` and truncated
+    * ([[Materialize.actioned]]) by ONE action that also observes
+    * `metric` over its rows (observed under the
     * projection the truncation materializes, so the metric completes
     * with the truncation's own job — no second pass, no extra count
     * Exchange). Returns the truncated frame and the metric, None when
@@ -85,7 +58,8 @@ object Graph {
   private def observed(what: String, df: DataFrame, metric: Column,
       keep: Seq[String]): (DataFrame, Option[Double]) = {
     val obs = new Observation()
-    val t = truncate(df.observe(obs, metric.as("m")).select(keep.map(col): _*))
+    val t = Materialize.actioned(
+      df.observe(obs, metric.as("m")).select(keep.map(col): _*))
     val m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
     if (m.isEmpty) throw new IllegalStateException(
       s"$what: the observed metric did not materialize with its " +
@@ -95,8 +69,9 @@ object Graph {
 
   /** THE round loop. Runs `step` from `start` for at most `budget`
     * rounds; each round's state (the columns of `start`) is
-    * LINEAGE-TRUNCATED by [[truncate]] unless `truncated` is false, and
-    * the previous truncated round is released as its successor lands.
+    * LINEAGE-TRUNCATED by [[Materialize.actioned]] unless `truncated`
+    * is false, and the previous truncated round is released as its
+    * successor lands.
     *
     * With a `probe`, the metric is observed under the round's
     * truncation ([[observed]]) and the loop stops at the first round
@@ -115,7 +90,7 @@ object Graph {
       probe: Option[Column] = None, tol: Double = 0.0,
       truncated: Boolean = true, failAbove: Int = Int.MaxValue,
       warnAbove: Int = Int.MaxValue)(step: DataFrame => DataFrame): Run = {
-    if (!truncatable(start)) {
+    if (!Materialize.truncatable(start)) {
       val why = s"$name: no checkpoint dir, so per-round plan " +
         s"truncation degrades to persist at budget=$budget"
       if (budget > failAbove) throw new IllegalArgumentException(
@@ -138,7 +113,7 @@ object Graph {
           t
         case None =>
           val s = stepped.select(keep.map(col): _*)
-          if (truncated) truncate(s) else s
+          if (truncated) Materialize.actioned(s) else s
       }
       if (truncated) state.unpersist()
       state = next
@@ -164,9 +139,9 @@ object Graph {
       bySrc: Boolean): (DataFrame, DataFrame) = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
     val typed = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val e = Dedup.defaultMaterialize(
+    val e = Materialize.once(
       if (bySrc) typed.repartition(col("src")) else typed)
-    val nodes = Dedup.defaultMaterialize(e.select(col("src").as("id"))
+    val nodes = Materialize.once(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     (e, nodes)
   }
@@ -222,7 +197,7 @@ object Graph {
     val n = nodes.count().toDouble
     // e is already partitioned on src, so this aggregate is
     // exchange-free and stays co-partitioned with the join below
-    val deg = Dedup.defaultMaterialize(
+    val deg = Materialize.once(
       e.groupBy(col("src")).agg(count(lit(1)).as("__deg")))
     def step(ranks: DataFrame): DataFrame = {
       val contribs = e
@@ -566,12 +541,12 @@ object Graph {
     // repartition here means every round's edge side reuses this single
     // exchange (truncation preserves outputPartitioning) instead of
     // re-shuffling the — at corpus scale, huge — edge list per round.
-    val edges = Dedup.defaultMaterialize(
+    val edges = Materialize.once(
       pairs.select(col("id_a").as("u"), col("id_b").as("v"))
         .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
         .distinct()
         .repartition(col("v")))
-    val start = Dedup.defaultMaterialize(
+    val start = Materialize.once(
       ids.select(col(idCol).as("u"), col(idCol).as("label")))
     val (labels, _, changed) =
       if (edges.isEmpty) (start, 0, 0.0)

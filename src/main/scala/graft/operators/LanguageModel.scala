@@ -500,11 +500,10 @@ object LanguageModel {
     * vocabulary²-sized, orders of magnitude below the pair stream.
     * The pair-count frame feeds four consumers, and join-side
     * inferred null filters make their subtrees unequal, so exchange
-    * reuse does NOT kick in (verified on the executed plan) — pass
-    * `materialize` to persist the pair counts and the corpus is
-    * scanned once, full stop; unmaterialized, the plan recomputes the
-    * (cheap, combined) aggregation per consumer. Corpus text never
-    * shuffles — only (a, b) key pairs.
+    * reuse does NOT kick in (verified on the executed plan) — the pair
+    * counts are materialized once ([[Materialize.once]]) and the
+    * corpus is scanned once, full stop. Corpus text never shuffles —
+    * only (a, b) key pairs.
     *
     * Determinism: the integer products c_ab·T and c_a·c_b are exact
     * in long; ONE double division then ln, and the result is rounded
@@ -512,8 +511,8 @@ object LanguageModel {
     * trick — ln differs across libms by ≤1 ulp).
     *
     * Output: (a, b, c_ab, pmi_r), one row per co-occurring pair. */
-  def cooccurrencePmi(docs: DataFrame, textCol: String, window: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+  def cooccurrencePmi(docs: DataFrame, textCol: String,
+      window: Int): DataFrame = {
     require(window >= 1, s"window must be >= 1: $window")
     val pairs = docs
       .select(wsTokens(col(textCol)).as("__tk"))
@@ -523,7 +522,7 @@ object LanguageModel {
       // explode drops — the end-of-document taper needs no guard
       .select(col("a"), explode(slice(col("__tk"),
         col("__i") + lit(2), lit(window))).as("b"))
-    val cAb = materialize(pairs.groupBy(col("a"), col("b"))
+    val cAb = Materialize.once(pairs.groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("c_ab")))
     val cA = cAb.groupBy(col("a")).agg(sum(col("c_ab")).as("c_a"))
     val cB = cAb.groupBy(col("b")).agg(sum(col("c_ab")).as("c_b"))

@@ -189,7 +189,9 @@ object Sampling {
     * bucket-histogram aggregates whose results are `buckets`-sized —
     * broadcast back to the per-doc counts, so corpus text never
     * shuffles and no join side scales with the corpus except the
-    * slim (id, bucket, n) frame. Selection is orderBy(key).limit(k)
+    * slim (id, bucket, n) frame, which feeds both histograms and the
+    * scoring join and is materialized once ([[Materialize.once]]), so
+    * the corpus is tokenized once. Selection is orderBy(key).limit(k)
     * — Spark's distributed top-k (per-partition heaps), never a
     * global window.
     *
@@ -197,8 +199,7 @@ object Sampling {
     * gkey_r), best key first. */
   def dsirSelect(docs: DataFrame, idCol: String, textCol: String,
       targetPredicate: String, buckets: Int = 1024, alpha: Double = 0.5,
-      k: Int = 100,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+      k: Int = 100): DataFrame = {
     require(buckets > 0 && alpha > 0 && k > 0,
       "buckets, alpha and k must be positive")
     import graft.functions.TextFunctions.{adjacentBigrams, wsTokens}
@@ -222,7 +223,7 @@ object Sampling {
     // the pass as a PER-ROW flag (it only reads docs columns) —
     // constant per document, so adding it to the grouping keys
     // changes no groups.
-    val docBuckets = materialize(
+    val docBuckets = Materialize.once(
       bucketed(docs).groupBy(id, col("__tgt"), col("bucket"))
         .agg(count(lit(1)).as("n")))
     val raw = docBuckets.groupBy(col("bucket"))

@@ -200,34 +200,37 @@ object Similarity {
     * dimension's previous value. The result goes to `stash` for the
     * late-bound oracles.
     *
-    * `base` is the trainer's (id, vec) projection every pass re-reads
-    * (1 init scan + `iters` iteration scans) after the trainer's
-    * `materialize` hook: identity recomputes from source (full lineage
-    * — an executor loss rebuilds); a caller for whom the repeated scan
-    * dominates passes `_.persist(...)` and owns the unpersist (same
-    * policy as exactSubstringDedup). */
-  private def lloyd(base: DataFrame, idCol: String, vecCol: String,
+    * Every pass re-reads the corpus's (id, vec) projection (1 init
+    * scan + `iters` iteration scans), so the loop persists it
+    * (MEMORY_AND_DISK: computed once, spills instead of OOMing, keeps
+    * lineage) and releases it before returning: training is eager and
+    * nothing it returns reads the projection. */
+  private def lloyd(corpus: DataFrame, idCol: String, vecCol: String,
       n: Int, iters: Int, stash: Books => Unit)(
       seed: Array[Array[Double]] => Books, means: Int => Seq[Column],
       assign: (DataFrame, Books) => DataFrame): Books = {
-    val init = base.orderBy(col(idCol)).limit(n).select(col(vecCol))
-      .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    var books = seed(init)
-    if (init.nonEmpty && init(0).nonEmpty) {
-      val meanCols = means(books(0)(0).length)
-      (0 until iters).foreach { _ =>
-        assign(base, books).groupBy(col("__sub"), col("__cell"))
-          .agg(meanCols.head, meanCols.tail: _*).collect().foreach { row =>
-            val (s, j) = (row.getInt(0), row.getInt(1))
-            books = books.updated(s, books(s).updated(j,
-              Array.tabulate(meanCols.length)(d =>
-                if (row.isNullAt(d + 2)) books(s)(j)(d)
-                else row.getDouble(d + 2))))
-          }
+    val base = corpus.select(col(idCol), col(vecCol))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val init = base.orderBy(col(idCol)).limit(n).select(col(vecCol))
+        .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
+      var books = seed(init)
+      if (init.nonEmpty && init(0).nonEmpty) {
+        val meanCols = means(books(0)(0).length)
+        (0 until iters).foreach { _ =>
+          assign(base, books).groupBy(col("__sub"), col("__cell"))
+            .agg(meanCols.head, meanCols.tail: _*).collect().foreach { row =>
+              val (s, j) = (row.getInt(0), row.getInt(1))
+              books = books.updated(s, books(s).updated(j,
+                Array.tabulate(meanCols.length)(d =>
+                  if (row.isNullAt(d + 2)) books(s)(j)(d)
+                  else row.getDouble(d + 2))))
+            }
+        }
       }
-    }
-    stash(books)
-    books
+      stash(books)
+      books
+    } finally base.unpersist(false)
   }
 
   /** Deterministic IVF training: centroids initialized from the K
@@ -242,10 +245,8 @@ object Similarity {
     * 100 TB each iteration is exactly one map-side-combined shuffle of
     * K×dim partial sums per task. */
   def ivfTrain(corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, iters: Int = 2, tag: String = "",
-      materialize: DataFrame => DataFrame = identity): Array[Array[Double]] =
-    lloyd(materialize(corpus.select(col(idCol), col(vecCol))), idCol,
-      vecCol, nCells, iters,
+      nCells: Int, iters: Int = 2, tag: String = ""): Array[Array[Double]] =
+    lloyd(corpus, idCol, vecCol, nCells, iters,
       b => centroidStash.updateAndGet(_ + ((nCells, iters, tag) -> b(0))))(
       init => Array(init),
       // try_element_at: NULL (not an ANSI error) past a ragged vector's
@@ -736,10 +737,8 @@ object Similarity {
     * re-reads. */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, ksub: Int, iters: Int = 2,
-      tag: String = "",
-      materialize: DataFrame => DataFrame = identity): Array[Array[Array[Double]]] =
-    lloyd(materialize(corpus.select(col(idCol), col(vecCol))), idCol,
-      vecCol, ksub, iters,
+      tag: String = ""): Array[Array[Array[Double]]] =
+    lloyd(corpus, idCol, vecCol, ksub, iters,
       b => codebookStash.updateAndGet(_ + ((m, ksub, iters, tag) -> b)))(
       init => {
         val subDim = subDimOf(init, m, ksub, "pqTrain")
@@ -1147,8 +1146,7 @@ object Similarity {
     * the same argmax-tie rule the engine uses). */
   def pqTrainResidual(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], m: Int, ksub: Int,
-      iters: Int = 2, tag: String = "res",
-      materialize: DataFrame => DataFrame = identity): Array[Array[Array[Double]]] = {
+      iters: Int = 2, tag: String = "res"): Array[Array[Array[Double]]] = {
     // driver-side cell assignment of the init rows: argmax by (score,
     // index) tuple — lexicographic tuple order matches greatest's
     // ties-to-larger-index semantics
@@ -1158,8 +1156,7 @@ object Similarity {
     // full centroid matrix as a 2-D literal, indexed by (cell, dim)
     // inside the residual-mean aggregate
     val centsLit = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    lloyd(materialize(corpus.select(col(idCol), col(vecCol))), idCol,
-      vecCol, ksub, iters,
+    lloyd(corpus, idCol, vecCol, ksub, iters,
       b => codebookStash.updateAndGet(_ + ((m, ksub, iters, tag) -> b)))(
       init => {
         val subDim = subDimOf(init, m, ksub, "pqTrainResidual")
@@ -1346,7 +1343,7 @@ object Similarity {
     val scored = t.join(broadcast(s), lit(true))
       .select(col("sid"), col("tid"),
         cosineOf(col("svec"), col("tvec"), col("sn"), col("tn")).as("cos"))
-    marginMineTail(scored, k)
+    marginMineTail(scored, k, materialized = false)
   }
 
   /** The margin/mutual tail shared by [[bitextMarginMine]] (exact
@@ -1370,14 +1367,15 @@ object Similarity {
     * at 1M×1M with a universal hub (SCALE.md "Margin-tail hub
     * skew").
     *
-    * `materialize` hook: `scored` feeds three consumers (both
-    * topMeans and the margins join) and `margins` two (both
-    * elections) — a caller that wants each computed once passes a
-    * scratch/persist hook (the entry-level lifecycle answer;
-    * identity recomputes, which tiny exact-form inputs don't mind). */
+    * `scored` feeds three consumers (both topMeans and the margins
+    * join) and `margins` two (both elections). With `materialized`
+    * each is computed once ([[Materialize.once]]) — the composed form,
+    * whose scored pairs come from two IVF retrievals. The exact form
+    * keeps its tail lazy: one plan, no job at build time, and each
+    * consumer rescored from the cross join. */
   private def marginMineTail(scored0: DataFrame, k: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
-    val scored = materialize(scored0)
+      materialized: Boolean): DataFrame = {
+    val scored = if (materialized) Materialize.once(scored0) else scored0
     import org.apache.spark.sql.GraftBridge
     def topK(other: String, score: Column, kk: Int): Column =
       GraftBridge.column(graft.plans.TopKPairs(
@@ -1393,12 +1391,13 @@ object Similarity {
         (aggregate(transform(col("__top"), x => x.getField("score")),
           lit(0.0), (acc, x) => acc + x) /
           size(col("__top")).cast("double")).as(s"avg_$key"))
-    val margins = materialize(scored
+    val margins0 = scored
       .join(topMean("sid", "tid"), Seq("sid"))
       .join(topMean("tid", "sid"), Seq("tid"))
       .select(col("sid"), col("tid"), col("cos"),
         round(col("cos") / ((col("avg_sid") + col("avg_tid")) / 2.0), 9)
-          .as("margin_r")))
+          .as("margin_r"))
+    val margins = if (materialized) Materialize.once(margins0) else margins0
     // per-side best-pair elections via max_by over the composite
     // ordering key (margin DESC, id ASC — ids are non-negative, so
     // max of -id is min id): row_number()==1 under the same ordering,
@@ -1453,16 +1452,19 @@ object Similarity {
     * bitext-miner RECALL vs the cap"; one point is hash-gated as x80c).
     * Operating rule: grow nCells until cap/occupancy reaches ~1-2 and
     * STOP — past that point more cells cost recall at any probe
-    * budget; the cap exists to bound pathological cells. */
-  def bitextMarginMineWith(fwd: DataFrame, bwd: DataFrame, k: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+    * budget; the cap exists to bound pathological cells.
+    *
+    * The candidate pairs and their margins each feed several tail
+    * consumers and are materialized once ([[marginMineTail]]). */
+  def bitextMarginMineWith(fwd: DataFrame, bwd: DataFrame,
+      k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val pairs = fwd.select(col("qid").as("sid"), col("did").as("tid"),
         col("cos"))
       .unionByName(bwd.select(col("did").as("sid"), col("qid").as("tid"),
         col("cos")))
       .groupBy(col("sid"), col("tid")).agg(max(col("cos")).as("cos"))
-    marginMineTail(pairs, k, materialize)
+    marginMineTail(pairs, k, materialized = true)
   }
 
   /** DuckDB twin of [[bitextMarginMine]] — same cosines, rank-ordered

@@ -621,8 +621,7 @@ private[queries] object ExtensionCrawlGraphQueries {
         "Sampling.dsirOracleSql",
       (s, dir) => {
         val out = Sampling.dsirSelect(t(s, dir, "documents"),
-          "doc_id", "text", "lang = 'en'",
-          materialize = df => scratch(df, "x77_db"))
+          "doc_id", "text", "lang = 'en'")
         val plan = out.queryExecution.sparkPlan.toString
         require(plan.contains("TakeOrderedAndProject"),
           s"top-k selection must be distributed take-ordered:\n$plan")
@@ -891,10 +890,10 @@ private[queries] object ExtensionCrawlGraphQueries {
           Similarity.ivfTrain(tgtSide, "vec_id", "embedding",
             nCells = 4, iters = 2, tag = "bitext-tgt")
         }
-        // candidate frames feed TWO consumers (the mining plan and
+        // candidate frames feed TWO consumers (the mining tail and
         // the retrieval-contract audit) — persist so the retrieval
-        // executes once; the audit below runs first and populates
-        // the cache the scratch write then reads
+        // executes once; the tail's eager materialization populates
+        // the cache the audit then reads
         val fwd = Similarity.ivfTopKWithCapped(tgtSide, srcSide,
           "vec_id", "embedding", k = 8, tgtCents, nProbes = 2,
           perCellCap = 64)
@@ -904,12 +903,7 @@ private[queries] object ExtensionCrawlGraphQueries {
           perCellCap = 64)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // scratch hook: the tail's candidate-pair and margins
-          // frames each feed 2-3 consumers (topMeans, margin join,
-          // both elections) — materialized once, served from parquet
-          var i = 0
-          val mined = Similarity.bitextMarginMineWith(fwd, bwd, k = 4,
-              materialize = df => { i += 1; scratch(df, s"x80b_t$i") })
+          val mined = Similarity.bitextMarginMineWith(fwd, bwd, k = 4)
             .orderBy(col("src_id"))
           // plan contract: candidate retrieval + tail must be pure
           // hash/sort-merge joins — the composed form may never fall
@@ -1013,9 +1007,7 @@ private[queries] object ExtensionCrawlGraphQueries {
           perCellCap = 8)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          var i = 0
-          val comp = Similarity.bitextMarginMineWith(fwd, bwd, k = 4,
-              materialize = df => { i += 1; scratch(df, s"x80c_t$i") })
+          val comp = Similarity.bitextMarginMineWith(fwd, bwd, k = 4)
             .select(col("src_id"), col("tgt_id").as("comp_tgt"),
               col("mutual").as("comp_mutual"))
           val nS = srcSample.count()

@@ -678,7 +678,7 @@ private[queries] object ExtensionSketchQueries {
         "full-corpus shuffle + a range join); the corpus pays ONE " +
         "pair-keyed aggregation SHAPE and the marginals + T derive " +
         "from the distinct-pair table (vocabulary²-sized) — at scale " +
-        "the operator's materialize hook persists that table so the " +
+        "the operator materializes that table once so the " +
         "corpus is scanned once (inferred null filters defeat " +
         "exchange reuse, verified on the executed plan) — corpus " +
         "text never shuffles. Top-50 by support with a " +
@@ -687,12 +687,7 @@ private[queries] object ExtensionSketchQueries {
         "trick) and hash-gated against DuckDB's independent " +
         "position-based rederivation",
       (s, dir) => LanguageModel.cooccurrencePmi(
-          t(s, dir, "documents"), "text", window = 3,
-          // the distinct-pair table feeds marginals a, b, T and the
-          // final join (4 consumers; inferred null filters defeat
-          // exchange reuse, verified r12): one corpus pair-gen pass,
-          // every consumer reads the vocabulary²-sized scratch table
-          materialize = df => scratch(df, "x64_cab"))
+          t(s, dir, "documents"), "text", window = 3)
         .orderBy(col("c_ab").desc, col("a"), col("b")).limit(50)
         .orderBy(col("c_ab").desc, col("a"), col("b")),
       Some(s"""WITH base AS (

@@ -495,11 +495,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "groupBy; never pairwise, no suffix array, no task ever holds " +
         "more than one document",
       (s, dir) => Dedup.exactSubstringDedup(t(s, dir, "documents"),
-          "doc_id", "text", l = 8,
-          // base (window extraction + reassembly) and wins (per-hash
-          // stats + join-back) each fork to two consumers; persisted,
-          // the tokenize and the window-hash pass each run ONCE
-          materialize = graft.operators.Dedup.defaultMaterialize)
+          "doc_id", "text", l = 8)
         .orderBy(col("doc_id")),
       Some(Dedup.exactSubstringOracleSql("documents", "doc_id", "text", 8))),
 
@@ -513,10 +509,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "hash exchange + one per-doc exchange whose state is a single " +
         "document's seed starts)",
       (s, dir) => Dedup.duplicateSpans(t(s, dir, "documents"),
-          "doc_id", "text", l = 8,
-          // wins forks to the per-hash stats and the join-back;
-          // persisted, the tokenize+window-hash pass runs ONCE
-          materialize = graft.operators.Dedup.defaultMaterialize)
+          "doc_id", "text", l = 8)
         .orderBy(col("doc_id"), col("span_start")),
       Some(Dedup.duplicateSpansOracleSql("documents", "doc_id",
         "text", 8))),
@@ -646,11 +639,11 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "asymmetric inner-product scoring that never re-reads the raw " +
         "vectors; late-bound oracle embeds the trained codebooks AND " +
         "coarse centroids as literals and hash-matches bit-for-bit",
-      (s, dir) => withTrainerCache { hook =>
+      (s, dir) => {
         val emb = t(s, dir, "embeddings")
         Similarity.adcTopKWith(emb, emb.filter(col("vec_id") < 8),
-            "vec_id", "embedding", 5, memoBooks(s, dir, hook),
-            memoCentroids(s, dir, hook), nProbes = 2, residual = false)
+            "vec_id", "embedding", 5, memoBooks(s, dir),
+            memoCentroids(s, dir), nProbes = 2, residual = false)
           .select(col("qid"), col("rn"), col("did"),
             round(col("score"), 6).as("adc_r"))
           .orderBy(col("qid"), col("rn"))
@@ -819,11 +812,11 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "m residual-LUT lookups, so both engines run identical " +
         "arithmetic; late-bound oracle embeds centroids + residual " +
         "codebooks + biases",
-      (s, dir) => withTrainerCache { hook =>
+      (s, dir) => {
         val emb = t(s, dir, "embeddings")
         Similarity.adcTopKWith(emb,
             emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5,
-            memoResBooks(s, dir, hook), memoCentroids(s, dir, hook),
+            memoResBooks(s, dir), memoCentroids(s, dir),
             nProbes = 2, residual = true)
           .select(col("qid"), col("rn"), col("did"),
             round(col("score"), 6).as("score_r"))
@@ -844,17 +837,17 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "decides whether residual encoding pays for a corpus before " +
         "scaling out; hash-gated through the same late-bound " +
         "codebook+centroid oracles (x6c's pattern)",
-      (s, dir) => withTrainerCache { hook =>
+      (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val q = emb.filter(col("vec_id") < 8)
         val exact = Similarity.bruteForceTopK(emb, q, "vec_id",
           "embedding", 5)
         val plain = Similarity.adcTopKWith(emb, q, "vec_id",
-          "embedding", 5, memoBooks(s, dir, hook),
-          memoCentroids(s, dir, hook), nProbes = 2, residual = false)
+          "embedding", 5, memoBooks(s, dir),
+          memoCentroids(s, dir), nProbes = 2, residual = false)
         val res = Similarity.adcTopKWith(emb, q, "vec_id",
-          "embedding", 5, memoResBooks(s, dir, hook),
-          memoCentroids(s, dir, hook), nProbes = 2, residual = true)
+          "embedding", 5, memoResBooks(s, dir),
+          memoCentroids(s, dir), nProbes = 2, residual = true)
         Similarity.recallAtK(plain, exact)
           .withColumnRenamed("recall_at_k", "recall_pq")
           .join(Similarity.recallAtK(res, exact)
@@ -1047,7 +1040,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "(half the cells) — the parameter sweep a deployment runs " +
         "before freezing an index config; x42b's 8-codeword recall " +
         "is the baseline this variant must beat",
-      (s, dir) => withTrainerCache { hook =>
+      (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val q = emb.filter(col("vec_id") < 8)
         val exact = Similarity.bruteForceTopK(emb, q, "vec_id",
@@ -1056,8 +1049,8 @@ private[queries] object ExtensionStorageRetrievalQueries {
         // coarse quantizer is identical across the family — shared
         val wide = Similarity.adcTopKWith(emb, q, "vec_id", "embedding",
           5, Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
-            ksub = 16, iters = 2, materialize = hook),
-          memoCentroids(s, dir, hook), nProbes = 4, residual = false)
+            ksub = 16, iters = 2),
+          memoCentroids(s, dir), nProbes = 4, residual = false)
         Similarity.recallAtK(wide, exact)
           .withColumnRenamed("recall_at_k", "recall_k16p4")
           .orderBy(col("qid"))
@@ -1084,7 +1077,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "the shortlist size before freezing an index config; at C=50 " +
         "re-ranking recovers the IVF probe ceiling (~0.9, x6c's " +
         "uncompressed recall)",
-      (s, dir) => withTrainerCache { hook =>
+      (s, dir) => {
         val emb = t(s, dir, "embeddings")
         val q = emb.filter(col("vec_id") < 8)
         val exact = Similarity.bruteForceTopK(emb, q, "vec_id",
@@ -1092,8 +1085,8 @@ private[queries] object ExtensionStorageRetrievalQueries {
         // ONE shortlist at the widest C; narrower C is a filter on its
         // rank — one training pass, one candidate join for all points
         val short100 = Similarity.adcTopKWith(emb, q, "vec_id",
-          "embedding", 100, memoBooks(s, dir, hook),
-          memoCentroids(s, dir, hook), nProbes = 2, residual = false)
+          "embedding", 100, memoBooks(s, dir),
+          memoCentroids(s, dir), nProbes = 2, residual = false)
         def reAt(c: Int) = Similarity.exactRerank(emb, q, "vec_id",
           "embedding",
           short100.filter(col("rn") <= c)

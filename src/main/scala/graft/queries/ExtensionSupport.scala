@@ -127,24 +127,6 @@ private[queries] object ExtensionSupport {
     java.text.Normalizer.normalize(
       NFC_CLEAN_SUFFIX, java.text.Normalizer.Form.NFD) + " \u212B\u2126"
 
-  /** Trainer-scan cache for the PQ/IVF eval queries: persists the
-    * (id, vec) projection the trainers re-read every Lloyd iteration
-    * (2 trainers × (1 init + iters) scans in the ADC paths), then
-    * releases it before the returned plan is consumed — training runs
-    * EAGERLY inside the query builder, so by the time `body` returns
-    * the cache has served every scan it can; the final lazy frame
-    * recomputes from source with full lineage. Callers that want the
-    * cache to outlive training manage persistence themselves. */
-  def withTrainerCache[A](body: (DataFrame => DataFrame) => A): A = {
-    val cached = new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-    val hook = (df: DataFrame) => {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cached.set(Some(p)); p
-    }
-    try body(hook)
-    finally cached.get.foreach(_.unpersist(false))
-  }
-
   /** Per-JVM memo of deterministic WET fixture dumps (x81/x90): the
     * dump is a pure function of the SF dir (its path is SF-namespaced),
     * so re-writing it on every builder invocation — Bench calls each
@@ -221,28 +203,23 @@ private[queries] object ExtensionSupport {
         v
     }
 
-  def memoCentroids(s: SparkSession, dir: String,
-      hook: DataFrame => DataFrame = identity): Array[Array[Double]] =
+  def memoCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
     trainOnce(dir, "ivf-cents-8-2") {
       Similarity.ivfTrain(t(s, dir, "embeddings"), "vec_id", "embedding",
-        nCells = 8, iters = 2, materialize = hook)
+        nCells = 8, iters = 2)
     }
 
-  def memoBooks(s: SparkSession, dir: String,
-      hook: DataFrame => DataFrame = identity)
-      : Array[Array[Array[Double]]] =
+  def memoBooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
     trainOnce(dir, "pq-books-8-8-2") {
       Similarity.pqTrain(t(s, dir, "embeddings"), "vec_id", "embedding",
-        m = 8, ksub = 8, iters = 2, materialize = hook)
+        m = 8, ksub = 8, iters = 2)
     }
 
-  def memoResBooks(s: SparkSession, dir: String,
-      hook: DataFrame => DataFrame = identity)
+  def memoResBooks(s: SparkSession, dir: String)
       : Array[Array[Array[Double]]] =
     trainOnce(dir, "pq-books-res-8-8-2") {
       Similarity.pqTrainResidual(t(s, dir, "embeddings"), "vec_id",
-        "embedding", memoCentroids(s, dir, hook), m = 8, ksub = 8,
-        iters = 2, materialize = hook)
+        "embedding", memoCentroids(s, dir), m = 8, ksub = 8, iters = 2)
     }
 
   // DuckDB twins of TextFunctions helpers, kept adjacent to their use.

@@ -56,8 +56,8 @@ object Tables {
   def withSessionConfs(b: SparkSession.Builder): SparkSession.Builder =
     sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
-  /** The session every entry point (Verify, Bench, Smoke, BenchOne,
-    * Explain, JobCount, ScaleGen, the test base spec) runs on:
+  /** The session every entry point (Verify, Bench, Smoke, Explain,
+    * JobCount, ScaleGen, the test base spec) runs on:
     * [[sessionConfs]], `local[cpus]` with as many shuffle partitions,
     * UTC (the events ts normalization casts TIMESTAMP_NTZ via the
     * session TZ, so an unpinned session on a non-UTC host reads

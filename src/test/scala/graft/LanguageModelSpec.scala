@@ -141,23 +141,24 @@ class LanguageModelSpec extends SparkSpec {
     }
   }
 
-  test("cooccurrencePmi materialize hook receives the pair-count " +
-      "frame (the single corpus-side subplan) and a persisting hook " +
-      "changes nothing about the result") {
+  test("cooccurrencePmi reads the pair counts of every consumer from " +
+      "one materialized (a, b, c_ab) relation") {
     val d = Seq((1L, "a b c d"), (2L, "b c d a")).toDF("doc_id", "text")
-    var hooked: Option[org.apache.spark.sql.DataFrame] = None
-    val viaHook = LanguageModel.cooccurrencePmi(d, "text", window = 2,
-        materialize = { df =>
-          hooked = Some(df)
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        })
-      .as[(String, String, Long, Double)].collect().toSet
-    val plain = LanguageModel.cooccurrencePmi(d, "text", window = 2)
-      .as[(String, String, Long, Double)].collect().toSet
-    assert(viaHook == plain)
-    assert(hooked.get.columns.toSeq == Seq("a", "b", "c_ab"),
-      "the hook must see the distinct-pair count table")
-    hooked.get.unpersist(false)
+    val out = LanguageModel.cooccurrencePmi(d, "text", window = 2)
+    val leaves = out.queryExecution.optimizedPlan.collectLeaves()
+    val rdds = leaves.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l }
+    assert(rdds.nonEmpty && rdds.size == leaves.size,
+      s"every leaf must be the materialized pair counts: $leaves")
+    assert(rdds.map(_.rdd.id).distinct.size == 1,
+      "the marginals, the total and the join read one relation")
+    assert(rdds.head.output.map(_.name) == Seq("a", "b", "c_ab"))
+    // forward window of 2: doc 1 gives a b, a c, b c, b d, c d; doc 2
+    // gives b c, b d, c d, c a, d a — 10 pairs, 7 distinct
+    val got = out.as[(String, String, Long, Double)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    assert(got.size == 7 && got.values.sum == 10L)
+    assert(Seq(("b", "c"), ("b", "d"), ("c", "d")).forall(got(_) == 2L))
   }
 
   test("tokenKlContributions: hand-computed smoothed probabilities " +

@@ -3,33 +3,48 @@
 
 Usage: python3 tools/diff_jobcounts.py <log_a> <log_b>
 
-Each log is the stdout of `sbt "runMain graft.JobCount <names>"`; only its
-`[jobcount] <name>: jobs=N ...` lines are read. Prints one line per entry
-with both counts and the delta (b - a), then a summary. Exits 1 if any
-entry runs more jobs in <log_b> than in <log_a>, or if an entry appears
-in only one of the logs; exits 0 otherwise.
+Each log is the stdout of `sbt "runMain graft.JobCount <names>"`. Its
+`[jobcount] <name>: jobs=N ...` lines give the counts; the `[job] ...`
+lines printed before each of them give that entry's jobs, each ending in
+the graft frame that launched it. Prints one line per entry with both
+counts and the delta (b - a); for an entry whose count differs, also the
+number of jobs per launching frame in both logs, so the moved frame
+shows. Then a summary. Exits 1 if any entry runs more jobs in <log_b>
+than in <log_a>, or if an entry appears in only one of the logs; exits
+0 otherwise.
 """
+import collections
 import re
 import sys
 
 LINE = re.compile(r"^\[jobcount\] (\S+): jobs=(\d+)")
+JOB = re.compile(r"^\[job\] id=\s*\d+\s+[\d.]+ s\s*(.*)$")
 
 
-def counts(path):
-    out = {}
+def parse(path):
+    """{name: job count}, {name: Counter of launching frames}."""
+    counts, frames = {}, {}
+    pending = collections.Counter()
     with open(path, errors="replace") as f:
         for line in f:
-            m = LINE.match(line.strip())
+            line = line.strip()
+            j = JOB.match(line)
+            if j:
+                pending[j.group(1) or "(no frame)"] += 1
+                continue
+            m = LINE.match(line)
             if m:
-                out[m.group(1)] = int(m.group(2))
-    return out
+                counts[m.group(1)] = int(m.group(2))
+                frames[m.group(1)] = pending
+                pending = collections.Counter()
+    return counts, frames
 
 
 def main(argv):
     if len(argv) != 3:
         print(__doc__.strip(), file=sys.stderr)
         return 2
-    a, b = counts(argv[1]), counts(argv[2])
+    (a, fa), (b, fb) = parse(argv[1]), parse(argv[2])
     if not a or not b:
         print("no [jobcount] lines in %s" % (argv[1] if not a else argv[2]),
               file=sys.stderr)
@@ -46,6 +61,13 @@ def main(argv):
         if d > 0:
             rose.append(n)
         print("%-40s %6d %6d  %+d" % (n, a[n], b[n], d))
+        if d != 0:
+            ca, cb = fa[n], fb[n]
+            for frame in sorted(set(ca) | set(cb),
+                                key=lambda k: (cb[k] - ca[k], k)):
+                mark = "" if ca[frame] == cb[frame] else "  *"
+                print("    %4d %4d  %s%s" % (ca[frame], cb[frame], frame,
+                                            mark))
     print("%d entries: %d fewer jobs, %d same, %d more, %d unmatched" % (
         len(names), sum(1 for n in names if n in a and n in b and b[n] < a[n]),
         sum(1 for n in names if n in a and n in b and b[n] == a[n]),
