@@ -2,17 +2,14 @@ package graft.catalog
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Relational
+import graft.sources.Tables
 
 /** The product's catalog surface — the analog of the reference's DuckDB
   * database lifecycle (SURVEY.md §2.1 S5-S9 and §2.6 Q1-Q3):
@@ -255,21 +252,11 @@ object Warehouse {
     * launches no job. */
   private def requireFileSchema(spark: SparkSession, path: String,
       schema: StructType): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-    val dir = new HPath(path)
-    val files = dir.getFileSystem(conf).listStatus(dir).filter { st =>
-      val n = st.getPath.getName
-      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-    }
+    val files = Tables.parquetFiles(spark, path)
     require(files.nonEmpty, s"no parquet file under $path")
     files.foreach { st =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      val found =
-        try ParquetFileFormat.readSchemaFromFooter(
-          new Footer(st.getPath, reader.getFooter), converter)
-        finally reader.close()
-      val types = found.fields.map(f => f.name -> f.dataType.sql).toMap
+      val types = Tables.footer(spark, st)._1.fields
+        .map(f => f.name -> f.dataType.sql).toMap
       schema.fields.foreach { f =>
         require(types.get(f.name).contains(f.dataType.sql),
           s"${st.getPath}: schema.sql declares ${f.name} ${f.dataType.sql}, " +

@@ -53,7 +53,7 @@ private[queries] object ExtensionSupport {
     registerCleanup(appDir)
     val dir = appDir.resolve(name).toString
     df.write.mode("overwrite").parquet(dir)
-    df.sparkSession.read.parquet(dir)
+    Tables.readParquet(df.sparkSession, dir)
   }
 
   /** Read LONG metrics off an Observation whose frame went through

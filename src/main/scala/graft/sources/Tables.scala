@@ -1,6 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet source layer for the driver test tables (TESTDATA.md).
   *
@@ -41,15 +49,26 @@ object Tables {
     * about five times per rename to resolve a symlink that is never
     * there. The files written, their `.crc` sidecars, the
     * temp-file-then-atomic-rename protocol and the refusal to rename
-    * onto an existing file are the same under both managers. A rename
-    * asked to overwrite (state deltas and snapshots) is best effort:
-    * under Spark's Hive jars `file:` is Hive's `ProxyLocalFileSystem`,
-    * whose rename keeps an existing target. */
+    * onto an existing file are the same under both managers.
+    *
+    * `fs.file.impl` makes [[ForklessLocalFileSystem]] the `file:` file
+    * system. Hadoop's own local file system, without the native
+    * library, forks a `chmod` process for every permission it sets:
+    * each checkpoint temp file and directory and each parquet part
+    * file of every write. The graft one sets the same rwx bits in
+    * process and is otherwise Hadoop's checksummed `LocalFileSystem`
+    * (it also replaces the `ProxyLocalFileSystem` that Spark's Hive
+    * jars register for `file:`). A checkpoint rename asked to overwrite
+    * (state deltas and snapshots) replaces the existing target.
+    * Hadoop caches one `file:` file system per JVM and user, so a JVM
+    * gets this one when its first `file:` access comes from a session
+    * built with these confs. */
   val sessionConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.streaming.checkpointFileManagerClass" ->
       ("org.apache.spark.sql.execution.streaming.checkpointing." +
-        "FileSystemBasedCheckpointFileManager"))
+        "FileSystemBasedCheckpointFileManager"),
+    "spark.hadoop.fs.file.impl" -> classOf[ForklessLocalFileSystem].getName)
 
   /** Apply [[sessionConfs]] to a session builder — the one-liner every
     * entry point (and an embedder) uses at session build time. */
@@ -73,108 +92,107 @@ object Tables {
     spark
   }
 
-  /** Parquet read that upgrades Spark's opaque TIMESTAMP(NANOS)
-    * schema error into an actionable one naming [[sessionConfs]]. */
-  private def readParquet(spark: SparkSession, p: String): DataFrame =
-    try spark.read.parquet(p)
-    catch {
-      case e: Throwable
-          if String.valueOf(e.getMessage).contains("NANOS") &&
-            spark.conf.get(
-              "spark.sql.legacy.parquet.nanosAsLong", "false") != "true" =>
-        throw new IllegalStateException(
-          s"$p uses TIMESTAMP(NANOS); build the SparkSession with " +
-            "graft.sources.Tables.sessionConfs applied " +
-            "(spark.sql.legacy.parquet.nanosAsLong=true)", e)
-    }
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(spark, dir)
-    else truncateNanosCols(spark, dir, name,
-      readParquet(spark, path(dir, name)))
-
-  /** Columns whose PARQUET logical type is TIMESTAMP(NANOS), from the
-    * file footer (memoized per (path, footer-file identity) — a
-    * metadata-only read). Under `nanosAsLong` Spark surfaces these as
-    * BIGINT, which is indistinguishable from a legitimate BIGINT in
-    * the Spark schema alone — only the footer can tell them apart.
-    * The cache key includes the footer file's length + mtime so an
-    * in-place fixture regeneration (the documented drift scenario)
-    * invalidates the entry instead of mis-truncating under a stale
-    * column set. */
-  private val nanosColsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
-  private def nanosTimestampCols(
-      spark: SparkSession, tablePath: String): Set[String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = p.getFileSystem(conf)
-    val file = // a table may be one file locally or a directory at scale
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath)
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(
-            s"no parquet file under $tablePath"))
-      else p
-    val st = fs.getFileStatus(file)
-    val key = s"$tablePath@${st.getLen}:${st.getModificationTime}"
-    nanosColsCache.computeIfAbsent(key, { _ =>
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-      try {
-        import scala.jdk.CollectionConverters._
-        reader.getFileMetaData.getSchema.getFields.asScala.collect {
-          case f if f.isPrimitive &&
-            (f.getLogicalTypeAnnotation match {
-              case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-              case _ => false
-            }) => f.getName
-        }.toSet
-      } finally reader.close()
-    })
+  /** The visible `*.parquet` data files of a table path in name
+    * order: the path itself when it is a file (a local fixture), else
+    * the part files of its directory (a table at scale, a scratch
+    * table). */
+  private[graft] def parquetFiles(spark: SparkSession, p: String): Seq[FileStatus] = {
+    val hp = new HPath(p)
+    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = fs.getFileStatus(hp)
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(hp).toSeq.filter { f =>
+      val n = f.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+    }.sortBy(_.getPath.getName)
   }
+
+  /** One parquet file's schema as `spark.read.parquet` infers it (the
+    * session's footer converter, every field nullable), and the columns
+    * its footer annotates TIMESTAMP(NANOS): one footer read in this
+    * process, no Spark job. Under `nanosAsLong` Spark reads those
+    * columns as BIGINT, which the Spark schema alone cannot tell from a
+    * real BIGINT. Without `nanosAsLong` Spark cannot read them at all,
+    * and the error names [[sessionConfs]]. */
+  private[graft] def footer(spark: SparkSession,
+      file: FileStatus): (StructType, Set[String]) = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file,
+      spark.sessionState.newHadoopConf()))
+    try {
+      val meta = reader.getFooter
+      val schema =
+        try ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        catch {
+          case e: Throwable
+              if String.valueOf(e.getMessage).contains("NANOS") &&
+                spark.conf.get(
+                  "spark.sql.legacy.parquet.nanosAsLong", "false") != "true" =>
+            throw new IllegalStateException(
+              s"${file.getPath} uses TIMESTAMP(NANOS); build the SparkSession " +
+                "with graft.sources.Tables.sessionConfs applied " +
+                "(spark.sql.legacy.parquet.nanosAsLong=true)", e)
+        }
+      val nanos = meta.getFileMetaData.getSchema.getFields.asScala.collect {
+        case f if f.isPrimitive && (f.getLogicalTypeAnnotation match {
+            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+              t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+            case _ => false
+          }) => f.getName
+      }.toSet
+      (GraftBridge.asNullable(schema), nanos)
+    } finally reader.close()
+  }
+
+  /** [[footer]] of a table path's first data file. */
+  private def tableFooter(spark: SparkSession,
+      p: String): (StructType, Set[String]) =
+    footer(spark, parquetFiles(spark, p).headOption.getOrElse(
+      throw new IllegalStateException(s"no parquet file under $p")))
+
+  /** `spark.read.parquet(p)` without its schema-inference job: the
+    * schema is read from the first data file's footer ([[footer]]). */
+  def readParquet(spark: SparkSession, p: String): DataFrame =
+    spark.read.schema(tableFooter(spark, p)._1).parquet(p)
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = path(dir, name)
+    val (schema, nanos) = tableFooter(spark, p)
+    normalizeTs(name, nanos, spark.read.schema(schema).parquet(p))
+  }
+
+  /** The events `ts` normalization for `events`, the nanos truncation
+    * for every other table. */
+  private def normalizeTs(name: String, nanos: Set[String],
+      raw: DataFrame): DataFrame =
+    if (name == "events") normalizeEventsTs(raw)
+    else truncateNanosCols(raw, nanos)
 
   /** Repair any column a testdata regeneration shipped as
-    * TIMESTAMP(NANOS): truncate the nanos BIGINT to micros (DuckDB's
-    * own behavior, so oracle values agree) and retype as TimestampType.
-    * The footer is only consulted when the Spark schema has a BIGINT
-    * column at all — the common all-good path does no metadata read. */
-  private def truncateNanosCols(spark: SparkSession, dir: String,
-      name: String, raw: DataFrame): DataFrame = {
+    * TIMESTAMP(NANOS) (`nanos`, from the footer): truncate the nanos
+    * BIGINT to micros (DuckDB's own behavior, so oracle values agree)
+    * and retype as TimestampType. */
+  private def truncateNanosCols(raw: DataFrame,
+      nanos: Set[String]): DataFrame = {
     import org.apache.spark.sql.functions.{expr, timestamp_micros}
-    import org.apache.spark.sql.types.LongType
-    val longCols = raw.schema.fields
-      .filter(_.dataType == LongType).map(_.name)
-    if (longCols.isEmpty) raw
-    else {
-      val nanos = nanosTimestampCols(spark, path(dir, name))
-      longCols.filter(nanos).foldLeft(raw) { (df, c) =>
-        df.withColumn(c, timestamp_micros(expr(s"`$c` div 1000")))
-      }
+    raw.schema.fields.map(_.name).filter(nanos).foldLeft(raw) { (df, c) =>
+      df.withColumn(c, timestamp_micros(expr(s"`$c` div 1000")))
     }
   }
 
-  /** Schema-adaptive events read. The fixture's `ts` physical type has
-    * drifted across testdata generations — TIMESTAMP(NANOS) (which
-    * Spark's vectorized reader rejects, so it must be read as a nanos
-    * BIGINT and truncated) vs plain `timestamp[us]` (which reads
-    * directly). Rather than hardcode either era, branch on the parquet
-    * footer the read already resolves: LongType ⇒ nanos→micros
-    * truncation (what DuckDB does internally, so oracle values agree);
-    * any timestamp type ⇒ normalize to session-TZ TimestampType (the
-    * session TZ is UTC everywhere in this repo, so an NTZ cast is
-    * value-identical micros). Every other shape fails loudly. */
-  private def loadEvents(spark: SparkSession, dir: String): DataFrame =
-    normalizeEventsTs(readParquet(spark, path(dir, "events")))
-
-  /** Normalize whatever physical shape `events.ts` arrived in to
-    * session-TZ TimestampType with microsecond values identical to
-    * DuckDB's read of the same file (DuckDB's TIMESTAMP is naive
-    * microseconds, so with the session TZ pinned to UTC all three
-    * arms agree bit-for-bit). Any other shape fails loudly rather
-    * than silently mis-typing 15 downstream queries. */
+  /** Schema-adaptive events `ts`. The fixture's `ts` physical type
+    * has drifted across testdata generations — TIMESTAMP(NANOS) (which
+    * Spark's vectorized reader rejects, so it is read as a nanos BIGINT)
+    * vs plain `timestamp[us]` (which reads directly). Rather than
+    * hardcode either era, branch on the type the footer gives `ts`:
+    * LongType ⇒ nanos→micros truncation (what DuckDB does internally,
+    * so oracle values agree); any timestamp type ⇒ normalize to
+    * session-TZ TimestampType (the session TZ is UTC everywhere in this
+    * repo, so an NTZ cast is value-identical micros, and all three arms
+    * agree bit-for-bit with DuckDB's naive-micros TIMESTAMP). Any other
+    * shape fails loudly rather than silently mis-typing 15 downstream
+    * queries. */
   private[sources] def normalizeEventsTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -191,8 +209,8 @@ object Tables {
   }
 
   /** Streaming twin of [[load]]: the same table as a file-source
-    * stream (schema inferred from a batch footer read — the file
-    * stream source requires an explicit schema). Shares the events
+    * stream (schema from the same footer read — the file stream source
+    * requires an explicit schema). Shares the events
     * `ts` normalization with [[load]] so a streaming plan over the
     * fixture is value-identical to the batch frame the DuckDB oracle
     * checks. At scale the path is a directory micro-batched by
@@ -208,18 +226,14 @@ object Tables {
     // the directory and the stream would silently read zero rows —
     // caught by the r9 sf1 rehearsal).
     val p = path(dir, name)
-    val hp = new org.apache.hadoop.fs.Path(p)
+    val hp = new HPath(p)
     val isDir = hp.getFileSystem(spark.sessionState.newHadoopConf())
       .getFileStatus(hp).isDirectory
-    def stream(schema: org.apache.spark.sql.types.StructType) =
+    val (schema, nanos) = tableFooter(spark, p)
+    normalizeTs(name, nanos,
       if (isDir) spark.readStream.schema(schema).parquet(p)
       else spark.readStream.schema(schema)
-        .option("pathGlobFilter", s"$name.parquet").parquet(dir)
-    if (name == "events")
-      normalizeEventsTs(
-        stream(readParquet(spark, path(dir, "events")).schema))
-    else truncateNanosCols(spark, dir, name,
-      stream(readParquet(spark, path(dir, name)).schema))
+        .option("pathGlobFilter", s"$name.parquet").parquet(dir))
   }
 
   /** Register every test table as a temp view — the analog of DuckDB's

@@ -1,6 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{Deduplicate,
+  DeduplicateWithinWatermark, EventTimeWatermark, Filter, Join, LeafNode,
+  LogicalPlan, Project, SubqueryAlias, Union}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
@@ -179,27 +183,6 @@ object Streams {
       batchId: Long): Unit =
     batch.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
 
-  /** Run a streaming DataFrame over currently-available input with
-    * `Trigger.AvailableNow` and an APPEND-mode memory sink; returns the
-    * materialized result as a batch DataFrame once the query
-    * self-terminates. This is the transitive-oracle harness: a
-    * streaming plan run this way over a static fixture must equal its
-    * batch twin, and the batch twin has a DuckDB oracle — so the
-    * streaming operators get hash-gated without DuckDB ever needing to
-    * understand a stream. Append mode is what the stateful operators
-    * (dedup, stream-stream join) require; a fresh implicit temp
-    * checkpoint per call means every invocation reprocesses the full
-    * fixture (deterministic, re-runnable under the bench). */
-  /** `statePartitions` sizes the stateful operators' shuffle — and
-    * therefore the number of state store instances, which is STICKY
-    * for the checkpoint's lifetime and is pure fixed overhead when
-    * oversized: at the fixture scale, 32 stores made the
-    * stream-stream join ~2.5× slower than 8 (r9 measurement, ~9 s vs
-    * ~4 s) with identical output. Size it to stream volume on a real
-    * deployment; None inherits the session setting. The conf is set
-    * only for the `start()` window and restored after — batch plans
-    * in flight are unaffected because the setting is read at stream
-    * query planning. */
   /** Executed physical plan of the LAST micro-batch each
     * [[runAvailableNow]] query ran, keyed by query name. Lets tests
     * hard-gate the STREAMING plan shape directly (e.g. "no shuffle
@@ -352,36 +335,84 @@ object Streams {
       cls
     }
 
-  /** Set the streaming-scoped confs (shuffle partitions = state store
-    * count; state store provider) for the duration of `body`, restoring
-    * the previous values after. Both are read at STREAM QUERY PLANNING,
-    * so the temporary setting cannot affect batch plans in flight. */
-  private def withStreamConfs[A](spark: SparkSession,
+  /** Set the streaming-scoped confs for the duration of `body`,
+    * restoring the previous values after: shuffle partitions (= state
+    * store count), the state store provider, and no no-data micro-batch
+    * where [[lastBatchOnlyEvicts]] holds for `streaming`. All three are
+    * read when the query starts, so the temporary setting cannot affect
+    * batch plans in flight. */
+  private def withStreamConfs[A](spark: SparkSession, streaming: DataFrame,
       statePartitions: Option[Int])(body: => A): A = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = spark.conf.getOption(provKey)
-    val parts = statePartitionsOverride().orElse(statePartitions)
-    val prov = stateStoreProviderOverride()
-    parts.foreach(p =>
-      spark.conf.set("spark.sql.shuffle.partitions", p.toString))
-    prov.foreach(spark.conf.set(provKey, _))
+    val confs = Seq(
+      statePartitionsOverride().orElse(statePartitions)
+        .map("spark.sql.shuffle.partitions" -> _.toString),
+      stateStoreProviderOverride()
+        .map("spark.sql.streaming.stateStore.providerClass" -> _),
+      Some("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+        .filter(_ => lastBatchOnlyEvicts(streaming.queryExecution.analyzed))
+    ).flatten
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally {
-      parts.foreach(_ =>
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts))
-      prov.foreach { _ =>
-        prevProv.fold(spark.conf.unset(provKey))(
-          spark.conf.set(provKey, _))
-      }
+    finally prev.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 
+  /** Whether a bounded run of `plan` may skip the no-data micro-batch
+    * that Spark runs after the last data batch to advance the
+    * watermark. It holds when every stateful node of the plan is an
+    * inner stream-stream join or a deduplication: those emit nothing
+    * when the watermark moves, they only evict state, and a gate run's
+    * state is deleted with its checkpoint. An aggregation (a session
+    * window is one), an outer or semi stream-stream join,
+    * `(flat)MapGroupsWithState`, `transformWithState` or any node not
+    * known to be stateless may release rows in that batch, so such a
+    * plan keeps it. */
+  private[graft] def lastBatchOnlyEvicts(plan: LogicalPlan): Boolean =
+    plan.collect { case n if n.isStreaming => n }.forall {
+      case j: Join if j.left.isStreaming && j.right.isStreaming =>
+        j.joinType == Inner
+      case _: Join | _: Deduplicate | _: DeduplicateWithinWatermark |
+          _: Project | _: Filter | _: EventTimeWatermark | _: Union |
+          _: SubqueryAlias | _: LeafNode => true
+      case _ => false
+    }
+
+  /** Run a streaming DataFrame over currently-available input with
+    * `Trigger.AvailableNow` and an APPEND-mode memory sink; returns the
+    * materialized result as a batch DataFrame once the query
+    * self-terminates. This is the transitive-oracle harness: a
+    * streaming plan run this way over a static fixture must equal its
+    * batch twin, and the batch twin has a DuckDB oracle — so the
+    * streaming operators get hash-gated without DuckDB ever needing to
+    * understand a stream. Append mode is what the stateful operators
+    * (dedup, stream-stream join) require; a fresh implicit temp
+    * checkpoint per call means every invocation reprocesses the full
+    * fixture (deterministic, re-runnable under the bench).
+    *
+    * `statePartitions` sizes the stateful operators' shuffle — and
+    * therefore the number of state store instances, which is STICKY
+    * for the checkpoint's lifetime and is pure fixed overhead when
+    * oversized: at the fixture scale, 32 stores made the
+    * stream-stream join ~2.5× slower than 8 (r9 measurement, ~9 s vs
+    * ~4 s) with identical output. Size it to stream volume on a real
+    * deployment; None inherits the session setting.
+    *
+    * A plan whose stateful nodes are all inner stream-stream joins or
+    * deduplications (x47, x48) runs without the no-data micro-batch
+    * that would follow its last data batch: that batch would only
+    * evict state the next run discards. Every other stateful plan (an
+    * aggregation, a session window, an outer or semi join, a
+    * `(flat)MapGroupsWithState`) keeps it, because it releases the
+    * rows the final watermark closes ([[lastBatchOnlyEvicts]]). The
+    * same holds for [[runAvailableNowToDir]] and
+    * [[runAvailableNowToDirComplete]]. */
   def runAvailableNow(spark: SparkSession, streaming: DataFrame,
       queryName: String, statePartitions: Option[Int] = None,
       outputMode: String = "append"): DataFrame = {
     spark.catalog.dropTempView(queryName)
-    withStreamConfs(spark, statePartitions) {
+    withStreamConfs(spark, streaming, statePartitions) {
       val q: StreamingQuery = streaming.writeStream
         .outputMode(outputMode)
         .format("memory")
@@ -420,7 +451,7 @@ object Streams {
     rmTree(root)
     val out = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
-    withStreamConfs(spark, statePartitions) {
+    withStreamConfs(spark, streaming, statePartitions) {
       val q: StreamingQuery = streaming.writeStream
         .outputMode("append")
         .format("parquet")
@@ -462,7 +493,7 @@ object Streams {
     rmTree(root)
     val out = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
-    withStreamConfs(spark, statePartitions) {
+    withStreamConfs(spark, streaming, statePartitions) {
       val q: StreamingQuery = streaming.writeStream
         .outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * usable from SQL text and `expr(...)`), wrapping a raw `Expression`
   * as a user-facing `Column` and back, a bounded wait on an
   * Observation, wrapping an analyzed plan as a DataFrame, capping a
-  * checkpoint's carried size estimate, and the cache manager's session.
+  * checkpoint's carried size estimate, the cache manager's session, and
+  * a nullable copy of a schema.
   */
 object GraftBridge {
 
@@ -100,4 +101,9 @@ object GraftBridge {
        else Seq(SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS))
     org.apache.spark.sql.classic.SparkSession.getOrCloneSessionWithConfigsOff(s, off)
   }
+
+  /** `schema` with every field, element and value nullable: the schema
+    * a file source reports for the file schema it is given or infers. */
+  def asNullable(schema: types.StructType): types.StructType =
+    schema.asNullable
 }

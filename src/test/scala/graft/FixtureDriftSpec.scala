@@ -139,4 +139,17 @@ class FixtureDriftSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSeq.sorted
     assert(vals == expected.sorted)
   }
+
+  test("a TIMESTAMP(NANOS) table read in a session without nanosAsLong " +
+      "fails with a pointer to Tables.sessionConfs") {
+    val dir = nanosFixtureDir()
+    val bare = spark.newSession()
+    bare.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    Seq[() => Any](() => Tables.load(bare, dir, "events"),
+        () => Tables.loadStream(bare, dir, "events")).foreach { read =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("TIMESTAMP(NANOS)") &&
+        e.getMessage.contains("graft.sources.Tables.sessionConfs"))
+    }
+  }
 }

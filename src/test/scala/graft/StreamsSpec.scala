@@ -3,6 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -300,9 +301,33 @@ class StreamsSpec extends SparkSpec {
         s"got $finalRows")
   }
 
-  test("streaming checkpoints rename files without forking readlink " +
-      "(the session's FileSystem-based checkpoint manager)") {
+  /** The commands of the processes the JVM starts while `body` runs.
+    * jdk.ProcessStart is JVM-wide; the suites run one at a time, and
+    * the `true` launched inside the recording shows that it records. */
+  private def spawned[A](dir: java.nio.file.Path)(body: => A): (A, Seq[String]) = {
     import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val got = try {
+      val a = body
+      new ProcessBuilder("true").start().waitFor()
+      a
+    } finally rec.stop()
+    val dump = dir.resolve("spawns.jfr")
+    rec.dump(dump)
+    rec.close()
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+      .asScala.filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command")).toSeq
+    assert(commands.contains("true"),
+      s"the recording missed the probe process: $commands")
+    (got, commands)
+  }
+
+  /** Five events of two users, with the pairs a 600 s interval join
+    * finds, written as a parquet directory under `dir`. */
+  private def pairFixture(dir: java.nio.file.Path) = {
     import spark.implicits._
     val base = 1700000000L
     val rows = Seq((1L, 101L, 0L), (1L, 102L, 300L), (1L, 103L, 1000L),
@@ -313,39 +338,168 @@ class StreamsSpec extends SparkSpec {
     val expected = graft.operators.Temporal
       .rangeJoinWithin(rows, "user_id", "event_id", "ts", 600)
       .orderBy("id_a", "id_b").collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-spawn")
     val src = dir.resolve("events").toString
     rows.write.parquet(src)
-    val stream = spark.readStream.schema(rows.schema).parquet(src)
+    (spark.readStream.schema(rows.schema).parquet(src), expected)
+  }
 
-    // jdk.ProcessStart is JVM-wide; the suites run one at a time, and
-    // the `true` launched inside the recording shows that it records
-    val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart")
-    rec.start()
-    val got = try {
-      val out = Streams.runAvailableNowToDir(spark,
+  test("streaming checkpoints rename files without forking readlink " +
+      "(the session's FileSystem-based checkpoint manager)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-spawn")
+    val (stream, expected) = pairFixture(dir)
+    val (got, commands) = spawned(dir) {
+      Streams.runAvailableNowToDir(spark,
         Streams.streamingIntervalSelfJoin(stream, "user_id", "event_id",
           "ts", delay = "1 hour", withinSec = 600),
         "ckpt_spawn_test", statePartitions = Some(2))
-      new ProcessBuilder("true").start().waitFor()
-      out.orderBy("id_a", "id_b").collect().toSeq
-    } finally rec.stop()
-    val dump = dir.resolve("spawns.jfr")
-    rec.dump(dump)
-    rec.close()
-    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
-      .asScala.filter(_.getEventType.getName == "jdk.ProcessStart")
-      .map(_.getString("command")).toSeq
+        .orderBy("id_a", "id_b").collect().toSeq
+    }
     assert(got.nonEmpty && got == expected)
-    assert(commands.contains("true"),
-      s"the recording missed the probe process: $commands")
     val readlinks = commands.filter(_.startsWith("readlink"))
     assert(readlinks.size == 0, "readlink processes forked by one " +
       s"streaming run, e.g. ${readlinks.take(1).mkString}")
     assert(CheckpointFileManager.create(new Path(dir.toString),
         spark.sessionState.newHadoopConf())
       .isInstanceOf[FileSystemBasedCheckpointFileManager])
+  }
+
+  test("streaming runs and parquet writes set file permissions without " +
+      "forking chmod (the session's file: file system)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-chmod-spawn")
+    val (stream, expected) = pairFixture(dir)
+    val (got, commands) = spawned(dir) {
+      val out = Streams.runAvailableNowToDir(spark,
+        Streams.streamingIntervalSelfJoin(stream, "user_id", "event_id",
+          "ts", delay = "1 hour", withinSec = 600),
+        "chmod_spawn_test", statePartitions = Some(2))
+      out.write.parquet(dir.resolve("written").toString)
+      out.orderBy("id_a", "id_b").collect().toSeq
+    }
+    assert(got.nonEmpty && got == expected)
+    assert(spark.read.parquet(dir.resolve("written").toString).count() ==
+      expected.size)
+    val chmods = commands.filter(_.startsWith("chmod"))
+    assert(chmods.isEmpty, s"${chmods.size} chmod processes forked by " +
+      s"one streaming run and one write, e.g. ${chmods.take(1).mkString}")
+    // Hadoop caches the file: file system per JVM, whatever conf asks
+    assert(org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"),
+        new org.apache.hadoop.conf.Configuration())
+      .isInstanceOf[graft.sources.ForklessLocalFileSystem])
+  }
+
+  test("the forkless file system sets the same rwx bits as chmod") {
+    import java.nio.file.attribute.PosixFilePermissions
+    val dir = java.nio.file.Files.createTempDirectory("graft-perm")
+    val fs = new Path(dir.toString).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    val f = new Path(dir.toString, "f")
+    fs.create(f).close()
+    Seq("rwxr-x---", "rw-r--r--", "r--------", "rwxrwxrwx", "---------",
+        "-w--wx--x").foreach { mode =>
+      fs.setPermission(f,
+        org.apache.hadoop.fs.permission.FsPermission.valueOf("-" + mode))
+      assert(PosixFilePermissions.toString(java.nio.file.Files
+        .getPosixFilePermissions(dir.resolve("f"))) == mode)
+      assert(fs.getFileStatus(f).getPermission.toString == mode)
+    }
+    // chmod would also set a sticky bit; the nine rwx bits leave it out
+    fs.setPermission(f, new org.apache.hadoop.fs.permission.FsPermission(
+      Integer.parseInt("1750", 8).toShort))
+    assert(PosixFilePermissions.toString(java.nio.file.Files
+      .getPosixFilePermissions(dir.resolve("f"))) == "rwxr-x---")
+  }
+
+  test("x47 and x48 gate runs take one micro-batch and keep the rows " +
+      "of their batch twins") {
+    import graft.queries.Catalog
+    def commits(query: String): Long = java.nio.file.Files.list(
+        java.nio.file.Paths.get("target", "stream_gate", query, "ckpt",
+          "commits"))
+      .filter(p => !p.getFileName.toString.startsWith(".")).count()
+    val events = Tables.load(spark, sf(), "events")
+
+    val x48 = Catalog.byName("x48_streaming_interval_join")
+      .run(spark, sf()).collect().toSeq
+    assert(commits("x48_out") == 1)
+    val x48Twin = graft.operators.Temporal
+      .rangeJoinWithin(events, "user_id", "event_id", "ts", 600)
+      .orderBy("id_a", "id_b").collect().toSeq
+    assert(x48.nonEmpty && x48 == x48Twin)
+
+    val x47 = Catalog.byName("x47_streaming_dedup")
+      .run(spark, sf()).collect().toSeq
+    assert(commits("x47_out") == 1)
+    val x47Twin = events.select("user_id", "event_type").distinct()
+      .orderBy("user_id", "event_type").collect().toSeq
+    assert(x47.nonEmpty && x47 == x47Twin)
+  }
+
+  test("plans whose last batch releases rows keep it: a left-outer " +
+      "stream-stream join and a windowed append aggregation emit their " +
+      "watermark-released rows, equal to the batch result") {
+    import spark.implicits._
+    val base = 1700000000L
+    // the far-future user 9 event moves the watermark past every other
+    // row; only the batch after the data batch can release those rows
+    val rows = Seq((1L, 101L, 0L), (1L, 102L, 100L), (1L, 103L, 5000L),
+        (2L, 201L, 50L), (9L, 901L, 100000L))
+      .map { case (u, id, off) =>
+        (u, id, new java.sql.Timestamp((base + off) * 1000L), "view", 1.5) }
+      .toDF("user_id", "event_id", "ts", "event_type", "value")
+    val dir = java.nio.file.Files.createTempDirectory("graft-released")
+    val src = dir.resolve("events").toString
+    rows.write.parquet(src)
+    val stream = spark.readStream.schema(rows.schema).parquet(src)
+    def commits(query: String): Long = java.nio.file.Files.list(
+        java.nio.file.Paths.get("target", "stream_gate", query, "ckpt",
+          "commits"))
+      .filter(p => !p.getFileName.toString.startsWith(".")).count()
+
+    def leftOuterPairs(events: DataFrame): DataFrame = {
+      val w = events.withWatermark("ts", "1 second")
+      val a = w.select($"user_id", $"event_id".as("id_a"), $"ts".as("ts_a"))
+      val b = w.select($"user_id".as("__k"), $"event_id".as("id_b"),
+        $"ts".as("ts_b"))
+      a.join(b, $"user_id" === $"__k" && $"id_a" < $"id_b" &&
+          $"ts_b" >= $"ts_a" - expr("INTERVAL 600 SECONDS") &&
+          $"ts_b" <= $"ts_a" + expr("INTERVAL 600 SECONDS"), "left_outer")
+        .select($"user_id", $"id_a", $"id_b")
+    }
+    def windowed(events: DataFrame): DataFrame =
+      Streams.tumblingCounts(events.withWatermark("ts", "1 second"), "1 hour")
+    val released = rows.filter($"user_id" =!= 9L)
+
+    val pairs = leftOuterPairs(stream)
+    assert(!Streams.lastBatchOnlyEvicts(pairs.queryExecution.analyzed))
+    val gotPairs = Streams.runAvailableNowToDir(spark, pairs,
+        "released_outer", statePartitions = Some(2))
+      .orderBy("id_a", "id_b").collect().toSeq
+    assert(commits("released_outer") == 2)
+    val expPairs = leftOuterPairs(released).orderBy("id_a", "id_b")
+      .collect().toSeq
+    assert(expPairs.count(_.isNullAt(2)) == 3, "unmatched left rows")
+    assert(gotPairs == expPairs)
+
+    val counts = windowed(stream)
+    assert(!Streams.lastBatchOnlyEvicts(counts.queryExecution.analyzed))
+    val gotCounts = Streams.runAvailableNowToDir(spark, counts,
+        "released_windows", statePartitions = Some(2))
+      .orderBy("ws", "event_type").collect().toSeq
+    assert(commits("released_windows") == 2)
+    val expCounts = windowed(released).orderBy("ws", "event_type")
+      .collect().toSeq
+    assert(expCounts.size == 2 && gotCounts == expCounts)
+
+    // and the plans that skip it: an inner interval join, a dedup
+    assert(Streams.lastBatchOnlyEvicts(Streams.streamingIntervalSelfJoin(
+      stream, "user_id", "event_id", "ts", "1 hour", 600)
+      .queryExecution.analyzed))
+    assert(Streams.lastBatchOnlyEvicts(Streams.streamingDedup(stream,
+      Seq("user_id"), "ts", "1 hour").queryExecution.analyzed))
+    assert(Streams.lastBatchOnlyEvicts(stream.distinct()
+      .queryExecution.analyzed))
+    assert(!Streams.lastBatchOnlyEvicts(stream.groupBy("user_id").count()
+      .queryExecution.analyzed))
   }
 
   test("the session's checkpoint manager writes atomically: no " +
@@ -374,13 +528,13 @@ class StreamsSpec extends SparkSpec {
     intercept[java.io.IOException](write("new", overwrite = false))
     assert(read() == "old", "a refused rename must keep the old bytes")
     // state stores write deltas and snapshots with overwriteIfPossible,
-    // which Spark defines as best effort and never an error. With
-    // Spark's Hive jars on the classpath `file:` resolves to Hive's
-    // ProxyLocalFileSystem, whose rename refuses an existing target,
-    // so the old version stays; either way the file is whole
+    // which Spark defines as best effort and never an error. The
+    // session's file: file system renames onto an existing file, so
+    // the new version replaces the old one whole, .crc sidecar included
     write("newer", overwrite = true)
-    assert(Set("old", "newer").contains(read()),
-      s"the target must hold one whole version, got '${read()}'")
+    assert(read() == "newer")
+    assert(fm.open(target).readAllBytes().sameElements("newer".getBytes("UTF-8")),
+      "the checksummed read must verify the replaced file")
 
     val cancelled = new Path(dir.toString, "1")
     val out = fm.createAtomic(cancelled, overwriteIfPossible = false)

@@ -6,13 +6,13 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.TestJobs
 
 /** The fixture-memo contract behind the benched WET entries
   * (x81/x90): exactly ONE write per (JVM, path), and no caller may
   * proceed before that write has fully completed — a check-then-act
   * race here would hand a concurrent caller a half-written dump. */
-class ExtensionSupportSpec extends AnyFunSuite {
+class ExtensionSupportSpec extends graft.SparkSpec {
 
   test("wetFixtureOnce: 8 concurrent callers on one path produce " +
       "exactly one write, and every caller observes it complete") {
@@ -58,5 +58,20 @@ class ExtensionSupportSpec extends AnyFunSuite {
     // and the successful retry is memoized as usual
     ExtensionSupport.wetFixtureOnce(path) { writes.incrementAndGet() }
     assert(writes.get() == 2)
+  }
+
+  test("scratch launches only its write's jobs: the read-back infers " +
+      "no schema") {
+    val df = spark.range(0, 100, 1, 4).selectExpr("id", "array(id, id) AS a")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-scratch")
+      .resolve("plain").toString
+    val (_, writeJobs) = TestJobs.during(spark.sparkContext)(
+      df.write.parquet(tmp))
+    val (back, jobs) = TestJobs.during(spark.sparkContext)(
+      ExtensionSupport.scratch(df, "scratch_jobs_test"))
+    assert(jobs == writeJobs)
+    assert(back.schema == spark.read.parquet(tmp).schema)
+    assert(back.orderBy("id").collect().toSeq ==
+      df.orderBy("id").collect().toSeq)
   }
 }
