@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
@@ -11,9 +12,18 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *    graft frame that launched it ([[site]]);
   *  - `[jobcount] <name>: jobs=N wall=T s` for the first run, the line
   *    `tools/diff_jobcounts.py` compares;
+  *  - `[rerun] <name> #r: jobs=N, first run M` and that run's `[job]`
+  *    lines, for each later run whose job count differs from the
+  *    first run's, so the job that comes and goes shows;
   *  - `[runs] <name>: t1 t2 … s, jobs j1 j2 …` — every run's wall time
   *    and job count. The first run is cold (JVM warm-up, per-JVM
-  *    training memos); read warm timings from the later runs.
+  *    training memos); read warm timings from the later runs;
+  *  - `[compiles] <name>: c1 c2 …` — the classes Janino compiled in
+  *    each run. Spark caches compiled classes JVM-wide, so a warm run
+  *    that compiles more than 0 means either the JVM's working set has
+  *    outgrown `spark.sql.codegen.cache.maxEntries`
+  *    ([[graft.sources.Tables.sessionConfs]]) or the entry generates
+  *    code that differs from run to run.
   *
   * The evidence tool for changes whose effect is JOB STRUCTURE rather
   * than final-plan shape (convergence-loop materializations, audit
@@ -82,8 +92,10 @@ object JobCount {
     import scala.jdk.CollectionConverters._
     args.foreach { n =>
       val run = graft.queries.Catalog.byName(n).run
+      var firstJobs = 0
       val results = (1 to runs).map { r =>
         lines.clear(); nJobs.set(0)
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         run(spark, dir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
@@ -92,14 +104,21 @@ object JobCount {
         // private[spark])
         var prev = -1
         while (nJobs.get != prev) { prev = nJobs.get; Thread.sleep(300L) }
-        if (r == 1) {
+        def printJobs(): Unit =
           lines.asScala.toSeq.sortBy(_._1).foreach(l => println(l._2))
-          println(f"[jobcount] $n: jobs=${nJobs.get} wall=$wall%.2f s")
+        if (r == 1) {
+          firstJobs = nJobs.get
+          printJobs()
+          println(f"[jobcount] $n: jobs=$firstJobs wall=$wall%.2f s")
+        } else if (nJobs.get != firstJobs) {
+          println(s"[rerun] $n #$r: jobs=${nJobs.get}, first run $firstJobs")
+          printJobs()
         }
-        (wall, nJobs.get)
+        (wall, nJobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
       }
       println(s"[runs] $n: ${results.map(r => f"${r._1}%.2f").mkString(" ")}" +
         s" s, jobs ${results.map(_._2).mkString(" ")}")
+      println(s"[compiles] $n: ${results.map(_._3).mkString(" ")}")
     }
     spark.stop()
   }

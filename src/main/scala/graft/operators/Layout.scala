@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Multi-dimensional data layout: Z-order (Morton-curve) clustering,
   * the standard lakehouse answer to "this table is filtered on TWO
   * columns and I can only sort by one" (Delta Lake OPTIMIZE ZORDER,
@@ -108,7 +110,7 @@ object Layout {
   def compact(spark: org.apache.spark.sql.SparkSession, srcDir: String,
       dirName: String, targetRowsPerFile: Long, sortCol: String): String = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    val df = spark.read.parquet(srcDir)
+    val df = Tables.readParquet(spark, srcDir)
     val n = df.count()
     val nFiles = math.max(1L,
       (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.sources.Tables
 
 /** Similarity search over an `array<float>` embedding column.
   *
@@ -1210,7 +1211,7 @@ object Similarity {
 
   private def readManifest(spark: org.apache.spark.sql.SparkSession,
       root: org.apache.hadoop.fs.Path): Map[String, String] =
-    spark.read.parquet(s"$root/manifest").collect()
+    Tables.readParquet(spark, s"$root/manifest").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
 
   /** Persist IVF centroids under `<warehouse>/ann_index/<name>`:
@@ -1246,7 +1247,7 @@ object Similarity {
     val man = readManifest(spark, root)
     require(man.get("kind").contains("ivf"),
       s"index $name is kind=${man.getOrElse("kind", "?")}, expected ivf")
-    val cents = spark.read.parquet(s"$root/centroids").collect()
+    val cents = Tables.readParquet(spark, s"$root/centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
     require(cents.map(_._1).toSeq == cents.indices.toSeq,
@@ -1293,7 +1294,7 @@ object Similarity {
       s"index $name is kind=${man.getOrElse("kind", "?")}, expected pq")
     val (m, ksub, subDim) =
       (man("m").toInt, man("ksub").toInt, man("sub_dim").toInt)
-    val rows = spark.read.parquet(s"$root/codebooks").collect()
+    val rows = Tables.readParquet(spark, s"$root/codebooks").collect()
       .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
       .toMap
     require(rows.size == m * ksub &&

@@ -84,7 +84,7 @@ private[queries] object ExtensionSketchQueries {
       (s, dir) => {
         val path = Layout.saveShuffledShards(t(s, dir, "documents"),
           "documents_shuffled", "doc_id", nShards = 8)
-        s.read.parquet(path)
+        Tables.readParquet(s, path)
           .groupBy(col("shard").cast("int").as("shard"))
           .agg(count(lit(1)).as("n_docs"),
             min(col("shuffle_key")).as("min_key"),
@@ -232,7 +232,7 @@ private[queries] object ExtensionSketchQueries {
           t(s, dir, "events").select(col("event_id"), col("user_id"),
             col("event_type"), col("value")),
           "events_dpp", Seq("event_type"))
-        val fact = s.read.parquet(path)
+        val fact = Tables.readParquet(s, path)
         val dim = t(s, dir, "events").select(col("event_type")).distinct()
           .withColumn("type_tag", substring(md5(col("event_type")), 1, 2))
           .filter(col("type_tag") < "80")

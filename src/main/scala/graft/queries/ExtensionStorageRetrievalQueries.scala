@@ -105,7 +105,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
       (s, dir) => {
         val path = Warehouse.savePartitioned(t(s, dir, "events"),
           "events_part", Seq("event_type"))
-        val q = s.read.parquet(path)
+        val q = Tables.readParquet(s, path)
           .filter(col("event_type") === "purchase")
           .groupBy((col("user_id") % 100).as("user_bucket"))
           .agg(count(lit(1)).as("n_events"),
@@ -672,7 +672,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
         val path = Layout.saveZOrdered(t(s, dir, "lineitem"),
           "lineitem_zorder", "l_partkey", "l_suppkey", bits = 0,
           nFiles = 8)
-        val q = s.read.parquet(path)
+        val q = Tables.readParquet(s, path)
           .filter(col("l_partkey").between(100, 300) &&
             col("l_suppkey").between(10, 40))
           .groupBy(col("l_returnflag"))
@@ -741,7 +741,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
         // duplicate (l_orderkey, l_linenumber) pairs (see
         // ParityQueries note on the fixture trap), so l_partkey and
         // qty complete the key.
-        val q = s.read.parquet(path)
+        val q = Tables.readParquet(s, path)
           .filter(col("l_orderkey") === probe)
           .withColumn("qty", col("qty").cast("double"))
           .orderBy(col("l_linenumber"), col("l_partkey"), col("qty"),
@@ -927,7 +927,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
         require(after < before && after == expected,
           s"compaction must hit ceil(n/target) files " +
             s"($before -> $after, expected $expected)")
-        s.read.parquet(compacted)
+        Tables.readParquet(s, compacted)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).cast("long").as("sum_chars"),

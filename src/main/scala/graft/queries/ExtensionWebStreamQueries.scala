@@ -802,13 +802,13 @@ private[queries] object ExtensionWebStreamQueries {
         val q1 = pipeline()
         graft.streaming.Streams.awaitTerminationAndUnregister(s, q1)
         val replayed = graft.streaming.Streams.forceLastBatchReplay(ckpt)
-        val before = s.read.parquet(s"$sink/batch_id=$replayed").count()
+        val before = Tables.readParquet(s, s"$sink/batch_id=$replayed").count()
         val q2 = pipeline()
         graft.streaming.Streams.awaitTerminationAndUnregister(s, q2)
-        require(s.read.parquet(s"$sink/batch_id=$replayed").count()
+        require(Tables.readParquet(s, s"$sink/batch_id=$replayed").count()
             == before,
           s"replayed batch $replayed must overwrite to the same rows")
-        s.read.parquet(sink)
+        Tables.readParquet(s, sink)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"))
           .orderBy(col("event_id"))

@@ -35,7 +35,7 @@ object Evolution {
       canonical: StructType, idCol: String = "snapshot_id"): DataFrame = {
     require(paths.nonEmpty, "at least one snapshot path required")
     val frames = paths.map { case (snapId, path) =>
-      val raw = spark.read.parquet(path)
+      val raw = Tables.readParquet(spark, path)
       val have = raw.schema.fieldNames.toSet
       val cols = canonical.fields.map { f =>
         if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)

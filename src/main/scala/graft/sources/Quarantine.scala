@@ -61,12 +61,12 @@ object Quarantine {
     val root = java.nio.file.Paths.get("target", "ingest", name)
       .toAbsolutePath.toString
     parsed.write.mode(SaveMode.Overwrite).parquet(s"$root/parsed")
-    val back = spark.read.parquet(s"$root/parsed")
+    val back = Tables.readParquet(spark, s"$root/parsed")
     back.filter(col(CorruptCol).isNotNull)
       .select(col(CorruptCol).as("raw"),
         reason(col(CorruptCol)).as("reason"))
       .write.mode(SaveMode.Overwrite).parquet(s"$root/quarantine")
     (back.filter(col(CorruptCol).isNull).drop(CorruptCol),
-      spark.read.parquet(s"$root/quarantine"))
+      Tables.readParquet(spark, s"$root/quarantine"))
   }
 }

@@ -62,13 +62,47 @@ object Tables {
     * (state deltas and snapshots) replaces the existing target.
     * Hadoop caches one `file:` file system per JVM and user, so a JVM
     * gets this one when its first `file:` access comes from a session
-    * built with these confs. */
+    * built with these confs.
+    *
+    * `codegen.cache.maxEntries` sizes the JVM-wide LRU cache of the
+    * classes Janino compiles for whole-stage codegen, projections and
+    * predicates. The product reruns the same passes, and a pass asks
+    * for its classes in the same order every time: an LRU cache
+    * smaller than that cycle evicts each class just before the pass
+    * asks for it again, so it hits 0 times and every warm pass
+    * recompiles everything, at about 30 ms a class. Spark's default
+    * holds 100 in 4 segments of 25 that evict on their own, so even a
+    * pass of fewer than 100 classes misses. Measured at 1024 with the
+    * setting below (4 cores, perfbench inputs of seed 3): a
+    * `worldcup_elt` pass compiles 118 classes cold and 0 in each of 13
+    * warm passes, a `corpus_pipeline` pass 72 cold and 0 in each of 5;
+    * at Spark's defaults each warm pass recompiled 80 and 61. 1024
+    * holds either pass 8 times over. It does not hold the whole
+    * catalog: one `graft.Verify` run over all 211 entries at sf0.01
+    * has 2,529 distinct classes and compiles 2,667 at 1024. The cache
+    * is a static SQL conf: Spark builds it once per JVM, on the first
+    * codegen, from the session active then, so an embedder must set it
+    * when building the session, as for `fs.file.impl`.
+    *
+    * `codegen.useIdInClassName` off names every whole-stage class
+    * `GeneratedIterator` instead of suffixing its stage id. The cache
+    * is keyed by source text, and AQE numbers the pipelines of a query
+    * as it re-plans, in the order its query stages finish, so the
+    * same pipeline came back under another id, as a new class, in
+    * some runs: the PK/FK check of a validated load compiled 2 to 4
+    * classes again in 3 of 13 warm `worldcup_elt` passes. Without the
+    * id the same pipeline is the same class, and pipelines that
+    * differ only in their id share one class in a cold pass too. A
+    * stack trace then shows `GeneratedIterator` where it showed the
+    * stage number. */
   val sessionConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.streaming.checkpointFileManagerClass" ->
       ("org.apache.spark.sql.execution.streaming.checkpointing." +
         "FileSystemBasedCheckpointFileManager"),
-    "spark.hadoop.fs.file.impl" -> classOf[ForklessLocalFileSystem].getName)
+    "spark.hadoop.fs.file.impl" -> classOf[ForklessLocalFileSystem].getName,
+    "spark.sql.codegen.cache.maxEntries" -> "1024",
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   /** Apply [[sessionConfs]] to a session builder — the one-liner every
     * entry point (and an embedder) uses at session build time. */
@@ -95,16 +129,19 @@ object Tables {
   /** The visible `*.parquet` data files of a table path in name
     * order: the path itself when it is a file (a local fixture), else
     * the part files of its directory (a table at scale, a scratch
-    * table). */
+    * table) and of its `k=v` partition directories; none when the path
+    * does not exist. */
   private[graft] def parquetFiles(spark: SparkSession, p: String): Seq[FileStatus] = {
     val hp = new HPath(p)
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = fs.getFileStatus(hp)
-    if (!st.isDirectory) Seq(st)
-    else fs.listStatus(hp).toSeq.filter { f =>
-      val n = f.getPath.getName
-      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-    }.sortBy(_.getPath.getName)
+    def under(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.getName).filter { f =>
+        val n = f.getPath.getName
+        !n.startsWith(".") && !n.startsWith("_") &&
+          (if (f.isDirectory) n.contains("=") else n.endsWith(".parquet"))
+      }.flatMap(under)
+    if (fs.exists(hp)) under(fs.getFileStatus(hp)) else Nil
   }
 
   /** One parquet file's schema as `spark.read.parquet` infers it (the
@@ -152,9 +189,16 @@ object Tables {
       throw new IllegalStateException(s"no parquet file under $p")))
 
   /** `spark.read.parquet(p)` without its schema-inference job: the
-    * schema is read from the first data file's footer ([[footer]]). */
+    * data columns are read from the first data file's footer
+    * ([[footer]]); Spark still discovers the partition columns of a
+    * `k=v` layout from the directory names. A path with no data file
+    * to read (missing, or an empty directory) is left to
+    * `spark.read.parquet`, so it fails with Spark's own error. */
   def readParquet(spark: SparkSession, p: String): DataFrame =
-    spark.read.schema(tableFooter(spark, p)._1).parquet(p)
+    parquetFiles(spark, p).headOption match {
+      case Some(f) => spark.read.schema(footer(spark, f)._1).parquet(p)
+      case None => spark.read.parquet(p)
+    }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = path(dir, name)
