@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Relational
-import graft.sources.Tables
+import graft.sources.{Locations, Tables}
 
 /** The product's catalog surface — the analog of the reference's DuckDB
   * database lifecycle (SURVEY.md §2.1 S5-S9 and §2.6 Q1-Q3):
@@ -185,17 +185,10 @@ object Warehouse {
   def refreshInformationSchema(spark: SparkSession): Unit =
     schemaDoc(spark).createOrReplaceTempView("information_schema_columns")
 
-  /** Absolute dir of the most recent [[exportDatabase]] call — the
-    * late-bound-oracle stash for s16, whose DuckDB oracle reads the
-    * exported parquet files themselves (path known only at run time). */
-  val lastExportDir =
-    new java.util.concurrent.atomic.AtomicReference[Option[String]](None)
-
   /** S8: whole-database export — every registered table to
     * `outDir/<name>.parquet` plus `outDir/schema.sql`. */
   def exportDatabase(spark: SparkSession, outDir: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
-    lastExportDir.set(Some(Paths.get(outDir).toAbsolutePath.toString))
     val tables = registry.keys.toSeq.sorted
     tables.foreach { t =>
       spark.table(t).write.mode("overwrite").parquet(s"$outDir/$t.parquet")
@@ -278,10 +271,7 @@ object Warehouse {
     // even though the fresh catalog has no such table: drop any
     // registration AND clear the stale location first.
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    Locations.warehouse(spark, table)
     df.write.mode("overwrite")
       .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
@@ -301,13 +291,10 @@ object Warehouse {
   def savePartitioned(df: DataFrame, dirName: String,
       partCols: Seq[String]): String = {
     val spark = df.sparkSession
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), dirName)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    val loc = Locations.warehouse(spark, dirName)
     df.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(loc.toString)
-    loc.toString
+      .parquet(loc)
+    loc
   }
 
   /** Write `df` under the warehouse dir in the given file `format`
@@ -317,12 +304,9 @@ object Warehouse {
     * exposes PushedFilters either way). */
   def saveFormat(df: DataFrame, dirName: String, format: String): String = {
     val spark = df.sparkSession
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), dirName)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
-    df.write.mode("overwrite").format(format).save(loc.toString)
-    loc.toString
+    val loc = Locations.warehouse(spark, dirName)
+    df.write.mode("overwrite").format(format).save(loc)
+    loc
   }
 
   /** Per-column data profile — the analog of DuckDB's SUMMARIZE

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Locations, Tables}
 
 /** Multi-dimensional data layout: Z-order (Morton-curve) clustering,
   * the standard lakehouse answer to "this table is filtered on TWO
@@ -82,16 +82,13 @@ object Layout {
       s"bits=$bits truncates keys needing $needed bits " +
         s"(max($colX), max($colY)) = $maxes — z-cells would collide " +
         "and clustering silently degrade; pass bits=0 to auto-derive")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), dirName)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    val loc = Locations.warehouse(spark, dirName)
     df.withColumn("__z", zValue(col(colX), col(colY), useBits))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-      .write.mode("overwrite").parquet(loc.toString)
-    loc.toString
+      .write.mode("overwrite").parquet(loc)
+    loc
   }
 
   /** Compact a fragmented parquet directory into ~`targetRowsPerFile`
@@ -114,14 +111,11 @@ object Layout {
     val n = df.count()
     val nFiles = math.max(1L,
       (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), dirName)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    val loc = Locations.warehouse(spark, dirName)
     df.repartitionByRange(nFiles, col(sortCol))
       .sortWithinPartitions(col(sortCol))
-      .write.mode("overwrite").parquet(loc.toString)
-    loc.toString
+      .write.mode("overwrite").parquet(loc)
+    loc
   }
 
   /** Deterministic GLOBAL SHUFFLE + sharded write — the layout step
@@ -158,17 +152,14 @@ object Layout {
     require(nFiles >= 0, s"nFiles must be >= 0, got $nFiles")
     val files = if (nFiles == 0) nShards else nFiles
     val spark = df.sparkSession
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), dirName)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    val loc = Locations.warehouse(spark, dirName)
     df.withColumn("shuffle_key", graft.functions.HashFunctions.md5Hash60(
         concat(col(idCol).cast("string"), lit("|"), lit(salt))))
       .withColumn("shard", (col("shuffle_key") % nShards).cast("int"))
       .repartitionByRange(files, col("shard"), col("shuffle_key"))
       .sortWithinPartitions(col("shard"), col("shuffle_key"))
-      .write.mode("overwrite").partitionBy("shard").parquet(loc.toString)
-    loc.toString
+      .write.mode("overwrite").partitionBy("shard").parquet(loc)
+    loc
   }
 
   /** Parquet bloom-filter layout for needle-in-100 TB point lookups.
@@ -192,10 +183,7 @@ object Layout {
       blockBytes: Long = 1L << 20): String = {
     require(nFiles > 0, s"nFiles must be positive, got $nFiles")
     val spark = df.sparkSession
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), dirName)
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    val loc = Locations.warehouse(spark, dirName)
     val w = df.repartition(nFiles, col(keyCol))
       .write.mode("overwrite")
       .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
@@ -209,8 +197,8 @@ object Layout {
     (if (expectedNdv > 0)
        w.option(s"parquet.bloom.filter.expected.ndv#$keyCol",
          expectedNdv.toString)
-     else w).parquet(loc.toString)
-    loc.toString
+     else w).parquet(loc)
+    loc
   }
 
   /** Row-group skip evidence for a point lookup over a

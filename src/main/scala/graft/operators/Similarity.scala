@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import graft.sources.Tables
+import graft.sources.{Locations, Tables}
 
 /** Similarity search over an `array<float>` embedding column.
   *
@@ -1196,12 +1196,13 @@ object Similarity {
   // as the trainers themselves.
 
   private def indexRoot(spark: org.apache.spark.sql.SparkSession,
-      name: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), s"ann_index/$name")
+      name: String): String =
+    s"${Locations.warehouseRoot(spark)}/${indexName(name)}"
+
+  private def indexName(name: String): String = s"ann_index/$name"
 
   private def writeManifest(spark: org.apache.spark.sql.SparkSession,
-      root: org.apache.hadoop.fs.Path,
+      root: String,
       entries: Map[String, String]): Unit = {
     import spark.implicits._
     entries.toSeq.sortBy(_._1).toDF("key", "value")
@@ -1210,7 +1211,7 @@ object Similarity {
   }
 
   private def readManifest(spark: org.apache.spark.sql.SparkSession,
-      root: org.apache.hadoop.fs.Path): Map[String, String] =
+      root: String): Map[String, String] =
     Tables.readParquet(spark, s"$root/manifest").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
 
@@ -1224,9 +1225,7 @@ object Similarity {
       manifest: Map[String, String] = Map.empty): String = {
     import spark.implicits._
     require(centroids.nonEmpty, "cannot persist an empty index")
-    val root = indexRoot(spark, name)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(root, true)
+    val root = Locations.warehouse(spark, indexName(name))
     centroids.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }
       .toDF("cell", "vec").repartition(1)
       .write.mode("overwrite").parquet(s"$root/centroids")
@@ -1234,7 +1233,7 @@ object Similarity {
       "kind" -> "ivf",
       "n_cells" -> centroids.length.toString,
       "dim" -> centroids.head.length.toString))
-    root.toString
+    root
   }
 
   /** Load a [[saveIvfIndex]] index: (centroids, manifest), validated
@@ -1268,9 +1267,7 @@ object Similarity {
     import spark.implicits._
     require(books.nonEmpty && books.head.nonEmpty,
       "cannot persist an empty codebook")
-    val root = indexRoot(spark, name)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(root, true)
+    val root = Locations.warehouse(spark, indexName(name))
     (for {
       s <- books.indices
       j <- books(s).indices
@@ -1282,7 +1279,7 @@ object Similarity {
       "m" -> books.length.toString,
       "ksub" -> books.head.length.toString,
       "sub_dim" -> books.head.head.length.toString))
-    root.toString
+    root
   }
 
   /** Load a [[savePqIndex]] index: (codebooks, manifest), validated. */

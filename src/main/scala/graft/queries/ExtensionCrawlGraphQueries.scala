@@ -12,7 +12,7 @@ import graft.functions.SketchFunctions
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{Corpus, Dedup, LanguageModel, Layout, Relational, Retrieval, Sampling, Similarity, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{Locations, Tables}
 
 /** link-graph centrality (PageRank/HITS + converged), URL canon, PSL, robots, WET ingest, paragraph dedup, DSIR/UniMax, bitext mining, FIM/span corruption, calibration, retrieval eval, corpus-build pipeline — a CONTIGUOUS, ORDER-PRESERVING slice of the
   * extension catalog (r15 split of the 6.2k-line ExtensionQueries;
@@ -562,8 +562,8 @@ private[queries] object ExtensionCrawlGraphQueries {
         "write, framing, split, or byte-slicing diverges the hash",
       (s, dir) => {
         import graft.sources.Warc
-        val path = sys.props.getOrElse("graft.wet.tmp",
-          s"/tmp/graft_wet_docs_${new java.io.File(dir).getName}")
+        val path = Locations.run(s,
+          s"wet_docs_${new java.io.File(dir).getName}")
         val id = col("doc_id").cast("string")
         val fixture = t(s, dir, "documents").select(
           concat(lit("https://s"), id, lit(".example.test/d")).as("uri"),
@@ -1079,16 +1079,15 @@ private[queries] object ExtensionCrawlGraphQueries {
         "the stream, re-deriving every field from documents",
       (s, dir) => {
         import graft.sources.Warc
-        val path = sys.props.getOrElse("graft.wet.stream.tmp",
-          s"/tmp/graft_wet_stream_${new java.io.File(dir).getName}")
         val id = col("doc_id").cast("string")
         val fixture = t(s, dir, "documents").select(
           concat(lit("https://s"), id, lit(".example.test/d")).as("uri"),
           concat(lit("2024-01-0"), (col("doc_id") % 9 + 1).cast("string"),
             lit("T00:00:00Z")).as("dt"),
           concat(col("text"), lit(" — café №"), id).as("text"))
-        wetFixtureOnce(path) {
-          Warc.writeWet(fixture.repartition(8), path, "uri", "dt", "text")
+        val path = wetFixtureOnce(s,
+            s"wet_stream_${new java.io.File(dir).getName}") { p =>
+          Warc.writeWet(fixture.repartition(8), p, "uri", "dt", "text")
         }
         val parsed = Warc
           .readWetStream(s, path, maxFilesPerTrigger = Some(2))
@@ -1096,8 +1095,8 @@ private[queries] object ExtensionCrawlGraphQueries {
             md5(col("text")).as("text_md5"), col("frame_ok"))
         val out = graft.streaming.Streams.runAvailableNowToDir(
           s, parsed, "x81_out", statePartitions = Some(8))
-        val commits = java.nio.file.Paths.get("target", "stream_gate",
-          "x81_out", "ckpt", "commits")
+        val commits = java.nio.file.Paths.get(
+          graft.streaming.Streams.gateCheckpoint(s, "x81_out"), "commits")
         val nBatches = java.nio.file.Files.list(commits)
           .filter(p => !p.getFileName.toString.startsWith("."))
           .count()
@@ -1678,8 +1677,6 @@ private[queries] object ExtensionCrawlGraphQueries {
       (s, dir) => {
         import graft.sources.Warc
         import graft.operators.Packing
-        val path = sys.props.getOrElse("graft.x90.wet.tmp",
-          s"/tmp/graft_x90_wet_${new java.io.File(dir).getName}")
         val id = col("doc_id").cast("string")
         // boilerplate carrying invisible chars (zero-width space,
         // soft hyphen, BOM) that scrub must remove BEFORE dedup keys
@@ -1697,8 +1694,9 @@ private[queries] object ExtensionCrawlGraphQueries {
             lit("T00:00:00Z")).as("dt"),
           raw.as("text"))
         val nDocs = t(s, dir, "documents").count()
-        wetFixtureOnce(path) {
-          Warc.writeWet(fixture.repartition(4), path, "uri", "dt", "text")
+        val path = wetFixtureOnce(s,
+            s"x90_wet_${new java.io.File(dir).getName}") { p =>
+          Warc.writeWet(fixture.repartition(4), p, "uri", "dt", "text")
         }
         // stage 1: WET ingest — framing must be byte-exact. Each
         // stage's audit scalars ride the stage's scratch write via

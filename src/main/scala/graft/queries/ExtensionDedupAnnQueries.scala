@@ -466,13 +466,10 @@ private[queries] object ExtensionDedupAnnQueries {
 
     QuerySpec("x11_fingerprint",
       "document fingerprints: md5-normalized + custom rolling-hash Expression",
-      (s, dir) => {
-        graft.functions.Register.rollingHash(s)
-        t(s, dir, "documents")
-          .select(col("doc_id"), md5Fingerprint(col("text")).as("md5_fp"),
-            expr("rolling_hash(substr(text, 1, 64))").as("rh64"))
-          .orderBy(col("doc_id"))
-      },
+      (s, dir) => t(s, dir, "documents")
+        .select(col("doc_id"), md5Fingerprint(col("text")).as("md5_fp"),
+          expr("rolling_hash(substr(text, 1, 64))").as("rh64"))
+        .orderBy(col("doc_id")),
       Some("""SELECT doc_id,
              |  md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS md5_fp,
              |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(

@@ -12,7 +12,7 @@ import graft.functions.SketchFunctions
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{Corpus, Dedup, LanguageModel, Layout, Relational, Retrieval, Sampling, Similarity, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{Locations, Tables}
 
 /** warehouse export/evolution storage, mojibake/NFC repair, HLL/CMS/KLL sketches, PMI, JL prefilter, weighted sampling, BPE learning — a CONTIGUOUS, ORDER-PRESERVING slice of the
   * extension catalog (r15 split of the 6.2k-line ExtensionQueries;
@@ -20,6 +20,11 @@ import graft.sources.Tables
   * ExtensionQueries.specs). */
 private[queries] object ExtensionSketchQueries {
   import ExtensionSupport._
+
+  /** The dir s16's last run exported to, for its late-bound oracle:
+    * DuckDB reads the exported parquet files themselves, after the
+    * run's JVM may have exited (so a warehouse, not a run, location). */
+  @volatile private var s16Export: Option[String] = None
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("s16_export_import_roundtrip",
@@ -39,9 +44,9 @@ private[queries] object ExtensionSketchQueries {
           TableMeta("nation", pk = Seq("n_nationkey"),
             fks = Seq(FkEdge(Seq("n_regionkey"), "region",
               Seq("r_regionkey")))))
-        val out = java.nio.file.Paths.get("target/warehouse_export_s16")
-          .toAbsolutePath.toString
+        val out = localPath(Locations.warehouse(s, "export_s16"))
         Warehouse.exportDatabase(s, out)
+        s16Export = Some(out)
         Warehouse.clear()
         val imported = Warehouse.importDatabase(s, out, validate = true)
         require(imported.sorted == Seq("nation", "region"),
@@ -60,7 +65,7 @@ private[queries] object ExtensionSketchQueries {
           .orderBy(col("r_name"))
       },
       None,
-      oracleGen = () => Warehouse.lastExportDir.get.map { d =>
+      oracleGen = () => s16Export.map { d =>
         s"""SELECT r.r_name, CAST(count(*) AS BIGINT) AS n_nations,
            |  CAST(sum(n.n_nationkey) AS BIGINT) AS sum_key
            |FROM read_parquet('$d/nation.parquet/*.parquet') n
@@ -168,8 +173,7 @@ private[queries] object ExtensionSketchQueries {
             lit("\", \"nc\": "), nc, lit("}")))
           .otherwise(concat(lit("{\"doc_id\": "), id,
             lit(", \"nc\": "), nc, lit("}")))
-        val fixDir = java.nio.file.Paths.get("target", "ingest",
-          "s19_fixture").toAbsolutePath.toString
+        val fixDir = Locations.run(s, "ingest/s19_fixture")
         t(s, dir, "documents").select(line.as("value"))
           .write.mode("overwrite").text(fixDir)
         val schema = new StructType()

@@ -12,7 +12,7 @@ import graft.functions.SketchFunctions
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{Corpus, Dedup, LanguageModel, Layout, Relational, Retrieval, Sampling, Similarity, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{Locations, Tables}
 
 /** storage layout (bucketing, SCD2, JSONL, pruning), multimodal, BM25/RRF retrieval, perplexity, PQ/ADC ANN recall family — a CONTIGUOUS, ORDER-PRESERVING slice of the
   * extension catalog (r15 split of the 6.2k-line ExtensionQueries;
@@ -20,6 +20,11 @@ import graft.sources.Tables
   * ExtensionQueries.specs). */
 private[queries] object ExtensionStorageRetrievalQueries {
   import ExtensionSupport._
+
+  /** The dir s11's last run wrote its JSONL to, for its late-bound
+    * oracle: DuckDB reads the very same part files, after the run's JVM
+    * may have exited (so a warehouse, not a run, location). */
+  @volatile private var s11RoundTrip: Option[String] = None
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("s10_bucketed_colocated_join",
@@ -189,11 +194,11 @@ private[queries] object ExtensionStorageRetrievalQueries {
       (s, dir) => {
         // per-scale path so a later different-sf run can never leave
         // files a re-checked oracle would silently mis-validate
-        val path = sys.props.getOrElse("graft.jsonl.tmp",
-          s"/tmp/graft_jsonl_docs_${new java.io.File(dir).getName}")
+        val path = localPath(Locations.warehouse(s,
+          s"jsonl_docs_${new java.io.File(dir).getName}"))
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         graft.sources.Jsonl.write(docs, path)
-        graft.sources.Jsonl.lastRoundTripPath = Some(path)
+        s11RoundTrip = Some(path)
         val schema = new StructType()
           .add("doc_id", LongType).add("text", StringType)
         graft.sources.Jsonl.read(s, path, schema)
@@ -202,7 +207,7 @@ private[queries] object ExtensionStorageRetrievalQueries {
           .orderBy(col("doc_id"))
       },
       None,
-      oracleGen = () => graft.sources.Jsonl.lastRoundTripPath.map(p =>
+      oracleGen = () => s11RoundTrip.map(p =>
         s"""SELECT doc_id, md5(text) AS text_md5,
            |       CAST(length(text) AS BIGINT) AS n_chars
            |FROM read_json('$p/part-*',

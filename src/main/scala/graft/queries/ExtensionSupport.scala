@@ -12,14 +12,14 @@ import graft.functions.SketchFunctions
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{Corpus, Dedup, Graph, LanguageModel, Layout, Relational, Retrieval, Sampling, Similarity, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{Locations, Tables}
 
 /** Shared helpers and fixtures of the extension-catalog slice files —
   * scratch-table lifecycle, trained-ANN memoization, DuckDB twin
   * fragments (quality metrics, language-ID chains, cluster CTEs) and
   * per-entry fixture constants. Split out of the single-file
   * ExtensionQueries in r15; one object so session-scoped state
-  * (scratch cleanup hooks, the ANN train memo) stays a single
+  * (the WET fixture memo, the ANN train memo) stays a single
   * instance across the slices.
   */
 private[queries] object ExtensionSupport {
@@ -28,9 +28,10 @@ private[queries] object ExtensionSupport {
 
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 
-  /** Materialize an intermediate to a parquet scratch table under
-    * target/ and read it back — the entry-level answer to "this
-    * subtree feeds N consumers, including the RETURNED plan". A
+  /** Materialize an intermediate to a parquet scratch table in a run
+    * location ([[Locations.run]]) and read it back — the entry-level
+    * answer to "this subtree feeds N consumers, including the RETURNED
+    * plan". A
     * persist() released in the builder dies before the harness
     * executes the returned frame (the r12 x70 recompute finding),
     * and one left unreleased leaks across a 186-entry suite; a
@@ -40,21 +41,18 @@ private[queries] object ExtensionSupport {
     * intermediates (set indexes, pair tables, token frames) are
     * artifacts, not lineage. */
   def scratch(df: DataFrame, name: String): DataFrame = {
-    // namespaced by the Spark application id: two concurrent graft
-    // JVMs (a CatalogSpec sweep beside a Verify dump, at possibly
-    // DIFFERENT SFs) would otherwise overwrite each other's table
-    // mid-read — FileNotFound at best, the other run's SF data in a
-    // hash gate at worst. The per-app dir is reclaimed at JVM exit by
-    // a shutdown hook (at the 100 TB analog these are temp tables an
-    // orphan sweep would otherwise have to find), with total scratch
-    // bytes logged so the artifact cost is a measured line item.
-    val appDir = java.nio.file.Paths.get("target", "scratch",
-      df.sparkSession.sparkContext.applicationId).toAbsolutePath
-    registerCleanup(appDir)
-    val dir = appDir.resolve(name).toString
+    // a run location: two concurrent graft JVMs (a CatalogSpec sweep
+    // beside a Verify dump, at possibly DIFFERENT SFs) never read each
+    // other's table, and the bytes are reclaimed and logged at JVM exit
+    val dir = Locations.run(df.sparkSession, s"scratch/$name")
     df.write.mode("overwrite").parquet(dir)
     Tables.readParquet(df.sparkSession, dir)
   }
+
+  /** The file-system path of a local location, for DuckDB and
+    * `java.nio`: a warehouse location carries the `file:` scheme. */
+  def localPath(loc: String): String =
+    new org.apache.hadoop.fs.Path(loc).toUri.getPath
 
   /** Read LONG metrics off an Observation whose frame went through
     * [[scratch]] (the write is the completing action) — the audit
@@ -82,32 +80,6 @@ private[queries] object ExtensionSupport {
   /** A LONG sum that reads 0 over no rows, for [[observedLongs]]. */
   def sum0(c: Column): Column = coalesce(sum(c).cast("long"), lit(0L))
 
-  /** One shutdown hook per app-scratch dir: deletes the dir at JVM
-    * exit and logs its final size. Registered lazily on first use so
-    * runs that never scratch pay nothing. */
-  val cleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-
-  def registerCleanup(appDir: java.nio.file.Path): Unit =
-    if (cleanupRegistered.add(appDir))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(appDir)) {
-          val files = java.nio.file.Files.walk(appDir)
-            .sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.toSeq
-          val bytes = files.map(p =>
-            try { if (java.nio.file.Files.isRegularFile(p))
-              java.nio.file.Files.size(p) else 0L }
-            catch { case _: java.io.IOException => 0L }).sum
-          files.foreach(p =>
-            try java.nio.file.Files.deleteIfExists(p)
-            catch { case _: java.io.IOException => () })
-          // stdout, not a logger: hooks run after log4j may have shut down
-          println(s"[graft-scratch] reclaimed $appDir ($bytes bytes)")
-        }
-      }, s"graft-scratch-cleanup"))
-
   /** Clean form of the x58 mojibake-fixture suffix (é ñ ü ö — all
     * Latin-1-representable, so one mis-decode step is exactly
     * invertible); the corrupted twin is DERIVED from it via the same
@@ -128,18 +100,19 @@ private[queries] object ExtensionSupport {
       NFC_CLEAN_SUFFIX, java.text.Normalizer.Form.NFD) + " \u212B\u2126"
 
   /** Per-JVM memo of deterministic WET fixture dumps (x81/x90): the
-    * dump is a pure function of the SF dir (its path is SF-namespaced),
-    * so re-writing it on every builder invocation — Bench calls each
-    * entry 3× per JVM — bills pure fixture IO to the timed region
-    * two extra times (the r15 verdict's per-entry-floor item). First
-    * call per path writes (mode=overwrite, so a stale cross-JVM dump
-    * at the same /tmp path is still replaced exactly as before);
-    * subsequent calls in the same JVM reuse the bytes on disk.
+    * dump is a pure function of the SF dir (its `name` is
+    * SF-namespaced), so re-writing it on every builder invocation —
+    * Bench calls each entry 3× per JVM — bills pure fixture IO to the
+    * timed region two extra times (the r15 verdict's per-entry-floor
+    * item). The first call per (application, `name`) empties the run
+    * location `name` ([[Locations.run]]) and has `write` fill it; later
+    * calls in the same JVM reuse the bytes on disk and never empty it.
+    * Every call returns the location.
     *
-    * The memo is a per-path future claimed with putIfAbsent — NOT a
+    * The memo is a per-name future claimed with putIfAbsent — NOT a
     * computeIfAbsent whose mapping function runs the Spark write:
     * computeIfAbsent holds the map's bin lock for the write's whole
-    * duration, so a concurrent call on a DIFFERENT path hashing to
+    * duration, so a concurrent call on a DIFFERENT name hashing to
     * the same bin would block behind a multi-second job, and any
     * re-entrant call from inside the write closure would deadlock.
     * Here the winner runs the write OUTSIDE any map lock and
@@ -148,18 +121,22 @@ private[queries] object ExtensionSupport {
     * FAILED write retracts its claim so a later call can retry
     * instead of memoizing the failure. */
   private val wetFixtureMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[java.lang.Boolean]]()
+    String, java.util.concurrent.CompletableFuture[String]]()
 
-  def wetFixtureOnce(path: String)(write: => Unit): Unit = {
-    val mine = new java.util.concurrent.CompletableFuture[java.lang.Boolean]()
-    val prev = wetFixtureMemo.putIfAbsent(path, mine)
+  def wetFixtureOnce(s: SparkSession, name: String)(
+      write: String => Unit): String = {
+    val key = s"${s.sparkContext.applicationId}/$name"
+    val mine = new java.util.concurrent.CompletableFuture[String]()
+    val prev = wetFixtureMemo.putIfAbsent(key, mine)
     if (prev == null) {
       try {
-        write
-        mine.complete(true)
+        val path = Locations.run(s, name)
+        write(path)
+        mine.complete(path)
+        path
       } catch {
         case t: Throwable =>
-          wetFixtureMemo.remove(path, mine)
+          wetFixtureMemo.remove(key, mine)
           mine.completeExceptionally(t)
           throw t
       }

@@ -12,7 +12,7 @@ import graft.functions.SketchFunctions
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{Corpus, Dedup, LanguageModel, Layout, Relational, Retrieval, Sampling, Similarity, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{Locations, Tables}
 
 /** HTML extract, char entropy, anchor text, prefix-filter join, vocab coverage, ANN index persistence, Structured Streaming family (x47-x54) — a CONTIGUOUS, ORDER-PRESERVING slice of the
   * extension catalog (r15 split of the 6.2k-line ExtensionQueries;
@@ -781,19 +781,8 @@ private[queries] object ExtensionWebStreamQueries {
         "overwrite)",
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
-        val sink = java.nio.file.Paths.get("target/x54_sink")
-          .toAbsolutePath.toString
-        val ckpt = java.nio.file.Paths.get("target/x54_ckpt")
-          .toAbsolutePath.toString
-        def rmTree(root: String): Unit = {
-          val p = java.nio.file.Paths.get(root)
-          if (java.nio.file.Files.exists(p)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(p).iterator().asScala.toSeq
-              .reverse.foreach(java.nio.file.Files.delete)
-          }
-        }
-        rmTree(sink); rmTree(ckpt)
+        val root = Locations.run(s, "x54")
+        val (sink, ckpt) = (s"$root/sink", s"$root/ckpt")
         def pipeline() = graft.streaming.Streams.idempotentParquetSink(
           Tables.loadStream(s, dir, "events")
             .select(col("event_id"), col("ts"), col("user_id"),

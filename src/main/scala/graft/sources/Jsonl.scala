@@ -27,12 +27,6 @@ object Jsonl {
     base.json(path)
   }
 
-  /** Path of the most recent catalog round-trip write, stashed so the
-    * late-bound oracle (QuerySpec.oracleGen) reads the exact files the
-    * run wrote — never a hardcoded path that a sys-prop override or a
-    * different-scale run could desynchronize. */
-  @volatile var lastRoundTripPath: Option[String] = None
-
   /** Write as uncompressed JSONL part files (one JSON object per
     * line), the layout every downstream tokenizer pipeline accepts. */
   def write(df: DataFrame, path: String): Unit =

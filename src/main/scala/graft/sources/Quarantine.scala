@@ -47,19 +47,18 @@ object Quarantine {
   def csvReason(raw: Column): Column = lit("malformed_row")
 
   /** Split a PERMISSIVE-parsed frame (must carry [[CorruptCol]]) into
-    * (clean, quarantine): materializes the parse under
-    * `target/ingest/<name>/parsed`, writes the quarantine table
-    * (raw line + reason) under `.../quarantine`, and returns both
-    * sides READ BACK from the written files — the gate checks the
-    * tables an operator would actually hand downstream, not the
-    * in-memory plan. */
+    * (clean, quarantine): materializes the parse under the run
+    * location `ingest/<name>` ([[Locations.run]]) as `parsed`, writes
+    * the quarantine table (raw line + reason) as `quarantine`, and
+    * returns both sides READ BACK from the written files — the gate
+    * checks the tables an operator would actually hand downstream, not
+    * the in-memory plan. */
   def ingest(spark: SparkSession, parsed: DataFrame, name: String,
       reason: Column => Column = jsonReason): (DataFrame, DataFrame) = {
     require(parsed.columns.contains(CorruptCol),
       s"ingest expects a PERMISSIVE parse carrying $CorruptCol " +
         "(read with keepCorrupt = true)")
-    val root = java.nio.file.Paths.get("target", "ingest", name)
-      .toAbsolutePath.toString
+    val root = Locations.run(spark, s"ingest/$name")
     parsed.write.mode(SaveMode.Overwrite).parquet(s"$root/parsed")
     val back = Tables.readParquet(spark, s"$root/parsed")
     back.filter(col(CorruptCol).isNotNull)

@@ -94,7 +94,11 @@ object Tables {
     * id the same pipeline is the same class, and pipelines that
     * differ only in their id share one class in a cold pass too. A
     * stack trace then shows `GeneratedIterator` where it showed the
-    * stage number. */
+    * stage number.
+    *
+    * `spark.sql.extensions` installs graft's Catalyst functions
+    * (`rolling_hash`, `array_dot`, `top_bigram_frac`, `top_k_pairs`)
+    * once per session through [[graft.functions.GraftExtensions]]. */
   val sessionConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.streaming.checkpointFileManagerClass" ->
@@ -102,7 +106,8 @@ object Tables {
         "FileSystemBasedCheckpointFileManager"),
     "spark.hadoop.fs.file.impl" -> classOf[ForklessLocalFileSystem].getName,
     "spark.sql.codegen.cache.maxEntries" -> "1024",
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName)
 
   /** Apply [[sessionConfs]] to a session builder — the one-liner every
     * entry point (and an embedder) uses at session build time. */

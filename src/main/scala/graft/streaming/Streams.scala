@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.Locations
+
 /** Structured Streaming surface over the `events` table shape.
   *
   * The reference has no streaming (SURVEY.md §2.7); this is the
@@ -425,12 +427,25 @@ object Streams {
     }
   }
 
+  /** The checkpoint of the latest gate run named `queryName`
+    * ([[runAvailableNowToDir]], [[runAvailableNowToDirComplete]]). */
+  def gateCheckpoint(spark: SparkSession, queryName: String): String =
+    s"${Locations.runRoot(spark)}/${gate(queryName)}/ckpt"
+
+  private def gate(queryName: String): String = s"stream_gate/$queryName"
+
+  /** The sink and checkpoint dirs of gate run `queryName`, under its
+    * run location, emptied so every invocation reprocesses the full
+    * fixture, like the memory-sink form. */
+  private def freshGate(spark: SparkSession,
+      queryName: String): (String, String) =
+    (s"${Locations.run(spark, gate(queryName))}/out",
+      gateCheckpoint(spark, queryName))
+
   /** Append-mode gate run with a PARQUET sink + read-back instead of
-    * the memory sink: the emitted rows land in
-    * `target/stream_gate/<queryName>` (wiped per call so every
-    * invocation reprocesses the full fixture, like the memory-sink
-    * form) and the returned frame READS that directory — so no emitted
-    * row ever crosses the driver, retiring the
+    * the memory sink: the emitted rows land in the gate's run location
+    * ([[freshGate]]) and the returned frame READS that directory — so
+    * no emitted row ever crosses the driver, retiring the
     * spark.driver.maxResultSize ceiling the memory sink hits at sf10
     * (SCALE.md, ~9.5M rows ≈ >1 GiB serialized). Use this for every
     * append-mode gate; the memory sink remains only where COMPLETE
@@ -440,17 +455,7 @@ object Streams {
   def runAvailableNowToDir(spark: SparkSession, streaming: DataFrame,
       queryName: String, statePartitions: Option[Int] = None)
       : DataFrame = {
-    val root = java.nio.file.Paths.get("target", "stream_gate", queryName)
-      .toAbsolutePath
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .reverse.foreach(java.nio.file.Files.delete)
-      }
-    rmTree(root)
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
+    val (out, ckpt) = freshGate(spark, queryName)
     withStreamConfs(spark, streaming, statePartitions) {
       val q: StreamingQuery = streaming.writeStream
         .outputMode("append")
@@ -482,17 +487,7 @@ object Streams {
   def runAvailableNowToDirComplete(spark: SparkSession,
       streaming: DataFrame, queryName: String,
       statePartitions: Option[Int] = None): DataFrame = {
-    val root = java.nio.file.Paths.get("target", "stream_gate", queryName)
-      .toAbsolutePath
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .reverse.foreach(java.nio.file.Files.delete)
-      }
-    rmTree(root)
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
+    val (out, ckpt) = freshGate(spark, queryName)
     withStreamConfs(spark, streaming, statePartitions) {
       val q: StreamingQuery = streaming.writeStream
         .outputMode("complete")
@@ -507,7 +502,7 @@ object Streams {
       // an empty source runs ZERO micro-batches, so foreachBatch never
       // fires and `out` is never created — mirror the append sink's
       // contract (empty frame, right columns) instead of throwing
-      if (!java.nio.file.Files.exists(root.resolve("out")))
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           streaming.schema).write.parquet(out)
       spark.read.schema(streaming.schema).parquet(out)

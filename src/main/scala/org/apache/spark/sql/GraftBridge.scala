@@ -2,22 +2,13 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Minimal bridge into `private[sql]` Spark internals: registering an
-  * expression builder in the session's function registry (so it is
-  * usable from SQL text and `expr(...)`), wrapping a raw `Expression`
-  * as a user-facing `Column` and back, a bounded wait on an
+/** Minimal bridge into `private[sql]` Spark internals: wrapping a raw
+  * `Expression` as a user-facing `Column` and back, a bounded wait on an
   * Observation, wrapping an analyzed plan as a DataFrame, capping a
   * checkpoint's carried size estimate, the cache manager's session, and
   * a nullable copy of a schema.
   */
 object GraftBridge {
-
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-  }
 
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)

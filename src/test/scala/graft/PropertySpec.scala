@@ -185,7 +185,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("rolling_hash equals the scala fold model for arbitrary ASCII") {
-    graft.functions.Register.rollingHash(spark)
     def model(s: String): Long =
       s.getBytes("UTF-8").foldLeft(0L)((h, b) => (h * 131 + (b & 0xff)) % 2147483647L)
     forAll(Gen.listOf(Gen.asciiPrintableChar).map(_.mkString), minSuccessful(20)) {

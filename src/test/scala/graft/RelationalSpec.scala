@@ -57,14 +57,12 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("array_dot is SQL-callable after registration") {
-    graft.functions.Register.all(spark)
     val got = spark.sql("SELECT array_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) v")
       .as[Double].head()
     assert(got == 11.0)
   }
 
   test("top_k_pairs is SQL-callable as an aggregate") {
-    graft.functions.Register.all(spark)
     Seq((0.1, 1L), (0.9, 2L), (0.5, 3L)).toDF("score", "id")
       .createOrReplaceTempView("scored_t")
     val got = spark.sql(

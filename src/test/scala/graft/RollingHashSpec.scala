@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Register
-
 class RollingHashSpec extends SparkSpec {
   import spark.implicits._
 
@@ -11,21 +9,18 @@ class RollingHashSpec extends SparkSpec {
     s.getBytes("UTF-8").foldLeft(0L)((h, b) => (h * 131 + (b & 0xff)) % 2147483647L)
 
   test("rolling_hash matches the reference fold (interpreted + codegen)") {
-    Register.rollingHash(spark)
     val inputs = Seq("", "a", "abc", "the quick brown fox", "x" * 500)
     val got = inputs.toDF("s").select(expr("rolling_hash(s)")).as[Long].collect()
     assert(got.toSeq == inputs.map(reference))
   }
 
   test("rolling_hash propagates NULL") {
-    Register.rollingHash(spark)
     val got = Seq(Option.empty[String], Some("a")).toDF("s")
       .select(expr("rolling_hash(s)")).as[Option[Long]].collect()
     assert(got(0).isEmpty && got(1).contains(reference("a")))
   }
 
   test("rolling_hash participates in whole-stage codegen") {
-    Register.rollingHash(spark)
     // a literal Seq collapses to LocalTableScan (no codegen stage), so
     // drive the expression from a range source
     val df = spark.range(3)

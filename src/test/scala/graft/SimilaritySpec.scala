@@ -105,7 +105,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("top_k_pairs as a running window keeps earlier candidates " +
       "(eval must not drain the shared buffer)") {
-    graft.functions.Register.all(spark)
     Seq((1, 0.9, 1L), (1, 0.5, 2L), (1, 0.7, 3L)).toDF("g", "score", "id")
       .createOrReplaceTempView("topk_w_t")
     val got = spark.sql(

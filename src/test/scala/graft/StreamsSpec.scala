@@ -413,7 +413,7 @@ class StreamsSpec extends SparkSpec {
       "of their batch twins") {
     import graft.queries.Catalog
     def commits(query: String): Long = java.nio.file.Files.list(
-        java.nio.file.Paths.get("target", "stream_gate", query, "ckpt",
+        java.nio.file.Paths.get(Streams.gateCheckpoint(spark, query),
           "commits"))
       .filter(p => !p.getFileName.toString.startsWith(".")).count()
     val events = Tables.load(spark, sf(), "events")
@@ -451,7 +451,7 @@ class StreamsSpec extends SparkSpec {
     rows.write.parquet(src)
     val stream = spark.readStream.schema(rows.schema).parquet(src)
     def commits(query: String): Long = java.nio.file.Files.list(
-        java.nio.file.Paths.get("target", "stream_gate", query, "ckpt",
+        java.nio.file.Paths.get(Streams.gateCheckpoint(spark, query),
           "commits"))
       .filter(p => !p.getFileName.toString.startsWith(".")).count()
 

@@ -9,7 +9,7 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import org.apache.spark.TestJobs
 
 /** The fixture-memo contract behind the benched WET entries
-  * (x81/x90): exactly ONE write per (JVM, path), and no caller may
+  * (x81/x90): exactly ONE write per (application, name), and no caller may
   * proceed before that write has fully completed — a check-then-act
   * race here would hand a concurrent caller a half-written dump. */
 class ExtensionSupportSpec extends graft.SparkSpec {
@@ -18,45 +18,47 @@ class ExtensionSupportSpec extends graft.SparkSpec {
       "exactly one write, and every caller observes it complete") {
     val writes = new AtomicInteger(0)
     @volatile var completed = false
-    val path = s"memo-test-${System.nanoTime()}"
+    val name = s"memo-test-${System.nanoTime()}"
     val callers = (1 to 8).map { _ =>
       Future {
-        ExtensionSupport.wetFixtureOnce(path) {
+        val path = ExtensionSupport.wetFixtureOnce(spark, name) { _ =>
           writes.incrementAndGet()
           Thread.sleep(100) // widen the window a naive race would hit
           completed = true
         }
-        // duplicate callers await the winner's per-path future — so
+        // duplicate callers await the winner's per-name future — so
         // by the time ANY caller gets here the write must be complete
         assert(completed, "caller proceeded before the write finished")
+        path
       }
     }
-    Await.result(Future.sequence(callers), 1.minute)
+    val paths = Await.result(Future.sequence(callers), 1.minute)
     assert(writes.get() == 1, s"expected exactly one write, got ${writes.get()}")
-    // a later caller on the same path still skips
-    ExtensionSupport.wetFixtureOnce(path) { writes.incrementAndGet() }
+    assert(paths.toSet == Set(s"${graft.sources.Locations.runRoot(spark)}/$name"))
+    // a later caller on the same name still skips
+    ExtensionSupport.wetFixtureOnce(spark, name) { _ => writes.incrementAndGet() }
     assert(writes.get() == 1)
-    // a DIFFERENT path writes independently
+    // a DIFFERENT name writes independently
     var other = 0
-    ExtensionSupport.wetFixtureOnce(path + "-b") { other += 1 }
+    ExtensionSupport.wetFixtureOnce(spark, name + "-b") { _ => other += 1 }
     assert(other == 1)
   }
 
   test("wetFixtureOnce: a failed write retracts its claim — the next " +
       "caller retries instead of memoizing the failure") {
-    val path = s"memo-fail-${System.nanoTime()}"
+    val name = s"memo-fail-${System.nanoTime()}"
     val writes = new AtomicInteger(0)
     val boom = intercept[RuntimeException] {
-      ExtensionSupport.wetFixtureOnce(path) {
+      ExtensionSupport.wetFixtureOnce(spark, name) { _ =>
         writes.incrementAndGet()
         throw new RuntimeException("disk full")
       }
     }
     assert(boom.getMessage == "disk full")
-    ExtensionSupport.wetFixtureOnce(path) { writes.incrementAndGet() }
+    ExtensionSupport.wetFixtureOnce(spark, name) { _ => writes.incrementAndGet() }
     assert(writes.get() == 2, "second caller must re-run the write")
     // and the successful retry is memoized as usual
-    ExtensionSupport.wetFixtureOnce(path) { writes.incrementAndGet() }
+    ExtensionSupport.wetFixtureOnce(spark, name) { _ => writes.incrementAndGet() }
     assert(writes.get() == 2)
   }
 

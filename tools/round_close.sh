@@ -10,7 +10,9 @@
 #   2. GRAFT_CATALOG_SF=sf0.01 CatalogSpec  (boundary sweep at gate SF)
 #   3. Verify @ sf0.01 + check_oracle       (the driver's t2 replica;
 #                                            Verify itself exits nonzero
-#                                            on a boundary violation)
+#                                            on a boundary violation, and
+#                                            must leave no directory in
+#                                            target/run/)
 #   4. Smoke                                (the driver's t1 replica)
 set -u
 cd "$(dirname "$0")/.."
@@ -43,6 +45,9 @@ rm -rf "$LOG/verify"
 sbt -batch "runMain graft.Verify $SF_DIR $LOG/verify" \
   >"$LOG/verify.log" 2>&1
 G3V=$?
+# every graft JVM removes its run root (target/run/<applicationId>)
+# at exit; a directory still there after Verify has exited leaked
+RUN_LEFT=$(find target/run -mindepth 1 -maxdepth 1 -type d 2>/dev/null | wc -l)
 python3 tools/check_oracle.py "$SF_DIR" "$LOG/verify" \
   >"$LOG/oracle.log" 2>&1
 G3O=$?
@@ -55,7 +60,7 @@ N_ORACLE=$(python3 -c "import json; \
 # consistency: every declared oracle must be a PASS — a pass count
 # below the declared count means an entry errored or hash-failed
 if [ "$G3V" -ne 0 ] || [ "$G3O" -ne 0 ] || [ "${O_FAIL:-1}" != "0" ] \
-   || [ "${O_PASS:-x}" != "$N_ORACLE" ]; then FAIL=1; fi
+   || [ "${O_PASS:-x}" != "$N_ORACLE" ] || [ "$RUN_LEFT" -ne 0 ]; then FAIL=1; fi
 
 # ---- gate 4: flagship smoke ---------------------------------------
 sbt -batch "runMain graft.Smoke" >"$LOG/smoke.log" 2>&1
@@ -68,7 +73,7 @@ S_ROWS=$(sed -nE 's/.*rows = ([0-9]+).*/\1/p' <<<"$S_LINE")
 note "==================== round_close summary ===================="
 note "gate 1 sbt test:      exit=$G1 succeeded=${T_OK:-?} failed=${T_FAIL:-?}"
 note "gate 2 CatalogSpec:   exit=$G2 succeeded=${C_OK:-?} failed=${C_FAIL:-?} (GRAFT_CATALOG_SF=sf0.01)"
-note "gate 3 Verify+oracle: verify_exit=$G3V oracle_exit=$G3O pass=${O_PASS:-?}/${N_ORACLE} fail=${O_FAIL:-?}"
+note "gate 3 Verify+oracle: verify_exit=$G3V oracle_exit=$G3O pass=${O_PASS:-?}/${N_ORACLE} fail=${O_FAIL:-?} run_dirs_left=$RUN_LEFT"
 note "gate 4 Smoke:         exit=$G4 entry_rows=${S_ROWS:-?}"
 if [ "$FAIL" -eq 0 ]; then
   note "VERDICT: ALL GATES GREEN"
