@@ -1,6 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** `SPARK_GRAFT_BENCH_RUNS`, the runs per entry of [[Bench]] and
+    * [[JobCount]]: a positive int, 3 when unset. */
+  private[graft] def runsPerEntry(): Int =
+    sys.env.get("SPARK_GRAFT_BENCH_RUNS")
+      .map(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_BENCH_RUNS must be a positive int, got '$v'")))
+      .getOrElse(3)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -8,8 +17,7 @@ object Bench {
     // 82-125 s same-day), so each query runs `runs` times and the
     // reported figure is the MEDIAN; `spread` (max-min) is emitted
     // per query so a noisy run is visible instead of alarming.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
+    val runs = runsPerEntry()
     val spark = graft.sources.Tables.localSession(cpus)
     // Warm the JVM/codegen/parquet-reader infrastructure once so the
     // first timed query doesn't absorb one-time setup cost.

@@ -4,9 +4,9 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Dev tool: run selected catalog queries `GRAFT_BENCH_RUNS` times each
-  * (default 3, noop sink) with a listener attached that counts every
-  * Spark job. Per entry it prints
+/** Dev tool: run selected catalog queries `SPARK_GRAFT_BENCH_RUNS`
+  * times each (default 3, noop sink) with a listener attached that
+  * counts every Spark job. Per entry it prints
   *
   *  - one `[job]` line per job of the FIRST run — id, duration and the
   *    graft frame that launched it ([[site]]);
@@ -19,11 +19,13 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *    and job count. The first run is cold (JVM warm-up, per-JVM
   *    training memos); read warm timings from the later runs;
   *  - `[compiles] <name>: c1 c2 …` — the classes Janino compiled in
-  *    each run. Spark caches compiled classes JVM-wide, so a warm run
-  *    that compiles more than 0 means either the JVM's working set has
-  *    outgrown `spark.sql.codegen.cache.maxEntries`
-  *    ([[graft.sources.Tables.sessionConfs]]) or the entry generates
-  *    code that differs from run to run.
+  *    each run. Spark caches compiled classes JVM-wide, keyed by
+  *    class loader and source, so a warm run that compiles more than 0
+  *    means the JVM's working set has outgrown
+  *    `spark.sql.codegen.cache.maxEntries`, the entry generates code
+  *    that differs from run to run, or it runs on a session clone with
+  *    its own class loader (`spark.sql.artifact.isolation.enabled`;
+  *    both confs in [[graft.sources.Tables.sessionConfs]]).
   *
   * The evidence tool for changes whose effect is JOB STRUCTURE rather
   * than final-plan shape (convergence-loop materializations, audit
@@ -44,11 +46,7 @@ object JobCount {
     // entries at 8 vs 32 cores, sf1) can use this tool directly
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // deep-scale rehearsals (sf10, minutes per run) dial this down
-    val runs = sys.env.get("GRAFT_BENCH_RUNS")
-      .map(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
-        throw new IllegalArgumentException(
-          s"GRAFT_BENCH_RUNS must be a positive int, got '$v'")))
-      .getOrElse(3)
+    val runs = Bench.runsPerEntry()
     val spark = graft.sources.Tables.localSession(cpus)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$dir/region.parquet").count()

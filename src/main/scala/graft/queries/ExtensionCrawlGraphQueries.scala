@@ -1094,7 +1094,7 @@ private[queries] object ExtensionCrawlGraphQueries {
           .select(col("uri"), col("content_length"),
             md5(col("text")).as("text_md5"), col("frame_ok"))
         val out = graft.streaming.Streams.runAvailableNowToDir(
-          s, parsed, "x81_out", statePartitions = Some(8))
+          s, parsed, "x81_out")
         val commits = java.nio.file.Paths.get(
           graft.streaming.Streams.gateCheckpoint(s, "x81_out"), "commits")
         val nBatches = java.nio.file.Files.list(commits)

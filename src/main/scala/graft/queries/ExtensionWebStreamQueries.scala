@@ -607,7 +607,7 @@ private[queries] object ExtensionWebStreamQueries {
             Seq("user_id", "event_type"), watermarkCol = "ts",
             delay = "365 days")
           .select(col("user_id"), col("event_type"))
-        graft.streaming.Streams.runAvailableNowToDir(s, deduped, "x47_out", statePartitions = Some(8))
+        graft.streaming.Streams.runAvailableNowToDir(s, deduped, "x47_out")
           .orderBy(col("user_id"), col("event_type"))
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events
@@ -624,7 +624,7 @@ private[queries] object ExtensionWebStreamQueries {
         val joined = graft.streaming.Streams.streamingIntervalSelfJoin(
           stream, keyCol = "user_id", idCol = "event_id", tsCol = "ts",
           delay = "1 hour", withinSec = 600L)
-        graft.streaming.Streams.runAvailableNowToDir(s, joined, "x48_out", statePartitions = Some(8))
+        graft.streaming.Streams.runAvailableNowToDir(s, joined, "x48_out")
           .orderBy(col("id_a"), col("id_b"))
       },
       Some("""SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b
@@ -646,7 +646,7 @@ private[queries] object ExtensionWebStreamQueries {
           .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
         val enriched = graft.streaming.Streams.enrichWithDim(
           stream, dim, Seq("user_id"))
-        graft.streaming.Streams.runAvailableNowToDir(s, enriched, "x49_out", statePartitions = Some(8))
+        graft.streaming.Streams.runAvailableNowToDir(s, enriched, "x49_out")
           .orderBy(col("event_id"))
       },
       Some("""SELECT e.event_id, e.user_id, c.c_mktsegment
@@ -675,7 +675,7 @@ private[queries] object ExtensionWebStreamQueries {
               col("text"), lnP, -4.5), 6))
           .filter(col("h_r") <= lit(4.05))
           .select(col("doc_id"), col("h_r"))
-        graft.streaming.Streams.runAvailableNowToDir(s, gated, "x50_out", statePartitions = Some(8))
+        graft.streaming.Streams.runAvailableNowToDir(s, gated, "x50_out")
           .orderBy(col("doc_id"))
       },
       Some("""WITH d AS (
@@ -714,8 +714,8 @@ private[queries] object ExtensionWebStreamQueries {
         val sessions = graft.streaming.Streams.streamingSessionize(
           stream, keyCol = "user_id", tsCol = "ts", valueCol = "value2",
           gap = "1800 seconds")
-        graft.streaming.Streams.runAvailableNowToDirComplete(s,
-            sessions, "x52_out", statePartitions = Some(8))
+        graft.streaming.Streams.runAvailableNowToDir(s,
+            sessions, "x52_out", complete = true)
           .withColumn("sum_value", col("sum_value").cast("double"))
           .orderBy(col("user_id"), col("session_start"))
       },
@@ -755,8 +755,7 @@ private[queries] object ExtensionWebStreamQueries {
           .filter(col("doc_id") >= 250)
         val screened = Dedup.incrementalExactNew(stream, "text", hist)
           .select(col("doc_id"))
-        graft.streaming.Streams.runAvailableNowToDir(s, screened, "x53_out",
-            statePartitions = Some(8))
+        graft.streaming.Streams.runAvailableNowToDir(s, screened, "x53_out")
           .orderBy(col("doc_id"))
       },
       Some("""WITH fp AS (

@@ -75,8 +75,11 @@ object Tables {
     * pass of fewer than 100 classes misses. Measured at 1024 with the
     * setting below (4 cores, perfbench inputs of seed 3): a
     * `worldcup_elt` pass compiles 118 classes cold and 0 in each of 13
-    * warm passes, a `corpus_pipeline` pass 72 cold and 0 in each of 5;
-    * at Spark's defaults each warm pass recompiled 80 and 61. 1024
+    * warm passes; at Spark's defaults each warm pass recompiled 80.
+    * The same measurement gave a `corpus_pipeline` pass 72 cold and 0
+    * warm, but it was taken in a spark-shell; in a plain JVM the
+    * streaming x48 recompiled 15 classes in every warm pass until
+    * artifact isolation was turned off (below). 1024
     * holds either pass 8 times over. It does not hold the whole
     * catalog: one `graft.Verify` run over all 211 entries at sf0.01
     * has 2,529 distinct classes and compiles 2,667 at 1024. The cache
@@ -96,6 +99,20 @@ object Tables {
     * stack trace then shows `GeneratedIterator` where it showed the
     * stage number.
     *
+    * `artifact.isolation.enabled` off keeps every session clone on
+    * the session's own class loader. The codegen cache is keyed by
+    * (context class loader, source text), and with isolation on (the
+    * default) each clone gets its own executor class loader for the
+    * artifacts added to it. Every streaming query runs on a clone of
+    * its session, so a streaming run compiled again, under a new
+    * loader, the classes the previous run of the same plan had
+    * compiled: at sf0.01, 4 cores, the warm runs of x47, x48, x49,
+    * x50, x52, x53, x54 and x81 compiled 7, 15, 2, 3, 19, 6, 4 and 2
+    * classes each, and 0 with isolation off. graft adds no artifacts
+    * to a session, so nothing needs the isolation. The conf is read
+    * when a session is created, so an embedder sets it when building
+    * the session.
+    *
     * `spark.sql.extensions` installs graft's Catalyst functions
     * (`rolling_hash`, `array_dot`, `top_bigram_frac`, `top_k_pairs`)
     * once per session through [[graft.functions.GraftExtensions]]. */
@@ -107,6 +124,7 @@ object Tables {
     "spark.hadoop.fs.file.impl" -> classOf[ForklessLocalFileSystem].getName,
     "spark.sql.codegen.cache.maxEntries" -> "1024",
     "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName)
 
   /** Apply [[sessionConfs]] to a session builder — the one-liner every

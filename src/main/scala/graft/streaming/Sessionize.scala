@@ -2,46 +2,24 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
-/** User sessionization with an inactivity gap — batch and streaming
-  * forms of the same semantics.
+/** User sessionization with an inactivity gap, batch forms. The
+  * streaming form is the native `session_window` aggregate,
+  * [[Streams.streamingSessionize]], hash-gated against these (x52).
   *
-  * Batch: two window passes (lag → boundary flags → running sum), one
-  * shuffle on user_id; the per-user window never materializes the whole
-  * user's history beyond the sort — scales to arbitrary users since
+  * Two window passes (lag → boundary flags → running sum), one shuffle
+  * on user_id; the per-user window never materializes the whole user's
+  * history beyond the sort — scales to arbitrary users since
   * partitioning is by user_id, not global.
-  *
-  * Streaming: `flatMapGroupsWithState` with event-time timeout — the
-  * canonical bounded-state form: state per active user is O(1)
-  * (current session aggregate only), sessions emit when the watermark
-  * passes the gap.
   */
 object Sessionize {
 
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
       value: Double)
-  final case class SessionAgg(user_id: Long, session_start: Timestamp,
-      session_end: Timestamp, n_events: Long, sum_value: Double)
-  /** start/end are MICROSECONDS since epoch — the same precision the
-    * batch twin compares at, so the two forms split identically. */
-  final case class SessionState(start: Long, end: Long, n: Long, sum: Double)
-
-  /** Floor-based conversions so pre-epoch timestamps (negative
-    * getTime with always-positive getNanos) round toward -inf like
-    * Spark's unix_micros, keeping batch and streaming aligned. */
-  private def micros(t: Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  private def toTimestamp(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
 
   /** Batch sessionization; deterministic total order (ts, event_id)
     * inside each user. `gapSeconds` of inactivity closes a session.
@@ -175,61 +153,5 @@ object Sessionize {
     sessionAgg(flagged.join(seamed, Seq("user_id", "__bkt"))
       .withColumn("sess_id",
         (col("__off") + col("__first_new") + col("__cum_in")).cast("long")))
-  }
-
-  /** Streaming sessionization over a watermarked Event stream. Emits a
-    * session when the user's event-time timeout (gap) fires.
-    *
-    * Scale note: cross-trigger state per active user is O(1) (the
-    * current session aggregate only), but WITHIN a micro-batch one
-    * user's events are buffered and sorted in the task
-    * (`batch.toSeq.sortBy` — flatMapGroupsWithState hands an unsorted
-    * iterator, and the gap split needs time order). The per-task
-    * bound is therefore one key's PER-TRIGGER volume, the streaming
-    * analogue of [[batchSessionsSharded]]'s per-bucket bound: a
-    * bot-grade key is capped by trigger interval, not by history.
-    * For replay/backfill of a bot-heavy archive, run the batch
-    * sharded form instead of replaying years through the stream. */
-  def streamingSessions(events: Dataset[Event], gapSeconds: Long): Dataset[SessionAgg] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", s"$gapSeconds seconds")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionAgg](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessionState]) =>
-          if (batch.isEmpty && state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionAgg(userId, toTimestamp(s.start),
-              toTimestamp(s.end), s.n, s.sum))
-          } else {
-            val events = batch.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-            var st = state.getOption.orNull
-            val closed = Seq.newBuilder[SessionAgg]
-            events.foreach { e =>
-              val t = micros(e.ts)
-              if (st == null) st = SessionState(t, t, 1, e.value)
-              else if (t - st.end > gapSeconds * 1000000L) {
-                closed += SessionAgg(userId, toTimestamp(st.start),
-                  toTimestamp(st.end), st.n, st.sum)
-                st = SessionState(t, t, 1, e.value)
-              } else
-                // late-but-within-watermark events may precede the
-                // session's current start: lower it, like the batch
-                // twin's global per-user sort does
-                st = SessionState(math.min(st.start, t), math.max(st.end, t),
-                  st.n + 1, st.sum + e.value)
-            }
-            if (st != null) {
-              state.update(st)
-              // event-time timeout is millisecond-granular: round UP so
-              // the timeout never fires early of the micro-exact gap
-              state.setTimeoutTimestamp(
-                (st.end + gapSeconds * 1000000L + 999L) / 1000L)
-            }
-            closed.result().iterator
-          }
-      }
   }
 }

@@ -186,7 +186,7 @@ object Streams {
     batch.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
 
   /** Executed physical plan of the LAST micro-batch each
-    * [[runAvailableNow]] query ran, keyed by query name. Lets tests
+    * [[runAvailableNowToDir]] query ran, keyed by query name. Lets tests
     * hard-gate the STREAMING plan shape directly (e.g. "no shuffle
     * below the stream-side anti-join") instead of inferring it from a
     * batch twin whose planner path can differ. Holds only the most
@@ -197,162 +197,27 @@ object Streams {
   def lastExecutedPlan(queryName: String): Option[SparkPlan] =
     Option(lastPlans.get(queryName))
 
-  /** State-partition override from the environment — the
-    * scale-rehearsal knob: catalog entries pin the fixture-scale value
-    * (8), and a deep-scale run (SCALE.md) resizes state without
-    * editing every entry. Unset in normal operation. The value is
-    * VALIDATED (a malformed export fails with an actionable message,
-    * not a NumberFormatException mid-harness) and its activation is
-    * LOGGED, because it silently changes every gate run's state sizing
-    * otherwise. The variable is `SPARK_GRAFT_STATE_PARTITIONS` (the
-    * SPARK_GRAFT_ prefix every other rehearsal knob uses). */
-  private[graft] def statePartitionsOverride(): Option[Int] =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map { v =>
-      val parsed = v.trim.toIntOption.filter(_ > 0).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, " +
-            s"got '$v'"))
-      Console.err.println(s"[graft] SPARK_GRAFT_STATE_PARTITIONS=$parsed " +
-        "overrides statePartitions for this run")
-      parsed
-    }
-
-  /** Spark's bundled RocksDB state store provider — the scale-safe
-    * alternative to the default heap-backed provider: state lives in
-    * native memory + local disk instead of competing with task memory
-    * in executor heap, which is what a 100 TB/day in-band key set
-    * (dedup digests, join buffers, open sessions) needs. One conf,
-    * same checkpoints-per-partition layout, same results (rehearsed:
-    * SCALE.md "RocksDB state store rehearsal"). */
-  val RocksDbProvider: String =
-    "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider"
-
-  /** The default heap-backed provider. */
-  val HeapProvider: String =
-    "org.apache.spark.sql.execution.streaming.state." +
-      "HDFSBackedStateStoreProvider"
-
-  /** Shape of a streaming operator's keyed state, the axis the
-    * measured provider costs split on (SCALE.md "RocksDB state store
-    * rehearsal"): aggregation-shaped state (dedup digests, windowed
-    * aggs, sessions — one store access per key per batch) runs at
-    * parity or better under RocksDB, while join-shaped state (the
-    * symmetric-hash stream-stream join — 4 stores touched per input
-    * row, point lookups both sides) pays ~4× through JNI. */
-  sealed trait StateShape
-  case object AggregationState extends StateShape
-  case object JoinState extends StateShape
-
-  /** The provider-choice rule, mechanized from the sf10 A/B
-    * measurements (SCALE.md r11/r12; prose in TUNING.md "Streaming
-    * state"): heap while the projected state comfortably fits the
-    * executor heap, RocksDB once it rivals task memory — with the
-    * switch point per state SHAPE:
-    *
-    *   - aggregation: switch at 2% of heap. RocksDB is wall-parity
-    *     here (sf10: 17.6 s vs heap's 20.7 s), so the insurance is
-    *     ~free and the threshold only guards against paying RocksDB's
-    *     fixed overhead on trivially small state (x48-scale gates:
-    *     5.4 s vs 3.4 s).
-    *   - join: switch at 10% of heap. The ~4× JNI wall is real and
-    *     tuning does not remove it, so heap is kept until the state
-    *     actually threatens executor survival — the same arithmetic
-    *     that OOMed x19 at sf10/32g (state ≥ ~13% of heap shared
-    *     with 32 concurrent tasks).
-    *
-    * `projectedStateBytes` is the caller's estimate for THIS query
-    * (peak `stateOperators.memoryUsedBytes` from a rehearsal, or
-    * rows × bytes/row arithmetic); `executorHeapBytes` defaults to
-    * this JVM's -Xmx. */
-  def chooseStateStoreProvider(shape: StateShape,
-      projectedStateBytes: Long,
-      executorHeapBytes: Long = Runtime.getRuntime.maxMemory): String = {
-    require(projectedStateBytes >= 0 && executorHeapBytes > 0,
-      "state and heap sizes must be non-negative / positive")
-    val threshold = shape match {
-      case AggregationState => 0.02
-      case JoinState        => 0.10
-    }
-    if (projectedStateBytes > executorHeapBytes * threshold)
-      RocksDbProvider
-    else HeapProvider
-  }
-
-  /** Apply [[chooseStateStoreProvider]] to the session (logged), for
-    * stream queries planned after this call. Returns the chosen
-    * class. An explicit SPARK_GRAFT_STATE_STORE override still wins
-    * at gate-run time ([[withStreamConfs]] applies it last). */
-  def applyStateStore(spark: SparkSession, shape: StateShape,
-      projectedStateBytes: Long,
-      executorHeapBytes: Long = Runtime.getRuntime.maxMemory): String = {
-    val cls = chooseStateStoreProvider(shape, projectedStateBytes,
-      executorHeapBytes)
-    Console.err.println(s"[graft] applyStateStore($shape, " +
-      s"state=${projectedStateBytes / (1024 * 1024)}MB, " +
-      s"heap=${executorHeapBytes / (1024 * 1024)}MB) -> $cls")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-    cls
-  }
-
-  /** Bounded-memory + changelog-checkpoint RocksDB settings (the r12
-    * tuning rehearsal, SCALE.md): caps the TOTAL RocksDB native
-    * footprint per executor (block cache + memtables share one
-    * budget — unbounded, each of the join's 4 stores × partitions
-    * sizes itself independently), and replaces full-snapshot uploads
-    * with changelog files at commit (the snapshot moves to the
-    * background maintenance thread). Session-level confs: set before
-    * the stream starts. */
-  def rocksDbTuningConfs(maxMemoryMB: Long,
-      writeBufferRatio: Double = 0.5,
-      highPriorityPoolRatio: Double = 0.1,
-      changelogCheckpointing: Boolean = true): Map[String, String] = {
-    require(maxMemoryMB > 0, s"maxMemoryMB must be positive")
-    val p = "spark.sql.streaming.stateStore.rocksdb."
-    Map(
-      s"${p}boundedMemoryUsage" -> "true",
-      s"${p}maxMemoryUsageMB" -> maxMemoryMB.toString,
-      s"${p}writeBufferCacheRatio" -> writeBufferRatio.toString,
-      s"${p}highPriorityPoolRatio" -> highPriorityPoolRatio.toString,
-      s"${p}changelogCheckpointing.enabled" ->
-        changelogCheckpointing.toString)
-  }
-
-  /** State-store provider override from the environment:
-    * SPARK_GRAFT_STATE_STORE=rocksdb routes every [[runAvailableNow]] /
-    * [[runAvailableNowToDir]] gate run through [[RocksDbProvider]];
-    * =hdfs pins the default heap-backed provider; unset inherits the
-    * session. Validated + logged like [[statePartitionsOverride]]. */
-  private[graft] def stateStoreProviderOverride(): Option[String] =
-    sys.env.get("SPARK_GRAFT_STATE_STORE").map { v =>
-      val cls = v.trim.toLowerCase match {
-        case "rocksdb" => RocksDbProvider
-        case "hdfs" | "heap" | "default" => HeapProvider
-        case other => throw new IllegalArgumentException(
-          "SPARK_GRAFT_STATE_STORE must be rocksdb|hdfs, got " +
-            s"'$other'")
-      }
-      Console.err.println(
-        s"[graft] SPARK_GRAFT_STATE_STORE=$v selects $cls")
-      cls
-    }
+  /** The shuffle partitions of every gate run, and therefore its number
+    * of state store instances, which is STICKY for the checkpoint's
+    * lifetime and pure fixed overhead when oversized: at the fixture
+    * scale, 32 stores made the stream-stream join ~2.5× slower than 8
+    * (r9 measurement, ~9 s vs ~4 s) with identical output, and 4 was a
+    * wash against 8 (TUNING.md "Streaming state"). The state store
+    * provider is the session's: a deployment that needs RocksDB sets
+    * `spark.sql.streaming.stateStore.providerClass` on its session. */
+  val StatePartitions: Int = 8
 
   /** Set the streaming-scoped confs for the duration of `body`,
-    * restoring the previous values after: shuffle partitions (= state
-    * store count), the state store provider, and no no-data micro-batch
-    * where [[lastBatchOnlyEvicts]] holds for `streaming`. All three are
-    * read when the query starts, so the temporary setting cannot affect
-    * batch plans in flight. */
-  private def withStreamConfs[A](spark: SparkSession, streaming: DataFrame,
-      statePartitions: Option[Int])(body: => A): A = {
-    val confs = Seq(
-      statePartitionsOverride().orElse(statePartitions)
-        .map("spark.sql.shuffle.partitions" -> _.toString),
-      stateStoreProviderOverride()
-        .map("spark.sql.streaming.stateStore.providerClass" -> _),
-      Some("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-        .filter(_ => lastBatchOnlyEvicts(streaming.queryExecution.analyzed))
-    ).flatten
+    * restoring the previous values after: [[StatePartitions]] shuffle
+    * partitions, and no no-data micro-batch where [[lastBatchOnlyEvicts]]
+    * holds for `streaming`. Both are read when the query starts, so the
+    * temporary setting cannot affect batch plans in flight. */
+  private def withStreamConfs[A](spark: SparkSession,
+      streaming: DataFrame)(body: => A): A = {
+    val confs =
+      Seq("spark.sql.shuffle.partitions" -> StatePartitions.toString) ++
+        Some("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+          .filter(_ => lastBatchOnlyEvicts(streaming.queryExecution.analyzed))
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -381,54 +246,7 @@ object Streams {
       case _ => false
     }
 
-  /** Run a streaming DataFrame over currently-available input with
-    * `Trigger.AvailableNow` and an APPEND-mode memory sink; returns the
-    * materialized result as a batch DataFrame once the query
-    * self-terminates. This is the transitive-oracle harness: a
-    * streaming plan run this way over a static fixture must equal its
-    * batch twin, and the batch twin has a DuckDB oracle — so the
-    * streaming operators get hash-gated without DuckDB ever needing to
-    * understand a stream. Append mode is what the stateful operators
-    * (dedup, stream-stream join) require; a fresh implicit temp
-    * checkpoint per call means every invocation reprocesses the full
-    * fixture (deterministic, re-runnable under the bench).
-    *
-    * `statePartitions` sizes the stateful operators' shuffle — and
-    * therefore the number of state store instances, which is STICKY
-    * for the checkpoint's lifetime and is pure fixed overhead when
-    * oversized: at the fixture scale, 32 stores made the
-    * stream-stream join ~2.5× slower than 8 (r9 measurement, ~9 s vs
-    * ~4 s) with identical output. Size it to stream volume on a real
-    * deployment; None inherits the session setting.
-    *
-    * A plan whose stateful nodes are all inner stream-stream joins or
-    * deduplications (x47, x48) runs without the no-data micro-batch
-    * that would follow its last data batch: that batch would only
-    * evict state the next run discards. Every other stateful plan (an
-    * aggregation, a session window, an outer or semi join, a
-    * `(flat)MapGroupsWithState`) keeps it, because it releases the
-    * rows the final watermark closes ([[lastBatchOnlyEvicts]]). The
-    * same holds for [[runAvailableNowToDir]] and
-    * [[runAvailableNowToDirComplete]]. */
-  def runAvailableNow(spark: SparkSession, streaming: DataFrame,
-      queryName: String, statePartitions: Option[Int] = None,
-      outputMode: String = "append"): DataFrame = {
-    spark.catalog.dropTempView(queryName)
-    withStreamConfs(spark, streaming, statePartitions) {
-      val q: StreamingQuery = streaming.writeStream
-        .outputMode(outputMode)
-        .format("memory")
-        .queryName(queryName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      stashLastPlan(queryName, q)
-      spark.table(queryName)
-    }
-  }
-
-  /** The checkpoint of the latest gate run named `queryName`
-    * ([[runAvailableNowToDir]], [[runAvailableNowToDirComplete]]). */
+  /** The checkpoint of the latest gate run named `queryName`. */
   def gateCheckpoint(spark: SparkSession, queryName: String): String =
     s"${Locations.runRoot(spark)}/${gate(queryName)}/ckpt"
 
@@ -436,75 +254,69 @@ object Streams {
 
   /** The sink and checkpoint dirs of gate run `queryName`, under its
     * run location, emptied so every invocation reprocesses the full
-    * fixture, like the memory-sink form. */
+    * fixture. The sink dir exists before the run: an empty source runs
+    * no micro-batch, and the read-back must still find a directory. */
   private def freshGate(spark: SparkSession,
-      queryName: String): (String, String) =
-    (s"${Locations.run(spark, gate(queryName))}/out",
-      gateCheckpoint(spark, queryName))
-
-  /** Append-mode gate run with a PARQUET sink + read-back instead of
-    * the memory sink: the emitted rows land in the gate's run location
-    * ([[freshGate]]) and the returned frame READS that directory — so
-    * no emitted row ever crosses the driver, retiring the
-    * spark.driver.maxResultSize ceiling the memory sink hits at sf10
-    * (SCALE.md, ~9.5M rows ≈ >1 GiB serialized). Use this for every
-    * append-mode gate; the memory sink remains only where COMPLETE
-    * mode is semantically required (the file sink is append-only by
-    * contract — complete-mode re-emission would duplicate rows in the
-    * directory). */
-  def runAvailableNowToDir(spark: SparkSession, streaming: DataFrame,
-      queryName: String, statePartitions: Option[Int] = None)
-      : DataFrame = {
-    val (out, ckpt) = freshGate(spark, queryName)
-    withStreamConfs(spark, streaming, statePartitions) {
-      val q: StreamingQuery = streaming.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      stashLastPlan(queryName, q)
-      // the streamed schema, not inference: an all-rows-filtered run
-      // must still return an EMPTY frame with the right columns
-      spark.read.schema(streaming.schema).parquet(out)
-    }
+      queryName: String): (String, String) = {
+    val out = s"${Locations.run(spark, gate(queryName))}/out"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+    (out, gateCheckpoint(spark, queryName))
   }
 
-  /** COMPLETE-mode gate run with a foreachBatch parquet sink instead
-    * of the memory sink: complete mode re-emits the FULL result every
-    * micro-batch, which an append-only file sink cannot express — but
-    * a whole-directory OVERWRITE per batch can, and under
-    * Trigger.AvailableNow the final directory state is exactly the
-    * final batch's full result. No emitted row crosses the driver, so
-    * the complete-mode gates survive result sets past
-    * spark.driver.maxResultSize (the sf10 sessionize ceiling,
-    * SCALE.md). Deployment note: this sink shape is for BOUNDED gate
-    * runs; an unbounded complete-mode stream rewrites its whole result
-    * every batch by definition — that cost is the mode's, not the
-    * sink's. */
-  def runAvailableNowToDirComplete(spark: SparkSession,
-      streaming: DataFrame, queryName: String,
-      statePartitions: Option[Int] = None): DataFrame = {
+  /** Run a streaming DataFrame over currently-available input with
+    * `Trigger.AvailableNow` and return what it emitted as a batch
+    * DataFrame once the query self-terminates. This is the
+    * transitive-oracle harness: a streaming plan run this way over a
+    * static fixture must equal its batch twin, and the batch twin has
+    * a DuckDB oracle — so the streaming operators get hash-gated
+    * without DuckDB ever needing to understand a stream. Every call
+    * starts from a fresh sink and checkpoint ([[freshGate]]), so it
+    * reprocesses the full fixture (deterministic, re-runnable under
+    * the bench), with [[StatePartitions]] state stores.
+    *
+    * The emitted rows land in parquet under the gate's run location
+    * and the returned frame READS that directory with the streamed
+    * schema, so no emitted row crosses the driver (a memory sink hits
+    * spark.driver.maxResultSize at sf10, SCALE.md: ~9.5M rows ≈
+    * >1 GiB serialized) and a run that emits nothing, or reads an
+    * empty source, returns an EMPTY frame with the right columns.
+    *
+    *  - Append mode (`complete = false`, what the stateful operators
+    *    — dedup, stream-stream join — require): the parquet file sink.
+    *  - Complete mode re-emits the FULL result every micro-batch, which
+    *    an append-only file sink cannot express (re-emission would
+    *    duplicate rows in the directory); a foreachBatch sink that
+    *    OVERWRITES the directory each batch can, and under
+    *    AvailableNow the final directory is exactly the final batch's
+    *    full result. This sink shape is for BOUNDED runs; an unbounded
+    *    complete-mode stream rewrites its whole result every batch by
+    *    definition — that cost is the mode's, not the sink's.
+    *
+    * A plan whose stateful nodes are all inner stream-stream joins or
+    * deduplications (x47, x48) runs without the no-data micro-batch
+    * that would follow its last data batch: that batch would only
+    * evict state the next run discards. Every other stateful plan (an
+    * aggregation, a session window, an outer or semi join, a
+    * `(flat)MapGroupsWithState`) keeps it, because it releases the
+    * rows the final watermark closes ([[lastBatchOnlyEvicts]]). */
+  def runAvailableNowToDir(spark: SparkSession, streaming: DataFrame,
+      queryName: String, complete: Boolean = false): DataFrame = {
     val (out, ckpt) = freshGate(spark, queryName)
-    withStreamConfs(spark, streaming, statePartitions) {
-      val q: StreamingQuery = streaming.writeStream
-        .outputMode("complete")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
+    withStreamConfs(spark, streaming) {
+      val w = streaming.writeStream
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q: StreamingQuery =
+        if (complete)
+          w.outputMode("complete")
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              batch.write.mode("overwrite").parquet(out)
+            }
+            .start()
+        else
+          w.outputMode("append").format("parquet").option("path", out).start()
       q.awaitTermination()
       stashLastPlan(queryName, q)
-      // an empty source runs ZERO micro-batches, so foreachBatch never
-      // fires and `out` is never created — mirror the append sink's
-      // contract (empty frame, right columns) instead of throwing
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          streaming.schema).write.parquet(out)
       spark.read.schema(streaming.schema).parquet(out)
     }
   }
@@ -516,18 +328,4 @@ object Streams {
           .foreach(e => lastPlans.put(queryName, e.executedPlan))
       case _ => ()
     }
-
-  /** Run a streaming DataFrame to completion against currently-available
-    * files via the in-memory sink; returns the materialized result. */
-  def runToMemorySink(spark: SparkSession, streaming: DataFrame,
-      queryName: String): DataFrame = {
-    val q: StreamingQuery = streaming.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
 }

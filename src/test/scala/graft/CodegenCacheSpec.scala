@@ -7,12 +7,16 @@ import org.apache.spark.sql.DataFrame
 
 import graft.catalog.Warehouse
 import graft.etl.WorldCup
+import graft.streaming.Streams
 
 /** Spark keeps the classes it generates in one JVM-wide cache, sized by
   * `spark.sql.codegen.cache.maxEntries` (`Tables.sessionConfs`). A
   * product that reruns the same pass must find every class of it there:
   * a cache smaller than the pass's working set evicts each class before
-  * the next pass asks for it again, so every pass recompiles. */
+  * the next pass asks for it again, so every pass recompiles. The cache
+  * is keyed by class loader too, so a pass must also run its code under
+  * the loader it ran it under before (streaming queries run on session
+  * clones). */
 class CodegenCacheSpec extends SparkSpec {
 
   private lazy val fixturesDir: String =
@@ -52,5 +56,31 @@ class CodegenCacheSpec extends SparkSpec {
       pass(src)
       assert(compiled - c1 == 0, s"the first pass compiled $first classes")
     } finally Warehouse.clear()
+  }
+
+  test("a repeated bounded streaming gate run compiles no class") {
+    import spark.implicits._
+    val base = 1700000000L
+    val src = Files.createTempDirectory("graft-codegen-stream")
+      .resolve("events").toString
+    val events = Seq((1L, 101L, 0L), (1L, 102L, 300L), (2L, 201L, 50L),
+        (2L, 202L, 60L))
+      .map { case (u, id, off) =>
+        (u, id, new java.sql.Timestamp((base + off) * 1000L)) }
+      .toDF("user_id", "event_id", "ts")
+    events.write.parquet(src)
+    def run(): Seq[org.apache.spark.sql.Row] =
+      Streams.runAvailableNowToDir(spark,
+        Streams.streamingIntervalSelfJoin(
+          spark.readStream.schema(events.schema).parquet(src), "user_id",
+          "event_id", "ts", delay = "1 hour", withinSec = 600),
+        "codegen_gate").orderBy("id_a", "id_b").collect().toSeq
+    val c0 = compiled
+    val first = run()
+    val firstCompiled = compiled - c0
+    val c1 = compiled
+    assert(run() == first && first.size == 2)
+    assert(compiled - c1 == 0,
+      s"the first run compiled $firstCompiled classes")
   }
 }

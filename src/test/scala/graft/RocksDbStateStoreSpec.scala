@@ -13,15 +13,17 @@ import graft.streaming.Streams
   * choice is an operational knob, never a semantic one. The heap
   * provider stays the fixture-scale default (RocksDB's per-store
   * commit overhead is pure cost while state fits in heap — measured
-  * in SCALE.md's RocksDB rehearsal); SPARK_GRAFT_STATE_STORE=rocksdb
-  * flips every gate run. */
+  * in SCALE.md's RocksDB rehearsal); a deployment picks RocksDB with
+  * Spark's own `spark.sql.streaming.stateStore.providerClass` session
+  * conf, which these tests set around the gate runner. */
 class RocksDbStateStoreSpec extends SparkSpec {
 
   private val provKey = "spark.sql.streaming.stateStore.providerClass"
 
   private def underRocksDb[A](body: => A): A = {
     val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, Streams.RocksDbProvider)
+    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
+      "state.RocksDBStateStoreProvider")
     try body
     finally prev.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
   }
@@ -37,7 +39,7 @@ class RocksDbStateStoreSpec extends SparkSpec {
       rows(Streams.runAvailableNowToDir(spark,
         Streams.streamingDedup(stream, Seq("user_id", "event_type"),
           "ts", "365 days").select(col("user_id"), col("event_type")),
-        "rocks_dedup_out", statePartitions = Some(4)))
+        "rocks_dedup_out"))
     }
     val want = rows(Tables.load(spark, dir, "events")
       .select(col("user_id"), col("event_type")).distinct())
@@ -53,12 +55,11 @@ class RocksDbStateStoreSpec extends SparkSpec {
       keyCol = "user_id", tsCol = "ts", valueCol = "value2",
       gap = "1800 seconds")
     val rocks = underRocksDb {
-      rows(Streams.runAvailableNow(spark, sessions(), "rocks_sess_out",
-        statePartitions = Some(4), outputMode = "complete"))
+      rows(Streams.runAvailableNowToDir(spark, sessions(), "rocks_sess_out",
+        complete = true))
     }
-    val heap = rows(Streams.runAvailableNow(spark, sessions(),
-      "heap_sess_out", statePartitions = Some(4),
-      outputMode = "complete"))
+    val heap = rows(Streams.runAvailableNowToDir(spark, sessions(),
+      "heap_sess_out", complete = true))
     assert(rocks.nonEmpty && rocks == heap)
   }
 
@@ -70,65 +71,10 @@ class RocksDbStateStoreSpec extends SparkSpec {
       withinSec = 600L)
     val rocks = underRocksDb {
       rows(Streams.runAvailableNowToDir(spark, joined(),
-        "rocks_join_out", statePartitions = Some(4)))
+        "rocks_join_out"))
     }
     val heap = rows(Streams.runAvailableNowToDir(spark, joined(),
-      "heap_join_out", statePartitions = Some(4)))
+      "heap_join_out"))
     assert(rocks.nonEmpty && rocks == heap)
-  }
-
-  test("provider rule: aggregation state switches to RocksDB at 2% of " +
-      "heap, join state holds heap until 10% (the measured JNI wall)") {
-    val heapB = 32L << 30
-    import Streams.{AggregationState, JoinState}
-    // aggregation: parity wall -> switch early
-    assert(Streams.chooseStateStoreProvider(AggregationState,
-      (heapB * 0.01).toLong, heapB) == Streams.HeapProvider)
-    assert(Streams.chooseStateStoreProvider(AggregationState,
-      (heapB * 0.03).toLong, heapB) == Streams.RocksDbProvider)
-    // join: 4x JNI wall -> pay only when heap survival is threatened
-    assert(Streams.chooseStateStoreProvider(JoinState,
-      (heapB * 0.05).toLong, heapB) == Streams.HeapProvider)
-    assert(Streams.chooseStateStoreProvider(JoinState,
-      (heapB * 0.13).toLong, heapB) == Streams.RocksDbProvider)
-    // the r11 sf10 measurements land on the right side of the rule:
-    // sessionize 3,276 MB state / 32 GB heap (10%) -> RocksDB (it
-    // measured FASTER there); interval join in a 64 GB heap (6%) ->
-    // heap (RocksDB was 4x slower while survivable)
-    assert(Streams.chooseStateStoreProvider(AggregationState,
-      3276L << 20, 32L << 30) == Streams.RocksDbProvider)
-    assert(Streams.chooseStateStoreProvider(JoinState,
-      4091L << 20, 64L << 30) == Streams.HeapProvider)
-    intercept[IllegalArgumentException] {
-      Streams.chooseStateStoreProvider(JoinState, -1L, heapB)
-    }
-  }
-
-  test("applyStateStore sets the session provider conf to the rule's " +
-      "choice and returns it") {
-    val prev = spark.conf.getOption(provKey)
-    try {
-      val chosen = Streams.applyStateStore(spark,
-        Streams.AggregationState, 8L << 30, 32L << 30)
-      assert(chosen == Streams.RocksDbProvider)
-      assert(spark.conf.get(provKey) == Streams.RocksDbProvider)
-      val chosen2 = Streams.applyStateStore(spark,
-        Streams.JoinState, 1L << 30, 32L << 30)
-      assert(chosen2 == Streams.HeapProvider)
-      assert(spark.conf.get(provKey) == Streams.HeapProvider)
-    } finally prev.fold(spark.conf.unset(provKey))(
-      spark.conf.set(provKey, _))
-  }
-
-  test("rocksDbTuningConfs emits the bounded-memory + changelog conf " +
-      "set and validates the cap") {
-    val confs = Streams.rocksDbTuningConfs(2048)
-    val p = "spark.sql.streaming.stateStore.rocksdb."
-    assert(confs(s"${p}boundedMemoryUsage") == "true")
-    assert(confs(s"${p}maxMemoryUsageMB") == "2048")
-    assert(confs(s"${p}changelogCheckpointing.enabled") == "true")
-    intercept[IllegalArgumentException] {
-      Streams.rocksDbTuningConfs(0)
-    }
   }
 }

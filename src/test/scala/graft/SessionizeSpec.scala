@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Sessionize
@@ -41,9 +40,9 @@ class SessionizeSpec extends SparkSpec {
     assert(n == Set(1L, 2L)) // tExact merged, tOver split by 1 microsecond
   }
 
-  test("exact-gap boundary agrees across batchSessions, the native " +
-    "session_window aggregate (batch AND streaming), and " +
-    "streamingSessions: equality is INSIDE — the pair merges") {
+  test("exact-gap boundary agrees across batchSessions and the native " +
+    "session_window aggregate (batch AND streaming): equality is " +
+    "INSIDE — the pair merges") {
     // ADVICE r9 flagged the x52/x14b oracles' `> gap` as disagreeing
     // with a presumed half-open session_window. Empirically Spark
     // MERGES a window whose start equals the current session's end
@@ -71,33 +70,13 @@ class SessionizeSpec extends SparkSpec {
     val plain = events.select($"user_id", $"ts", $"value")
     plain.write.mode("overwrite").parquet(tmp)
     val stream = spark.readStream.schema(plain.schema).parquet(tmp)
-    val streamSess = graft.streaming.Streams.runAvailableNow(spark,
+    val streamSess = graft.streaming.Streams.runAvailableNowToDir(spark,
         graft.streaming.Streams.streamingSessionize(
           stream, "user_id", "ts", "value", "1800 seconds"),
-        "sess_gap_native", outputMode = "complete")
+        "sess_gap_native", complete = true)
       .select("n_events").as[Long].collect().toSeq
     assert(streamSess == Seq(2L),
       s"streaming session_window: expected one merged session, got $streamSess")
-
-    // custom flatMapGroupsWithState form
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Sessionize.streamingSessions(mem.toDS(), gapSeconds = 1800)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sess_gap").start()
-    try {
-      mem.addData(Event(1, t0, 7, 1.0), Event(2, tGap, 7, 2.0))
-      q.processAllAvailable()
-      // push the watermark far past the session so it emits
-      mem.addData(Event(99, Timestamp.valueOf("2024-01-01 15:00:00"), 8, 0.0))
-      q.processAllAvailable()
-      mem.addData(Event(100, Timestamp.valueOf("2024-01-01 17:00:00"), 8, 0.0))
-      q.processAllAvailable()
-      val got = spark.table("sess_gap").filter(col("user_id") === 7)
-        .select("n_events").as[Long].collect().toSeq
-      assert(got == Seq(2L),
-        s"streamingSessions must merge the exact-gap pair; got $got")
-    } finally q.stop()
   }
 
   private def collectSessions(df: org.apache.spark.sql.DataFrame) =
@@ -170,52 +149,5 @@ class SessionizeSpec extends SparkSpec {
       Sessionize.batchSessionsSharded(events, 60, bucketSeconds = 60))
     assert(sharded == plain, s"sharded=$sharded plain=$plain")
     assert(plain.map(_._5) == Seq(2L, 2L))
-  }
-
-  test("streamingSessions lowers session start for late in-window events") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Sessionize.streamingSessions(mem.toDS(), gapSeconds = 1800)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sess_late").start()
-    try {
-      mem.addData(Event(1, ts(10), 7, 1.0))
-      q.processAllAvailable()
-      // late event (within watermark) EARLIER than the session start
-      mem.addData(Event(2, ts(0), 7, 2.0))
-      q.processAllAvailable()
-      mem.addData(Event(99, Timestamp.valueOf("2024-01-01 13:00:00"), 8, 0.0))
-      q.processAllAvailable()
-      mem.addData(Event(100, Timestamp.valueOf("2024-01-01 15:00:00"), 8, 0.0))
-      q.processAllAvailable()
-      val got = spark.table("sess_late")
-        .select("user_id", "session_start", "n_events")
-        .as[(Long, Timestamp, Long)].collect().toSeq
-      assert(got.contains((7L, ts(0), 2L)),
-        s"session start must lower to the late event's ts; got $got")
-    } finally q.stop()
-  }
-
-  test("streamingSessions emits closed sessions as the watermark advances") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Sessionize.streamingSessions(mem.toDS(), gapSeconds = 1800)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sess_out").start()
-    try {
-      // batch 1: two events 10 min apart (one open session)
-      mem.addData(Event(1, ts(0), 7, 1.0), Event(2, ts(10), 7, 2.0))
-      q.processAllAvailable()
-      // batch 2: an event far in the future pushes the watermark past
-      // the session's timeout -> session for user 7 closes and emits
-      mem.addData(Event(99, Timestamp.valueOf("2024-01-01 13:00:00"), 8, 5.0))
-      q.processAllAvailable()
-      mem.addData(Event(100, Timestamp.valueOf("2024-01-01 15:00:00"), 8, 5.0))
-      q.processAllAvailable()
-      val got = spark.table("sess_out")
-        .select("user_id", "n_events", "sum_value")
-        .as[(Long, Long, Double)].collect().toSeq
-      assert(got.contains((7L, 2L, 3.0)))
-    } finally q.stop()
   }
 }

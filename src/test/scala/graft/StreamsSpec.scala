@@ -89,7 +89,8 @@ class StreamsSpec extends SparkSpec {
     batchEvents.write.mode("overwrite").parquet(tmp)
     val streaming = Streams.streamingTumblingCounts(spark, tmp,
       batchEvents.schema, "1 hour", "2 hours")
-    val got = Streams.runToMemorySink(spark, streaming, "stream_test")
+    val got = Streams.runAvailableNowToDir(spark, streaming, "stream_test",
+        complete = true)
       .orderBy("ws", "event_type").collect().toSeq
 
     assert(got == expected)
@@ -123,10 +124,10 @@ class StreamsSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-sess").toString
     rows.write.mode("overwrite").parquet(tmp)
     val stream = spark.readStream.schema(rows.schema).parquet(tmp)
-    val got = Streams.runAvailableNow(spark,
+    val got = Streams.runAvailableNowToDir(spark,
         Streams.streamingSessionize(stream, "user_id", "ts", "value",
           "1800 seconds"),
-        "sess_fx_test", outputMode = "complete")
+        "sess_fx_test", complete = true)
       .orderBy("user_id", "session_start").collect().toSeq
     assert(got == batch)
   }
@@ -351,7 +352,7 @@ class StreamsSpec extends SparkSpec {
       Streams.runAvailableNowToDir(spark,
         Streams.streamingIntervalSelfJoin(stream, "user_id", "event_id",
           "ts", delay = "1 hour", withinSec = 600),
-        "ckpt_spawn_test", statePartitions = Some(2))
+        "ckpt_spawn_test")
         .orderBy("id_a", "id_b").collect().toSeq
     }
     assert(got.nonEmpty && got == expected)
@@ -371,7 +372,7 @@ class StreamsSpec extends SparkSpec {
       val out = Streams.runAvailableNowToDir(spark,
         Streams.streamingIntervalSelfJoin(stream, "user_id", "event_id",
           "ts", delay = "1 hour", withinSec = 600),
-        "chmod_spawn_test", statePartitions = Some(2))
+        "chmod_spawn_test")
       out.write.parquet(dir.resolve("written").toString)
       out.orderBy("id_a", "id_b").collect().toSeq
     }
@@ -434,6 +435,36 @@ class StreamsSpec extends SparkSpec {
     assert(x47.nonEmpty && x47 == x47Twin)
   }
 
+  test("an empty source runs no micro-batch and returns an empty frame " +
+      "with the streamed columns, in append and complete mode") {
+    import spark.implicits._
+    val schema = Seq((1L, 101L, new java.sql.Timestamp(0L), 1.5))
+      .toDF("user_id", "event_id", "ts", "value").schema
+    val src = java.nio.file.Files.createTempDirectory("graft-empty-src")
+    val stream = spark.readStream.schema(schema).parquet(src.toString)
+    def batches(query: String): Long = {
+      val commits = java.nio.file.Paths.get(
+        Streams.gateCheckpoint(spark, query), "commits")
+      if (!java.nio.file.Files.exists(commits)) 0L
+      else java.nio.file.Files.list(commits)
+        .filter(p => !p.getFileName.toString.startsWith(".")).count()
+    }
+    val runs = Seq(
+      "empty_append" -> (Streams.streamingIntervalSelfJoin(stream,
+        "user_id", "event_id", "ts", "1 hour", 600), false),
+      "empty_complete" -> (Streams.streamingSessionize(stream, "user_id",
+        "ts", "value", "1800 seconds"), true))
+    runs.foreach { case (name, (streaming, complete)) =>
+      val got = Streams.runAvailableNowToDir(spark, streaming, name,
+        complete = complete)
+      assert(batches(name) == 0, name)
+      // a parquet read-back makes every column nullable, data or none
+      assert(got.schema.map(f => f.name -> f.dataType) ==
+        streaming.schema.map(f => f.name -> f.dataType), name)
+      assert(got.collect().isEmpty, name)
+    }
+  }
+
   test("plans whose last batch releases rows keep it: a left-outer " +
       "stream-stream join and a windowed append aggregation emit their " +
       "watermark-released rows, equal to the batch result") {
@@ -472,7 +503,7 @@ class StreamsSpec extends SparkSpec {
     val pairs = leftOuterPairs(stream)
     assert(!Streams.lastBatchOnlyEvicts(pairs.queryExecution.analyzed))
     val gotPairs = Streams.runAvailableNowToDir(spark, pairs,
-        "released_outer", statePartitions = Some(2))
+        "released_outer")
       .orderBy("id_a", "id_b").collect().toSeq
     assert(commits("released_outer") == 2)
     val expPairs = leftOuterPairs(released).orderBy("id_a", "id_b")
@@ -483,7 +514,7 @@ class StreamsSpec extends SparkSpec {
     val counts = windowed(stream)
     assert(!Streams.lastBatchOnlyEvicts(counts.queryExecution.analyzed))
     val gotCounts = Streams.runAvailableNowToDir(spark, counts,
-        "released_windows", statePartitions = Some(2))
+        "released_windows")
       .orderBy("ws", "event_type").collect().toSeq
     assert(commits("released_windows") == 2)
     val expCounts = windowed(released).orderBy("ws", "event_type")

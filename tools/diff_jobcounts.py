@@ -16,8 +16,10 @@ first-run counts and the delta (b - a), marked `unstable a (min–max)`
 is not read as a code change; for an entry whose count differs, also the
 number of jobs per launching frame in both logs, so the moved frame
 shows; and a note for each log whose warm runs (all but the first)
-compile classes: either the JVM's working set has outgrown Spark's codegen
-class cache or the entry generates code that differs from run to run. Then a summary. Exits 1 if any entry runs more jobs
+compile classes: the JVM's working set has outgrown Spark's codegen class
+cache, the entry generates code that differs from run to run, or it runs on
+a session clone with its own class loader (the cache is keyed by loader).
+Then a summary. Exits 1 if any entry runs more jobs
 in <log_b> than in <log_a>, or if an entry appears in only one of the
 logs; exits 0 otherwise. Warm compiles do not change the exit status.
 """
@@ -74,7 +76,8 @@ def warm_compiles(compiles, side):
     if not any(warm):
         return ""
     return ("    note: warm runs of %s compile %s classes (codegen cache "
-            "outgrown, or code that differs per run)"
+            "outgrown, code that differs per run, or a session clone "
+            "with its own class loader)"
             % (side, " ".join(map(str, warm))))
 
 
