@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.queries.Catalog
+import graft.queries.{Catalog, QuerySpec}
 import graft.sources.Tables
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -40,27 +40,16 @@ object SparkEntry {
     ListMap(Catalog.specs.map(s => s.name -> s.run): _*)
 
   /** For each key in queries, equivalent SQL runnable by DuckDB on the
-    * same parquet tables. Late-bound oracles (oracleGen) are evaluated
-    * here — i.e. after `queries` ran, per Verify's ordering — so SQL
-    * can embed values the run computed (trained IVF centroids). A
-    * spec with NO oracle of either kind → driver records a rows-only
-    * check; but a PROVIDED oracleGen that finds no stash entry throws
-    * — that is a harness bug (training skipped, wrong key/tag), not a
-    * legitimately oracle-less query, and downgrading it silently
-    * would skip its hash gate. */
+    * same parquet tables. Late-bound oracles ([[QuerySpec.lateBound]])
+    * are built here — i.e. after `queries` ran, per Verify's ordering —
+    * from the values each entry's last run used (trained IVF
+    * centroids). A spec with no oracle → the driver records a rows-only
+    * check; a late-bound entry that has not run throws, naming it. */
   def oracleSql: Map[String, String] = oracleSqlFiltered(_ => true)
 
-  /** [[oracleSql]] restricted to `keep` BEFORE gens are evaluated, so
-    * a filtered Verify dump doesn't evaluate (and throw on) gens of
-    * queries whose training was legitimately filtered out. */
+  /** [[oracleSql]] restricted to `keep` BEFORE late-bound oracles are
+    * built, so a filtered Verify dump never builds (and throws on) the
+    * oracle of an entry it filtered out. */
   def oracleSqlFiltered(keep: String => Boolean): Map[String, String] =
-    ListMap(Catalog.specs.filter(s => keep(s.name)).flatMap { s =>
-      val gen =
-        if (s.oracleGen eq graft.queries.QuerySpec.noGen) None
-        else Some(s.oracleGen().getOrElse(throw new IllegalStateException(
-          s"late-bound oracle for '${s.name}' found no stash entry — " +
-            "training did not run (filtered dump?) or the stash " +
-            "key/tag is wrong")))
-      s.oracle.orElse(gen).map(sql => s.name -> sql)
-    }: _*)
+    QuerySpec.oracleSql(Catalog.specs, keep)
 }

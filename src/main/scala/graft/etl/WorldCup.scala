@@ -459,70 +459,70 @@ object WorldCup {
   private def fk(cols: String, ref: String, refCols: String = "id") =
     FkEdge(cols.split(",").toSeq, ref, refCols.split(",").toSeq)
 
-  val metas: Map[String, TableMeta] = Map(
-    "confederation" -> TableMeta("confederation", pk = Seq("id")),
-    "city" -> TableMeta("city", pk = Seq("id")),
-    "award" -> TableMeta("award", pk = Seq("id")),
-    "event_type" -> TableMeta("event_type", pk = Seq("id")),
-    "federation" -> TableMeta("federation", pk = Seq("id"),
+  val metas: Map[String, TableMeta] = Seq(
+    TableMeta("confederation", pk = Seq("id")),
+    TableMeta("city", pk = Seq("id")),
+    TableMeta("award", pk = Seq("id")),
+    TableMeta("event_type", pk = Seq("id")),
+    TableMeta("federation", pk = Seq("id"),
       fks = Seq(fk("confederation_id", "confederation"))),
-    "manager" -> TableMeta("manager", pk = Seq("id")),
-    "position_type" -> TableMeta("position_type", pk = Seq("id")),
-    "position" -> TableMeta("position", pk = Seq("id"),
+    TableMeta("manager", pk = Seq("id")),
+    TableMeta("position_type", pk = Seq("id")),
+    TableMeta("position", pk = Seq("id"),
       fks = Seq(fk("position_type_id", "position_type"))),
-    "player" -> TableMeta("player", pk = Seq("id")),
-    "referee" -> TableMeta("referee", pk = Seq("id")),
-    "stage" -> TableMeta("stage", pk = Seq("id")),
-    "team" -> TableMeta("team", pk = Seq("id"),
+    TableMeta("player", pk = Seq("id")),
+    TableMeta("referee", pk = Seq("id")),
+    TableMeta("stage", pk = Seq("id")),
+    TableMeta("team", pk = Seq("id"),
       fks = Seq(fk("federation_id", "federation"))),
-    "stadium" -> TableMeta("stadium", pk = Seq("id"),
+    TableMeta("stadium", pk = Seq("id"),
       fks = Seq(fk("city_id", "city"))),
-    "tournament" -> TableMeta("tournament", pk = Seq("id"),
+    TableMeta("tournament", pk = Seq("id"),
       fks = Seq(fk("wining_team_id", "team"))),
-    "tournament_referee" -> TableMeta("tournament_referee",
+    TableMeta("tournament_referee",
       pk = Seq("tournament_id", "referee_id"),
       fks = Seq(fk("tournament_id", "tournament"), fk("referee_id", "referee"))),
-    "tournament_schedule" -> TableMeta("tournament_schedule",
+    TableMeta("tournament_schedule",
       pk = Seq("tournament_id", "stage_id", "stage_detail"),
       fks = Seq(fk("tournament_id", "tournament"), fk("stage_id", "stage"))),
-    "tournament_team" -> TableMeta("tournament_team",
+    TableMeta("tournament_team",
       pk = Seq("tournament_id", "team_id"),
       fks = Seq(fk("tournament_id", "tournament"), fk("team_id", "team"))),
-    "tournament_manager" -> TableMeta("tournament_manager",
+    TableMeta("tournament_manager",
       pk = Seq("tournament_id", "manager_id"),
       fks = Seq(fk("tournament_id", "tournament"), fk("team_id", "team"),
         fk("manager_id", "manager"))),
-    "tournament_squad" -> TableMeta("tournament_squad",
+    TableMeta("tournament_squad",
       pk = Seq("tournament_id", "team_id", "player_id"),
       fks = Seq(fk("tournament_id", "tournament"), fk("team_id", "team"),
         fk("player_id", "player"), fk("position_id", "position"))),
-    "match" -> TableMeta("match", pk = Seq("id"),
+    TableMeta("match", pk = Seq("id"),
       fks = Seq(fk("tournament_id", "tournament"), fk("stage_id", "stage"),
         fk("home_team_id", "team"), fk("away_team_id", "team"),
         fk("stadium_id", "stadium"))),
-    "event" -> TableMeta("event", pk = Seq("id"),
+    TableMeta("event", pk = Seq("id"),
       fks = Seq(fk("match_id", "match"), fk("team_id", "team"),
         fk("player_id", "player"), fk("event_type_id", "event_type"))),
-    "penalty_kick" -> TableMeta("penalty_kick", pk = Seq("id"),
+    TableMeta("penalty_kick", pk = Seq("id"),
       fks = Seq(fk("match_id", "match"), fk("team_id", "team"),
         fk("player_id", "player"))),
-    "match_replay" -> TableMeta("match_replay",
+    TableMeta("match_replay",
       pk = Seq("first_match_id", "second_match_id"),
       fks = Seq(fk("first_match_id", "match"), fk("second_match_id", "match"))),
-    "match_player" -> TableMeta("match_player",
+    TableMeta("match_player",
       pk = Seq("match_id", "player_id"),
       fks = Seq(fk("match_id", "match"), fk("team_id", "team"),
         fk("player_id", "player"), fk("position_id", "position"))),
-    "team_appearance" -> TableMeta("team_appearance",
+    TableMeta("team_appearance",
       pk = Seq("match_id", "team_id"),
       fks = Seq(fk("team_id", "team"), fk("opponent_team_id", "team"))),
-    "award_winner" -> TableMeta("award_winner",
+    TableMeta("award_winner",
       pk = Seq("tournament_id", "award_id", "player_id")),
-    "tournament_team_group_performance" ->
-      TableMeta("tournament_team_group_performance",
-        pk = Seq("tournament_id", "stage_id", "stage_detail", "team_id"),
-        fks = Seq(fk("tournament_id", "tournament"), fk("stage_id", "stage"),
-          fk("team_id", "team"))))
+    TableMeta("tournament_team_group_performance",
+      pk = Seq("tournament_id", "stage_id", "stage_detail", "team_id"),
+      fks = Seq(fk("tournament_id", "tournament"), fk("stage_id", "stage"),
+        fk("team_id", "team")))
+  ).map(m => m.name -> m).toMap
 
   /** Build all 27 tables from a CSV directory and load them into the
     * Warehouse in dependency order with constraint validation — the

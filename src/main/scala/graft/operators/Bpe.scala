@@ -70,9 +70,7 @@ object Bpe {
         .otherwise(concat(acc, array(x))))
 
   /** Learn `nMerges` merges over a (word, cnt) vocabulary. Returns the
-    * trajectory: (left, right, pairCount) in rank order. Stashes
-    * nothing — callers needing a late-bound oracle record the result
-    * via [[recordMerges]]. */
+    * trajectory: (left, right, pairCount) in rank order. */
   def learnMerges(words: DataFrame, nMerges: Int): Seq[(String, String, Long)] = {
     var cur = words
       .select(col("cnt"), charSymbols(col("word")).as("syms"))
@@ -109,26 +107,12 @@ object Bpe {
     } finally cur.unpersist()
   }
 
-  /** Late-bound-oracle stash, keyed (nMerges, tag) — the
-    * [[Similarity]] centroid-stash contract: deterministic learning
-    * means an entry equals any re-run over the same data; AtomicReference
-    * + updateAndGet so parallel writers can't lose entries. */
-  private val mergeStash = new java.util.concurrent.atomic.AtomicReference(
-    Map.empty[(Int, String), Seq[(String, String, Long)]])
-
-  def recordMerges(nMerges: Int, tag: String,
-      merges: Seq[(String, String, Long)]): Unit =
-    mergeStash.updateAndGet(_ + ((nMerges, tag) -> merges))
-
-  def learnedMerges: Map[(Int, String), Seq[(String, String, Long)]] =
-    mergeStash.get()
-
   /** DuckDB twin of [[wordFrequencies]] + char split + pair counting +
     * merge application, as chained CTEs: level j recomputes the pair
     * argmax over the vocabulary with merges 1..j-1 applied (each
     * application a recursive-CTE replace-to-fixpoint over the
     * `;`-delimited symbol string), so the oracle RE-DERIVES the whole
-    * trajectory — the stashed merges only drive the applications, and
+    * trajectory — the learned merges only drive the applications, and
     * a wrong learned merge at any level diverges that level's argmax.
     */
   def trajectoryOracleSql(table: String, textExpr: String,

@@ -198,8 +198,7 @@ object Similarity {
     * the codebook size whatever the data volume, and the driver
     * collects one row per codeword. A NULL mean (ragged vectors shorter
     * than the codeword in every row of its group) keeps that
-    * dimension's previous value. The result goes to `stash` for the
-    * late-bound oracles.
+    * dimension's previous value.
     *
     * Every pass re-reads the corpus's (id, vec) projection (1 init
     * scan + `iters` iteration scans), so the loop persists it
@@ -207,7 +206,7 @@ object Similarity {
     * lineage) and releases it before returning: training is eager and
     * nothing it returns reads the projection. */
   private def lloyd(corpus: DataFrame, idCol: String, vecCol: String,
-      n: Int, iters: Int, stash: Books => Unit)(
+      n: Int, iters: Int)(
       seed: Array[Array[Double]] => Books, means: Int => Seq[Column],
       assign: (DataFrame, Books) => DataFrame): Books = {
     val base = corpus.select(col(idCol), col(vecCol))
@@ -229,7 +228,6 @@ object Similarity {
             }
         }
       }
-      stash(books)
       books
     } finally base.unpersist(false)
   }
@@ -246,9 +244,8 @@ object Similarity {
     * 100 TB each iteration is exactly one map-side-combined shuffle of
     * K×dim partial sums per task. */
   def ivfTrain(corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, iters: Int = 2, tag: String = ""): Array[Array[Double]] =
-    lloyd(corpus, idCol, vecCol, nCells, iters,
-      b => centroidStash.updateAndGet(_ + ((nCells, iters, tag) -> b(0))))(
+      nCells: Int, iters: Int = 2): Array[Array[Double]] =
+    lloyd(corpus, idCol, vecCol, nCells, iters)(
       init => Array(init),
       // try_element_at: NULL (not an ANSI error) past a ragged vector's
       // end, so short vectors simply don't contribute to that dimension
@@ -256,28 +253,6 @@ object Similarity {
         avg(try_element_at(col(vecCol), lit(d + 1)).cast("double")).as(s"m$d")),
       (base, b) => base.select(lit(0).as("__sub"),
         cellExpr(col(vecCol), b(0)).as("__cell"), col(vecCol)))(0)
-
-  /** Centroids from [[ivfTrain]] calls this session, keyed by
-    * (nCells, iters, tag) so trainers with different parameters — or
-    * the same parameters over a DIFFERENT corpus slice, distinguished
-    * by `tag` — cannot clobber each other's entry. A late-bound
-    * oracle (QuerySpec.oracleGen, evaluated after the runs) looks up
-    * ITS parameters and embeds the exact trained values as SQL
-    * literals. Training is fully deterministic, so an entry equals
-    * what any re-run over the same data would produce. Same-key
-    * collisions are harmless only because equal (params, tag) implies
-    * the same training input by convention — tag any subset-trained
-    * index.
-    *
-    * Stored behind an [[java.util.concurrent.atomic.AtomicReference]]
-    * with updateAndGet: a plain volatile read-modify-write could lose
-    * a concurrent trainer's entry (parallel specs, future parallel
-    * query execution), silently skipping that query's hash gate. */
-  private val centroidStash = new java.util.concurrent.atomic.AtomicReference(
-    Map.empty[(Int, Int, String), Array[Array[Double]]])
-
-  def trainedCentroids: Map[(Int, Int, String), Array[Array[Double]]] =
-    centroidStash.get()
 
   /** Nearest-centroid cell id as a pure projection: a single
     * [[graft.plans.ArgmaxDot]] node carrying the centroid matrix as a
@@ -551,8 +526,9 @@ object Similarity {
   // ---- Semantic dedup (SemDeDup-style) -----------------------------
 
   /** Semantic dedup over an embedding column, SemDeDup-shaped (Abbas
-    * et al. 2023, arXiv:2303.09540): cluster the corpus with the
-    * deterministic IVF trainer, then look for near-duplicate pairs
+    * et al. 2023, arXiv:2303.09540): place the corpus in the cells of
+    * trained `centroids` (an [[ivfTrain]] result, frozen like every
+    * other ANN serve path's), then look for near-duplicate pairs
     * ONLY within a cell — candidate volume shrinks ~nCells-fold vs
     * all-pairs, and the pair search is a cell-keyed equi-join, never a
     * cartesian. A row is dropped when some LOWER-id row in its cell
@@ -576,15 +552,14 @@ object Similarity {
     * no verdict (kept=true, max_lower_cos_r=-1.0) — the same
     * recall-for-boundedness trade as the MinHash/SimHash bucket caps,
     * and like them it is never silent: [[semanticCellOverflow]] names
-    * every capped cell. At scale raise nCells so cells stay O(10^4)
+    * every capped cell. At scale train more cells so each stays O(10^4)
     * rows (the paper uses tens of thousands of clusters for billions
     * of docs); the cap is the backstop for the skewed tail, not the
     * primary sizing tool. */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, tau: Double, iters: Int = 2,
+      centroids: Array[Array[Double]], tau: Double,
       maxCell: Int = 1000): DataFrame = {
     require(maxCell >= 2, s"maxCell must be >= 2, got $maxCell")
-    val centroids = ivfTrain(corpus, idCol, vecCol, nCells, iters)
     val c = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"),
       l2Norm(col(vecCol)).as("__n"),
       cellExpr(col(vecCol), centroids).as("cell"))
@@ -622,19 +597,17 @@ object Similarity {
     * would cap at `maxCell` — the overflow reporter
     * (`Caps.bucketOverflow`) that keeps the cap from being a silent
     * truncation. Output: (cell, n_rows), only
-    * cells with n_rows > maxCell. Same centroid training as the dedup
-    * itself, so the reported cells are exactly the capped ones. */
+    * cells with n_rows > maxCell. Given the dedup's `centroids`, the
+    * reported cells are exactly the capped ones. */
   def semanticCellOverflow(corpus: DataFrame, idCol: String,
-      vecCol: String, nCells: Int, maxCell: Int = 1000,
-      iters: Int = 2): DataFrame = {
-    val centroids = ivfTrain(corpus, idCol, vecCol, nCells, iters)
+      vecCol: String, centroids: Array[Array[Double]],
+      maxCell: Int = 1000): DataFrame =
     Caps.bucketOverflow(
       corpus.select(cellExpr(col(vecCol), centroids).as("cell")),
       Seq("cell"), maxCell, "n_rows")
-  }
 
   /** DuckDB oracle mirroring [[semanticDedup]], given the trained
-    * centroids (late-bound via [[trainedCentroids]]) — including the
+    * centroids the run used — including the
     * per-cell cap, which is part of the operator's semantics, not an
     * engine-side shortcut. */
   def semanticDedupOracleSql(table: String, idCol: String, vecCol: String,
@@ -656,17 +629,6 @@ object Similarity {
        |ORDER BY $idCol""".stripMargin
 
   // ---- Product quantization (IVFADC) -------------------------------
-
-  /** PQ codebooks trained this session, keyed by (m, ksub, iters, tag)
-    * — same late-bound-oracle contract (atomic stash, tag discipline)
-    * as [[trainedCentroids]]; the residual trainer stores under its
-    * own tag so plain and residual codebooks with equal params coexist.
-    * Layout: books(subspace)(codeword) = Array[Double] of dim/m. */
-  private val codebookStash = new java.util.concurrent.atomic.AtomicReference(
-    Map.empty[(Int, Int, Int, String), Array[Array[Array[Double]]]])
-
-  def trainedCodebooks: Map[(Int, Int, Int, String), Array[Array[Array[Double]]]] =
-    codebookStash.get()
 
   private def halfNormSq(c: Array[Double]): Double =
     0.5 * c.foldLeft(0.0)((a, x) => a + x * x)
@@ -737,10 +699,8 @@ object Similarity {
     * iters full scans, each one map-combined shuffle, no per-subspace
     * re-reads. */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, iters: Int = 2,
-      tag: String = ""): Array[Array[Array[Double]]] =
-    lloyd(corpus, idCol, vecCol, ksub, iters,
-      b => codebookStash.updateAndGet(_ + ((m, ksub, iters, tag) -> b)))(
+      m: Int, ksub: Int, iters: Int = 2): Array[Array[Array[Double]]] =
+    lloyd(corpus, idCol, vecCol, ksub, iters)(
       init => {
         val subDim = subDimOf(init, m, ksub, "pqTrain")
         Array.tabulate(m)(s =>
@@ -885,31 +845,6 @@ object Similarity {
       .join(broadcast(candidates.select(col("qid"), col("did"))), Seq("did"))
       .join(broadcast(querySide(queries, idCol, vecCol)), Seq("qid"))
       .select(col("qid"), col("did"), qdCosine), "cos", k)
-
-  /** IVFADC with the standard re-rank refinement: trains the PQ
-    * codebooks and the coarse centroids, takes the top-`shortlistC`
-    * compressed candidates per query from [[adcTopKWith]], then
-    * [[exactRerank]] re-scores exactly those candidates with exact
-    * cosine and keeps the top `k`. Recall ceiling is the IVF probe
-    * recall (candidates can only come from probed cells); within the
-    * probed cells, re-ranking recovers essentially all of the recall
-    * PQ compression destroyed — measured on the fixture: 0.30 (raw
-    * ADC) → ~0.9 at shortlistC=50 (TUNING.md). */
-  def adcRerankTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, shortlistC: Int, m: Int, ksub: Int,
-      nCells: Int, nProbes: Int, iters: Int = 2): DataFrame = {
-    require(shortlistC >= k,
-      s"shortlistC=$shortlistC must be >= k=$k")
-    // one shared (id, vec) projection feeds both trainers (2×(1+iters)
-    // scans), the encode pass and the re-rank fetch
-    val base = corpus.select(col(idCol), col(vecCol))
-    val books = pqTrain(base, idCol, vecCol, m, ksub, iters)
-    val centroids = ivfTrain(base, idCol, vecCol, nCells, iters)
-    val short = adcTopKWith(base, queries, idCol, vecCol, shortlistC,
-      books, centroids, nProbes, residual = false)
-    exactRerank(base, queries, idCol, vecCol,
-      short.select(col("qid"), col("did")), k)
-  }
 
   /** DuckDB oracle mirroring [[exactRerank]] over an [[adcOracleSql]]
     * shortlist: same exact-cosine arithmetic and tie order as the
@@ -1147,7 +1082,7 @@ object Similarity {
     * the same argmax-tie rule the engine uses). */
   def pqTrainResidual(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]], m: Int, ksub: Int,
-      iters: Int = 2, tag: String = "res"): Array[Array[Array[Double]]] = {
+      iters: Int = 2): Array[Array[Array[Double]]] = {
     // driver-side cell assignment of the init rows: argmax by (score,
     // index) tuple — lexicographic tuple order matches greatest's
     // ties-to-larger-index semantics
@@ -1157,8 +1092,7 @@ object Similarity {
     // full centroid matrix as a 2-D literal, indexed by (cell, dim)
     // inside the residual-mean aggregate
     val centsLit = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    lloyd(corpus, idCol, vecCol, ksub, iters,
-      b => codebookStash.updateAndGet(_ + ((m, ksub, iters, tag) -> b)))(
+    lloyd(corpus, idCol, vecCol, ksub, iters)(
       init => {
         val subDim = subDimOf(init, m, ksub, "pqTrainResidual")
         Array.tabulate(m) { s =>

@@ -21,6 +21,16 @@ import graft.sources.{Locations, Tables}
 private[queries] object ExtensionCrawlGraphQueries {
   import ExtensionSupport._
 
+  /** x80b/x80c's per-side IVF centroids (4 cells over the even-id
+    * sources, 4 over the odd-id targets), trained once per dir. */
+  private def bitextCentroids(dir: String, src: DataFrame, tgt: DataFrame)
+      : (Array[Array[Double]], Array[Array[Double]]) = {
+    def train(side: DataFrame) = Similarity.ivfTrain(side, "vec_id",
+      "embedding", nCells = 4, iters = 2)
+    (once(s"$dir/ivf-cents-bitext-src-4-2")(train(src)),
+      once(s"$dir/ivf-cents-bitext-tgt-4-2")(train(tgt)))
+  }
+
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("x55_pagerank_centrality",
       "link-graph centrality for crawl/corpus curation (Page et al. " +
@@ -860,7 +870,7 @@ private[queries] object ExtensionCrawlGraphQueries {
         "embedding", 4, "vec_id % 2 = 0", "vec_id % 2 = 1") +
         "\nORDER BY src_id")),
 
-    QuerySpec("x80b_bitext_margin_mining_ivf",
+    QuerySpec.lateBound("x80b_bitext_margin_mining_ivf",
       "the AT-SCALE composed form of x80 — CCMatrix-scale bitext " +
         "mining over IVF CANDIDATES instead of all pairs: each " +
         "direction retrieves top-8 candidates through the capped IVF " +
@@ -877,75 +887,63 @@ private[queries] object ExtensionCrawlGraphQueries {
         "exists to avoid), the per-query retrieval contract (≤ kCand " +
         "rows each direction) audited — the pre-rank scored bound is " +
         "structural and measured in SCALE.md — and non-empty " +
-        "mining output",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val srcSide = emb.filter(col("vec_id") % 2 === 0)
-        val tgtSide = emb.filter(col("vec_id") % 2 === 1)
-        val srcCents = trainOnce(dir, "ivf-cents-bitext-src-4-2") {
-          Similarity.ivfTrain(srcSide, "vec_id", "embedding",
-            nCells = 4, iters = 2, tag = "bitext-src")
-        }
-        val tgtCents = trainOnce(dir, "ivf-cents-bitext-tgt-4-2") {
-          Similarity.ivfTrain(tgtSide, "vec_id", "embedding",
-            nCells = 4, iters = 2, tag = "bitext-tgt")
-        }
-        // candidate frames feed TWO consumers (the mining tail and
-        // the retrieval-contract audit) — persist so the retrieval
-        // executes once; the tail's eager materialization populates
-        // the cache the audit then reads
-        val fwd = Similarity.ivfTopKWithCapped(tgtSide, srcSide,
-          "vec_id", "embedding", k = 8, tgtCents, nProbes = 2,
-          perCellCap = 64)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val bwd = Similarity.ivfTopKWithCapped(srcSide, tgtSide,
-          "vec_id", "embedding", k = 8, srcCents, nProbes = 2,
-          perCellCap = 64)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val mined = Similarity.bitextMarginMineWith(fwd, bwd, k = 4)
-            .orderBy(col("src_id"))
-          // plan contract: candidate retrieval + tail must be pure
-          // hash/sort-merge joins — the composed form may never fall
-          // back to the exact form's nested-loop all-pairs scoring
-          val plan = mined.queryExecution.sparkPlan.toString
-          require(!plan.contains("BroadcastNestedLoopJoin") &&
-            !plan.contains("CartesianProduct"),
-            s"composed bitext mining must not plan an all-pairs join:\n" +
-              plan.linesIterator.take(40).mkString("\n"))
-          // what an in-entry audit can honestly check is the RETRIEVAL
-          // contract: ≤ kCand rows per query per direction (the frames
-          // are already rank-filtered, so testing them against
-          // nProbes×perCellCap would be vacuous). The pre-rank SCORED
-          // bound — candidates/query ≤ nProbes×perCellCap — is
-          // structural in ivfTopKWithCapped (cap applied before the
-          // probe join) and is MEASURED against raw cell occupancy
-          // at 1M×1M (SCALE.md "Composed bitext mining at corpus
-          // shape": ≤64 vs 455k uncapped)
-          val maxCand = fwd.groupBy(col("qid")).count()
-            .unionByName(bwd.groupBy(col("qid")).count())
-            .agg(max(col("count"))).collect()(0).getLong(0)
-          require(maxCand <= 8L,
-            s"retrieval must return at most kCand=8 rows/query, got $maxCand")
-          val out = scratch(mined, "x80b_out")
-          val n = out.count()
-          require(n >= 1, "composed mining must emit at least one pair")
-          out.orderBy(col("src_id"))
-        } finally {
-          fwd.unpersist(); bwd.unpersist()
-        }
-      },
-      None,
-      oracleGen = () => for {
-        srcCents <- Similarity.trainedCentroids.get((4, 2, "bitext-src"))
-        tgtCents <- Similarity.trainedCentroids.get((4, 2, "bitext-tgt"))
-      } yield Similarity.bitextMarginMineWithOracleSql("embeddings",
+        "mining output") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val srcSide = emb.filter(col("vec_id") % 2 === 0)
+      val tgtSide = emb.filter(col("vec_id") % 2 === 1)
+      val (srcCents, tgtCents) = bitextCentroids(dir, srcSide, tgtSide)
+      // candidate frames feed TWO consumers (the mining tail and
+      // the retrieval-contract audit) — persist so the retrieval
+      // executes once; the tail's eager materialization populates
+      // the cache the audit then reads
+      val fwd = Similarity.ivfTopKWithCapped(tgtSide, srcSide,
+        "vec_id", "embedding", k = 8, tgtCents, nProbes = 2,
+        perCellCap = 64)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bwd = Similarity.ivfTopKWithCapped(srcSide, tgtSide,
+        "vec_id", "embedding", k = 8, srcCents, nProbes = 2,
+        perCellCap = 64)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val result = try {
+        val mined = Similarity.bitextMarginMineWith(fwd, bwd, k = 4)
+          .orderBy(col("src_id"))
+        // plan contract: candidate retrieval + tail must be pure
+        // hash/sort-merge joins — the composed form may never fall
+        // back to the exact form's nested-loop all-pairs scoring
+        val plan = mined.queryExecution.sparkPlan.toString
+        require(!plan.contains("BroadcastNestedLoopJoin") &&
+          !plan.contains("CartesianProduct"),
+          s"composed bitext mining must not plan an all-pairs join:\n" +
+            plan.linesIterator.take(40).mkString("\n"))
+        // what an in-entry audit can honestly check is the RETRIEVAL
+        // contract: ≤ kCand rows per query per direction (the frames
+        // are already rank-filtered, so testing them against
+        // nProbes×perCellCap would be vacuous). The pre-rank SCORED
+        // bound — candidates/query ≤ nProbes×perCellCap — is
+        // structural in ivfTopKWithCapped (cap applied before the
+        // probe join) and is MEASURED against raw cell occupancy
+        // at 1M×1M (SCALE.md "Composed bitext mining at corpus
+        // shape": ≤64 vs 455k uncapped)
+        val maxCand = fwd.groupBy(col("qid")).count()
+          .unionByName(bwd.groupBy(col("qid")).count())
+          .agg(max(col("count"))).collect()(0).getLong(0)
+        require(maxCand <= 8L,
+          s"retrieval must return at most kCand=8 rows/query, got $maxCand")
+        val out = scratch(mined, "x80b_out")
+        val n = out.count()
+        require(n >= 1, "composed mining must emit at least one pair")
+        out.orderBy(col("src_id"))
+      } finally {
+        fwd.unpersist(); bwd.unpersist()
+      }
+      (result, () => Similarity.bitextMarginMineWithOracleSql("embeddings",
         "vec_id", "embedding", k = 4, kCand = 8,
         "vec_id % 2 = 0", "vec_id % 2 = 1",
         srcCents, tgtCents, nProbes = 2, perCellCap = 64) +
-        "\nORDER BY src_id"),
+        "\nORDER BY src_id")
+    },
 
-    QuerySpec("x80c_bitext_miner_recall",
+    QuerySpec.lateBound("x80c_bitext_miner_recall",
       "RECALL gate for the composed miner — the answer to \"what does " +
         "the cap cost?\": runs x80's exact all-pairs miner as ground " +
         "truth and x80b's composed IVF form under a retrieval that " +
@@ -977,69 +975,56 @@ private[queries] object ExtensionCrawlGraphQueries {
         "margin normalization). That is the standard sampled-truth " +
         "trade; the DuckDB twin re-derives the IDENTICAL quantity, " +
         "so the gate pins it exactly, and the UNSAMPLED truth is " +
-        "still hash-gated by the sibling x80 at every gate SF",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val srcSide = emb.filter(col("vec_id") % 2 === 0)
-        val tgtSide = emb.filter(col("vec_id") % 2 === 1)
-        // deterministic, engine-reproducible sample: top-200 sources
-        // by (60-bit md5 of the id, id) — the perCellHashKeep ordering
-        // convention, TakeOrderedAndProject at any scale
-        val nSample = 200
-        val srcSample = srcSide
-          .orderBy(graft.functions.HashFunctions
-            .md5Hash60(col("vec_id").cast("string")), col("vec_id"))
-          .limit(nSample)
-        val srcCents = trainOnce(dir, "ivf-cents-bitext-src-4-2") {
-          Similarity.ivfTrain(srcSide, "vec_id", "embedding",
-            nCells = 4, iters = 2, tag = "bitext-src")
-        }
-        val tgtCents = trainOnce(dir, "ivf-cents-bitext-tgt-4-2") {
-          Similarity.ivfTrain(tgtSide, "vec_id", "embedding",
-            nCells = 4, iters = 2, tag = "bitext-tgt")
-        }
-        val fwd = Similarity.ivfTopKWithCapped(tgtSide, srcSide,
-          "vec_id", "embedding", k = 8, tgtCents, nProbes = 1,
-          perCellCap = 8)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val bwd = Similarity.ivfTopKWithCapped(srcSide, tgtSide,
-          "vec_id", "embedding", k = 8, srcCents, nProbes = 1,
-          perCellCap = 8)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val comp = Similarity.bitextMarginMineWith(fwd, bwd, k = 4)
-            .select(col("src_id"), col("tgt_id").as("comp_tgt"),
-              col("mutual").as("comp_mutual"))
-          val nS = srcSample.count()
-          require(nS == math.min(nSample.toLong, srcSide.count()),
-            s"ground-truth sample must hold min($nSample, |src|) " +
-              s"rows, got $nS")
-          val exact = Similarity.bitextMarginMine(srcSample, tgtSide,
-              "vec_id", "embedding", k = 4)
-            .select(col("src_id"), col("tgt_id").as("exact_tgt"),
-              col("mutual").as("exact_mutual"))
-          val out = scratch(exact.join(comp, Seq("src_id"), "left")
-            .select(col("src_id"), col("exact_tgt"),
-              coalesce(col("comp_tgt"), lit(-1L)).as("comp_tgt"),
-              coalesce(col("comp_tgt") === col("exact_tgt"), lit(false))
-                .as("hit"),
-              col("exact_mutual"),
-              coalesce(col("comp_mutual"), lit(false)).as("comp_mutual")),
-            "x80c_out")
-          val a = out.agg(count(lit(1)),
-            sum(when(col("hit"), 1L).otherwise(0L))).collect()(0)
-          require(a.getLong(0) >= 1 && a.getLong(1) >= 1,
-            s"recall gate needs ground truth and at least one hit: $a")
-          out.orderBy(col("src_id"))
-        } finally {
-          fwd.unpersist(); bwd.unpersist()
-        }
-      },
-      None,
-      oracleGen = () => for {
-        srcCents <- Similarity.trainedCentroids.get((4, 2, "bitext-src"))
-        tgtCents <- Similarity.trainedCentroids.get((4, 2, "bitext-tgt"))
-      } yield {
+        "still hash-gated by the sibling x80 at every gate SF") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val srcSide = emb.filter(col("vec_id") % 2 === 0)
+      val tgtSide = emb.filter(col("vec_id") % 2 === 1)
+      // deterministic, engine-reproducible sample: top-200 sources
+      // by (60-bit md5 of the id, id) — the perCellHashKeep ordering
+      // convention, TakeOrderedAndProject at any scale
+      val nSample = 200
+      val srcSample = srcSide
+        .orderBy(graft.functions.HashFunctions
+          .md5Hash60(col("vec_id").cast("string")), col("vec_id"))
+        .limit(nSample)
+      val (srcCents, tgtCents) = bitextCentroids(dir, srcSide, tgtSide)
+      val fwd = Similarity.ivfTopKWithCapped(tgtSide, srcSide,
+        "vec_id", "embedding", k = 8, tgtCents, nProbes = 1,
+        perCellCap = 8)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bwd = Similarity.ivfTopKWithCapped(srcSide, tgtSide,
+        "vec_id", "embedding", k = 8, srcCents, nProbes = 1,
+        perCellCap = 8)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val result = try {
+        val comp = Similarity.bitextMarginMineWith(fwd, bwd, k = 4)
+          .select(col("src_id"), col("tgt_id").as("comp_tgt"),
+            col("mutual").as("comp_mutual"))
+        val nS = srcSample.count()
+        require(nS == math.min(nSample.toLong, srcSide.count()),
+          s"ground-truth sample must hold min($nSample, |src|) " +
+            s"rows, got $nS")
+        val exact = Similarity.bitextMarginMine(srcSample, tgtSide,
+            "vec_id", "embedding", k = 4)
+          .select(col("src_id"), col("tgt_id").as("exact_tgt"),
+            col("mutual").as("exact_mutual"))
+        val out = scratch(exact.join(comp, Seq("src_id"), "left")
+          .select(col("src_id"), col("exact_tgt"),
+            coalesce(col("comp_tgt"), lit(-1L)).as("comp_tgt"),
+            coalesce(col("comp_tgt") === col("exact_tgt"), lit(false))
+              .as("hit"),
+            col("exact_mutual"),
+            coalesce(col("comp_mutual"), lit(false)).as("comp_mutual")),
+          "x80c_out")
+        val a = out.agg(count(lit(1)),
+          sum(when(col("hit"), 1L).otherwise(0L))).collect()(0)
+        require(a.getLong(0) >= 1 && a.getLong(1) >= 1,
+          s"recall gate needs ground truth and at least one hit: $a")
+        out.orderBy(col("src_id"))
+      } finally {
+        fwd.unpersist(); bwd.unpersist()
+      }
+      (result, () => {
         // twin of the Spark-side deterministic md5-ordered source
         // sample (cellCapOrderSql's 60-bit ordering convention)
         val srcSamplePred = "vec_id % 2 = 0 AND vec_id IN (" +
@@ -1063,7 +1048,8 @@ private[queries] object ExtensionCrawlGraphQueries {
            |${compSql}
            |) c ON e.src_id = c.src_id
            |ORDER BY e.src_id""".stripMargin
-      }),
+      })
+    },
 
     QuerySpec("x81_streaming_wet_ingest",
       "STREAMING WET ingest — the crawl-delivery shape: new .wet " +

@@ -277,44 +277,41 @@ private[queries] object ExtensionDedupAnnQueries {
       Some(Similarity.lshOracleSql("embeddings", "vec_id", "embedding",
         5, nPlanes = 4, dim = 64, queryPred = "vec_id < 8"))),
 
-    QuerySpec("x6b_ann_ivf",
+    QuerySpec.lateBound("x6b_ann_ivf",
       "IVF-cell ANN: deterministic Lloyd-trained inverted file, 2-probe " +
         "search; the late-bound oracle embeds the trained centroids " +
-        "as literals and hash-matches",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        Similarity.ivfTopKWith(emb, emb.filter(col("vec_id") < 8),
-            "vec_id", "embedding", 5, memoCentroids(s, dir), nProbes = 2)
-          .select(col("qid"), col("rn"), col("did"),
-            round(col("cos"), 6).as("cos_r"))
-          .orderBy(col("qid"), col("rn"))
-      },
-      None,
-      oracleGen = () => Similarity.trainedCentroids.get((8, 2, "")).map(cents =>
-        Similarity.ivfOracleSql("embeddings", "vec_id", "embedding", 5,
-          cents, nProbes = 2, queryPred = "vec_id < 8"))),
+        "as literals and hash-matches") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val cents = memoCentroids(s, dir)
+      (Similarity.ivfTopKWith(emb, emb.filter(col("vec_id") < 8),
+          "vec_id", "embedding", 5, cents, nProbes = 2)
+        .select(col("qid"), col("rn"), col("did"),
+          round(col("cos"), 6).as("cos_r"))
+        .orderBy(col("qid"), col("rn")),
+      () => Similarity.ivfOracleSql("embeddings", "vec_id", "embedding", 5,
+        cents, nProbes = 2, queryPred = "vec_id < 8"))
+    },
 
-    QuerySpec("x6c_ann_recall_eval",
+    QuerySpec.lateBound("x6c_ann_recall_eval",
       "ANN governance: per-query recall@5 of the IVF path against the " +
         "exact brute-force top-k — the metric that picks nProbes before " +
-        "scaling out; hash-gated via the same late-bound centroid oracle",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") < 8)
-        val exact = Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 5)
-        val approx = Similarity.ivfTopKWith(emb, q, "vec_id",
-          "embedding", 5, memoCentroids(s, dir), nProbes = 2)
-        Similarity.recallAtK(approx, exact).orderBy(col("qid"))
-      },
-      None,
-      oracleGen = () => Similarity.trainedCentroids.get((8, 2, "")).map { cents =>
-        val approx = Similarity.ivfOracleSql("embeddings", "vec_id",
+        "scaling out; hash-gated via the same late-bound centroid " +
+        "oracle") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val q = emb.filter(col("vec_id") < 8)
+      val cents = memoCentroids(s, dir)
+      val exact = Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 5)
+      val approx = Similarity.ivfTopKWith(emb, q, "vec_id",
+        "embedding", 5, cents, nProbes = 2)
+      (Similarity.recallAtK(approx, exact).orderBy(col("qid")), () => {
+        val approxSql = Similarity.ivfOracleSql("embeddings", "vec_id",
           "embedding", 5, cents, nProbes = 2, queryPred = "vec_id < 8")
-        s"SELECT * FROM (${Similarity.recallOracleSql(approx, annTopkOracle,
-          "recall_at_k")}) ORDER BY qid"
-      }),
+        s"SELECT * FROM (${Similarity.recallOracleSql(approxSql,
+          annTopkOracle, "recall_at_k")}) ORDER BY qid"
+      })
+    },
 
-    QuerySpec("x6d_ivf_capped_serving",
+    QuerySpec.lateBound("x6d_ivf_capped_serving",
       "IVF serving with a PER-CELL candidate cap — the drift " +
         "rehearsal's actual remedy (TUNING.md \"ANN drift\": a tight " +
         "appended mode collapses effective cells, and a blind retrain " +
@@ -327,30 +324,27 @@ private[queries] object ExtensionDedupAnnQueries {
         "(the largest cell is over it — a vacuous cap would gate " +
         "nothing); the hash gate re-derives cells, the capped keep, " +
         "probe selection, and ranking in DuckDB via the late-bound " +
-        "centroid oracle",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val cap = 12
-        val cents = Similarity.ivfTrain(emb, "vec_id", "embedding",
-          nCells = 8, iters = 2, tag = "capped")
-        val maxCell = emb
-          .select(Similarity.cellExpr(col("embedding"), cents).as("cell"))
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-          .agg(max(col("n"))).head.getLong(0)
-        require(maxCell > cap,
-          s"cap must bite at this SF: max cell $maxCell <= cap $cap")
-        Similarity.ivfTopKWithCapped(emb,
-            emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5,
-            cents, nProbes = 2, perCellCap = cap)
-          .select(col("qid"), col("rn"), col("did"),
-            round(col("cos"), 6).as("cos_r"))
-          .orderBy(col("qid"), col("rn"))
-      },
-      None,
-      oracleGen = () => Similarity.trainedCentroids.get((8, 2, "capped"))
-        .map(cents => Similarity.ivfCappedOracleSql("embeddings",
-          "vec_id", "embedding", 5, cents, nProbes = 2,
-          queryPred = "vec_id < 8", perCellCap = 12))),
+        "centroid oracle") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val cap = 12
+      val cents = Similarity.ivfTrain(emb, "vec_id", "embedding",
+        nCells = 8, iters = 2)
+      val maxCell = emb
+        .select(Similarity.cellExpr(col("embedding"), cents).as("cell"))
+        .groupBy(col("cell")).agg(count(lit(1)).as("n"))
+        .agg(max(col("n"))).head.getLong(0)
+      require(maxCell > cap,
+        s"cap must bite at this SF: max cell $maxCell <= cap $cap")
+      (Similarity.ivfTopKWithCapped(emb,
+          emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5,
+          cents, nProbes = 2, perCellCap = cap)
+        .select(col("qid"), col("rn"), col("did"),
+          round(col("cos"), 6).as("cos_r"))
+        .orderBy(col("qid"), col("rn")),
+      () => Similarity.ivfCappedOracleSql("embeddings",
+        "vec_id", "embedding", 5, cents, nProbes = 2,
+        queryPred = "vec_id < 8", perCellCap = cap))
+    },
 
     QuerySpec("x7_dedup_embedding_cosine",
       "embedding-cosine near-dup ADJUDICATION over sign-LSH bucket " +
@@ -385,20 +379,23 @@ private[queries] object ExtensionDedupAnnQueries {
            |ORDER BY id_a, id_b""".stripMargin
       }),
 
-    QuerySpec("x31_semantic_dedup",
+    QuerySpec.lateBound("x31_semantic_dedup",
       "SemDeDup-style semantic dedup: deterministic IVF cells (16), " +
         "exact cosine only against lower-id cell-mates, keep-lowest-id " +
         "dominance at tau=0.9 — cell-keyed equi-join with a hard " +
         "1000-row cap per cell (overflow reported, never silent), so " +
         "a dense cell can never go quadratic; hash-gated via the " +
-        "late-bound trained-centroid oracle, cap included in the SQL",
-      (s, dir) => Similarity.semanticDedup(t(s, dir, "embeddings"),
-          "vec_id", "embedding", nCells = 16, tau = 0.9, maxCell = 1000)
+        "late-bound trained-centroid oracle, cap included in the " +
+        "SQL") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val cents = Similarity.ivfTrain(emb, "vec_id", "embedding",
+        nCells = 16, iters = 2)
+      (Similarity.semanticDedup(emb, "vec_id", "embedding", cents,
+          tau = 0.9, maxCell = 1000)
         .orderBy(col("vec_id")),
-      None,
-      oracleGen = () => Similarity.trainedCentroids.get((16, 2, "")).map(cents =>
-        Similarity.semanticDedupOracleSql("embeddings", "vec_id",
-          "embedding", cents, 0.9, maxCell = 1000))),
+      () => Similarity.semanticDedupOracleSql("embeddings", "vec_id",
+        "embedding", cents, 0.9, maxCell = 1000))
+    },
 
     QuerySpec("x8_text_langid",
       "language ID via stopword-marker scoring, distribution by language",

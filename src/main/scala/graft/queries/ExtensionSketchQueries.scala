@@ -21,58 +21,52 @@ import graft.sources.{Locations, Tables}
 private[queries] object ExtensionSketchQueries {
   import ExtensionSupport._
 
-  /** The dir s16's last run exported to, for its late-bound oracle:
-    * DuckDB reads the exported parquet files themselves, after the
-    * run's JVM may have exited (so a warehouse, not a run, location). */
-  @volatile private var s16Export: Option[String] = None
-
   val specs: Seq[QuerySpec] = Seq(
-    QuerySpec("s16_export_import_roundtrip",
+    QuerySpec.lateBound("s16_export_import_roundtrip",
       "S8 as a data-gated catalog entry: register nation+region with " +
         "PK/FK metadata, export the whole database (parquet per table " +
         "+ generated DDL text), wipe the registry, import it back by " +
         "parsing the DDL, and query the re-imported views. The DuckDB " +
         "oracle reads the EXPORTED parquet files themselves (late-" +
         "bound path), so the hash gate proves the export wrote " +
-        "faithful bytes — not merely that the source tables agree",
-      (s, dir) => {
-        import graft.catalog.Warehouse.{FkEdge, TableMeta}
-        Warehouse.clear()
-        Warehouse.load(s, t(s, dir, "region"),
-          TableMeta("region", pk = Seq("r_regionkey")))
-        Warehouse.load(s, t(s, dir, "nation"),
-          TableMeta("nation", pk = Seq("n_nationkey"),
-            fks = Seq(FkEdge(Seq("n_regionkey"), "region",
-              Seq("r_regionkey")))))
-        val out = localPath(Locations.warehouse(s, "export_s16"))
-        Warehouse.exportDatabase(s, out)
-        s16Export = Some(out)
-        Warehouse.clear()
-        val imported = Warehouse.importDatabase(s, out, validate = true)
-        require(imported.sorted == Seq("nation", "region"),
-          s"import must restore both exported tables, got $imported")
-        require(Warehouse.meta("nation").exists(m =>
-            m.pk == Seq("n_nationkey") &&
-              m.fks == Seq(FkEdge(Seq("n_regionkey"), "region",
-                Seq("r_regionkey")))),
-          "PK/FK metadata must survive the DDL round-trip")
-        s.table("nation")
-          .join(s.table("region"),
-            col("n_regionkey") === col("r_regionkey"))
-          .groupBy(col("r_name"))
-          .agg(count(lit(1)).as("n_nations"),
-            sum(col("n_nationkey")).cast("long").as("sum_key"))
-          .orderBy(col("r_name"))
-      },
-      None,
-      oracleGen = () => s16Export.map { d =>
+        "faithful bytes — not merely that the source tables " +
+        "agree") { (s, dir) =>
+      import graft.catalog.Warehouse.{FkEdge, TableMeta}
+      Warehouse.clear()
+      Warehouse.load(s, t(s, dir, "region"),
+        TableMeta("region", pk = Seq("r_regionkey")))
+      Warehouse.load(s, t(s, dir, "nation"),
+        TableMeta("nation", pk = Seq("n_nationkey"),
+          fks = Seq(FkEdge(Seq("n_regionkey"), "region",
+            Seq("r_regionkey")))))
+      // a warehouse, not a run, location: DuckDB reads the exported
+      // files after the run's JVM may have exited
+      val out = localPath(Locations.warehouse(s, "export_s16"))
+      Warehouse.exportDatabase(s, out)
+      Warehouse.clear()
+      val imported = Warehouse.importDatabase(s, out, validate = true)
+      require(imported.sorted == Seq("nation", "region"),
+        s"import must restore both exported tables, got $imported")
+      require(Warehouse.meta("nation").exists(m =>
+          m.pk == Seq("n_nationkey") &&
+            m.fks == Seq(FkEdge(Seq("n_regionkey"), "region",
+              Seq("r_regionkey")))),
+        "PK/FK metadata must survive the DDL round-trip")
+      (s.table("nation")
+        .join(s.table("region"),
+          col("n_regionkey") === col("r_regionkey"))
+        .groupBy(col("r_name"))
+        .agg(count(lit(1)).as("n_nations"),
+          sum(col("n_nationkey")).cast("long").as("sum_key"))
+        .orderBy(col("r_name")),
+      () =>
         s"""SELECT r.r_name, CAST(count(*) AS BIGINT) AS n_nations,
            |  CAST(sum(n.n_nationkey) AS BIGINT) AS sum_key
-           |FROM read_parquet('$d/nation.parquet/*.parquet') n
-           |JOIN read_parquet('$d/region.parquet/*.parquet') r
+           |FROM read_parquet('$out/nation.parquet/*.parquet') n
+           |JOIN read_parquet('$out/region.parquet/*.parquet') r
            |  ON n.n_regionkey = r.r_regionkey
-           |GROUP BY r.r_name ORDER BY r.r_name""".stripMargin
-      }),
+           |GROUP BY r.r_name ORDER BY r.r_name""".stripMargin)
+    },
 
     QuerySpec("s17_shuffled_shards",
       "deterministic GLOBAL SHUFFLE + sharded write — curated corpus " +
@@ -928,7 +922,7 @@ private[queries] object ExtensionSketchQueries {
       },
       Some(jlMarginOracle)),
 
-    QuerySpec("x59_bpe_merge_learn",
+    QuerySpec.lateBound("x59_bpe_merge_learn",
       "distributed BPE merge learning (Sennrich et al. 2016) — the " +
         "step that LEARNS a subword vocabulary from the corpus " +
         "(x29 applies one): three merges learned over the normalized " +
@@ -939,25 +933,21 @@ private[queries] object ExtensionSketchQueries {
         "argmax row. The oracle is late-bound but NON-circular: " +
         "DuckDB RE-DERIVES each level's argmax over the vocabulary " +
         "with the previous merges applied (recursive-CTE " +
-        "replace-to-fixpoint per level) — the stashed merges only " +
-        "drive the applications, so a wrongly-learned merge at any " +
-        "level diverges that level's recomputed argmax and count",
-      (s, dir) => {
-        import s.implicits._
-        val words = graft.operators.Bpe.wordFrequencies(
-          t(s, dir, "documents"), "text")
-        val merges = graft.operators.Bpe.learnMerges(words, 3)
-        graft.operators.Bpe.recordMerges(3, "documents", merges)
-        merges.zipWithIndex.map { case ((l, r, n), i) =>
-          (i + 1L, l, r, l + r, n)
-        }.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
-          .orderBy(col("merge_rank"))
-      },
-      None,
-      oracleGen = () => graft.operators.Bpe.learnedMerges
-        .get((3, "documents"))
-        .map(m => graft.operators.Bpe.trajectoryOracleSql(
-          "documents", "text", m))),
+        "replace-to-fixpoint per level) — the run's learned merges " +
+        "only drive the applications, so a wrongly-learned merge at " +
+        "any level diverges that level's recomputed argmax and " +
+        "count") { (s, dir) =>
+      import s.implicits._
+      val words = graft.operators.Bpe.wordFrequencies(
+        t(s, dir, "documents"), "text")
+      val merges = graft.operators.Bpe.learnMerges(words, 3)
+      (merges.zipWithIndex.map { case ((l, r, n), i) =>
+        (i + 1L, l, r, l + r, n)
+      }.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
+        .orderBy(col("merge_rank")),
+      () => graft.operators.Bpe.trajectoryOracleSql(
+        "documents", "text", merges))
+    },
 
   )
 }

@@ -21,11 +21,6 @@ import graft.sources.{Locations, Tables}
 private[queries] object ExtensionStorageRetrievalQueries {
   import ExtensionSupport._
 
-  /** The dir s11's last run wrote its JSONL to, for its late-bound
-    * oracle: DuckDB reads the very same part files, after the run's JVM
-    * may have exited (so a warehouse, not a run, location). */
-  @volatile private var s11RoundTrip: Option[String] = None
-
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("s10_bucketed_colocated_join",
       "bucketed persistent fact tables: both sides pre-shuffled on the " +
@@ -185,35 +180,35 @@ private[queries] object ExtensionStorageRetrievalQueries {
              |SELECT * FROM res
              |ORDER BY c_custkey, valid_from""".stripMargin)),
 
-    QuerySpec("s11_jsonl_roundtrip",
+    QuerySpec.lateBound("s11_jsonl_roundtrip",
       "JSONL source/sink round-trip: corpus written as newline-" +
         "delimited JSON, read back under a DECLARED schema, content " +
         "digests verified — the late-bound oracle reads the very " +
         "same part files this run wrote (NOTE: like s10, building " +
-        "this query performs the write eagerly — it IS the sink op)",
-      (s, dir) => {
-        // per-scale path so a later different-sf run can never leave
-        // files a re-checked oracle would silently mis-validate
-        val path = localPath(Locations.warehouse(s,
-          s"jsonl_docs_${new java.io.File(dir).getName}"))
-        val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        graft.sources.Jsonl.write(docs, path)
-        s11RoundTrip = Some(path)
-        val schema = new StructType()
-          .add("doc_id", LongType).add("text", StringType)
-        graft.sources.Jsonl.read(s, path, schema)
-          .select(col("doc_id"), md5(col("text")).as("text_md5"),
-            length(col("text")).cast("long").as("n_chars"))
-          .orderBy(col("doc_id"))
-      },
-      None,
-      oracleGen = () => s11RoundTrip.map(p =>
+        "this query performs the write eagerly — it IS the sink " +
+        "op)") { (s, dir) =>
+      // per-scale path so a later different-sf run can never leave
+      // files a re-checked oracle would silently mis-validate; a
+      // warehouse, not a run, location: DuckDB reads the same part
+      // files after the run's JVM may have exited
+      val path = localPath(Locations.warehouse(s,
+        s"jsonl_docs_${new java.io.File(dir).getName}"))
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      graft.sources.Jsonl.write(docs, path)
+      val schema = new StructType()
+        .add("doc_id", LongType).add("text", StringType)
+      (graft.sources.Jsonl.read(s, path, schema)
+        .select(col("doc_id"), md5(col("text")).as("text_md5"),
+          length(col("text")).cast("long").as("n_chars"))
+        .orderBy(col("doc_id")),
+      () =>
         s"""SELECT doc_id, md5(text) AS text_md5,
            |       CAST(length(text) AS BIGINT) AS n_chars
-           |FROM read_json('$p/part-*',
+           |FROM read_json('$path/part-*',
            |       format='newline_delimited',
            |       columns={doc_id: 'BIGINT', text: 'VARCHAR'})
-           |ORDER BY doc_id""".stripMargin)),
+           |ORDER BY doc_id""".stripMargin)
+    },
 
     QuerySpec("q5_profile_summarize",
       "per-column data profile (the DuckDB SUMMARIZE surface): type, " +
@@ -636,30 +631,27 @@ private[queries] object ExtensionStorageRetrievalQueries {
       Some(LanguageModel.crossEntropyOracleSql(
         "documents", "doc_id", "text", "lang", "lang = 'en'"))),
 
-    QuerySpec("x39_pq_adc_topk",
+    QuerySpec.lateBound("x39_pq_adc_topk",
       "product-quantization ANN, IVFADC shape (Jégou et al. 2011): " +
         "corpus compressed to 8 one-byte PQ codes by a deterministic " +
         "per-subspace Lloyd trainer (ONE fused shuffle per iteration " +
         "for all subspaces), IVF cell pruning, per-query LUTs, " +
         "asymmetric inner-product scoring that never re-reads the raw " +
         "vectors; late-bound oracle embeds the trained codebooks AND " +
-        "coarse centroids as literals and hash-matches bit-for-bit",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        Similarity.adcTopKWith(emb, emb.filter(col("vec_id") < 8),
-            "vec_id", "embedding", 5, memoBooks(s, dir),
-            memoCentroids(s, dir), nProbes = 2, residual = false)
-          .select(col("qid"), col("rn"), col("did"),
-            round(col("score"), 6).as("adc_r"))
-          .orderBy(col("qid"), col("rn"))
-      },
-      None,
-      oracleGen = () => for {
-        books <- Similarity.trainedCodebooks.get((8, 8, 2, ""))
-        cents <- Similarity.trainedCentroids.get((8, 2, ""))
-      } yield Similarity.adcOracleSql("embeddings", "vec_id", "embedding",
+        "coarse centroids as literals and hash-matches " +
+        "bit-for-bit") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val (books, cents) = (memoBooks(s, dir), memoCentroids(s, dir))
+      (Similarity.adcTopKWith(emb, emb.filter(col("vec_id") < 8),
+          "vec_id", "embedding", 5, books, cents, nProbes = 2,
+          residual = false)
+        .select(col("qid"), col("rn"), col("did"),
+          round(col("score"), 6).as("adc_r"))
+        .orderBy(col("qid"), col("rn")),
+      () => Similarity.adcOracleSql("embeddings", "vec_id", "embedding",
         5, books, cents, nProbes = 2, queryPred = "vec_id < 8",
-        residual = false)),
+        residual = false))
+    },
 
     QuerySpec("s14_zorder_clustered_scan",
       "Z-order (Morton) clustered layout + two-column box query: " +
@@ -784,30 +776,25 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "text", k = 25, candPool = 100, samplePct = 20))
     ),
 
-    QuerySpec("x41_incremental_ivf_append",
+    QuerySpec.lateBound("x41_incremental_ivf_append",
       "ANN index maintenance, append path: centroids frozen from a " +
         "Lloyd train over the base slice (vec_id < 400), the arriving " +
         "batch (vec_id >= 400) assigned by a narrow projection — no " +
         "retrain, no shuffle, no driver state beyond K codewords; the " +
         "per-row rounded best-dot score is the drift signal that " +
-        "schedules the next full retrain; subset-trained centroids " +
-        "are stash-tagged so the full-corpus oracles (x6b/x6c/x39) " +
-        "cannot be clobbered",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val centroids = Similarity.ivfTrain(
-          emb.filter(col("vec_id") < 400), "vec_id", "embedding",
-          nCells = 8, iters = 2, tag = "base<400")
-        Similarity.ivfAssign(emb.filter(col("vec_id") >= 400),
-            "vec_id", "embedding", centroids)
-          .orderBy(col("vec_id"))
-      },
-      None,
-      oracleGen = () => Similarity.trainedCentroids.get((8, 2, "base<400"))
-        .map(cents => Similarity.ivfAssignOracleSql("embeddings",
-          "vec_id", "embedding", cents, newPred = "vec_id >= 400"))),
+        "schedules the next full retrain") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val centroids = Similarity.ivfTrain(
+        emb.filter(col("vec_id") < 400), "vec_id", "embedding",
+        nCells = 8, iters = 2)
+      (Similarity.ivfAssign(emb.filter(col("vec_id") >= 400),
+          "vec_id", "embedding", centroids)
+        .orderBy(col("vec_id")),
+      () => Similarity.ivfAssignOracleSql("embeddings",
+        "vec_id", "embedding", centroids, newPred = "vec_id >= 400"))
+    },
 
-    QuerySpec("x42_pq_residual_topk",
+    QuerySpec.lateBound("x42_pq_residual_topk",
       "FULL IVF-PQ with residual encoding (Jégou et al. 2011 §III): " +
         "codebooks quantize v - centroid(cell), recovering the " +
         "reconstruction error a cell-agnostic codebook wastes; " +
@@ -816,55 +803,43 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "a candidate's score is its probe's own dot(q, centroid) plus " +
         "m residual-LUT lookups, so both engines run identical " +
         "arithmetic; late-bound oracle embeds centroids + residual " +
-        "codebooks + biases",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        Similarity.adcTopKWith(emb,
-            emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5,
-            memoResBooks(s, dir), memoCentroids(s, dir),
-            nProbes = 2, residual = true)
-          .select(col("qid"), col("rn"), col("did"),
-            round(col("score"), 6).as("score_r"))
-          .orderBy(col("qid"), col("rn"))
-      },
-      None,
-      oracleGen = () => for {
-        books <- Similarity.trainedCodebooks.get((8, 8, 2, "res"))
-        cents <- Similarity.trainedCentroids.get((8, 2, ""))
-      } yield Similarity.adcOracleSql("embeddings", "vec_id",
+        "codebooks + biases") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val (books, cents) = (memoResBooks(s, dir), memoCentroids(s, dir))
+      (Similarity.adcTopKWith(emb,
+          emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5,
+          books, cents, nProbes = 2, residual = true)
+        .select(col("qid"), col("rn"), col("did"),
+          round(col("score"), 6).as("score_r"))
+        .orderBy(col("qid"), col("rn")),
+      () => Similarity.adcOracleSql("embeddings", "vec_id",
         "embedding", 5, books, cents, nProbes = 2,
-        queryPred = "vec_id < 8", residual = true)),
+        queryPred = "vec_id < 8", residual = true))
+    },
 
-    QuerySpec("x42b_pq_recall_eval",
+    QuerySpec.lateBound("x42b_pq_recall_eval",
       "PQ governance: per-query recall@5 of BOTH compressed paths " +
         "(plain IVFADC and residual IVF-PQ) against the exact " +
         "brute-force top-k — the gate that picks m/ksub/nProbes and " +
         "decides whether residual encoding pays for a corpus before " +
         "scaling out; hash-gated through the same late-bound " +
-        "codebook+centroid oracles (x6c's pattern)",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") < 8)
-        val exact = Similarity.bruteForceTopK(emb, q, "vec_id",
-          "embedding", 5)
-        val plain = Similarity.adcTopKWith(emb, q, "vec_id",
-          "embedding", 5, memoBooks(s, dir),
-          memoCentroids(s, dir), nProbes = 2, residual = false)
-        val res = Similarity.adcTopKWith(emb, q, "vec_id",
-          "embedding", 5, memoResBooks(s, dir),
-          memoCentroids(s, dir), nProbes = 2, residual = true)
-        Similarity.recallAtK(plain, exact)
-          .withColumnRenamed("recall_at_k", "recall_pq")
-          .join(Similarity.recallAtK(res, exact)
-            .withColumnRenamed("recall_at_k", "recall_respq"), Seq("qid"))
-          .orderBy(col("qid"))
-      },
-      None,
-      oracleGen = () => for {
-        plainBooks <- Similarity.trainedCodebooks.get((8, 8, 2, ""))
-        resBooks <- Similarity.trainedCodebooks.get((8, 8, 2, "res"))
-        cents <- Similarity.trainedCentroids.get((8, 2, ""))
-      } yield {
+        "codebook+centroid oracles (x6c's pattern)") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val q = emb.filter(col("vec_id") < 8)
+      val exact = Similarity.bruteForceTopK(emb, q, "vec_id",
+        "embedding", 5)
+      val (plainBooks, cents) = (memoBooks(s, dir), memoCentroids(s, dir))
+      val resBooks = memoResBooks(s, dir)
+      val plain = Similarity.adcTopKWith(emb, q, "vec_id",
+        "embedding", 5, plainBooks, cents, nProbes = 2, residual = false)
+      val res = Similarity.adcTopKWith(emb, q, "vec_id",
+        "embedding", 5, resBooks, cents, nProbes = 2, residual = true)
+      (Similarity.recallAtK(plain, exact)
+        .withColumnRenamed("recall_at_k", "recall_pq")
+        .join(Similarity.recallAtK(res, exact)
+          .withColumnRenamed("recall_at_k", "recall_respq"), Seq("qid"))
+        .orderBy(col("qid")),
+      () => {
         def adc(books: Array[Array[Array[Double]]], residual: Boolean) =
           Similarity.adcOracleSql("embeddings", "vec_id", "embedding", 5,
             books, cents, nProbes = 2, queryPred = "vec_id < 8", residual)
@@ -874,7 +849,8 @@ private[queries] object ExtensionStorageRetrievalQueries {
            |JOIN (${Similarity.recallOracleSql(
              adc(resBooks, residual = true), annTopkOracle, "recall_respq")}) rr
            |  ON pr.qid = rr.qid ORDER BY pr.qid""".stripMargin
-      }),
+      })
+    },
 
     QuerySpec("x43_token_budget_selection",
       "token-budget data selection: keep the highest-margin documents " +
@@ -1002,77 +978,70 @@ private[queries] object ExtensionStorageRetrievalQueries {
              |FROM lineitem WHERE l_orderkey <= 200
              |ORDER BY l_orderkey, l_linenumber, zval""".stripMargin)),
 
-    QuerySpec("x45_hard_negative_mining",
+    QuerySpec.lateBound("x45_hard_negative_mining",
       "contrastive-pair mining for embedding training: per anchor, " +
         "the best candidate at/above the positive band and the best " +
         "strictly below the negative band (the in-between excluded as " +
         "likely near-dup noise) — hard negatives are what make " +
         "contrastive batches informative; candidates from the bounded " +
         "IVF cell join, rankings on the rounded cosine so both " +
-        "engines mine the identical set",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        Similarity.minePairsWith(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", memoCentroids(s, dir), nProbes = 2,
-          posBand = 0.10, negBand = 0.0)
-      },
-      None,
-      oracleGen = () => Similarity.trainedCentroids.get((8, 2, ""))
-        .map(cents => Similarity.minePairsOracleSql("embeddings",
-          "vec_id", "embedding", cents, nProbes = 2, posBand = 0.10,
-          negBand = 0.0, queryPred = "vec_id < 8"))),
+        "engines mine the identical set") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val cents = memoCentroids(s, dir)
+      (Similarity.minePairsWith(emb, emb.filter(col("vec_id") < 8),
+        "vec_id", "embedding", cents, nProbes = 2,
+        posBand = 0.10, negBand = 0.0),
+      () => Similarity.minePairsOracleSql("embeddings",
+        "vec_id", "embedding", cents, nProbes = 2, posBand = 0.10,
+        negBand = 0.0, queryPred = "vec_id < 8"))
+    },
 
-    QuerySpec("x46_cell_balanced_sample",
+    QuerySpec.lateBound("x46_cell_balanced_sample",
       "cluster-balanced diversity sampling: at most 12 rows per IVF " +
         "cell in deterministic hash order — after near-dups are gone " +
         "corpora stay density-skewed, and uniform sampling keeps the " +
         "head's redundancy while cell-balanced keeps the tail's " +
-        "coverage; the only wide op is a cell-keyed window",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        Similarity.cellBalancedSample(emb, "vec_id", "embedding",
-            memoCentroids(s, dir), perCell = 12)
-          .orderBy(col("vec_id"))
-      },
-      None,
-      oracleGen = () => Similarity.trainedCentroids.get((8, 2, ""))
-        .map(cents => Similarity.cellBalancedSampleOracleSql(
-          "embeddings", "vec_id", "embedding", cents, perCell = 12))),
+        "coverage; the only wide op is a cell-keyed " +
+        "window") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val cents = memoCentroids(s, dir)
+      (Similarity.cellBalancedSample(emb, "vec_id", "embedding",
+          cents, perCell = 12)
+        .orderBy(col("vec_id")),
+      () => Similarity.cellBalancedSampleOracleSql(
+        "embeddings", "vec_id", "embedding", cents, perCell = 12))
+    },
 
-    QuerySpec("x42c_pq_recall_sweep",
+    QuerySpec.lateBound("x42c_pq_recall_sweep",
       "the recall-vs-compression knob turned: same corpus as x42b " +
         "but ksub=16 codewords (one more bit per code) and 4 probes " +
         "(half the cells) — the parameter sweep a deployment runs " +
         "before freezing an index config; x42b's 8-codeword recall " +
-        "is the baseline this variant must beat",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") < 8)
-        val exact = Similarity.bruteForceTopK(emb, q, "vec_id",
-          "embedding", 5)
-        // the ksub=16 codebook IS the sweep (trains eagerly); the
-        // coarse quantizer is identical across the family — shared
-        val wide = Similarity.adcTopKWith(emb, q, "vec_id", "embedding",
-          5, Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
-            ksub = 16, iters = 2),
-          memoCentroids(s, dir), nProbes = 4, residual = false)
-        Similarity.recallAtK(wide, exact)
-          .withColumnRenamed("recall_at_k", "recall_k16p4")
-          .orderBy(col("qid"))
-      },
-      None,
-      oracleGen = () => for {
-        books <- Similarity.trainedCodebooks.get((8, 16, 2, ""))
-        cents <- Similarity.trainedCentroids.get((8, 2, ""))
-      } yield {
-        val wide = Similarity.adcOracleSql("embeddings", "vec_id",
+        "is the baseline this variant must beat") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val q = emb.filter(col("vec_id") < 8)
+      val exact = Similarity.bruteForceTopK(emb, q, "vec_id",
+        "embedding", 5)
+      // the ksub=16 codebook IS the sweep (trains eagerly); the
+      // coarse quantizer is identical across the family — shared
+      val books = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
+        ksub = 16, iters = 2)
+      val cents = memoCentroids(s, dir)
+      val wide = Similarity.adcTopKWith(emb, q, "vec_id", "embedding",
+        5, books, cents, nProbes = 4, residual = false)
+      (Similarity.recallAtK(wide, exact)
+        .withColumnRenamed("recall_at_k", "recall_k16p4")
+        .orderBy(col("qid")),
+      () => {
+        val wideSql = Similarity.adcOracleSql("embeddings", "vec_id",
           "embedding", 5, books, cents, nProbes = 4,
           queryPred = "vec_id < 8", residual = false)
-        s"SELECT * FROM (${Similarity.recallOracleSql(wide, annTopkOracle,
-          "recall_k16p4")}) ORDER BY qid"
-      }),
+        s"SELECT * FROM (${Similarity.recallOracleSql(wideSql,
+          annTopkOracle, "recall_k16p4")}) ORDER BY qid"
+      })
+    },
 
-    QuerySpec("x42d_pq_rerank_recall",
+    QuerySpec.lateBound("x42d_pq_rerank_recall",
       "the RE-RANK refinement that makes compressed ANN deployable " +
         "(Jégou et al. 2011 §V): raw ADC recall@5 is ~0.30 (x42b) — " +
         "unusable alone; here the ADC top-C shortlist is re-scored " +
@@ -1081,34 +1050,28 @@ private[queries] object ExtensionStorageRetrievalQueries {
         "C=50 against the brute-force truth — the curve that picks " +
         "the shortlist size before freezing an index config; at C=50 " +
         "re-ranking recovers the IVF probe ceiling (~0.9, x6c's " +
-        "uncompressed recall)",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val q = emb.filter(col("vec_id") < 8)
-        val exact = Similarity.bruteForceTopK(emb, q, "vec_id",
-          "embedding", 5)
-        // ONE shortlist at the widest C; narrower C is a filter on its
-        // rank — one training pass, one candidate join for all points
-        val short100 = Similarity.adcTopKWith(emb, q, "vec_id",
-          "embedding", 100, memoBooks(s, dir),
-          memoCentroids(s, dir), nProbes = 2, residual = false)
-        def reAt(c: Int) = Similarity.exactRerank(emb, q, "vec_id",
-          "embedding",
-          short100.filter(col("rn") <= c)
-            .select(col("qid"), col("did")), 5)
-        Similarity.recallAtK(reAt(10), exact)
-          .withColumnRenamed("recall_at_k", "recall_c10")
-          .join(Similarity.recallAtK(reAt(50), exact)
-            .withColumnRenamed("recall_at_k", "recall_c50"), Seq("qid"))
-          .join(Similarity.recallAtK(reAt(100), exact)
-            .withColumnRenamed("recall_at_k", "recall_c100"), Seq("qid"))
-          .orderBy(col("qid"))
-      },
-      None,
-      oracleGen = () => for {
-        books <- Similarity.trainedCodebooks.get((8, 8, 2, ""))
-        cents <- Similarity.trainedCentroids.get((8, 2, ""))
-      } yield {
+        "uncompressed recall)") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val q = emb.filter(col("vec_id") < 8)
+      val exact = Similarity.bruteForceTopK(emb, q, "vec_id",
+        "embedding", 5)
+      // ONE shortlist at the widest C; narrower C is a filter on its
+      // rank — one training pass, one candidate join for all points
+      val (books, cents) = (memoBooks(s, dir), memoCentroids(s, dir))
+      val short100 = Similarity.adcTopKWith(emb, q, "vec_id",
+        "embedding", 100, books, cents, nProbes = 2, residual = false)
+      def reAt(c: Int) = Similarity.exactRerank(emb, q, "vec_id",
+        "embedding",
+        short100.filter(col("rn") <= c)
+          .select(col("qid"), col("did")), 5)
+      (Similarity.recallAtK(reAt(10), exact)
+        .withColumnRenamed("recall_at_k", "recall_c10")
+        .join(Similarity.recallAtK(reAt(50), exact)
+          .withColumnRenamed("recall_at_k", "recall_c50"), Seq("qid"))
+        .join(Similarity.recallAtK(reAt(100), exact)
+          .withColumnRenamed("recall_at_k", "recall_c100"), Seq("qid"))
+        .orderBy(col("qid")),
+      () => {
         def re(c: Int): String = Similarity.recallOracleSql(
           Similarity.adcRerankOracleSql("embeddings", "vec_id",
             "embedding", 5, c, books, cents, nProbes = 2,
@@ -1119,7 +1082,8 @@ private[queries] object ExtensionStorageRetrievalQueries {
            |JOIN (${re(50)}) r50 ON r10.qid = r50.qid
            |JOIN (${re(100)}) r100 ON r10.qid = r100.qid
            |ORDER BY r10.qid""".stripMargin
-      }),
+      })
+    },
 
   )
 }

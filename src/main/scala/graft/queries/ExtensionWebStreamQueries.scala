@@ -520,7 +520,7 @@ private[queries] object ExtensionWebStreamQueries {
              |GROUP BY c.cutoff, t.vocab, t.total
              |ORDER BY c.cutoff""".stripMargin)),
 
-    QuerySpec("x57_ann_index_roundtrip",
+    QuerySpec.lateBound("x57_ann_index_roundtrip",
       "ANN index lifecycle, IVF persistence leg: centroids trained " +
         "once, persisted as parquet tables with a manifest (kind, " +
         "n_cells, dim, caller provenance), LOADED BACK, and the full " +
@@ -529,26 +529,23 @@ private[queries] object ExtensionWebStreamQueries {
         "roundtrip corruption (row loss, precision loss, cell " +
         "reorder) diverges the hash; the manifest is what makes a " +
         "100 TB index auditable (which snapshot trained it, with " +
-        "what params) and the loader validates tables against it",
-      (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val cents = Similarity.ivfTrain(emb, "vec_id", "embedding",
-          nCells = 8, iters = 2, tag = "persist")
-        Similarity.saveIvfIndex(s, "ivf_roundtrip", cents,
-          Map("snapshot" -> "fixture-embeddings", "iters" -> "2"))
-        val (loaded, man) = Similarity.loadIvfIndex(s, "ivf_roundtrip")
-        require(man("n_cells") == "8" && man("iters") == "2" &&
-          man("snapshot") == "fixture-embeddings",
-          s"manifest must round-trip; got $man")
-        Similarity.ivfAssign(emb, "vec_id", "embedding", loaded)
-          .orderBy(col("vec_id"))
-      },
-      None,
-      oracleGen = () => Similarity.trainedCentroids.get((8, 2, "persist"))
-        .map(cents => Similarity.ivfAssignOracleSql("embeddings",
-          "vec_id", "embedding", cents, newPred = "TRUE"))),
+        "what params) and the loader validates tables against it") { (s, dir) =>
+      val emb = t(s, dir, "embeddings")
+      val cents = Similarity.ivfTrain(emb, "vec_id", "embedding",
+        nCells = 8, iters = 2)
+      Similarity.saveIvfIndex(s, "ivf_roundtrip", cents,
+        Map("snapshot" -> "fixture-embeddings", "iters" -> "2"))
+      val (loaded, man) = Similarity.loadIvfIndex(s, "ivf_roundtrip")
+      require(man("n_cells") == "8" && man("iters") == "2" &&
+        man("snapshot") == "fixture-embeddings",
+        s"manifest must round-trip; got $man")
+      (Similarity.ivfAssign(emb, "vec_id", "embedding", loaded)
+        .orderBy(col("vec_id")),
+      () => Similarity.ivfAssignOracleSql("embeddings",
+        "vec_id", "embedding", cents, newPred = "TRUE"))
+    },
 
-    QuerySpec("x57b_pq_index_roundtrip",
+    QuerySpec.lateBound("x57b_pq_index_roundtrip",
       "ANN index lifecycle, PQ persistence leg: codebooks persisted " +
         "with their manifest and loaded back; the gate dumps every " +
         "LOADED codeword value against the ORIGINAL trained values " +
@@ -557,39 +554,36 @@ private[queries] object ExtensionWebStreamQueries {
         "Double.toString round-trips through DuckDB's " +
         "correctly-rounded parse), the property compressed-index " +
         "serving silently loses if an export path ever goes through " +
-        "text truncation",
-      (s, dir) => {
-        import s.implicits._
-        val emb = t(s, dir, "embeddings")
-        val books = Similarity.pqTrain(emb, "vec_id", "embedding",
-          m = 8, ksub = 8, iters = 2, tag = "persist")
-        Similarity.savePqIndex(s, "pq_roundtrip", books,
-          Map("snapshot" -> "fixture-embeddings"))
-        val (loaded, man) = Similarity.loadPqIndex(s, "pq_roundtrip")
-        require(man("m") == "8" && man("ksub") == "8" &&
-          man("snapshot") == "fixture-embeddings",
-          s"manifest must round-trip; got $man")
-        (for {
-          sb <- loaded.indices
-          j <- loaded(sb).indices
-          d <- loaded(sb)(j).indices
-        } yield (sb, j, d, loaded(sb)(j)(d)))
-          .toDF("sub", "code", "dim_idx", "cw_val")
-          .orderBy(col("sub"), col("code"), col("dim_idx"))
-      },
-      None,
-      oracleGen = () => Similarity.trainedCodebooks.get((8, 8, 2, "persist"))
-        .map { books =>
-          val rows = for {
-            sb <- books.indices
-            j <- books(sb).indices
-            d <- books(sb)(j).indices
-          } yield s"($sb, $j, $d, CAST('${books(sb)(j)(d)}' AS DOUBLE))"
-          s"""SELECT sub, code, dim_idx, cw_val
-             |FROM (VALUES ${rows.mkString(",\n  ")})
-             |  t(sub, code, dim_idx, cw_val)
-             |ORDER BY sub, code, dim_idx""".stripMargin
-        }),
+        "text truncation") { (s, dir) =>
+      import s.implicits._
+      val emb = t(s, dir, "embeddings")
+      val books = Similarity.pqTrain(emb, "vec_id", "embedding",
+        m = 8, ksub = 8, iters = 2)
+      Similarity.savePqIndex(s, "pq_roundtrip", books,
+        Map("snapshot" -> "fixture-embeddings"))
+      val (loaded, man) = Similarity.loadPqIndex(s, "pq_roundtrip")
+      require(man("m") == "8" && man("ksub") == "8" &&
+        man("snapshot") == "fixture-embeddings",
+        s"manifest must round-trip; got $man")
+      ((for {
+        sb <- loaded.indices
+        j <- loaded(sb).indices
+        d <- loaded(sb)(j).indices
+      } yield (sb, j, d, loaded(sb)(j)(d)))
+        .toDF("sub", "code", "dim_idx", "cw_val")
+        .orderBy(col("sub"), col("code"), col("dim_idx")),
+      () => {
+        val rows = for {
+          sb <- books.indices
+          j <- books(sb).indices
+          d <- books(sb)(j).indices
+        } yield s"($sb, $j, $d, CAST('${books(sb)(j)(d)}' AS DOUBLE))"
+        s"""SELECT sub, code, dim_idx, cw_val
+           |FROM (VALUES ${rows.mkString(",\n  ")})
+           |  t(sub, code, dim_idx, cw_val)
+           |ORDER BY sub, code, dim_idx""".stripMargin
+      })
+    },
 
     QuerySpec("x47_streaming_dedup",
       "transitive oracle for the streaming watermarked dedup: " +

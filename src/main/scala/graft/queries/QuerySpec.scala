@@ -1,5 +1,9 @@
 package graft.queries
 
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One catalog entry: a named Spark query over a test-data directory,
@@ -16,20 +20,47 @@ final case class QuerySpec(
     doc: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    /** Late-bound oracle for queries whose SQL embeds values computed
-      * DURING the run (e.g. trained IVF centroids): evaluated at dump
-      * time, AFTER every `run` has executed (Verify's ordering), so it
-      * can read state the run deterministically stashed. A gen that
-      * returns None FAILS the dump loudly (SparkEntry.oracleSql
-      * throws): a missing stash entry means training didn't run or
-      * the key/tag is wrong, and silently downgrading to a rows-only
-      * check would skip the query's hash gate. */
-    oracleGen: () => Option[String] = QuerySpec.noGen)
+    /** Set by [[QuerySpec.lateBound]]: the oracle of the entry's last
+      * run, null until it runs. */
+    lastOracle: Option[AtomicReference[() => String]] = None) {
+
+  /** The entry's DuckDB SQL: the static oracle, or a late-bound
+    * entry's oracle over the values its last run used. A late-bound
+    * entry that has not run throws: there is nothing to embed, and
+    * downgrading it to a rows-only check would skip its hash gate. */
+  def oracleSql: Option[String] = oracle.orElse(lastOracle.map { last =>
+    val gen = last.get()
+    if (gen == null) throw new IllegalStateException(
+      s"late-bound oracle for '$name' is unset: the entry has not run")
+    gen()
+  })
+}
 
 object QuerySpec {
-  /** Sentinel default distinguishing "no late-bound oracle" from a
-    * provided gen that failed to find its stash entry. */
-  val noGen: () => Option[String] = () => None
+  /** An entry whose oracle embeds values its run computes (trained
+    * centroids and codebooks, learned merges, the files it wrote):
+    * `run` returns the frame and a thunk that builds the oracle from
+    * exactly the values that run used. The spec keeps the last run's
+    * thunk; it is evaluated at dump time ([[oracleSql]]), after the
+    * runs, so a run that builds no dump pays nothing for the SQL. */
+  def lateBound(name: String, doc: String)(
+      run: (SparkSession, String) => (DataFrame, () => String)): QuerySpec = {
+    val last = new AtomicReference[() => String]()
+    QuerySpec(name, doc, (s, dir) => {
+      val (df, oracle) = run(s, dir)
+      last.set(oracle)
+      df
+    }, None, Some(last))
+  }
+
+  /** The oracle SQL of the `specs` that `keep` names, by entry name in
+    * catalog order; entries with no oracle are left out. Only kept
+    * entries' late-bound oracles are built, so a filtered dump never
+    * asks for the oracle of an entry it did not run. */
+  def oracleSql(specs: Seq[QuerySpec],
+      keep: String => Boolean): Map[String, String] =
+    ListMap(specs.filter(s => keep(s.name))
+      .flatMap(s => s.oracleSql.map(s.name -> _)): _*)
 }
 
 object Catalog {

@@ -71,7 +71,7 @@ class BpeSpec extends SparkSpec {
       Seq(("e", "r", 10L), ("i", "n", 5L)))
     assert(sql.contains("';e;r;'") && sql.contains("';i;n;'"))
     assert(sql.contains("m1") && sql.contains("m2") && !sql.contains("m3 "))
-    // counts from the stash must NOT appear: the oracle recomputes them
+    // the learned merges' counts must NOT appear: the oracle recomputes them
     assert(!sql.contains("10") && !sql.contains(" 5"))
   }
 }

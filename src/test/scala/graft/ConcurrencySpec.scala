@@ -12,7 +12,7 @@ import graft.queries.Catalog
   * must return results under concurrency identical to their
   * sequential runs — no hidden shared mutable state, no sensitivity
   * to interleaved scheduling. Entries that mutate session state by
-  * design (Warehouse registry, layout writers, trainer stashes) are
+  * design (Warehouse registry, layout writers, persisted indexes) are
   * driver-sequenced and excluded here.
   */
 class ConcurrencySpec extends SparkSpec {

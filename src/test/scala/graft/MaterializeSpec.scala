@@ -25,9 +25,9 @@ class MaterializeSpec extends SparkSpec {
     val src = emb.filter($"vec_id" % 2 === 0)
     val tgt = emb.filter($"vec_id" % 2 === 1)
     val srcCents = Similarity.ivfTrain(src, "vec_id", "embedding",
-      nCells = 4, tag = "materialize-spec-src")
+      nCells = 4)
     val tgtCents = Similarity.ivfTrain(tgt, "vec_id", "embedding",
-      nCells = 4, tag = "materialize-spec-tgt")
+      nCells = 4)
     (Similarity.ivfTopKWithCapped(tgt, src, "vec_id", "embedding", k = 8,
         tgtCents, nProbes = 2, perCellCap = 64),
       Similarity.ivfTopKWithCapped(src, tgt, "vec_id", "embedding", k = 8,
@@ -57,14 +57,12 @@ class MaterializeSpec extends SparkSpec {
     val emb = Tables.load(spark, sf(), "embeddings")
     val cache = spark.sharedState.cacheManager
     spark.catalog.clearCache()
-    val cents = Similarity.ivfTrain(emb, "vec_id", "embedding", nCells = 4,
-      tag = "materialize-spec")
+    val cents = Similarity.ivfTrain(emb, "vec_id", "embedding", nCells = 4)
     assert(cache.isEmpty, "ivfTrain left a cached frame")
-    Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, ksub = 4,
-      tag = "materialize-spec")
+    Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, ksub = 4)
     assert(cache.isEmpty, "pqTrain left a cached frame")
     Similarity.pqTrainResidual(emb, "vec_id", "embedding", cents, m = 8,
-      ksub = 4, tag = "materialize-spec-res")
+      ksub = 4)
     assert(cache.isEmpty, "pqTrainResidual left a cached frame")
   }
 
@@ -75,11 +73,11 @@ class MaterializeSpec extends SparkSpec {
     val docs = Tables.load(spark, sf(), "documents")
     def runAll(): Seq[Seq[String]] = {
       val cents = Similarity.ivfTrain(emb, "vec_id", "embedding",
-        nCells = 8, tag = "materialize-layout")
+        nCells = 8)
       val books = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
-        ksub = 8, tag = "materialize-layout")
+        ksub = 8)
       val resBooks = Similarity.pqTrainResidual(emb, "vec_id", "embedding",
-        cents, m = 8, ksub = 8, tag = "materialize-layout-res")
+        cents, m = 8, ksub = 8)
       val (fwd, bwd) = bitextCandidates(emb)
       Seq(cents.map(_.toSeq).toSeq, books.map(_.map(_.toSeq).toSeq).toSeq,
           resBooks.map(_.map(_.toSeq).toSeq).toSeq).map(b => Seq(b.toString)) ++

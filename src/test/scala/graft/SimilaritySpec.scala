@@ -153,7 +153,7 @@ class SimilaritySpec extends SparkSpec {
       (i, Seq.tabulate(8)(d => 1f + 0.001f * (i * 8 + d))))
       .toDF("vec_id", "embedding")
     val cents = Similarity.ivfTrain(vecs, "vec_id", "embedding",
-      nCells = 4, iters = 2, tag = "capspec")
+      nCells = 4, iters = 2)
     val q = vecs.filter($"vec_id" < 3)
     val capped = Similarity.ivfTopKWithCapped(vecs, q, "vec_id",
       "embedding", k = 30, cents, nProbes = 1, perCellCap = 5)
@@ -181,11 +181,13 @@ class SimilaritySpec extends SparkSpec {
     val q = emb.filter($"vec_id" < 8)
     // frozen artifacts, trained once: only the serving plans re-run
     val cents = Similarity.ivfTrain(emb, "vec_id", "embedding",
-      nCells = 8, tag = "layout-spec")
+      nCells = 8)
     val books = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8,
-      ksub = 8, tag = "layout-spec")
+      ksub = 8)
     val resBooks = Similarity.pqTrainResidual(emb, "vec_id", "embedding",
-      cents, m = 8, ksub = 8, tag = "layout-spec-res")
+      cents, m = 8, ksub = 8)
+    val dedupCells = Similarity.ivfTrain(emb, "vec_id", "embedding",
+      nCells = 4)
     def serveAll(): Seq[Seq[String]] = Seq(
       Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 5),
       Similarity.lshTopK(emb, q, "vec_id", "embedding", 5, nPlanes = 4,
@@ -200,7 +202,7 @@ class SimilaritySpec extends SparkSpec {
         nProbes = 2, posBand = 0.10, negBand = 0.0),
       // the capped cell self-join shared with the dedup family; a cap
       // of 40 binds on this corpus's 4 cells
-      Similarity.semanticDedup(emb, "vec_id", "embedding", nCells = 4,
+      Similarity.semanticDedup(emb, "vec_id", "embedding", dedupCells,
         tau = 0.9, maxCell = 40)
     ).map(_.collect().toSeq.map(_.toString).sorted)
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
@@ -248,7 +250,8 @@ class SimilaritySpec extends SparkSpec {
       (9L, Seq(3f, 0f, 0f, 0f))
     ).toDF("vec_id", "embedding")
     val got = Similarity.semanticDedup(vecs, "vec_id", "embedding",
-        nCells = 2, tau = 0.95)
+        Similarity.ivfTrain(vecs, "vec_id", "embedding", nCells = 2),
+        tau = 0.95)
       .select($"vec_id", $"kept").as[(Long, Boolean)].collect().toMap
     assert(got(0L), "lowest id of the twin group must be kept")
     assert(!got(5L) && !got(9L), "twins of a lower id must drop")
@@ -263,8 +266,10 @@ class SimilaritySpec extends SparkSpec {
     // embedding-distribution worst case the cap exists for
     val vecs = (0L until 50L).map(i => (i, Seq(1f, 0f, 0f, 0f)))
       .toDF("vec_id", "embedding")
+    val oneCell = Similarity.ivfTrain(vecs, "vec_id", "embedding",
+      nCells = 1)
     val got = Similarity.semanticDedup(vecs, "vec_id", "embedding",
-        nCells = 1, tau = 0.9, maxCell = 10)
+        oneCell, tau = 0.9, maxCell = 10)
       .select($"vec_id", $"max_lower_cos_r", $"kept")
       .as[(Long, Double, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -276,7 +281,7 @@ class SimilaritySpec extends SparkSpec {
       assert(got(i) == ((-1.0, true)),
         s"row $i beyond the cap must pass through un-judged"))
     val overflow = Similarity.semanticCellOverflow(vecs, "vec_id",
-        "embedding", nCells = 1, maxCell = 10)
+        "embedding", oneCell, maxCell = 10)
       .as[(Int, Long)].collect().toSeq
     assert(overflow.map(_._2) == Seq(50L),
       "the dense cell must be reported, not silently truncated")
@@ -288,7 +293,8 @@ class SimilaritySpec extends SparkSpec {
       (2L, Seq(1f, 0f))
     ).toDF("vec_id", "embedding")
     val row = Similarity.semanticDedup(vecs, "vec_id", "embedding",
-        nCells = 1, tau = 1.0)
+        Similarity.ivfTrain(vecs, "vec_id", "embedding", nCells = 1),
+        tau = 1.0)
       .filter($"vec_id" === 2)
       .select($"max_lower_cos_r", $"kept").as[(Double, Boolean)].head()
     assert(row._1 == 1.0 && !row._2)
@@ -357,7 +363,7 @@ class SimilaritySpec extends SparkSpec {
       "assignment would, and returns the drift score") {
     val base = pqCorpus.filter($"vec_id" < 4)
     val cents = Similarity.ivfTrain(base, "vec_id", "embedding",
-      nCells = 2, tag = "spec-base")
+      nCells = 2)
     val got = Similarity.ivfAssign(pqCorpus.filter($"vec_id" >= 4),
         "vec_id", "embedding", cents)
       .as[(Long, Int, Double)].collect().map(r => r._1 -> r._2).toMap
@@ -384,11 +390,10 @@ class SimilaritySpec extends SparkSpec {
     assert(top.forall(_._3 != 0L), "self must be excluded")
     assert(top.map(_._3).toSet.subsetOf(Set(1L, 2L)),
       "residual ADC must keep the query inside its own cluster")
-    val cents = Similarity.trainedCentroids((2, 2, ""))
     val b1 = Similarity.pqTrainResidual(pqCorpus, "vec_id", "embedding",
-      cents, m = 2, ksub = 2)
+      cells, m = 2, ksub = 2)
     val b2 = Similarity.pqTrainResidual(pqCorpus, "vec_id", "embedding",
-      cents, m = 2, ksub = 2)
+      cells, m = 2, ksub = 2)
     assert(b1.map(_.map(_.toSeq).toSeq).toSeq ==
       b2.map(_.map(_.toSeq).toSeq).toSeq)
   }
@@ -410,11 +415,11 @@ class SimilaritySpec extends SparkSpec {
     // pair (qid==did allowed via a fresh join) as the proxy instead:
     // residual score of (v, v) must be closer to ||v||^2 than plain.
     val centsR = Similarity.ivfTrain(vecs, "vec_id", "embedding",
-      nCells = 2, tag = "resgain")
+      nCells = 2)
     val plainBooks = Similarity.pqTrain(vecs, "vec_id", "embedding",
-      m = 2, ksub = 2, tag = "resgain-plain")
+      m = 2, ksub = 2)
     val resBooks = Similarity.pqTrainResidual(vecs, "vec_id", "embedding",
-      centsR, m = 2, ksub = 2, tag = "resgain-res")
+      centsR, m = 2, ksub = 2)
     def reconError(v: Array[Double], approx: Array[Double]): Double =
       v.zip(approx).map { case (a, b) => (a - b) * (a - b) }.sum
     def encodePlain(v: Array[Double], s: Int): Array[Double] = {
@@ -480,28 +485,29 @@ class SimilaritySpec extends SparkSpec {
     assert(got(0)._3 > 0.9 && got(1)._3 < 0.1)
   }
 
-  test("adcRerankTopK recovers the exact neighbor order PQ codes " +
-      "lose, and caps at k") {
-    val got = Similarity.adcRerankTopK(pqCorpus,
-        pqCorpus.filter($"vec_id" === 0), "vec_id", "embedding",
-        k = 2, shortlistC = 4, m = 2, ksub = 2, nCells = 2,
-        nProbes = 2)
+  test("exactRerank over an adcTopKWith shortlist restores exact " +
+      "order, caps at k") {
+    val q = pqCorpus.filter($"vec_id" === 0)
+    def rerank(shortlistC: Int, k: Int) = Similarity.exactRerank(pqCorpus,
+        q, "vec_id", "embedding",
+        Similarity.adcTopKWith(pqCorpus, q, "vec_id", "embedding",
+            shortlistC, pqBooks(), pqCells(), nProbes = 2, residual = false)
+          .select($"qid", $"did"), k)
       .select($"rn", $"did").as[(Long, Long)]
       .collect().sortBy(_._1).toSeq
+    val got = rerank(shortlistC = 4, k = 2)
     assert(got.length == 2)
     assert(got.map(_._2) == Seq(1L, 2L),
       s"exact re-rank must order cluster-mates by true cosine: $got")
-    intercept[IllegalArgumentException] {
-      Similarity.adcRerankTopK(pqCorpus, pqCorpus, "vec_id",
-        "embedding", k = 5, shortlistC = 2, m = 2, ksub = 2,
-        nCells = 2, nProbes = 2)
-    }
+    // a shortlist narrower than k bounds the output: the re-rank
+    // scores only the candidates it is given
+    assert(rerank(shortlistC = 2, k = 5).length == 2)
   }
 
   test("cellBalancedSample caps every cell and is deterministic " +
       "across runs") {
     val cents = Similarity.ivfTrain(pqCorpus, "vec_id", "embedding",
-      nCells = 2, tag = "cbs")
+      nCells = 2)
     def run() = Similarity.cellBalancedSample(pqCorpus, "vec_id",
         "embedding", cents, perCell = 2)
       .select($"vec_id", $"cell").as[(Long, Int)].collect().toSeq
@@ -518,7 +524,7 @@ class SimilaritySpec extends SparkSpec {
       "bit-exactly with a validated manifest; search via the loaded " +
       "index equals search via the original") {
     val cents = Similarity.ivfTrain(pqCorpus, "vec_id", "embedding",
-      nCells = 2, tag = "persist-spec")
+      nCells = 2)
     Similarity.saveIvfIndex(spark, "spec_ivf", cents,
       Map("snapshot" -> "spec-fixture"))
     val (loaded, man) = Similarity.loadIvfIndex(spark, "spec_ivf")
@@ -541,7 +547,7 @@ class SimilaritySpec extends SparkSpec {
   test("PQ index persistence round-trips codebooks; loaders REJECT a " +
       "kind mismatch and a manifest/table disagreement") {
     val books = Similarity.pqTrain(pqCorpus, "vec_id", "embedding",
-      m = 2, ksub = 2, tag = "persist-spec")
+      m = 2, ksub = 2)
     Similarity.savePqIndex(spark, "spec_pq", books,
       Map("snapshot" -> "spec-fixture"))
     val (loaded, man) = Similarity.loadPqIndex(spark, "spec_pq")

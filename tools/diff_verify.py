@@ -8,8 +8,12 @@ same name in <dir_b>: column names, dtypes and every cell exactly, rows
 in file order (columns sorted by name, as check_oracle.canon does). With
 a comma-separated prefix list only the matching query names are
 compared. A query present in one dump only counts as a difference.
-Exits 1 when any table differs, 0 when all are identical.
+The two dumps' oracle_sql.json files are compared the same way, entry
+by entry: an entry whose SQL text differs, or that only one dump has,
+counts as a difference. Exits 1 when any table or oracle text differs,
+0 when all are identical.
 """
+import json
 import os
 import sys
 
@@ -44,7 +48,29 @@ def main(dir_a: str, dir_b: str, prefixes: list) -> int:
             continue
         n_same += 1
     print(f"{n_same} identical / {n_diff} different")
-    return 1 if n_diff else 0
+    n_oracle_diff = diff_oracles(dir_a, dir_b, prefixes)
+    return 1 if n_diff or n_oracle_diff else 0
+
+
+def diff_oracles(dir_a: str, dir_b: str, prefixes: list) -> int:
+    """Compares the dumps' oracle SQL texts; returns the number that differ."""
+    a, b = ({n: sql for n, sql in json.load(
+                 open(os.path.join(d, "oracle_sql.json"))).items()
+             if not prefixes or n.startswith(tuple(prefixes))}
+            for d in (dir_a, dir_b))
+    n_same = n_diff = 0
+    for name in sorted(a.keys() | b.keys()):
+        if name not in a or name not in b:
+            only = dir_a if name in a else dir_b
+            print(f"DIFF oracle {name}: only in {only}")
+            n_diff += 1
+        elif a[name] != b[name]:
+            print(f"DIFF oracle {name}: SQL text differs")
+            n_diff += 1
+        else:
+            n_same += 1
+    print(f"{n_same} oracle texts identical / {n_diff} different")
+    return n_diff
 
 
 if __name__ == "__main__":
